@@ -7,49 +7,49 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // r14 (guide §2.2 "fewer, larger reduce partitions" / VERDICT r13
-      // item 8): size-based AQE coalescing instead of parallelism-first.
+    val settings = Seq(
+      "spark.sql.shuffle.partitions" -> cpus,
+      // Size-based AQE coalescing instead of parallelism-first.
       // parallelismFirst=true (the default) keeps up to `cpus` post-shuffle
-      // partitions however tiny the data, so every stage of every
-      // sub-second query schedules 32 tasks — pure scheduler overhead at
-      // local SFs, and at 100 TB the same setting produces millions of
-      // ~1 MB reduce partitions (the guide's quadratic-block regime).
-      // Size-based coalescing targets advisoryPartitionSizeInBytes
-      // (default 64 MB) at ANY scale: tiny iterative rounds collapse to
-      // one task, production shuffles land in the guide's 100 MB–1 GB
-      // band. Overridable via env for scale experiments.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "false"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION", "64m"))
-      // r14 (guide §1.2 step 2, measured): the Janino class cache defaults
-      // to 100 entries; one iterative query (CC / BPE / Lloyd rounds ×
-      // 3 timed runs) cycles through several hundred generated classes, so
-      // every round recompiled every stage — 30–80 ms × stages × rounds of
-      // pure driver-side compilation (geo_contour_rings 9.6→7.2 s,
-      // doc_cc_clusters 5.4→3.8 s from this one setting). Scale-safe: the
-      // cache is keyed on generated source, bounded (LRU), and identical
-      // plan shapes recur at every SF — a 100 TB iterative job recompiles
-      // the same round plan the same way.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "2000"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      // partitions however tiny the data, so every stage of a sub-second
+      // query schedules `cpus` tasks; size-based coalescing targets
+      // advisoryPartitionSizeInBytes at any scale. No before/after
+      // measurement of these two settings has been committed yet.
+      // Overridable via env for scale experiments.
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst" ->
+        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "false"),
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" ->
+        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION", "64m"),
+      // The Janino class cache defaults to 100 entries; an iterative query
+      // (CC / BPE / Lloyd rounds x 3 timed runs) generates several hundred
+      // classes, so a small cache recompiles the same round plans. The
+      // cache is keyed on generated source and bounded (LRU). No
+      // before/after measurement of this setting has been committed yet.
+      "spark.sql.codegen.cache.maxEntries" ->
+        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "2000"),
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false")
+    val builder = SparkSession.builder().master(s"local[$cpus]")
+    settings.foreach { case (k, v) => builder.config(k, v) }
+    val spark = builder.getOrCreate()
+    // a static setting is silently ignored when getOrCreate returns an
+    // existing session: check that each one took effect
+    settings.foreach { case (k, v) =>
+      val got = spark.conf.get(k)
+      require(got == v, s"session setting $k is $got, expected $v")
+    }
     // ERROR, not WARN: the partition-less Window ops over tiny aggregated
     // frames (all 15 audited safe — see VERDICT r4) each emit a
     // `WindowExec: No Partition Defined` WARN per run, ~2000 chars of
     // which drowned the driver's ~2KB capture window in r4 and cost the
     // round its parsed bench entry (BENCH_r04 parsed:null)
     spark.sparkContext.setLogLevel("ERROR")
-    // warm-up: JIT + codegen + per-table file-index/footer caches, untimed
+    // warm-up, untimed: JIT, codegen, and the schema `Tables` resolves once
+    // per file (Spark itself caches no inferred Parquet schema)
     try {
       Seq("region", "nation", "customer", "supplier", "part", "orders",
         "lineitem", "documents", "embeddings").foreach { t =>
-        spark.read.parquet(s"$sfDir/$t.parquet").count()
+        Tables.t(spark, sfDir, t).count()
       }
       Tables.events(spark, sfDir).count() // nanos flag + index
       SparkEntry.queries("q1_agg")(spark, sfDir).count()
@@ -75,29 +75,41 @@ object Bench {
       // makes per-query times order-independent.
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
       System.gc()
-      val times = (1 to runs).map { _ =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        (System.nanoTime() - t0) / 1e9
-      }
-      val best = times.min
+      // a query that throws is recorded as failed, never timed: its
+      // elapsed time until the throw would read as a fast run
+      val outcome: Either[String, Double] =
+        try {
+          Right((1 to runs).map { _ =>
+            val t0 = System.nanoTime()
+            fn(spark, sfDir).count()
+            (System.nanoTime() - t0) / 1e9
+          }.min)
+        } catch { case e: Throwable => Left(e.toString) }
       // progress to stderr so a truncated capture still shows the tail
-      System.err.println(f"[bench] $name%-28s ${best}%.3f s")
-      name -> best
+      outcome match {
+        case Right(best) => System.err.println(f"[bench] $name%-28s ${best}%.3f s")
+        case Left(err) => System.err.println(s"[bench] $name FAILED: $err")
+      }
+      name -> outcome
     }
+    val timed = results.collect { case (n, Right(best)) => n -> best }
+    val failed = results.collect { case (n, Left(_)) => n }
+    if (failed.nonEmpty)
+      System.err.println(s"[bench] ${failed.size} failed, not in total: ${failed.mkString(", ")}")
     // Locale.ROOT: a comma-decimal default locale would make the line
     // invalid JSON (ADVICE r3)
     def f3(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     def qmap(rs: Seq[(String, Double)]): String =
       rs.map { case (k, v) => "\"" + k + "\":" + f3(v) }.mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+    val total = timed.map(_._2).sum
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     // full per-query map in its own file; stdout gets ONLY the headline
     // subset: the driver's capture window is ~2KB and the 132-query map
     // (~3.5KB) overflowed it every round so far (BENCH_r{1,2,3}.json all
     // record parsed:null) — the printed line must fit the window
     val full =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":${qmap(results)},"sf":"$sfDir","runs":$runs,"n_queries":${results.size}}"""
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":${qmap(timed)},"sf":"$sfDir","runs":$runs,"n_queries":${results.size},"failed":$failedJson}"""
     // a filtered re-timing run must not clobber the full-suite record
     if (only.isEmpty)
       Files.write(Paths.get("BENCH_FULL.json"),
@@ -109,7 +121,7 @@ object Bench {
     val tail =
       if (only.isEmpty) ""","queries_full":"BENCH_FULL.json"""" else ""","filtered":true"""
     val line =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":${qmap(results.filter(r => headline(r._1)))},"sf":"$sfDir","runs":$runs,"n_queries":${results.size}$tail}"""
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":${qmap(timed.filter(r => headline(r._1)))},"sf":"$sfDir","runs":$runs,"n_queries":${results.size},"n_failed":${failed.size}$tail}"""
     println(line)
     // make the JSON line the LAST thing in the combined capture: flush
     // stdout before spark.stop() can interleave anything after it

@@ -1,5 +1,7 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -10,11 +12,23 @@ import org.apache.spark.sql.types._
   * `build` takes (session, sfDir) and must be fully declarative — no
   * `.collect()`, no driver-side loops — so Catalyst/AQE stay in charge of
   * the physical plan at any scale.
+  *
+  * `oracle` is by-name and evaluated on first use, so building the query
+  * catalog costs nothing for it: several oracles embed lookup tables that
+  * are computed by running the image codecs and inference chains.
   */
-final case class Q(
-    build: (SparkSession, String) => DataFrame,
-    oracle: Option[String],
-    bench: Boolean = false)
+final class Q(
+    val build: (SparkSession, String) => DataFrame,
+    oracleSql: => Option[String],
+    val bench: Boolean) {
+  lazy val oracle: Option[String] = oracleSql
+}
+
+object Q {
+  def apply(build: (SparkSession, String) => DataFrame,
+      oracle: => Option[String], bench: Boolean = false): Q =
+    new Q(build, oracle, bench)
+}
 
 /** Determinism helpers: make Spark results bit-identical to the DuckDB
   * oracle so the driver's value-hash comparison passes.
@@ -164,8 +178,34 @@ object Det {
   * whichever type the file actually carries.
   */
 object Tables {
-  def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** The SQL settings Parquet schema conversion reads; a schema resolved
+    * under one combination of them must not serve another. */
+  private val schemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+  private val schemas = new ConcurrentHashMap[
+    (String, Long, Long, Seq[Option[String]]), StructType]()
+
+  /** Reads `dir/name.parquet` with a schema resolved once per file version
+    * (path, modification time, length) and read settings. A read without
+    * a schema makes Spark infer it, which is a job over the file footers
+    * inside every builder call. Only the schema is kept: each call still
+    * lists the files and gets its own relation with fresh attribute ids.
+    */
+  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val p = new Path(path)
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(p)
+    val key = (st.getPath.toString, st.getModificationTime, st.getLen,
+      schemaConfs.map(spark.conf.getOption))
+    val schema = schemas.computeIfAbsent(key,
+      _ => spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
+  }
 
   /** events with `ts_sec` (epoch seconds, BIGINT) derived from `ts`. */
   def events(spark: SparkSession, dir: String): DataFrame = {

@@ -77,7 +77,8 @@ object ImageCodec {
     * to per-pixel getRGB: the two fast paths reproduce it bit-for-bit for
     * the layouts this pipeline actually produces (synthetic TYPE_INT_RGB,
     * ImageIO-decoded TYPE_3BYTE_BGR with the standard {2,1,0} band
-    * offsets); anything else falls back to the bulk getRGB API, which is
+    * offsets), each over one data bank that starts at offset 0; anything
+    * else falls back to the bulk getRGB API, which is
     * the same conversion loop in one library call. r14, guide §1.2
     * step 2 (per-task CPU) — feeds phash64 / features / lumBytes, i.e.
     * every decoded-pixel consumer.
@@ -86,7 +87,9 @@ object ImageCodec {
     val w = img.getWidth; val h = img.getHeight
     val raster = img.getRaster
     val plain = raster.getSampleModelTranslateX == 0 &&
-      raster.getSampleModelTranslateY == 0
+      raster.getSampleModelTranslateY == 0 &&
+      raster.getDataBuffer.getOffset == 0 &&
+      raster.getDataBuffer.getNumBanks == 1
     img.getType match {
       case BufferedImage.TYPE_INT_RGB if plain =>
         val sm = raster.getSampleModel

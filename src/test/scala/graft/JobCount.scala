@@ -1,0 +1,40 @@
+package graft
+
+import java.util.UUID
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
+
+/** Counts the Spark jobs a block starts. The block runs under its own job
+  * group. Listener events arrive asynchronously, so a marker job runs
+  * after the block: one listener queue delivers events in order, so once
+  * the marker's start is seen, every job the block started has been seen.
+  */
+object JobCount {
+  def of(spark: SparkSession)(block: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"graft-jobcount-${UUID.randomUUID}"
+    val marker = s"$group-marker"
+    val jobs = new AtomicInteger
+    val markerSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`marker`) => markerSeen.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted block")
+      try block finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "job-count marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      require(markerSeen.await(60, TimeUnit.SECONDS),
+        "the marker job never reached the listener")
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+}
