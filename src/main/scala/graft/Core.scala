@@ -108,10 +108,9 @@ object Det {
     // ever RECOMPUTE the exchange instead of reusing it (observed under
     // AQE at sf0.1: 14/5000 rows landed in different pids per branch and
     // dropped out of the inner join), the offset table and the data rows
-    // disagree. Materializing once makes _pid a fact of the data. Same
-    // idiom as the CC family's checkpointReset; cost = one local
-    // materialization of the frame being ranked (it is consumed 2-3×
-    // anyway).
+    // disagree. Materializing once makes _pid a fact of the data; cost =
+    // one local materialization of the frame being ranked (it is consumed
+    // 2-3× anyway).
     val base = t.repartitionByRange(np, rangeCols: _*)
       .sortWithinPartitions(rangeCols: _*)
       .withColumn("_mid", monotonically_increasing_id())

@@ -5,6 +5,7 @@ import graft.Det._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftops.GraftInternal.rebase
 import org.apache.spark.sql.types._
 
 /** §2.C geospatial ops — odin_common/src/geo.rs re-expressed as codegen'd
@@ -1234,7 +1235,7 @@ object Geo {
       build = (s, d) => {
         val w = Window.partitionBy(col("user_id"))
           .orderBy(col("ts_sec"), col("event_id"))
-        val pts = graft.operators.TextOps.checkpointReset(
+        val pts = rebase(
           evPts(s, d)
             .select(col("user_id"), col("ts_sec"), col("event_id"),
               col("lat"), col("lon"))
@@ -1273,8 +1274,7 @@ object Geo {
           val rights = splits.select(col("user_id"), col("m").as("lo"),
             col("hi"), col("mlat").as("x1"), col("mlon").as("y1"),
             col("x2"), col("y2"))
-          segs = graft.operators.TextOps.checkpointReset(
-            keeps.union(lefts).union(rights))
+          segs = rebase(keeps.union(lefts).union(rights))
         }
         segs.select(col("user_id"), col("lo").as("rn"),
             col("x1").as("lat"), col("y1").as("lon"))
@@ -3800,7 +3800,7 @@ object Geo {
     // bilinearly interpolated at the current position. Every step is the
     // same broadcastable 4-corner equi-join as geo_wind_vector — pure
     // +,-,*,/ so the whole trajectory is bit-exact cross-engine, no
-    // rounding. Steps localCheckpoint (O(1) plan depth); a particle
+    // rounding. Steps rebase (O(1) plan depth); a particle
     // leaving the grid simply drops out of the inner join, identically in
     // both engines. Scale shape: O(4·seeds) per step against a broadcast
     // grid — no shuffle growth with step count.
@@ -3846,13 +3846,12 @@ object Geo {
               (col("lon") + (col("u00") + col("u01") + col("u10") + col("u11")) * 0.05)
                 .as("lon"))
         }
-        var pos = evPts(s, d)
+        var pos = rebase(evPts(s, d)
           .filter(col("event_id") % 37 === 0)
-          .select(col("event_id"), col("lat"), col("lon"))
-          .localCheckpoint(false)
+          .select(col("event_id"), col("lat"), col("lon")))
         var out = pos.withColumn("step", lit(0))
         for (k <- 1 to K) {
-          pos = advect(pos).localCheckpoint(false)
+          pos = rebase(advect(pos))
           out = out.union(pos.withColumn("step", lit(k)))
         }
         out.select(col("event_id"), col("step"), col("lat"), col("lon"))

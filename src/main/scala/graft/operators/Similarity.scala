@@ -5,6 +5,7 @@ import graft.Det._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftops.GraftInternal.rebase
 import org.apache.spark.sql.types._
 
 /** §2.E similarity search over the `embeddings` table (64-dim float).
@@ -798,7 +799,7 @@ object Similarity {
     // are exact integers (d2 = nq_a + nq_b - 2*qdot), the argmax
     // tie-breaks on min vec_id, and each round folds the ONE new
     // vector's distances into the running min (never re-scoring the
-    // whole selected set) — O(k·n) total, localCheckpoint per round
+    // whole selected set) — O(k·n) total, one rebase per round
     // bounding plan depth, no driver-side collect anywhere. The oracle
     // unrolls the identical 7 rounds as CTE stages (the emb_kmeans /
     // doc_quality_logreg discipline).
@@ -814,29 +815,25 @@ object Similarity {
         val seed = e.filter(col("vec_id") === 0)
           .select(col("vec_id").as("sel_id"),
             col("embedding").as("sel_emb"), col("nq").as("sel_nq"))
-        var md = d2To(seed).localCheckpoint(false)
-        var picks = seed
+        var md = rebase(d2To(seed))
+        var picks = rebase(seed
           .select(col("sel_id").as("vec_id"), lit(0).as("sel_round"),
-            lit(0L).as("min_d2"))
-          .localCheckpoint(false)
+            lit(0L).as("min_d2")))
         for (r <- 1 to 7) {
           val pick = md
             .agg(max(struct(col("d2").as("d2"), (-col("vec_id")).as("nv")))
               .as("m"))
             .select((-col("m.nv")).as("sel_id"), col("m.d2").as("min_d2"))
-          val newSel = pick.join(e, pick("sel_id") === e("vec_id"))
+          val newSel = rebase(pick.join(e, pick("sel_id") === e("vec_id"))
             .select(col("sel_id"), col("embedding").as("sel_emb"),
-              col("nq").as("sel_nq"), col("min_d2"))
-            .localCheckpoint(false)
-          picks = picks.unionByName(
+              col("nq").as("sel_nq"), col("min_d2")))
+          picks = rebase(picks.unionByName(
             newSel.select(col("sel_id").as("vec_id"),
-              lit(r).as("sel_round"), col("min_d2")))
-            .localCheckpoint(false)
-          md = md.as("m")
+              lit(r).as("sel_round"), col("min_d2"))))
+          md = rebase(md.as("m")
             .join(d2To(newSel.drop("min_d2")).as("n"), "vec_id")
             .select(col("vec_id"),
-              least(col("m.d2"), col("n.d2")).as("d2"))
-            .localCheckpoint(false)
+              least(col("m.d2"), col("n.d2")).as("d2")))
         }
         picks.orderBy(col("sel_round"))
       },
@@ -1134,20 +1131,19 @@ object Similarity {
         // Lloyd rounds train them properly (assign each subvector to its
         // nearest code via the broadcast codebook — narrow, no vector
         // shuffle — then recompute centroids with one keyed agg; empty
-        // codes keep their previous centroid; rounds localCheckpoint so
+        // codes keep their previous centroid; rounds rebase so
         // plan depth stays O(1) — same shape emb_kmeans uses at full dim)
         def qmean(v: Column): Column =
           sum(floor(v.cast(DoubleType) * 16384.0).cast(LongType))
             .cast(DoubleType) / (lit(16384.0) * count(lit(1)))
-        val cbInit = sub
+        val cbInit = rebase(sub
           .select(col("sub_id"), col("label").as("code"),
             posexplode(col("sub_vec"))).toDF("sub_id", "code", "pos", "v")
           .groupBy(col("sub_id"), col("code"), col("pos"))
           .agg(qmean(col("v")).as("m"))
           .groupBy(col("sub_id"), col("code"))
           .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-            st => st.getField("m")).as("centroid"))
-          .localCheckpoint(false)
+            st => st.getField("m")).as("centroid")))
         var codebook = cbInit
         for (_ <- 1 to 2) {
           val upd = sub.join(broadcast(codebook), Seq("sub_id"))
@@ -1164,10 +1160,9 @@ object Similarity {
             .groupBy(col("sub_id"), col("code"))
             .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
               st => st.getField("m")).as("c2"))
-          codebook = codebook.join(upd, Seq("sub_id", "code"), "left")
+          codebook = rebase(codebook.join(upd, Seq("sub_id", "code"), "left")
             .select(col("sub_id"), col("code"),
-              coalesce(col("c2"), col("centroid")).as("centroid"))
-            .localCheckpoint(false)
+              coalesce(col("c2"), col("centroid")).as("centroid")))
         }
         val codes = sub.join(broadcast(codebook), Seq("sub_id"))
           .withColumn("d2", dist2)
@@ -1273,7 +1268,7 @@ object Similarity {
     // centroids against the full table (narrow, no shuffle of the vectors),
     // update is one posexplode + groupBy(cid,pos) shuffle keyed on the
     // cluster — both shapes scale to any corpus size. Centroids are
-    // localCheckpoint'd each round so plan depth stays O(1), exactly as a
+    // rebased each round so plan depth stays O(1), exactly as a
     // 100 TB run would checkpoint between iterations.
     "emb_kmeans" -> Q(
       build = (s, d) => {
@@ -1301,10 +1296,9 @@ object Similarity {
               col("m.embedding").as("embedding"), col("m.cid").as("cid"),
               col("m.dist_q").as("dist_q"))
         }
-        var cents = e.filter(col("vec_id") < k)
+        var cents = rebase(e.filter(col("vec_id") < k)
           .select(col("vec_id").cast(IntegerType).as("cid"),
-            transform(col("embedding"), _.cast(DoubleType)).as("centroid"))
-          .localCheckpoint(false)
+            transform(col("embedding"), _.cast(DoubleType)).as("centroid")))
         for (_ <- 1 to 3) {
           val upd = assign(cents)
             .select(col("cid"), posexplode(col("embedding")))
@@ -1317,7 +1311,7 @@ object Similarity {
             .groupBy(col("cid"))
             .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
               st => st.getField("m")).as("centroid"))
-          cents = upd.localCheckpoint(false)
+          cents = rebase(upd)
         }
         assign(cents)
           .withColumn("cluster_size",
@@ -1470,7 +1464,7 @@ object Similarity {
         // materialize the corpus Gram fold ONCE (4096 rows): the 8
         // iterations reference it 9 times, and without the checkpoint
         // each reference re-runs the full corpus aggregation
-        val gram = graft.operators.TextOps.checkpointReset(
+        val gram = rebase(
           emb(s, d).select(col("embedding")).as[Seq[Float]]
             .select(graft.functions.GramMatrix(64).toColumn.name("g"))
             .select(posexplode(col("g")).as(Seq("k", "qsum")))
@@ -1490,7 +1484,7 @@ object Similarity {
           // checkpoint each 64-row iterate: keeps the logical plan O(1)
           // deep (8 nested join+agg rounds otherwise multiply planning
           // and re-execution cost — measured 60 s at sf0.1 without this)
-          v = graft.operators.TextOps.checkpointReset(
+          v = rebase(
             w.crossJoin(broadcast(n))
               .select(col("i").as("j"),
                 round(col("w") / sqrt(col("nq").cast(DoubleType) / q30), 9)

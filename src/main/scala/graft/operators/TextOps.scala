@@ -5,6 +5,7 @@ import graft.Det._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftops.GraftInternal.rebase
 import org.apache.spark.sql.types._
 
 /** §2.D text analysis + deduplication over `documents` — the
@@ -28,8 +29,43 @@ object TextOps {
       tie: String): DataFrame =
     Det.rankPrefix(df, Seq(col(grp)), Seq(col(ord), col(tie)))
 
-  /** BPE training rounds for doc_bpe_train (vocab-sized work per round). */
+  /** BPE merge rounds for doc_bpe_train/apply (vocab-sized work per round). */
   private val BpeRounds = 8
+
+  /** The BPE merge loop of doc_bpe_train and doc_bpe_apply over a word
+    * dict with a sentinel-padded symbol string `spaced` and a frequency
+    * `wc`. Per round: count adjacent symbol pairs weighted by `wc`, take
+    * the argmax (count desc, pair asc — deterministic), broadcast the
+    * 1-row argmax and apply the merge to every word. Returns the merge
+    * table (round, pair, pair_count) and the dict after all BpeRounds
+    * merges, its other columns carried through unchanged. Rounds rebase
+    * lazily (no per-round driver action); the final merge is left
+    * unmaterialized, so a caller reading only the table never runs it.
+    */
+  private def bpeMerges(words: DataFrame): (DataFrame, DataFrame) = {
+    var dict = words
+    var merges: DataFrame = null
+    for (r <- 0 until BpeRounds) {
+      dict = rebase(dict)
+      val best = rebase(dict
+        .select(split(trim(col("spaced")), " ").as("l"), col("wc"))
+        .filter(size(col("l")) >= 2)
+        .select(col("wc"), explode(expr(
+          """transform(sequence(1, size(l)-1),
+             i -> concat(element_at(l, i), ' ', element_at(l, i+1)))"""))
+          .as("pair"))
+        .groupBy(col("pair"))
+        .agg(sum(col("wc")).as("pair_count"))
+        .orderBy(col("pair_count").desc, col("pair")).limit(1)
+        .select(lit(r).as("round"), col("pair"), col("pair_count")))
+      merges = if (merges == null) best else merges.union(best)
+      dict = dict.crossJoin(broadcast(best.select(col("pair").as("bp"))))
+        .withColumn("spaced", expr(
+          "replace(spaced, ' ' || bp || ' ', ' ' || replace(bp, ' ', '') || ' ')"))
+        .drop("bp")
+    }
+    (merges, dict)
+  }
 
   /** occurrences of substring w, exact integer arithmetic both engines */
   private def occC(c: Column, w: String): Column =
@@ -223,26 +259,6 @@ object TextOps {
   private def jaccardPairs(s: SparkSession, d: String): DataFrame =
     jaccardAll(s, d).filter(col("jaccard") >= 0.5)
 
-  /** Eager localCheckpoint that also RESETS plan statistics.
-    * `localCheckpoint` alone copies the original plan's size estimate
-    * into the LogicalRDD; in an iterative computation every round's
-    * joins multiply the previous round's estimate, so the BigInt
-    * sizeInBytes gains digits geometrically and Catalyst stats
-    * estimation (BigInteger.multiply) comes to dominate planning after
-    * ~10 rounds — measured as an exponential per-round slowdown on
-    * contour-ring CC. Re-basing the frame on the materialized RDD makes
-    * each round's estimate start from the default again.
-    */
-  private[graft] def checkpointReset(df: DataFrame): DataFrame = {
-    // lazy, not eager: every caller runs an action on the rebased frame
-    // each round (the convergence agg), which materializes the checkpoint
-    // in the SAME job — eager would schedule a separate materialization
-    // job per round, doubling the per-round latency that dominates
-    // long-diameter ring CC at small SF
-    val ck = df.localCheckpoint(false)
-    ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
-  }
-
   /** Distributed connected components via alternating large-star /
     * small-star contraction (Kiveris et al., "Connected Components in
     * MapReduce and Beyond"). `nodes` has column `node`; `edges` has
@@ -256,8 +272,8 @@ object TextOps {
     * neighborhood barely extends the frontier. LS/SS contracts the same
     * ring in 11 rounds and is O(log² n) worst-case on any shape. Each
     * round is two groupBy+join passes over the edge set, never more
-    * edges than the input, with checkpointReset keeping plan depth and
-    * stats O(1).
+    * edges than the input, with a per-round `rebase` keeping plan depth
+    * and stats O(1).
     */
   def connectedComponents(nodes: DataFrame, edges: DataFrame): DataFrame = {
     // r13 (guide §2.4, remove shuffles outright): the edge-PAIR form of
@@ -278,7 +294,7 @@ object TextOps {
     // join back as their own singleton components at the end
     def toLists(pairs: DataFrame): DataFrame = pairs
       .groupBy(col("u")).agg(sort_array(collect_set(col("v"))).as("nb"))
-    var L = checkpointReset(
+    var L = rebase(
       toLists(edges.select(col("src").as("u"), col("dst").as("v"))))
     // one LS+SS contraction: list in, SYMMETRIC PAIR STREAM out (the
     // caller fuses the final regroup with its fixed-point test)
@@ -316,51 +332,22 @@ object TextOps {
         .select(col("u"), col("nb"),
           (col("nb") =!= col("nb0")).as("fresh"))
     }
-    // r14 (guide §1.2 step 1 / VERDICT r13 item 1): BATCH `batch`
-    // contractions per materialized round. Round LATENCY — driver action +
-    // checkpoint materialization + per-stage scheduling — dominated the
-    // long-ring CC (geo_contour_rings: 10 driver rounds); chaining 3
-    // contractions lazily inside one job cuts that to 4 rounds. Only the
-    // LAST state per job is checkpointed; each contraction still carries
-    // its own fused freshness flag, and the job's single action collects
-    // ALL per-contraction fresh counts (the shared regroup exchanges are
-    // deduplicated by ReuseExchange, so the count branches re-read the
-    // shuffle instead of recomputing the round). Convergence at
-    // contraction j ≤ batch is safe to read off the batch's final state:
-    // LS/SS is monotone (every re-attachment strictly lowers an endpoint
-    // id), so a converged state is a fixed point of both stars and the
-    // trailing contractions are no-ops.
+    // one contraction per round, rebased before the round's single count
+    // action: every action's plan holds one contraction over a LogicalRDD
     var converged = false
-    var iter = 0
-    val batch = 3
-    val maxIter = 10 // 30 LS+SS rounds: deep headroom over O(log² n)
-    while (!converged && iter < maxIter) {
-      var prev = L
-      val states = Seq.newBuilder[DataFrame]
-      for (j <- 1 to batch) {
-        val reg0 = regroupTagged(contractPairs(prev), prev)
-        val reg = if (j == batch) checkpointReset(reg0) else reg0
-        states += reg
-        prev = reg.filter(size(col("nb")) > 0).select(col("u"), col("nb"))
-      }
-      // one action per batch: ordered per-contraction fresh counts
-      val counts = states.result().zipWithIndex.map { case (st, i) =>
-        st.agg(count(when(col("fresh"), 1)).as("c"))
-          .select(lit(i).as("i"), col("c"))
-      }.reduce(_ union _).collect()
-        .sortBy(_.getInt(0)).map(_.getLong(1))
-      converged = counts.contains(0L)
-      L = prev
-      iter += 1
-      if (sys.env.contains("GRAFT_CC_TRACE"))
-        System.err.println(s"[cc] batch $iter fresh=${counts.mkString(",")} " +
-          s"converged=$converged t=${System.nanoTime() / 1000000000L % 100000}")
+    var round = 0
+    val maxRounds = 30 // LS+SS contractions: deep headroom over O(log² n)
+    while (!converged && round < maxRounds) {
+      val reg = rebase(regroupTagged(contractPairs(L), L))
+      converged = reg.filter(col("fresh")).count() == 0L
+      L = reg.filter(size(col("nb")) > 0).select(col("u"), col("nb"))
+      round += 1
     }
     // Never emit silently-wrong labels: if the loop exited on the round cap
-    // rather than a fixed point, fail loudly so the caller can raise maxIter.
+    // rather than a fixed point, fail loudly so the caller can raise maxRounds.
     if (!converged)
       throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds")
+        s"connectedComponents did not converge in $maxRounds rounds")
     // terminal state is a star forest rooted at each component's min
     val lbl = L.select(col("u").as("node"),
       least(col("u"), element_at(col("nb"), 1)).as("label"))
@@ -771,44 +758,17 @@ object TextOps {
     // the merge to every word. Words are spelled as space-joined symbol
     // strings padded with sentinel spaces, so applying a merge is a plain
     // left-to-right `replace(' a b ' -> ' ab ')` — identical greedy
-    // semantics in Spark and DuckDB, no UDF. Each round localCheckpoints
-    // (O(1) plan depth, the kmeans/cc convention) and broadcasts the
-    // 1-row argmax. Output: the learned merge table. r14: the round
-    // checkpoints are LAZY — no per-round driver action exists, so the
-    // whole merge chain materializes inside the final action's job
-    // cascade instead of 2 synchronous jobs per round (guide §1.2 step 1:
-    // fewer passes/barriers; plan depth stays O(1) per round).
+    // semantics in Spark and DuckDB, no UDF. The merge rounds are
+    // bpeMerges, shared with doc_bpe_apply. Output: the learned merge
+    // table.
     "doc_bpe_train" -> Q(
       build = (s, d) => {
-        var spaced = docs(s, d)
+        val (merges, _) = bpeMerges(docs(s, d)
           .select(explode(expr(
             "regexp_extract_all(lower(text), '[a-z]+', 0)")).as("word"))
           .groupBy(col("word")).agg(count(lit(1)).as("wc"))
           .select(concat(lit(" "), regexp_replace(col("word"), "(.)", "$1 "))
-            .as("spaced"), col("wc"))
-          .localCheckpoint(false)
-        var merges: DataFrame = null
-        for (r <- 0 until BpeRounds) {
-          val best = spaced
-            .select(split(trim(col("spaced")), " ").as("l"), col("wc"))
-            .filter(size(col("l")) >= 2)
-            .select(col("wc"), explode(expr(
-              """transform(sequence(1, size(l)-1),
-                 i -> concat(element_at(l, i), ' ', element_at(l, i+1)))"""))
-              .as("pair"))
-            .groupBy(col("pair"))
-            .agg(sum(col("wc")).as("pair_count"))
-            .orderBy(col("pair_count").desc, col("pair")).limit(1)
-            .select(lit(r).as("round"), col("pair"), col("pair_count"))
-            .localCheckpoint(false)
-          merges = if (merges == null) best else merges.union(best)
-          if (r < BpeRounds - 1)
-            spaced = spaced.crossJoin(broadcast(best.select(col("pair").as("bp"))))
-              .select(expr(
-                "replace(spaced, ' ' || bp || ' ', ' ' || replace(bp, ' ', '') || ' ')")
-                .as("spaced"), col("wc"))
-              .localCheckpoint(false)
-        }
+            .as("spaced"), col("wc")))
         merges
           .select(col("round"), col("pair"),
             regexp_replace(col("pair"), " ", "").as("merged"), col("pair_count"))
@@ -868,34 +828,15 @@ object TextOps {
     // semantics as training, both engines).
     "doc_bpe_apply" -> Q(
       build = (s, d) => {
-        var dict = docs(s, d)
+        val (_, dict) = bpeMerges(docs(s, d)
           .select(explode(expr(
             "regexp_extract_all(lower(text), '[a-z]+', 0)")).as("word"))
           .groupBy(col("word")).agg(count(lit(1)).as("wc"))
           .select(col("word"),
             concat(lit(" "), regexp_replace(col("word"), "(.)", "$1 "))
-              .as("spaced"), col("wc"))
-          .localCheckpoint(false)
-        for (_ <- 0 until BpeRounds) {
-          val best = dict
-            .select(split(trim(col("spaced")), " ").as("l"), col("wc"))
-            .filter(size(col("l")) >= 2)
-            .select(col("wc"), explode(expr(
-              """transform(sequence(1, size(l)-1),
-                 i -> concat(element_at(l, i), ' ', element_at(l, i+1)))"""))
-              .as("pair"))
-            .groupBy(col("pair"))
-            .agg(sum(col("wc")).as("pair_count"))
-            .orderBy(col("pair_count").desc, col("pair")).limit(1)
-            .select(col("pair").as("bp"))
-            .localCheckpoint(false)
-          dict = dict.crossJoin(broadcast(best))
-            .select(col("word"), expr(
-              "replace(spaced, ' ' || bp || ' ', ' ' || replace(bp, ' ', '') || ' ')")
-              .as("spaced"), col("wc"))
-            .localCheckpoint(false)
-        }
-        val enc = dict.select(col("word"),
+              .as("spaced"), col("wc")))
+        // rebased like every round, so the output plan holds no merge join
+        val enc = rebase(dict).select(col("word"),
           size(split(trim(col("spaced")), " ")).cast(LongType).as("n_sym"))
         docs(s, d)
           .select(col("doc_id"), explode(expr(
@@ -1627,11 +1568,11 @@ object TextOps {
     // ----- doc_cc_clusters: connected components over near-dup pairs -----
     // The closure step of every dedup pipeline: near-dup similarity is not
     // transitive, so the canonical "document group" is the connected
-    // component of the pair graph. Label propagation (min doc_id) with
-    // pointer-jumping, iterated to convergence; `localCheckpoint` truncates
-    // lineage each round (the GraphX/large-star pattern), so the plan stays
-    // O(1) deep regardless of component diameter — the shape that survives
-    // a 100 TB corpus. Oracle: DuckDB recursive CTE computing exact CC.
+    // component of the pair graph, labelled by its min doc_id. The shared
+    // connectedComponents helper runs large-star/small-star contractions
+    // to a fixed point, rebasing each round so the plan stays O(1) deep
+    // regardless of component diameter — the shape that survives a 100 TB
+    // corpus. Oracle: DuckDB recursive CTE computing exact CC.
     //
     // Exact-first collapse (the production dedup ordering, and the r8 ×100
     // finding): Jaccard depends only on the text, so byte-identical docs
@@ -3342,7 +3283,7 @@ object TextOps {
         val docBg = bigramsOf(docs(s, d), Seq("doc_id"))
           .groupBy(col("doc_id"), col("w1"), col("w2"))
           .agg(count(lit(1)).as("cnt"))
-        val docBgCk = checkpointReset(docBg)
+        val docBgCk = rebase(docBg)
         val c12 = docBgCk.groupBy(col("w1"), col("w2"))
           .agg(sum(col("cnt")).as("c12"))
         val c1 = c12.groupBy(col("w1")).agg(sum(col("c12")).as("c1"))
@@ -3436,13 +3377,14 @@ object TextOps {
             .select(col("doc_id"), col("lang"), lit("B").as("bkt"),
               expr("CAST(1.0 AS DECIMAL(18,9))").as("x")))
           .withColumn("y", when(col("lang") === "en", 1).otherwise(0))
-        // hash-partition by doc_id BEFORE the checkpoint: localCheckpoint
-        // preserves output partitioning, so each GD round's
-        // groupBy(doc_id, y) and the grad join on doc_id are
-        // exchange-free (guide §2.4: two operations keyed the same way
-        // share one exchange) — 2 shuffles/round × 4 rounds removed for
-        // one up-front repartition
-        val featsCk = feats.repartition(col("doc_id")).localCheckpoint(false)
+        // hash-partition by doc_id BEFORE the checkpoint: rebase
+        // preserves the checkpoint's output partitioning, so with AQE off
+        // each GD round's groupBy(doc_id, y) and the grad join on doc_id
+        // are exchange-free (guide §2.4: two operations keyed the same
+        // way share one exchange) — 2 shuffles/round × 4 rounds removed
+        // for one up-front repartition. Under AQE the checkpoint records
+        // no partitioning, and the rounds shuffle.
+        val featsCk = rebase(feats.repartition(col("doc_id")))
         val n = featsCk.select(col("doc_id")).distinct().count()
         val buckets = (0 to 9).map(_.toString) ++ Seq("a", "b", "c", "d", "e", "f", "B")
         var w = featsCk.sparkSession
@@ -3460,7 +3402,7 @@ object TextOps {
             .groupBy(col("bkt"))
             .agg(sum(expr("CAST((sigma - yy) * x AS DECIMAL(38,15))")).as("g"))
             .withColumn("gd", expr(s"CAST(g AS DOUBLE) / $n"))
-          w = checkpointReset(
+          w = rebase(
             w.join(grad.select(col("bkt"), col("gd")), Seq("bkt"), "left")
               .select(col("bkt"), expr(
                 "CAST(w - CAST(round(2.0 * coalesce(gd, 0.0), 9) AS DECIMAL(18,9)) AS DECIMAL(18,9))")
@@ -3573,7 +3515,7 @@ object TextOps {
         val TOT = 1000000000000000L // 10^15 rank units
         val n = broadcast(docs(s, d).agg(count(lit(1)).as("n")))
         val nodes = docs(s, d).select(col("doc_id"))
-        val edges = checkpointReset(
+        val edges = rebase(
           nodes.crossJoin(n)
             .select(col("doc_id").as("src"), col("n"),
               explode(expr("sequence(1, 3)")).as("j"))
@@ -3591,7 +3533,7 @@ object TextOps {
             .join(ranks.withColumnRenamed("doc_id", "src"), Seq("src"))
             .groupBy(col("dst"))
             .agg(sum(expr("r div 3")).as("cs"))
-          ranks = checkpointReset(
+          ranks = rebase(
             base.join(contrib.withColumnRenamed("dst", "doc_id"),
               Seq("doc_id"), "left")
               .select(col("doc_id"),

@@ -6,10 +6,9 @@ import org.apache.spark.sql.functions._
 /** Randomized + adversarial-shape validation of the shared large-star/
   * small-star connectedComponents helper (TextOps.scala) against an
   * in-memory union-find reference. The helper backs doc_cc_clusters,
-  * emb_semantic_dedup, geo_hotspot_clusters, and geo_contour_rings, and
-  * was rewritten from hash-min+pointer-jumping this round — these shapes
-  * (long shuffled-id cycles especially) are the ones that broke the old
-  * algorithm.
+  * doc_dedup_decision, geo_hotspot_clusters and geo_contour_rings. It
+  * replaced hash-min + pointer-jumping, and these shapes (long
+  * shuffled-id cycles especially) are the ones that broke that algorithm.
   */
 class CcSpec extends SparkSpecBase {
 

@@ -1,0 +1,83 @@
+package graft
+
+import graft.operators.TextOps
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftops.GraftInternal
+import org.apache.spark.sql.internal.SQLConf
+
+/** Plan growth in iterative operators stays bounded. Every action's
+  * optimized plan — localCheckpoint materializations included — is
+  * measured while connectedComponents runs to a fixed point; none may be
+  * larger than one contraction round's plan plus slack. A loop that
+  * chains several contractions between rebases nests each round's state
+  * twice into the next, so its plans grow geometrically and fail here
+  * long before they cost minutes of planning in a bench run.
+  */
+class PlanSizeSpec extends SparkSpecBase {
+
+  /** One LS+SS contraction round plans to 57 optimized nodes in the
+    * first round and to 66 in later ones, whose state adds a filter and a
+    * projection. The bound is one round and half another: chaining a
+    * second contraction before the rebase already exceeds it (641 nodes).
+    * It is a fixed number, not measured at run time, so a loop that grows
+    * every plan cannot raise its own bound.
+    */
+  private val bound = 100
+
+  private def assertBounded(sizes: Seq[(String, Int)], tag: String): Unit = {
+    assert(sizes.nonEmpty)
+    info(s"$tag: ${sizes.size} actions, largest plan ${sizes.map(_._2).max} " +
+      s"nodes, bound $bound")
+    val over = sizes.filter(_._2 > bound)
+    assert(over.isEmpty, s"$tag: ${over.size} action plans exceed $bound " +
+      s"nodes: ${sizes.map(_._2).mkString(",")}")
+  }
+
+  test("CC on a 240-node shuffled-id ring: every action plan within one round's bound") {
+    import spark.implicits._
+    val rng = new scala.util.Random(11)
+    val ids = rng.shuffle((0L until 240L).toVector)
+    val es = ids.indices.map(i => (ids(i), ids((i + 1) % ids.length)))
+    val edges = es.toDF("src", "dst").union(es.map(_.swap).toDF("src", "dst"))
+    val sizes = PlanSizes.of(spark) {
+      TextOps.connectedComponents(ids.toDF("node"), edges).collect()
+    }
+    // a long ring needs many rounds: the bound must hold on all of them
+    assert(sizes.size > 10, s"expected many CC rounds, got ${sizes.size} actions")
+    assertBounded(sizes, "shuffled ring")
+  }
+
+  test("geo_contour_rings at sf0.001: every CC action plan within one round's bound") {
+    // building the query runs its CC loop; the query's own plan is the
+    // caller's pipeline, not a round, and is not measured
+    assertBounded(PlanSizes.of(spark) { run("geo_contour_rings") },
+      "geo_contour_rings")
+  }
+
+  test("rebase keeps output partitioning and drops origin statistics") {
+    // AQE off: under AQE Spark's checkpoint records no partitioning at all
+    withAqeOff {
+      val keyed = spark.range(0, 1000)
+        .select((col("id") % 7).as("k"), col("id").as("v"))
+        .repartition(col("k"))
+      val rebased = GraftInternal.rebase(keyed)
+      val agg = rebased.groupBy(col("k")).agg(sum(col("v")).as("s"))
+      val exchanges = agg.queryExecution.executedPlan.collect {
+        case e: ShuffleExchangeExec => e
+      }
+      assert(exchanges.isEmpty, "groupBy on the rebased key planned an " +
+        s"Exchange:\n${agg.queryExecution.executedPlan}")
+      assert(agg.collect().map(_.getLong(1)).sum == (0L until 1000L).sum)
+      assert(rebased.queryExecution.optimizedPlan.stats.sizeInBytes ==
+        BigInt(SQLConf.get.defaultSizeInBytes))
+    }
+  }
+
+  private def withAqeOff[T](f: => T): T = {
+    val key = "spark.sql.adaptive.enabled"
+    val old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try f finally spark.conf.set(key, old)
+  }
+}
