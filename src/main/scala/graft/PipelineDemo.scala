@@ -52,13 +52,9 @@ object PipelineDemo {
     // near-dup candidates via MinHash-LSH banding
     val sigs = quality.select(col("doc_id"),
       functions.TextFunctions.minhash_signature(col("clean_text")).as("sig"))
-    val bands = sigs.select(col("doc_id"), posexplode(
-      expr("transform(sequence(0, 7), b -> xxhash64(slice(sig, b*4 + 1, 4)))"))
-      .as(Seq("band", "bsig")))
-    val candPairs = bands.as("x").join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.bsig") === col("y.bsig")
-          && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("src"), col("y.doc_id").as("dst")).distinct()
+    val candPairs = operators.TextOps.bandPairs(sigs, "doc_id",
+        (0 until 8).map(b => xxhash64(slice(col("sig"), b * 4 + 1, 4))))
+      .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
 
     // canonical dedup: connected components over the candidate graph —
     // near-dup similarity isn't transitive, the component is the document

@@ -304,6 +304,26 @@ object Multimodal {
         ORDER BY source, seg_id"""
   }
 
+  /** (doc_id, ph) for mm_phash_pairs and its _grouped twin: each doc's
+    * synthetic image PNG-encoded, decoded (javax.imageio) and pHashed.
+    */
+  private def phashSigs(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    import graft.functions.ImageCodec
+    Tables.t(s, d, "documents").select(col("doc_id")).as[Long]
+      .mapPartitions { it =>
+        it.map { id =>
+          val img = ImageCodec.decode(ImageCodec.toPng(
+            ImageCodec.syntheticImage(id, 32 + (id % 3).toInt * 16, 32)))
+          (id, if (img == null) 0L else ImageCodec.phash64(img))
+        }
+      }.toDF("doc_id", "ph")
+  }
+
+  /** Hamming distance of a `TextOps.bandPairs` pair of pHashes. */
+  private val phashHamming =
+    expr("CAST(bit_count(ph_a ^ ph_b) AS BIGINT)").as("hamming")
+
   /** Driver-side pHash LUT over the doc_id period (lcm(256,3) = 768) —
     * same JVM codec path the executors run, so the VALUES literals are
     * bit-identical to the distributed result.
@@ -1665,30 +1685,13 @@ object Multimodal {
     // 768-entry LUT + the same chunk join replays the whole pipeline in
     // DuckDB, hash-checked end to end.
     "mm_phash_pairs" -> Q(
-      build = (s, d) => {
-        val spark = s
-        import spark.implicits._
-        import graft.functions.ImageCodec
-        val sigs = Tables.t(s, d, "documents").select(col("doc_id")).as[Long]
-          .mapPartitions { it =>
-            it.map { id =>
-              val img = ImageCodec.decode(ImageCodec.toPng(
-                ImageCodec.syntheticImage(id, 32 + (id % 3).toInt * 16, 32)))
-              (id, if (img == null) 0L else ImageCodec.phash64(img))
-            }
-          }.toDF("doc_id", "ph")
-        val chunks = sigs
-          .withColumn("c", explode(expr("sequence(0, 3)")))
-          .withColumn("ck", expr("shiftright(ph, c * 16) & 65535"))
-        chunks.as("x").join(chunks.as("y"),
-            col("x.c") === col("y.c") && col("x.ck") === col("y.ck")
-              && col("x.doc_id") < col("y.doc_id"))
-          .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-            expr("CAST(bit_count(x.ph ^ y.ph) AS BIGINT)").as("hamming"))
+      build = (s, d) =>
+        TextOps.bandPairs(phashSigs(s, d), "doc_id", TextOps.hashChunks("ph"),
+            Seq("ph"))
+          .select(col("doc_id_a").as("doc_a"), col("doc_id_b").as("doc_b"),
+            phashHamming)
           .filter(col("hamming") <= 6L)
-          .distinct()
-          .orderBy(col("doc_a"), col("doc_b"))
-      },
+          .orderBy(col("doc_a"), col("doc_b")),
       oracle = Some(phashPairsOracle)),
 
     // ----- mm_phash_pairs_grouped: the production form --------------------
@@ -1698,43 +1701,21 @@ object Multimodal {
     // mm_phash_pairs' OUTPUT — at ×1000 the synthetic corpus alone would
     // emit ~1.6e10 pairs. Same cure as
     // doc_minhash_lsh/simhash/ngram/containment _grouped: the banded
-    // hamming join runs over DISTINCT pHashes (one row per hash with
-    // rep = min doc_id and multiplicity m); cross-hash rep pairs carry
-    // m_a·m_b exact pairs, within-hash rows m(m−1)/2 at hamming 0.
+    // hamming join runs over DISTINCT pHashes (the group-weight rule,
+    // `TextOps.sigGroups`; within rows are hamming 0).
     // Grouping is by HASH, not image bytes, so distinct images colliding
     // into one pHash group together — correct by construction (they are
     // hamming-0 near-dups by definition of the detector). Expansion-
     // equivalence spec'd in GroupedPairListingSpec.
     "mm_phash_pairs_grouped" -> Q(
       build = (s, d) => {
-        val spark = s
-        import spark.implicits._
-        import graft.functions.ImageCodec
-        val sigs = Tables.t(s, d, "documents").select(col("doc_id")).as[Long]
-          .mapPartitions { it =>
-            it.map { id =>
-              val img = ImageCodec.decode(ImageCodec.toPng(
-                ImageCodec.syntheticImage(id, 32 + (id % 3).toInt * 16, 32)))
-              (id, if (img == null) 0L else ImageCodec.phash64(img))
-            }
-          }.toDF("doc_id", "ph")
-        val mm = sigs.groupBy(col("ph"))
-          .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("m"))
-        val chunks = mm
-          .withColumn("c", explode(expr("sequence(0, 3)")))
-          .withColumn("ck", expr("shiftright(ph, c * 16) & 65535"))
-        val cross = chunks.as("x").join(chunks.as("y"),
-            col("x.c") === col("y.c") && col("x.ck") === col("y.ck")
-              && col("x.rep") < col("y.rep"))
-          .filter(expr("bit_count(x.ph ^ y.ph) <= 6"))
-          .select(col("x.rep").as("rep_a"), col("y.rep").as("rep_b"),
-            expr("CAST(bit_count(x.ph ^ y.ph) AS BIGINT)").as("hamming"),
-            (col("x.m") * col("y.m")).as("n_pairs"))
-          .distinct() // a pair matched via 2+ chunks repeats the same row
-        val within = mm.filter(col("m") >= 2)
-          .select(col("rep").as("rep_a"), col("rep").as("rep_b"),
-            lit(0L).as("hamming"), expr("m * (m - 1) div 2").as("n_pairs"))
-        cross.union(within).orderBy(col("rep_a"), col("rep_b"))
+        val mm = TextOps.sigGroups(phashSigs(s, d), "ph")
+        TextOps.weighed(TextOps.bandPairs(mm, "rep", TextOps.hashChunks("ph"),
+            Seq("ph", "m")))
+          .select(col("rep_a"), col("rep_b"), phashHamming, col("n_pairs"))
+          .filter(col("hamming") <= 6L)
+          .union(TextOps.withinRows(mm, lit(0L).as("hamming")))
+          .orderBy(col("rep_a"), col("rep_b"))
       },
       oracle = Some(phashPairsGroupedOracle)),
 

@@ -189,14 +189,15 @@ object TextOps {
     FROM documents d, generate_series(1, 1024, 4) AS g(i)
     WHERE length(d.text) >= 20 AND g.i <= length(d.text) - 19"""
 
-  /** Exact-Jaccard scores for every shingle-sharing pair (the shingle
-    * join), unfiltered — shared by the pair report, the CC edge set, and
-    * the threshold-tuning histogram.
+  /** The shingle join: exact Jaccard and containment scores for every
+    * shingle-sharing pair (doc_a < doc_b, with n_common and the shingle
+    * counts n_a, n_b), unfiltered, plus the per-doc shingle counts
+    * (doc_id, n_sh) it scored them with.
     */
-  private def jaccardAllOf(dd: DataFrame): DataFrame = {
+  private def shingleScoresOf(dd: DataFrame): (DataFrame, DataFrame) = {
     val sh = shinglesOf(dd)
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-    sh.as("x")
+    val scored = sh.as("x")
       .join(sh.as("y"), col("x.sh") === col("y.sh")
         && col("x.doc_id") < col("y.doc_id"))
       .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
@@ -207,18 +208,22 @@ object TextOps {
         .withColumnRenamed("n_sh", "n_b"), "doc_b")
       .withColumn("jaccard", col("n_common").cast(DoubleType)
         / (col("n_a") + col("n_b") - col("n_common")))
+      .withColumn("containment", col("n_common").cast(DoubleType)
+        / least(col("n_a"), col("n_b")))
+    (scored, sizes)
   }
+
+  /** Scored shingle-sharing pairs — shared by the pair reports, the CC
+    * edge sets and the LSH evaluations.
+    */
+  private def jaccardAllOf(dd: DataFrame): DataFrame = shingleScoresOf(dd)._1
 
   private def jaccardAll(s: SparkSession, d: String): DataFrame =
     jaccardAllOf(docs(s, d))
 
   /** Identical-text groups over shingle-bearing docs (length >= 20):
     * (sizes = (rep, m), repDocs = one row per distinct text, keyed by the
-    * group-min doc_id). The basis of the group-weighted pair algebra
-    * shared by doc_lsh_recall / doc_lsh_band_tuning and the grouped pair
-    * listings: pair scores depend only on the text, so m byte-identical
-    * copies contribute m·(m−1)/2 within-group pairs (score 1) and factor
-    * m_a·m_b onto every cross-group rep pair.
+    * group-min doc_id) — the text form of `sigGroups`.
     */
   private def repGroups(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val g = docs(s, d).filter(length(col("text")) >= 20)
@@ -227,6 +232,85 @@ object TextOps {
     (g.groupBy(col("rep")).agg(count(lit(1)).as("m")),
       g.filter(col("doc_id") === col("rep")))
   }
+
+  /** The group-weight rule of every rep-collapsed pair listing and pair
+    * count. Items with one group key (a text, or a signature) collapse to
+    * a rep, the group's min doc_id, with multiplicity m. Whenever a pair's
+    * score depends only on the two keys, the exploded pair set is exactly
+    * recovered from the reps: a cross pair of reps (a, b) stands for
+    * m_a·m_b member pairs with the reps' score, and each group with m ≥ 2
+    * adds m(m−1)/2 within pairs scored as an item against itself. So the
+    * pair joins run over distinct keys only, and duplicate-multiplied pair
+    * frames never materialize.
+    *
+    * `sigGroups` collapses `items` (doc_id plus the key column `key`) to
+    * (key, rep, m); `repGroups` is the text form.
+    */
+  private[operators] def sigGroups(items: DataFrame, key: String): DataFrame =
+    items.groupBy(col(key))
+      .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("m"))
+
+  /** Adds the cross-pair weight n_pairs = m_a·m_b to rep pairs. */
+  private[operators] def weighed(pairs: DataFrame): DataFrame =
+    pairs.withColumn("n_pairs", col("m_a") * col("m_b"))
+
+  /** Attaches each group's m to text rep pairs (doc_a, doc_b) as m_a, m_b. */
+  private def withGroupSizes(pairs: DataFrame, sizes: DataFrame): DataFrame =
+    pairs.join(sizes.select(col("rep").as("doc_a"), col("m").as("m_a")), "doc_a")
+      .join(sizes.select(col("rep").as("doc_b"), col("m").as("m_b")), "doc_b")
+
+  /** The within rows (rep_a = rep_b = rep, `self`..., n_pairs =
+    * m(m−1)/2) of every group with m ≥ 2; `self` are the score columns of
+    * an item paired with itself.
+    */
+  private[operators] def withinRows(groups: DataFrame, self: Column*): DataFrame =
+    groups.filter(col("m") >= 2)
+      .select(Seq(col("rep").as("rep_a"), col("rep").as("rep_b")) ++ self
+        :+ expr("m * (m - 1) div 2").as("n_pairs"): _*)
+
+  /** The grouped shingle-score frame under doc_ngram_dedup_grouped,
+    * doc_containment_grouped and doc_sim_histogram: every shingle-sharing
+    * pair of distinct texts (rep_a < rep_b) plus one within row per
+    * duplicated text (n_common = its shingle count, jaccard = containment
+    * = 1), each with n_common, jaccard, containment and n_pairs. The
+    * within rows' shingle counts come from the same shingle pass that
+    * scores the cross pairs.
+    */
+  private def groupedShingleScores(s: SparkSession, d: String): DataFrame = {
+    val (groups, repDocs) = repGroups(s, d)
+    val (scored, nsh) = shingleScoresOf(repDocs)
+    weighed(withGroupSizes(scored, groups))
+      .select(col("doc_a").as("rep_a"), col("doc_b").as("rep_b"),
+        col("n_common"), col("jaccard"), col("containment"), col("n_pairs"))
+      .union(withinRows(groups.join(nsh, col("rep") === col("doc_id")),
+        col("n_sh").as("n_common"), lit(1.0).as("jaccard"),
+        lit(1.0).as("containment")))
+  }
+
+  /** The one banded self-join of the signature pair listings (MinHash-LSH,
+    * SimHash, pHash and their _grouped twins): `keys` holds one key
+    * column per band, and two items are a candidate pair when they share
+    * a band's key. Returns each pair once, `<id>_a` < `<id>_b`, with
+    * `<c>_a` and `<c>_b` for every column `c` in `carry`.
+    */
+  private[graft] def bandPairs(items: DataFrame, id: String,
+      keys: Seq[Column], carry: Seq[String] = Nil): DataFrame = {
+    val cs = id +: carry
+    val banded = items.select(cs.map(col) :+
+      posexplode(array(keys: _*)).as(Seq("band", "key")): _*)
+    banded.as("x").join(banded.as("y"),
+        col("x.band") === col("y.band") && col("x.key") === col("y.key")
+          && col(s"x.$id") < col(s"y.$id"))
+      .select(cs.map(c => col(s"x.$c").as(s"${c}_a"))
+        ++ cs.map(c => col(s"y.$c").as(s"${c}_b")): _*)
+      .distinct() // a pair sharing 2+ bands repeats the same row
+  }
+
+  /** The four 16-bit chunks of a 64-bit hash: SimHash's and pHash's band
+    * keys.
+    */
+  private[operators] def hashChunks(h: String): Seq[Column] =
+    (0 until 4).map(c => shiftright(col(h), c * 16).bitwiseAND(0xFFFFL))
 
   /** Oracle CTEs for the rep-group algebra: g, mm(rep, m), rd (rep docs),
     * gsh / gsizes / gcpairs (the shingle join over DISTINCT texts only).
@@ -427,32 +511,28 @@ object TextOps {
   private def minhashBandPairs(s: SparkSession, d: String): DataFrame =
     minhashBandPairsOf(docs(s, d))
 
-  private def minhashBandPairsOf(dd: DataFrame): DataFrame = {
-    val bands = 8 // 4 rows per band over a 32-perm signature
-    val sigs = dd
-      .filter(length(col("text")) >= 20)
+  private def minhashBandPairsOf(dd: DataFrame): DataFrame =
+    bandPairs(minhashSigs(dd), "doc_id", minhashBands)
+      .select(col("doc_id_a").as("doc_a"), col("doc_id_b").as("doc_b"))
+
+  /** (doc_id, sig): the 32-perm MinHash signature of every shingle-bearing
+    * doc.
+    */
+  private def minhashSigs(dd: DataFrame): DataFrame =
+    dd.filter(length(col("text")) >= 20)
       .select(col("doc_id"),
         graft.functions.TextFunctions.minhash_signature(col("text")).as("sig"))
-    val bandCols = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        element_at(col("sig"), b * 4 + 1).as("s0"),
-        element_at(col("sig"), b * 4 + 2).as("s1"),
-        element_at(col("sig"), b * 4 + 3).as("s2"),
-        element_at(col("sig"), b * 4 + 4).as("s3"))
-    }
-    val banded = sigs.select(col("doc_id"),
-      explode(array(bandCols: _*)).as("bs"))
-      .select(col("doc_id"), col("bs.band").as("band"),
-        col("bs.s0").as("s0"), col("bs.s1").as("s1"),
-        col("bs.s2").as("s2"), col("bs.s3").as("s3"))
-    banded.as("x").join(banded.as("y"),
-        col("x.band") === col("y.band") && col("x.s0") === col("y.s0")
-          && col("x.s1") === col("y.s1") && col("x.s2") === col("y.s2")
-          && col("x.s3") === col("y.s3")
-          && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .distinct()
-  }
+
+  /** (doc_id, simhash): the one-pass 64-bit SimHash of every doc. */
+  private def simhashSigs(s: SparkSession, d: String): DataFrame =
+    docs(s, d).select(col("doc_id"),
+      graft.functions.TextFunctions.simhash64(col("text")).as("simhash"))
+
+  /** 8 bands × 4 rows: each band's key is its 4 raw signature values (no
+    * band-hash collision risk, and the DuckDB oracle can replay it).
+    */
+  private val minhashBands: Seq[Column] =
+    (0 until 8).map(b => slice(col("sig"), b * 4 + 1, 4))
 
   /** Per-doc (doc_id, lang, trigram, cnt) counts — the one corpus
     * tokenize pass shared by LID training and scoring.
@@ -1038,35 +1118,17 @@ object TextOps {
     // ----- doc_ngram_dedup_grouped: production-form near-dup listing -----
     // The group-COMPRESSED twin of doc_ngram_dedup — the form a 100 TB
     // pipeline actually ships. The exploded listing's output itself grows
-    // ~m² under duplicate multiplicity (m byte-identical copies of a text
-    // put m·(m−1)/2 jac=1 pairs in the OUTPUT — no plan beats its own
-    // output size, the r8 ×100 finding). Here identical texts collapse to
-    // their min-id rep and each row carries its pair multiplicity:
-    // cross-group rep pairs weigh m_a·m_b, within-group rows (rep_a =
-    // rep_b) weigh m·(m−1)/2 with jaccard 1. Exactly expansion-equivalent
-    // to the exploded listing (spec'd in GroupedPairListingSpec); with
-    // all-unique texts it IS the exploded listing plus no within rows.
-    // Cost: linear corpus pass + rep-level shingle join — duplicate-
-    // multiplied pair frames never materialize.
+    // ~m² under duplicate multiplicity (no plan beats its own output size,
+    // the r8 ×100 finding). Here identical texts collapse to their min-id
+    // rep and each row carries its pair multiplicity (the group-weight
+    // rule, `sigGroups`); spec'd in GroupedPairListingSpec. With all-unique
+    // texts it IS the exploded listing plus no within rows.
     "doc_ngram_dedup_grouped" -> Q(
-      build = (s, d) => {
-        val (sizes, repDocs) = repGroups(s, d)
-        val sa = sizes.select(col("rep").as("doc_a"), col("m").as("ma"))
-        val sb = sizes.select(col("rep").as("doc_b"), col("m").as("mb"))
-        val cross = jaccardAllOf(repDocs).filter(col("jaccard") >= 0.5)
-          .join(sa, "doc_a").join(sb, "doc_b")
-          .select(col("doc_a").as("rep_a"), col("doc_b").as("rep_b"),
-            col("n_common"), col("jaccard"),
-            (col("ma") * col("mb")).as("n_pairs"))
-        val nsh = shinglesOf(repDocs).groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("n_sh"))
-        val within = sizes.filter(col("m") >= 2)
-          .join(nsh, col("rep") === col("doc_id"))
-          .select(col("rep").as("rep_a"), col("rep").as("rep_b"),
-            col("n_sh").as("n_common"), lit(1.0).as("jaccard"),
-            expr("m * (m - 1) div 2").as("n_pairs"))
-        cross.union(within).orderBy(col("rep_a"), col("rep_b"))
-      },
+      build = (s, d) =>
+        groupedShingleScores(s, d).filter(col("jaccard") >= 0.5)
+          .select(col("rep_a"), col("rep_b"), col("n_common"), col("jaccard"),
+            col("n_pairs"))
+          .orderBy(col("rep_a"), col("rep_b")),
       oracle = Some(s"""
         WITH $GROUPED_CTES
         SELECT j.doc_a AS rep_a, j.doc_b AS rep_b, j.n_common, j.jaccard,
@@ -1167,45 +1229,18 @@ object TextOps {
     // signatures ⇒ every replica pair is a candidate OUTPUT row (m²
     // growth — 23 s at ×100 hid it, 433 s at ×1000 did not). Same cure
     // as ngram/containment/simhash: band-join over DISTINCT signatures
-    // (one row per signature, rep = min doc_id, multiplicity m), emit
-    // rep pairs with the exact pair count they compress — cross-group
-    // m_a·m_b (signature determines every band, so all member pairs are
-    // candidates together), within-group m(m−1)/2 (identical signatures
-    // share all 8 bands). Expansion-equivalence spec'd in
+    // (the group-weight rule, `sigGroups`: a signature determines every
+    // band, so all member pairs are candidates together, and identical
+    // signatures share all 8 bands). Expansion-equivalence spec'd in
     // GroupedPairListingSpec; grouping is by SIGNATURE, not text, so
     // cross-text signature collisions are handled by construction.
     "doc_minhash_lsh_grouped" -> Q(
       build = (s, d) => {
-        val sigs = docs(s, d)
-          .filter(length(col("text")) >= 20)
-          .select(col("doc_id"),
-            graft.functions.TextFunctions.minhash_signature(col("text")).as("sig"))
-        val mm = sigs.groupBy(col("sig"))
-          .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("m"))
-        val bandCols = (0 until 8).map { b =>
-          struct(lit(b).as("band"),
-            element_at(col("sig"), b * 4 + 1).as("s0"),
-            element_at(col("sig"), b * 4 + 2).as("s1"),
-            element_at(col("sig"), b * 4 + 3).as("s2"),
-            element_at(col("sig"), b * 4 + 4).as("s3"))
-        }
-        val keyed = mm.select(col("rep"), col("m"),
-            explode(array(bandCols: _*)).as("bs"))
-          .select(col("rep"), col("m"), col("bs.band").as("band"),
-            col("bs.s0").as("s0"), col("bs.s1").as("s1"),
-            col("bs.s2").as("s2"), col("bs.s3").as("s3"))
-        val cross = keyed.as("x").join(keyed.as("y"),
-            col("x.band") === col("y.band") && col("x.s0") === col("y.s0")
-              && col("x.s1") === col("y.s1") && col("x.s2") === col("y.s2")
-              && col("x.s3") === col("y.s3")
-              && col("x.rep") < col("y.rep"))
-          .select(col("x.rep").as("rep_a"), col("y.rep").as("rep_b"),
-            (col("x.m") * col("y.m")).as("n_pairs"))
-          .distinct() // a pair matched via 2+ bands repeats the same row
-        val within = mm.filter(col("m") >= 2)
-          .select(col("rep").as("rep_a"), col("rep").as("rep_b"),
-            expr("m * (m - 1) div 2").as("n_pairs"))
-        cross.union(within).orderBy(col("rep_a"), col("rep_b"))
+        val mm = sigGroups(minhashSigs(docs(s, d)), "sig")
+        weighed(bandPairs(mm, "rep", minhashBands, Seq("m")))
+          .select(col("rep_a"), col("rep_b"), col("n_pairs"))
+          .union(withinRows(mm))
+          .orderBy(col("rep_a"), col("rep_b"))
       },
       oracle = Some(s"""
         WITH $MINHASH_CTES,
@@ -1233,27 +1268,15 @@ object TextOps {
     // SimHash computed per row by the one-pass kernel (no token explode,
     // no 64-column aggregation shuffle).
     "doc_simhash" -> Q(
-      build = (s, d) => {
-        val sigs = docs(s, d).select(col("doc_id"),
-          graft.functions.TextFunctions.simhash64(col("text")).as("simhash"))
+      build = (s, d) =>
         // candidates: exact match on any of 4 16-bit chunks, then hamming<=6
-        val chunks = (0 until 4).map { c =>
-          struct(lit(c).as("chunk"),
-            shiftright(col("simhash"), c * 16).bitwiseAND(0xFFFFL).as("ck"))
-        }
-        val keyed = sigs.select(col("doc_id"), col("simhash"),
-          explode(array(chunks: _*)).as("c"))
-          .select(col("doc_id"), col("simhash"),
-            col("c.chunk").as("chunk"), col("c.ck").as("ck"))
-        keyed.as("x").join(keyed.as("y"),
-            col("x.chunk") === col("y.chunk") && col("x.ck") === col("y.ck")
-              && col("x.doc_id") < col("y.doc_id"))
-          .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-            bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).as("hamming"))
-          .distinct()
+        bandPairs(simhashSigs(s, d), "doc_id", hashChunks("simhash"),
+            Seq("simhash"))
+          .select(col("doc_id_a").as("doc_a"), col("doc_id_b").as("doc_b"),
+            bit_count(col("simhash_a").bitwiseXOR(col("simhash_b")))
+              .as("hamming"))
           .filter(col("hamming") <= 6)
-          .orderBy(col("doc_a"), col("doc_b"))
-      },
+          .orderBy(col("doc_a"), col("doc_b")),
       oracle = Some(s"""
         WITH tok AS (
           SELECT doc_id, unnest(str_split(text, ' ')) AS t FROM documents),
@@ -1290,38 +1313,19 @@ object TextOps {
     // exploded listing's OUTPUT grows ~m² under duplicate multiplicity
     // (every replica pair is a hamming-0 row — the r10 ×100 finding:
     // 112 s, output-bound). Here identical SIGNATURES collapse to their
-    // min-doc_id rep and each row carries its pair multiplicity:
-    // cross-group rows weigh m_a·m_b, within-group rows (rep, rep,
-    // hamming 0) weigh m·(m−1)/2. Exactly expansion-equivalent to the
-    // exploded listing (SimhashGroupedSpec); banding runs over DISTINCT
-    // signatures, so duplicate-multiplied pair frames never materialize.
+    // min-doc_id rep (the group-weight rule, `sigGroups`; within rows are
+    // hamming 0). Exactly expansion-equivalent to the exploded listing
+    // (GroupedPairListingSpec).
     "doc_simhash_grouped" -> Q(
       build = (s, d) => {
-        val sigs = docs(s, d).select(col("doc_id"),
-          graft.functions.TextFunctions.simhash64(col("text")).as("simhash"))
-        val mm = sigs.groupBy(col("simhash"))
-          .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("m"))
-        val chunks = (0 until 4).map { c =>
-          struct(lit(c).as("chunk"),
-            shiftright(col("simhash"), c * 16).bitwiseAND(0xFFFFL).as("ck"))
-        }
-        val keyed = mm.select(col("simhash"), col("rep"), col("m"),
-            explode(array(chunks: _*)).as("c"))
-          .select(col("simhash"), col("rep"), col("m"),
-            col("c.chunk").as("chunk"), col("c.ck").as("ck"))
-        val cross = keyed.as("x").join(keyed.as("y"),
-            col("x.chunk") === col("y.chunk") && col("x.ck") === col("y.ck")
-              && col("x.rep") < col("y.rep"))
-          .select(col("x.rep").as("rep_a"), col("y.rep").as("rep_b"),
-            bit_count(col("x.simhash").bitwiseXOR(col("y.simhash")))
-              .as("hamming"),
-            (col("x.m") * col("y.m")).as("n_pairs"))
-          .distinct() // a pair matched via 2+ chunks repeats the same row
+        val mm = sigGroups(simhashSigs(s, d), "simhash")
+        weighed(bandPairs(mm, "rep", hashChunks("simhash"), Seq("simhash", "m")))
+          .select(col("rep_a"), col("rep_b"),
+            bit_count(col("simhash_a").bitwiseXOR(col("simhash_b")))
+              .as("hamming"), col("n_pairs"))
           .filter(col("hamming") <= 6)
-        val within = mm.filter(col("m") >= 2)
-          .select(col("rep").as("rep_a"), col("rep").as("rep_b"),
-            lit(0).as("hamming"), expr("m * (m - 1) div 2").as("n_pairs"))
-        cross.union(within).orderBy(col("rep_a"), col("rep_b"))
+          .union(withinRows(mm, lit(0).as("hamming")))
+          .orderBy(col("rep_a"), col("rep_b"))
       },
       oracle = Some(s"""
         WITH tok AS (
@@ -1477,31 +1481,16 @@ object TextOps {
     "doc_sim_histogram" -> Q(
       // r10 ×100 catch-up finding: the raw jaccardAll form OOMs at ×100 —
       // replica groups blow the shingle join ×m² — but the output is an
-      // AGGREGATE, so the r8 group-weighted pair algebra (doc_lsh_recall's
-      // fix) applies exactly: score DISTINCT texts only, weight each
-      // cross-group rep pair by m_a·m_b (pair jaccard is a function of
-      // the texts alone), and add the within-group mass m(m−1)/2 to the
-      // jaccard-1.0 bucket. Output identical (hash-gated sf0.01 + sf0.1).
-      build = (s, d) => {
-        val (sizes, repDocs) = repGroups(s, d)
-        val cross = jaccardAllOf(repDocs)
-          .join(sizes.select(col("rep").as("doc_a"), col("m").as("m_a")),
-            "doc_a")
-          .join(sizes.select(col("rep").as("doc_b"), col("m").as("m_b")),
-            "doc_b")
-          .select(floor(col("jaccard") * 10.0).cast(LongType).as("bucket"),
-            (col("m_a") * col("m_b")).as("w"),
-            (col("jaccard") >= 0.5).as("above"))
-        val within = sizes.filter(col("m") >= 2)
-          .select(lit(10L).as("bucket"), expr("m * (m - 1) div 2").as("w"),
-            lit(true).as("above"))
-        cross.union(within)
-          .groupBy(col("bucket"))
-          .agg(sum(col("w")).as("n_pairs"),
-            sum(when(col("above"), col("w")).otherwise(0L))
+      // AGGREGATE over the group-weighted pairs (`sigGroups`), whose
+      // within rows (jaccard 1.0) land in bucket 10. Output identical
+      // (hash-gated sf0.01 + sf0.1).
+      build = (s, d) =>
+        groupedShingleScores(s, d)
+          .groupBy(floor(col("jaccard") * 10.0).cast(LongType).as("bucket"))
+          .agg(sum(col("n_pairs")).as("n_pairs"),
+            sum(when(col("jaccard") >= 0.5, col("n_pairs")).otherwise(0L))
               .as("n_above_threshold"))
-          .orderBy(col("bucket"))
-      },
+          .orderBy(col("bucket")),
       oracle = Some(s"""
         WITH $GROUPED_CTES,
         wpairs AS (
@@ -2609,36 +2598,24 @@ object TextOps {
     // candidate pairs against the exact Jaccard ≥ 0.5 ground truth.
     //
     // Group-weighted pair algebra (r8, same root cause as
-    // doc_cc_clusters' collapse): both Jaccard and the MinHash signature
-    // depend only on the text, so for docs collapsed into identical-text
-    // groups of sizes m_g the three counts decompose EXACTLY —
-    //   within-group pairs: jac = 1 (≥ 0.5) and identical sigs (share
-    //     every band), so Σ m_g·(m_g−1)/2 adds to exact, candidates and
-    //     hits alike;
-    //   cross-group pairs: every (a∈g, b∈h) pair behaves as its rep pair
-    //     (r_g, r_h), contributing weight m_g·m_h.
-    // The plan therefore runs the shingle/band joins over DISTINCT texts
-    // only and never materializes the duplicate-multiplied pair set —
-    // output identical (the oracle still brute-forces the full corpus),
-    // cost linear in corpus + rep-level pair work. With all-unique texts
-    // (the gate SFs) every m = 1 and the algebra is the old plan.
+    // doc_cc_clusters' collapse; the rule is stated on `sigGroups`): both
+    // Jaccard and the MinHash signature depend only on the text, and
+    // identical texts have jac = 1 (≥ 0.5) and share every band, so the
+    // within pairs add alike to exact, candidates and hits. The plan runs
+    // the shingle/band joins over DISTINCT texts only — output identical
+    // (the oracle still brute-forces the full corpus). With all-unique
+    // texts (the gate SFs) every m = 1 and the algebra is the old plan.
     "doc_lsh_recall" -> Q(
       build = (s, d) => {
-        val g = docs(s, d).filter(length(col("text")) >= 20)
-          .withColumn("rep", min(col("doc_id")).over(
-            Window.partitionBy(md5(col("text").cast(BinaryType)))))
-        val sizes = g.groupBy(col("rep")).agg(count(lit(1)).as("m"))
-        val repDocs = g.filter(col("doc_id") === col("rep"))
-        val within = sizes
-          .agg(coalesce(sum(expr("m * (m - 1) div 2")), lit(0L)).as("w"))
+        val (sizes, repDocs) = repGroups(s, d)
+        val within = withinRows(sizes)
+          .agg(coalesce(sum(col("n_pairs")), lit(0L)).as("w"))
         val exact = jaccardAllOf(repDocs).filter(col("jaccard") >= 0.5)
           .select(col("doc_a"), col("doc_b"))
         val cand = minhashBandPairsOf(repDocs)
-        val sa = sizes.select(col("rep").as("doc_a"), col("m").as("ma"))
-        val sb = sizes.select(col("rep").as("doc_b"), col("m").as("mb"))
         def wsum(df: DataFrame, n: String): DataFrame =
-          df.join(sa, "doc_a").join(sb, "doc_b")
-            .agg(coalesce(sum(col("ma") * col("mb")), lit(0L)).as(n))
+          weighed(withGroupSizes(df, sizes))
+            .agg(coalesce(sum(col("n_pairs")), lit(0L)).as(n))
         val nEx = wsum(exact, "xw").crossJoin(broadcast(within))
           .select((col("xw") + col("w")).as("n_exact"))
         val nCd = wsum(cand, "cw").crossJoin(broadcast(within))
@@ -2682,28 +2659,17 @@ object TextOps {
     // candidates still report (left join from the config table).
     // Scale shape (r8): same group-weighted pair algebra as
     // doc_lsh_recall — band joins and the exact truth run over distinct
-    // texts; identical-text groups contribute m(m−1)/2 to every config's
-    // candidates AND hits (identical sigs share every band in every
-    // banding) and to the exact count (jac = 1); cross-group rep pairs
-    // carry weight m_a·m_b. Output identical, duplicate-multiplied pair
-    // frames never materialize.
+    // texts; identical sigs share every band in every banding, so the
+    // within pairs add to every config's candidates AND hits. Output
+    // identical, duplicate-multiplied pair frames never materialize.
     "doc_lsh_band_tuning" -> Q(
       build = (s, d) => {
         val spark = s
         import spark.implicits._
-        val g = docs(s, d).filter(length(col("text")) >= 20)
-          .withColumn("rep", min(col("doc_id")).over(
-            Window.partitionBy(md5(col("text").cast(BinaryType)))))
-        val sizes = g.groupBy(col("rep")).agg(count(lit(1)).as("m"))
-        val repDocs = g.filter(col("doc_id") === col("rep"))
-        val within = sizes
-          .agg(coalesce(sum(expr("m * (m - 1) div 2")), lit(0L)).as("w"))
-        val sa = sizes.select(col("rep").as("doc_a"), col("m").as("ma"))
-        val sb = sizes.select(col("rep").as("doc_b"), col("m").as("mb"))
-        val sigs = repDocs
-          .select(col("doc_id"),
-            graft.functions.TextFunctions.minhash_signature(col("text"))
-              .as("sig"))
+        val (sizes, repDocs) = repGroups(s, d)
+        val within = withinRows(sizes)
+          .agg(coalesce(sum(col("n_pairs")), lit(0L)).as("w"))
+        val sigs = minhashSigs(repDocs)
         def bandedFor(bands: Int, rows: Int): DataFrame = {
           val bandCols = (0 until bands).map { b =>
             struct(lit(b).as("band"),
@@ -2728,17 +2694,15 @@ object TextOps {
           .distinct()
         val exact = jaccardAllOf(repDocs).filter(col("jaccard") >= 0.5)
           .select(col("doc_a"), col("doc_b"))
-        val nEx = exact
-          .join(sa, "doc_a").join(sb, "doc_b")
-          .agg(coalesce(sum(col("ma") * col("mb")), lit(0L)).as("xw"))
+        val nEx = weighed(withGroupSizes(exact, sizes))
+          .agg(coalesce(sum(col("n_pairs")), lit(0L)).as("xw"))
           .crossJoin(broadcast(within))
           .select((col("xw") + col("w")).as("n_exact"))
-        val met = cand
-          .join(exact.withColumn("hit", lit(1L)), Seq("doc_a", "doc_b"), "left")
-          .join(sa, "doc_a").join(sb, "doc_b")
+        val met = weighed(withGroupSizes(cand.join(exact.withColumn("hit",
+            lit(1L)), Seq("doc_a", "doc_b"), "left"), sizes))
           .groupBy(col("bands"), col("rows_per_band"))
-          .agg(sum(col("ma") * col("mb")).as("cw"),
-            sum(when(col("hit") === 1L, col("ma") * col("mb"))
+          .agg(sum(col("n_pairs")).as("cw"),
+            sum(when(col("hit") === 1L, col("n_pairs"))
               .otherwise(lit(0L))).as("hw"))
         Seq((4, 8), (8, 4), (16, 2)).toDF("bands", "rows_per_band")
           .join(met, Seq("bands", "rows_per_band"), "left")
@@ -2907,8 +2871,6 @@ object TextOps {
     "doc_containment_pairs" -> Q(
       build = (s, d) =>
         jaccardAll(s, d)
-          .withColumn("containment", col("n_common").cast(DoubleType)
-            / least(col("n_a"), col("n_b")))
           .filter(col("containment") >= 0.9)
           .select(col("doc_a"), col("doc_b"), col("n_common"),
             col("containment"), col("jaccard"),
@@ -2936,34 +2898,15 @@ object TextOps {
     // ----- doc_containment_grouped: production-form containment listing --
     // Group-compressed twin of doc_containment_pairs (same algebra as
     // doc_ngram_dedup_grouped — containment too depends only on the
-    // texts): cross-group rep pairs at containment >= 0.9 with weight
-    // m_a·m_b; within-group rows at containment = jaccard = 1 with
-    // weight m·(m−1)/2. Expansion-equivalent to the exploded listing;
-    // output stays rep-level under any duplicate multiplicity.
+    // texts). Expansion-equivalent to the exploded listing; output stays
+    // rep-level under any duplicate multiplicity.
     "doc_containment_grouped" -> Q(
-      build = (s, d) => {
-        val (sizes, repDocs) = repGroups(s, d)
-        val sa = sizes.select(col("rep").as("doc_a"), col("m").as("ma"))
-        val sb = sizes.select(col("rep").as("doc_b"), col("m").as("mb"))
-        val cross = jaccardAllOf(repDocs)
-          .withColumn("containment", col("n_common").cast(DoubleType)
-            / least(col("n_a"), col("n_b")))
-          .filter(col("containment") >= 0.9)
-          .join(sa, "doc_a").join(sb, "doc_b")
-          .select(col("doc_a").as("rep_a"), col("doc_b").as("rep_b"),
-            col("n_common"), col("containment"), col("jaccard"),
-            (col("jaccard") < 0.5).as("jaccard_missed"),
-            (col("ma") * col("mb")).as("n_pairs"))
-        val nsh = shinglesOf(repDocs).groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("n_sh"))
-        val within = sizes.filter(col("m") >= 2)
-          .join(nsh, col("rep") === col("doc_id"))
-          .select(col("rep").as("rep_a"), col("rep").as("rep_b"),
-            col("n_sh").as("n_common"), lit(1.0).as("containment"),
-            lit(1.0).as("jaccard"), lit(false).as("jaccard_missed"),
-            expr("m * (m - 1) div 2").as("n_pairs"))
-        cross.union(within).orderBy(col("rep_a"), col("rep_b"))
-      },
+      build = (s, d) =>
+        groupedShingleScores(s, d).filter(col("containment") >= 0.9)
+          .select(col("rep_a"), col("rep_b"), col("n_common"),
+            col("containment"), col("jaccard"),
+            (col("jaccard") < 0.5).as("jaccard_missed"), col("n_pairs"))
+          .orderBy(col("rep_a"), col("rep_b")),
       oracle = Some(s"""
         WITH $GROUPED_CTES
         SELECT j.doc_a AS rep_a, j.doc_b AS rep_b, j.n_common,

@@ -4,13 +4,13 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The group-compressed pair listings (doc_ngram_dedup_grouped,
-  * doc_containment_grouped) must be exactly expansion-equivalent to
+  * doc_containment_grouped, doc_simhash_grouped, doc_minhash_lsh_grouped,
+  * mm_phash_pairs_grouped) must be exactly expansion-equivalent to
   * their exploded twins: on any corpus, aggregating the exploded pair
-  * listing by identical-text group must reproduce every compressed row's
-  * multiplicity and scores, and vice versa. Checked on the sf corpus
-  * (all texts unique — compression is the identity) and on a 3×
-  * duplicated corpus (the ScaleUp shape, where the exploded listing is
-  * 9× larger).
+  * listing by group must reproduce every compressed row's multiplicity
+  * and scores, and vice versa. Checked on the sf corpus (all texts
+  * unique — text compression is the identity) and on a 3× duplicated
+  * corpus (the ScaleUp shape, where the exploded listing is 9× larger).
   */
 class GroupedPairListingSpec extends SparkSpecBase {
 
@@ -25,33 +25,35 @@ class GroupedPairListingSpec extends SparkSpecBase {
     dir
   }
 
-  /** exploded listing rolled up to rep-group pairs, for comparison with
-    * the compressed listing (rep = doc_id % 10^9 on the dup corpus).
+  /** exploded listing rolled up to rep-group pairs (rep_a, rep_b,
+    * n_pairs, scores...), for comparison with the compressed listing
+    * (rep = doc_id % 10^9 on the dup corpus); each score must be one
+    * value per group pair.
     */
-  private def rollup(exploded: DataFrame, scoreCols: Seq[String]): Set[Row2] = {
+  private def rollup(exploded: DataFrame, scoreCols: Seq[String]): Set[Seq[Any]] = {
     val ra = col("doc_a") % 1000000000L
     val rb = col("doc_b") % 1000000000L
     exploded
       .withColumn("rep_a", least(ra, rb))
       .withColumn("rep_b", greatest(ra, rb))
       .groupBy(col("rep_a"), col("rep_b"))
-      .agg(count(lit(1)).as("n_pairs"),
-        scoreCols.map(c => countDistinct(col(c)).as(s"d_$c")): _*)
+      .agg(count(lit(1)).as("n_pairs"), scoreCols.flatMap(c =>
+        Seq(countDistinct(col(c)).as(s"d_$c"), min(col(c)).as(c))): _*)
       .collect().map { r =>
         scoreCols.foreach(c =>
           assert(r.getAs[Long](s"d_$c") == 1L,
             s"group pair has inconsistent $c: $r"))
-        Row2(r.getAs[Long]("rep_a"), r.getAs[Long]("rep_b"),
-          r.getAs[Long]("n_pairs"))
+        Seq[Any](r.getAs[Long]("rep_a"), r.getAs[Long]("rep_b"),
+          r.getAs[Long]("n_pairs")) ++ scoreCols.map(c => r.getAs[Any](c))
       }.toSet
   }
 
-  private case class Row2(a: Long, b: Long, n: Long)
-
-  private def compressed(name: String, dir: String): Set[Row2] =
+  /** the compressed listing as (rep_a, rep_b, n_pairs, scores...) */
+  private def compressed(name: String, dir: String,
+      scoreCols: Seq[String] = Nil): Set[Seq[Any]] =
     SparkEntry.queries(name)(spark, dir).collect().map(r =>
-      Row2(r.getAs[Long]("rep_a"), r.getAs[Long]("rep_b"),
-        r.getAs[Long]("n_pairs"))).toSet
+      Seq[Any](r.getAs[Long]("rep_a"), r.getAs[Long]("rep_b"),
+        r.getAs[Long]("n_pairs")) ++ scoreCols.map(c => r.getAs[Any](c))).toSet
 
   test("unique-text corpus: compression is the identity (no within rows)") {
     val g = run("doc_ngram_dedup_grouped").collect()
@@ -67,15 +69,17 @@ class GroupedPairListingSpec extends SparkSpecBase {
   }
 
   test("duplicated corpus: exploded listing rolls up to the compressed one") {
+    // scores included: the within rows (rep_a = rep_b) must carry the
+    // same n_common / jaccard / containment as the exploded listing's
+    // pairs of identical texts
     val dir = dupCorpus(3)
-    val exG = rollup(
-      SparkEntry.queries("doc_ngram_dedup")(spark, dir),
-      Seq("n_common", "jaccard"))
-    assert(compressed("doc_ngram_dedup_grouped", dir) == exG)
+    val gCols = Seq("n_common", "jaccard")
+    val exG = rollup(SparkEntry.queries("doc_ngram_dedup")(spark, dir), gCols)
+    assert(compressed("doc_ngram_dedup_grouped", dir, gCols) == exG)
+    val cCols = Seq("n_common", "containment", "jaccard")
     val exC = rollup(
-      SparkEntry.queries("doc_containment_pairs")(spark, dir),
-      Seq("n_common", "containment", "jaccard"))
-    assert(compressed("doc_containment_grouped", dir) == exC)
+      SparkEntry.queries("doc_containment_pairs")(spark, dir), cCols)
+    assert(compressed("doc_containment_grouped", dir, cCols) == exC)
     // within rows exist and carry m*(m-1)/2 = 3 pairs per duplicated text
     val within = SparkEntry.queries("doc_ngram_dedup_grouped")(spark, dir)
       .filter(col("rep_a") === col("rep_b")).collect()
@@ -139,7 +143,7 @@ class GroupedPairListingSpec extends SparkSpecBase {
     * m_a·m_b (a shared signature shares every band), within-group rows
     * m(m−1)/2.
     */
-  private def minhashRollup(dir: String): Set[Row2] = {
+  private def minhashRollup(dir: String): Set[Seq[Any]] = {
     val sig = spark.read.parquet(s"$dir/documents.parquet")
       .filter(length(col("text")) >= 20)
       .select(col("doc_id"),
@@ -153,7 +157,7 @@ class GroupedPairListingSpec extends SparkSpecBase {
         greatest(col("ra"), col("rb")).as("rep_b"))
       .groupBy(col("rep_a"), col("rep_b"))
       .agg(count(lit(1)).as("n_pairs"))
-      .collect().map(r => Row2(r.getAs[Long]("rep_a"),
+      .collect().map(r => Seq[Any](r.getAs[Long]("rep_a"),
         r.getAs[Long]("rep_b"), r.getAs[Long]("n_pairs"))).toSet
   }
 
@@ -165,9 +169,9 @@ class GroupedPairListingSpec extends SparkSpecBase {
     val dir = dupCorpus(3)
     val comp = compressed("doc_minhash_lsh_grouped", dir)
     assert(comp == minhashRollup(dir))
-    val within = comp.filter(t => t.a == t.b)
+    val within = comp.filter(t => t(0) == t(1))
     assert(within.nonEmpty)
-    assert(within.forall(_.n >= 3L))
+    assert(within.forall(_(2).asInstanceOf[Long] >= 3L))
   }
 
   /** mm_phash_pairs_grouped collapses on the 64-bit pHASH (duplicate
