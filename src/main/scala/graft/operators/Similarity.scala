@@ -1264,60 +1264,54 @@ object Similarity {
     // ----- emb_kmeans: Lloyd clustering (IVF coarse-quantizer training) --
     // The training step the IVF index (emb_ivf_topk) assumes: k=8 centroids
     // refined by 3 Lloyd rounds from a deterministic seed (the 8 lowest
-    // vec_ids). Per round: assignment is a broadcast of the k tiny
-    // centroids against the full table (narrow, no shuffle of the vectors),
-    // update is one posexplode + groupBy(cid,pos) shuffle keyed on the
-    // cluster — both shapes scale to any corpus size. Centroids are
-    // rebased each round so plan depth stays O(1), exactly as a
-    // 100 TB run would checkpoint between iterations.
+    // vec_ids). The k×64 centroids are the only state a round hands to the
+    // next, so they live on the driver: each round's update is one
+    // posexplode + groupBy(cid,pos) shuffle keyed on the cluster, collected
+    // (at most k·64 rows), and the next assignment is a narrow projection
+    // over the vectors that carries them as one literal. The shuffle
+    // carries map-side partial sums, not vectors, so both shapes scale to
+    // any corpus size.
     "emb_kmeans" -> Q(
       build = (s, d) => {
         val k = 8
         val e = emb(s, d)
-        def assign(cents: DataFrame): DataFrame = {
-          // per-dim squared residual quantized to BIGINT before the sum:
-          // order-free, and the argmin ranking is exact integer — the
-          // discipline that lets a fixed-round Lloyd carry a DuckDB
-          // oracle (unrolled CTE per round, like geo_geodesic)
-          val dist = aggregate(
-            zip_with(col("embedding"), col("centroid"), (x, c) =>
-              floor((x.cast(DoubleType) - c) * (x.cast(DoubleType) - c)
+        // (dist_q, cid) of each vector's nearest centroid. Per-dim squared
+        // residual quantized to BIGINT before the sum: order-free, and the
+        // argmin ranking is exact integer — the discipline that lets a
+        // fixed-round Lloyd carry a DuckDB oracle (unrolled CTE per round,
+        // like geo_geodesic). (dist_q, cid) is unique, so array_min picks
+        // the lowest cid among equal distances.
+        def nearest(cents: Seq[(Int, Seq[Double])]): Column =
+          array_min(transform(typedLit(cents), c => struct(
+            aggregate(zip_with(col("embedding"), c.getField("_2"), (x, m) =>
+              floor((x.cast(DoubleType) - m) * (x.cast(DoubleType) - m)
                 * lit(1073741824.0)).cast(LongType)),
-            lit(0L), (acc, x) => acc + x)
-          // argmin as struct-min: (dist_q, cid) is unique, the carried
-          // label/embedding are constant per vec — map-side combinable,
-          // no per-vector sort
-          e.crossJoin(broadcast(cents))
-            .withColumn("dist_q", dist)
-            .groupBy(col("vec_id"))
-            .agg(min(struct(col("dist_q"), col("cid"), col("label"),
-              col("embedding"))).as("m"))
-            .select(col("vec_id"), col("m.label").as("label"),
-              col("m.embedding").as("embedding"), col("m.cid").as("cid"),
-              col("m.dist_q").as("dist_q"))
-        }
-        var cents = rebase(e.filter(col("vec_id") < k)
-          .select(col("vec_id").cast(IntegerType).as("cid"),
-            transform(col("embedding"), _.cast(DoubleType)).as("centroid")))
+              lit(0L), (acc, x) => acc + x),
+            c.getField("_1"))))
+            .cast("struct<dist_q:bigint,cid:int>")
+        // (cid, pos, value) rows to the driver's (cid, centroid) pairs
+        def collected(df: DataFrame): Seq[(Int, Seq[Double])] =
+          df.collect().toSeq.groupBy(_.getInt(0)).toSeq.sortBy(_._1)
+            .map { case (c, rs) => (c, rs.sortBy(_.getInt(1)).map(_.getDouble(2))) }
+        var cents = collected(e.filter(col("vec_id") < k)
+          .select(col("vec_id").cast(IntegerType),
+            posexplode(transform(col("embedding"), _.cast(DoubleType)))))
         for (_ <- 1 to 3) {
-          val upd = assign(cents)
+          // the assignment gets its own projection: in the posexplode's
+          // select it would be evaluated once per exploded element
+          cents = collected(e.select(col("embedding"),
+              nearest(cents).getField("cid").as("cid"))
             .select(col("cid"), posexplode(col("embedding")))
-            .toDF("cid", "pos", "v")
             .groupBy(col("cid"), col("pos"))
             // quantized mean: exact integer sum / (scale * n) — the same
             // order-free centroid arithmetic as emb_centroids
-            .agg((sum(floor(col("v").cast(DoubleType) * 16384.0).cast(LongType))
-              .cast(DoubleType) / (lit(16384.0) * count(lit(1)))).as("m"))
-            .groupBy(col("cid"))
-            .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-              st => st.getField("m")).as("centroid"))
-          cents = rebase(upd)
+            .agg((sum(floor(col("col").cast(DoubleType) * 16384.0).cast(LongType))
+              .cast(DoubleType) / (lit(16384.0) * count(lit(1)))).as("m")))
         }
-        assign(cents)
-          .withColumn("cluster_size",
-            count(lit(1)).over(Window.partitionBy(col("cid"))))
-          .select(col("vec_id"), col("label"), col("cid"), col("cluster_size"),
-            round(sqrt(col("dist_q").cast(DoubleType) / 1073741824.0), 6).as("dist"))
+        e.select(col("vec_id"), col("label"), nearest(cents).as("n"))
+          .select(col("vec_id"), col("label"), col("n.cid").as("cid"),
+            count(lit(1)).over(Window.partitionBy(col("n.cid"))).as("cluster_size"),
+            round(sqrt(col("n.dist_q").cast(DoubleType) / 1073741824.0), 6).as("dist"))
           .orderBy(col("vec_id"))
       },
       oracle = Some {

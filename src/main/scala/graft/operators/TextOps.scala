@@ -2,11 +2,12 @@ package graft.operators
 
 import graft.{Det, Q, Tables}
 import graft.Det._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graftops.GraftInternal.rebase
 import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** §2.D text analysis + deduplication over `documents` — the
   * LLM-training-data pipeline layer. Exact dedup and shingle-join
@@ -30,41 +31,40 @@ object TextOps {
     Det.rankPrefix(df, Seq(col(grp)), Seq(col(ord), col(tie)))
 
   /** BPE merge rounds for doc_bpe_train/apply (vocab-sized work per round). */
-  private val BpeRounds = 8
+  private[graft] val BpeRounds = 8
 
   /** The BPE merge loop of doc_bpe_train and doc_bpe_apply over a word
     * dict with a sentinel-padded symbol string `spaced` and a frequency
-    * `wc`. Per round: count adjacent symbol pairs weighted by `wc`, take
-    * the argmax (count desc, pair asc — deterministic), broadcast the
-    * 1-row argmax and apply the merge to every word. Returns the merge
-    * table (round, pair, pair_count) and the dict after all BpeRounds
-    * merges, its other columns carried through unchanged. Rounds rebase
-    * lazily (no per-round driver action); the final merge is left
-    * unmaterialized, so a caller reading only the table never runs it.
+    * `wc`. Per round: count adjacent symbol pairs weighted by `wc` and
+    * take the argmax (count desc, pair asc — deterministic) to the
+    * driver; the next round's dict applies that one merge as a literal
+    * `replace`. The dict is rebased once. The ranking is one RDD job
+    * (`reduceByKey` + `takeOrdered`): the same sum and order as the SQL
+    * ranking, without a second planning pass per round for the shuffle.
+    * Returns the merge table (round, pair, pair_count) and the dict after
+    * all merges, its other columns carried through unchanged. A round
+    * with no pair left (every word one symbol) ends the loop with an
+    * empty dict.
     */
-  private def bpeMerges(words: DataFrame): (DataFrame, DataFrame) = {
-    var dict = words
-    var merges: DataFrame = null
-    for (r <- 0 until BpeRounds) {
-      dict = rebase(dict)
-      val best = rebase(dict
-        .select(split(trim(col("spaced")), " ").as("l"), col("wc"))
-        .filter(size(col("l")) >= 2)
-        .select(col("wc"), explode(expr(
-          """transform(sequence(1, size(l)-1),
-             i -> concat(element_at(l, i), ' ', element_at(l, i+1)))"""))
-          .as("pair"))
-        .groupBy(col("pair"))
-        .agg(sum(col("wc")).as("pair_count"))
-        .orderBy(col("pair_count").desc, col("pair")).limit(1)
-        .select(lit(r).as("round"), col("pair"), col("pair_count")))
-      merges = if (merges == null) best else merges.union(best)
-      dict = dict.crossJoin(broadcast(best.select(col("pair").as("bp"))))
-        .withColumn("spaced", expr(
-          "replace(spaced, ' ' || bp || ' ', ' ' || replace(bp, ' ', '') || ' ')"))
-        .drop("bp")
-    }
-    (merges, dict)
+  private[graft] def bpeMerges(words: DataFrame): (DataFrame, DataFrame) = {
+    var dict = rebase(words)
+    val merges = (0 until BpeRounds).iterator.map { r =>
+      dict.select(col("spaced"), col("wc")).rdd.flatMap { w =>
+          val l = w.getString(0).trim.split(" ")
+          (1 until l.length).map(i => (l(i - 1) + " " + l(i), w.getLong(1)))
+        }.reduceByKey(_ + _)
+        .takeOrdered(1)(Ordering.by[(String, Long), (Long, String)](p => (-p._2, p._1)))
+        .headOption.map { case (pair, n) =>
+          dict = dict.withColumn("spaced", replace(col("spaced"),
+            lit(s" $pair "), lit(s" ${pair.replace(" ", "")} ")))
+          Row(r, pair, n)
+        }
+    }.takeWhile(_.isDefined).flatten.toList
+    if (merges.size < BpeRounds) dict = dict.limit(0)
+    (words.sparkSession.createDataFrame(merges.asJava,
+      StructType(Seq(StructField("round", IntegerType, nullable = false),
+        StructField("pair", StringType), StructField("pair_count", LongType)))),
+      dict)
   }
 
   /** occurrences of substring w, exact integer arithmetic both engines */
@@ -223,14 +223,16 @@ object TextOps {
 
   /** Identical-text groups over shingle-bearing docs (length >= 20):
     * (sizes = (rep, m), repDocs = one row per distinct text, keyed by the
-    * group-min doc_id) — the text form of `sigGroups`.
+    * group-min doc_id, members = every doc with its rep) — the text form
+    * of `sigGroups`.
     */
-  private def repGroups(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+  private def repGroups(s: SparkSession, d: String)
+      : (DataFrame, DataFrame, DataFrame) = {
     val g = docs(s, d).filter(length(col("text")) >= 20)
       .withColumn("rep", min(col("doc_id")).over(
         Window.partitionBy(md5(col("text").cast(BinaryType)))))
     (g.groupBy(col("rep")).agg(count(lit(1)).as("m")),
-      g.filter(col("doc_id") === col("rep")))
+      g.filter(col("doc_id") === col("rep")), g)
   }
 
   /** The group-weight rule of every rep-collapsed pair listing and pair
@@ -277,7 +279,7 @@ object TextOps {
     * scores the cross pairs.
     */
   private def groupedShingleScores(s: SparkSession, d: String): DataFrame = {
-    val (groups, repDocs) = repGroups(s, d)
+    val (groups, repDocs, _) = repGroups(s, d)
     val (scored, nsh) = shingleScoresOf(repDocs)
     weighed(withGroupSizes(scored, groups))
       .select(col("doc_a").as("rep_a"), col("doc_b").as("rep_b"),
@@ -291,14 +293,17 @@ object TextOps {
     * SimHash, pHash and their _grouped twins): `keys` holds one key
     * column per band, and two items are a candidate pair when they share
     * a band's key. Returns each pair once, `<id>_a` < `<id>_b`, with
-    * `<c>_a` and `<c>_b` for every column `c` in `carry`.
+    * `<c>_a` and `<c>_b` for every column `c` in `carry`. The join is a
+    * shuffled hash join, so both sides read one shuffle of the banded
+    * keys (the planner reuses the exchange) and a signature kernel under
+    * `items` runs once; a broadcast join would compute `items` per side.
     */
   private[graft] def bandPairs(items: DataFrame, id: String,
       keys: Seq[Column], carry: Seq[String] = Nil): DataFrame = {
     val cs = id +: carry
     val banded = items.select(cs.map(col) :+
       posexplode(array(keys: _*)).as(Seq("band", "key")): _*)
-    banded.as("x").join(banded.as("y"),
+    banded.as("x").join(banded.as("y").hint("shuffle_hash"),
         col("x.band") === col("y.band") && col("x.key") === col("y.key")
           && col(s"x.$id") < col(s"y.$id"))
       .select(cs.map(c => col(s"x.$c").as(s"${c}_a"))
@@ -915,8 +920,7 @@ object TextOps {
           .select(col("word"),
             concat(lit(" "), regexp_replace(col("word"), "(.)", "$1 "))
               .as("spaced"), col("wc")))
-        // rebased like every round, so the output plan holds no merge join
-        val enc = rebase(dict).select(col("word"),
+        val enc = dict.select(col("word"),
           size(split(trim(col("spaced")), " ")).cast(LongType).as("n_sym"))
         docs(s, d)
           .select(col("doc_id"), explode(expr(
@@ -2607,7 +2611,7 @@ object TextOps {
     // texts (the gate SFs) every m = 1 and the algebra is the old plan.
     "doc_lsh_recall" -> Q(
       build = (s, d) => {
-        val (sizes, repDocs) = repGroups(s, d)
+        val (sizes, repDocs, _) = repGroups(s, d)
         val within = withinRows(sizes)
           .agg(coalesce(sum(col("n_pairs")), lit(0L)).as("w"))
         val exact = jaccardAllOf(repDocs).filter(col("jaccard") >= 0.5)
@@ -2666,7 +2670,7 @@ object TextOps {
       build = (s, d) => {
         val spark = s
         import spark.implicits._
-        val (sizes, repDocs) = repGroups(s, d)
+        val (sizes, repDocs, _) = repGroups(s, d)
         val within = withinRows(sizes)
           .agg(coalesce(sum(col("n_pairs")), lit(0L)).as("w"))
         val sigs = minhashSigs(repDocs)
@@ -3934,14 +3938,7 @@ object TextOps {
       // out through one membership join. Output-identical (m ≡ 1
       // degenerates to the old plan); oracle unchanged.
       build = (s, d) => {
-        val memb = docs(s, d).filter(length(col("text")) >= 20)
-          .withColumn("rep", min(col("doc_id")).over(
-            Window.partitionBy(md5(col("text").cast(BinaryType)))))
-          .select(col("doc_id"), col("rep"))
-        val sizes = memb.groupBy(col("rep")).agg(count(lit(1)).as("m"))
-        val repDocs = docs(s, d).join(
-          memb.filter(col("doc_id") === col("rep")).select(col("doc_id")),
-          Seq("doc_id"))
+        val (sizes, repDocs, memb) = repGroups(s, d)
         val re = jaccardAllOf(repDocs).filter(col("jaccard") >= 0.5)
           .select(col("doc_a").as("ra"), col("doc_b").as("rb"))
         val sym = re.select(col("ra").as("a"), col("rb").as("b"))

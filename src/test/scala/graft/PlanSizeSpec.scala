@@ -12,7 +12,9 @@ import org.apache.spark.sql.internal.SQLConf
   * larger than one contraction round's plan plus slack. A loop that
   * chains several contractions between rebases nests each round's state
   * twice into the next, so its plans grow geometrically and fail here
-  * long before they cost minutes of planning in a bench run.
+  * long before they cost minutes of planning in a bench run. The
+  * driver-state loops (emb_kmeans, BPE) are held to the same bound and to
+  * at most two jobs a round.
   */
 class PlanSizeSpec extends SparkSpecBase {
 
@@ -53,6 +55,20 @@ class PlanSizeSpec extends SparkSpecBase {
     // caller's pipeline, not a round, and is not measured
     assertBounded(PlanSizes.of(spark) { run("geo_contour_rings") },
       "geo_contour_rings")
+  }
+
+  test("emb_kmeans, doc_bpe_train, doc_bpe_apply: every action plan bounded, at most 2 jobs a round") {
+    // (query, rounds, jobs before the first round: k-means' seed collect,
+    // BPE's word-count shuffle)
+    for ((name, rounds, setup) <- Seq(("emb_kmeans", 3, 1),
+        ("doc_bpe_train", TextOps.BpeRounds, 1),
+        ("doc_bpe_apply", TextOps.BpeRounds, 1))) {
+      // the builder runs the rounds, the collect the query's own plan
+      assertBounded(PlanSizes.of(spark) { run(name).collect() }, name)
+      val jobs = JobCount.of(spark)(run(name))
+      info(s"$name: builder ran $jobs jobs over $rounds rounds")
+      assert(jobs <= setup + 2 * rounds, s"$name: $jobs builder jobs")
+    }
   }
 
   test("rebase keeps output partitioning and drops origin statistics") {

@@ -79,12 +79,11 @@ class PlanSweepSpec extends SparkSpecBase {
 
   /** Build side is a bounded catalog or model frame: the station list
     * (supplier-derived, fixed in production), a trained model's
-    * LocalTableScan (LID trigram table), driver-iterated centroids
-    * (ExistingRDD), a fence/route/zone catalog, or a small per-camera
-    * frame behind its own broadcast hash join.
+    * LocalTableScan (LID trigram table), a fence/route/zone catalog, or
+    * a small per-camera frame behind its own broadcast hash join.
     */
   private val boundedCatalogBroadcast = Set(
-    "doc_char_lid", "doc_lid_confusion", "emb_kmeans", "geo_coverage_gap",
+    "doc_char_lid", "doc_lid_confusion", "geo_coverage_gap",
     "geo_fence_crossings", "geo_idw", "geo_nearest", "geo_route_snap",
     "mm_keyframes", "mm_scene_segments", "ts_forecast_cycle")
 
