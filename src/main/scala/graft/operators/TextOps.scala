@@ -224,13 +224,17 @@ object TextOps {
   /** Identical-text groups over shingle-bearing docs (length >= 20):
     * (sizes = (rep, m), repDocs = one row per distinct text, keyed by the
     * group-min doc_id, members = every doc with its rep) — the text form
-    * of `sigGroups`.
+    * of `sigGroups`. The window partitions by the text itself, so its
+    * input keeps `text` whichever frames a caller reads: all three share
+    * one exchange, and `documents` is scanned once. Partitioned by
+    * md5(text) instead, the frames without `text` would prune it below
+    * the window and plan a second exchange over a second scan.
     */
   private def repGroups(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame) = {
     val g = docs(s, d).filter(length(col("text")) >= 20)
       .withColumn("rep", min(col("doc_id")).over(
-        Window.partitionBy(md5(col("text").cast(BinaryType)))))
+        Window.partitionBy(col("text"))))
     (g.groupBy(col("rep")).agg(count(lit(1)).as("m")),
       g.filter(col("doc_id") === col("rep")), g)
   }

@@ -13,8 +13,10 @@ import org.apache.spark.sql.internal.SQLConf
   * chains several contractions between rebases nests each round's state
   * twice into the next, so its plans grow geometrically and fail here
   * long before they cost minutes of planning in a bench run. The
-  * driver-state loops (emb_kmeans, BPE) are held to the same bound and to
-  * at most two jobs a round.
+  * driver-state loops (emb_kmeans, BPE) and the loops that rebase their
+  * state each round (PQ codebook, k-center, PCA power iteration, logistic
+  * regression, streamline advection) are held to the same plan bound, and
+  * their builders to a fixed number of jobs a round.
   */
 class PlanSizeSpec extends SparkSpecBase {
 
@@ -57,18 +59,37 @@ class PlanSizeSpec extends SparkSpecBase {
       "geo_contour_rings")
   }
 
+  /** Every action plan of the iterative query `name` within the bound,
+    * and its builder, which runs the `rounds` rounds, within `maxJobs`.
+    */
+  private def assertLoopBounded(name: String, rounds: Int, maxJobs: Int): Unit = {
+    // the builder runs the rounds, the collect the query's own plan
+    assertBounded(PlanSizes.of(spark) { run(name).collect() }, name)
+    val jobs = JobCount.of(spark)(run(name))
+    info(s"$name: builder ran $jobs jobs over $rounds rounds")
+    assert(jobs <= maxJobs, s"$name: $jobs builder jobs, bound $maxJobs")
+  }
+
   test("emb_kmeans, doc_bpe_train, doc_bpe_apply: every action plan bounded, at most 2 jobs a round") {
     // (query, rounds, jobs before the first round: k-means' seed collect,
     // BPE's word-count shuffle)
     for ((name, rounds, setup) <- Seq(("emb_kmeans", 3, 1),
         ("doc_bpe_train", TextOps.BpeRounds, 1),
-        ("doc_bpe_apply", TextOps.BpeRounds, 1))) {
-      // the builder runs the rounds, the collect the query's own plan
-      assertBounded(PlanSizes.of(spark) { run(name).collect() }, name)
-      val jobs = JobCount.of(spark)(run(name))
-      info(s"$name: builder ran $jobs jobs over $rounds rounds")
-      assert(jobs <= setup + 2 * rounds, s"$name: $jobs builder jobs")
-    }
+        ("doc_bpe_apply", TextOps.BpeRounds, 1)))
+      assertLoopBounded(name, rounds, setup + 2 * rounds)
+  }
+
+  test("emb_pq_topk, emb_kcenter_sample, emb_pca_power, doc_quality_logreg, geo_wind_streamline: every action plan bounded, builder jobs bounded a round") {
+    // These loops rebase their state each round. Under AQE, planning a
+    // lazy checkpoint runs the shuffle and broadcast stages beneath it, so
+    // each round's stages run in the builder: a fixed number a round (the
+    // counts measured on this code, rounded up; set-up jobs included),
+    // where a loop that re-ran earlier rounds would multiply them.
+    // (query, rounds, builder jobs a round)
+    for ((name, rounds, perRound) <- Seq(("emb_pq_topk", 2, 7),
+        ("emb_kcenter_sample", 7, 6), ("emb_pca_power", 8, 5),
+        ("doc_quality_logreg", 4, 9), ("geo_wind_streamline", 6, 3)))
+      assertLoopBounded(name, rounds, perRound * rounds)
   }
 
   test("rebase keeps output partitioning and drops origin statistics") {
