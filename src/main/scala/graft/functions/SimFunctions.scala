@@ -1,12 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftops.GraftInternal
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType, StructField, StructType}
 
 /** Shared scalar kernel for interpreted eval and generated code. */
 object SimMath {
@@ -93,8 +94,64 @@ case class QDotLong(left: Expression, right: Expression)
       l: Expression, r: Expression): QDotLong = copy(left = l, right = r)
 }
 
+/** A vector's nearest centroid as struct&lt;dist_q: bigint, cid: int&gt;:
+  * `RoundKernels.nearest` over the centroids `means` (ids `cids`, in
+  * ascending order, so equal distances go to the lowest cid), with
+  * dist_q its `RoundKernels.distQ`. NULL for a null vector or one whose
+  * length is not the centroids'.
+  */
+case class NearestCentroid(child: Expression, cids: Seq[Int],
+    means: Seq[Seq[Double]]) extends UnaryExpression {
+
+  override def dataType: DataType = StructType(Seq(
+    StructField("dist_q", LongType, nullable = false),
+    StructField("cid", IntegerType, nullable = false)))
+  override def prettyName: String = "nearest_centroid"
+  override def nullable: Boolean = true
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) if cids.nonEmpty =>
+      TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(s"$prettyName requires " +
+      s"array<float> or array<double> and a centroid, got ${t.catalogString} " +
+      s"and ${cids.size} centroids")
+  }
+
+  @transient private lazy val cents = means.map(_.toArray).toArray
+  private def isFloat = child.dataType match {
+    case ArrayType(FloatType, _) => true
+    case _ => false
+  }
+
+  /** The result row for `v`, or null. */
+  def assign(v: ArrayData): InternalRow =
+    if (v.numElements() != cents(0).length) null
+    else {
+      val j = RoundKernels.nearest(v, isFloat, cents)
+      InternalRow(RoundKernels.distQ(v, isFloat, cents(j)), cids(j))
+    }
+
+  override protected def nullSafeEval(v: Any): Any = assign(v.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("nearestCentroid", this)
+    nullSafeCodeGen(ctx, ev, v =>
+      s"""
+         |${ev.value} = $self.assign($v);
+         |${ev.isNull} = ${ev.value} == null;
+       """.stripMargin)
+  }
+
+  override protected def withNewChildInternal(c: Expression): NearestCentroid =
+    copy(child = c)
+}
+
 object SimFunctions {
   /** Column-level quantized dot: Σ floor(x_i·y_i·2^30) as BIGINT. */
   def qdotLong(a: Column, b: Column): Column =
     GraftInternal.column(QDotLong(GraftInternal.expr(a), GraftInternal.expr(b)))
+
+  /** Column-level nearest centroid (see NearestCentroid). */
+  def nearestCentroid(v: Column, cids: Seq[Int], means: Seq[Seq[Double]]): Column =
+    GraftInternal.column(NearestCentroid(GraftInternal.expr(v), cids, means))
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{Det, Q, Tables}
 import graft.Det._
+import graft.functions.{RoundKernels, SimFunctions}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -27,7 +28,7 @@ object Similarity {
     * HOF tree was the measured bottleneck (~6× on emb_semantic_dedup).
     */
   private def qdot(a: Column, b: Column): Column =
-    graft.functions.SimFunctions.qdotLong(a, b)
+    SimFunctions.qdotLong(a, b)
 
   /** DuckDB equivalent per-element term (i is a 1-based series index). */
   private def qterm(ax: String, bx: String): String =
@@ -1265,50 +1266,35 @@ object Similarity {
     // The training step the IVF index (emb_ivf_topk) assumes: k=8 centroids
     // refined by 3 Lloyd rounds from a deterministic seed (the 8 lowest
     // vec_ids). The k×64 centroids are the only state a round hands to the
-    // next, so they live on the driver: each round's update is one
-    // posexplode + groupBy(cid,pos) shuffle keyed on the cluster, collected
-    // (at most k·64 rows), and the next assignment is a narrow projection
-    // over the vectors that carries them as one literal. The shuffle
-    // carries map-side partial sums, not vectors, so both shapes scale to
-    // any corpus size.
+    // next, so they live on the driver. A round is one single-stage RDD
+    // aggregate over the vectors (RoundKernels.lloydRound): each task
+    // assigns its vectors to their nearest centroid and sums floor(x·16384)
+    // per cluster and dimension, and the driver divides the k·64 sums by
+    // the counts, the same order-free quantized mean as emb_centroids. No
+    // round plans a DataFrame, and the aggregate carries k·65 Longs a task,
+    // not vectors, so it scales to any corpus size. The distance is the
+    // per-dimension squared residual quantized to BIGINT before the sum:
+    // exact and order-free, with ties going to the lowest cid — the
+    // discipline that lets a fixed-round Lloyd carry a DuckDB oracle
+    // (unrolled CTE per round, like geo_geodesic). The final assignment
+    // runs the same kernel as one expression over the collected centroids.
     "emb_kmeans" -> Q(
       build = (s, d) => {
         val k = 8
         val e = emb(s, d)
-        // (dist_q, cid) of each vector's nearest centroid. Per-dim squared
-        // residual quantized to BIGINT before the sum: order-free, and the
-        // argmin ranking is exact integer — the discipline that lets a
-        // fixed-round Lloyd carry a DuckDB oracle (unrolled CTE per round,
-        // like geo_geodesic). (dist_q, cid) is unique, so array_min picks
-        // the lowest cid among equal distances.
-        def nearest(cents: Seq[(Int, Seq[Double])]): Column =
-          array_min(transform(typedLit(cents), c => struct(
-            aggregate(zip_with(col("embedding"), c.getField("_2"), (x, m) =>
-              floor((x.cast(DoubleType) - m) * (x.cast(DoubleType) - m)
-                * lit(1073741824.0)).cast(LongType)),
-              lit(0L), (acc, x) => acc + x),
-            c.getField("_1"))))
-            .cast("struct<dist_q:bigint,cid:int>")
-        // (cid, pos, value) rows to the driver's (cid, centroid) pairs
-        def collected(df: DataFrame): Seq[(Int, Seq[Double])] =
-          df.collect().toSeq.groupBy(_.getInt(0)).toSeq.sortBy(_._1)
-            .map { case (c, rs) => (c, rs.sortBy(_.getInt(1)).map(_.getDouble(2))) }
-        var cents = collected(e.filter(col("vec_id") < k)
-          .select(col("vec_id").cast(IntegerType),
-            posexplode(transform(col("embedding"), _.cast(DoubleType)))))
-        for (_ <- 1 to 3) {
-          // the assignment gets its own projection: in the posexplode's
-          // select it would be evaluated once per exploded element
-          cents = collected(e.select(col("embedding"),
-              nearest(cents).getField("cid").as("cid"))
-            .select(col("cid"), posexplode(col("embedding")))
-            .groupBy(col("cid"), col("pos"))
-            // quantized mean: exact integer sum / (scale * n) — the same
-            // order-free centroid arithmetic as emb_centroids
-            .agg((sum(floor(col("col").cast(DoubleType) * 16384.0).cast(LongType))
-              .cast(DoubleType) / (lit(16384.0) * count(lit(1)))).as("m")))
+        val isFloat =
+          e.schema("embedding").dataType.asInstanceOf[ArrayType].elementType == FloatType
+        val seed = e.filter(col("vec_id") < k)
+          .select(col("vec_id").cast(IntegerType), col("embedding")).collect()
+          .sortBy(_.getInt(0))
+        // the vectors, planned once; each round re-reads them
+        val vecs = e.select(col("embedding")).queryExecution.toRdd
+        val (cids, cents) = (1 to 3).foldLeft((seed.map(_.getInt(0)),
+            seed.map(_.getSeq[Number](1).map(_.doubleValue).toArray))) {
+          case ((c, m), _) => RoundKernels.lloydRound(vecs, isFloat, c, m)
         }
-        e.select(col("vec_id"), col("label"), nearest(cents).as("n"))
+        e.select(col("vec_id"), col("label"), SimFunctions.nearestCentroid(
+            col("embedding"), cids.toSeq, cents.map(_.toSeq).toSeq).as("n"))
           .select(col("vec_id"), col("label"), col("n.cid").as("cid"),
             count(lit(1)).over(Window.partitionBy(col("n.cid"))).as("cluster_size"),
             round(sqrt(col("n.dist_q").cast(DoubleType) / 1073741824.0), 6).as("dist"))

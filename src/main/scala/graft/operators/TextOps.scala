@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Det, Q, Tables}
+import graft.functions.RoundKernels
 import graft.Det._
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -35,36 +36,37 @@ object TextOps {
 
   /** The BPE merge loop of doc_bpe_train and doc_bpe_apply over a word
     * dict with a sentinel-padded symbol string `spaced` and a frequency
-    * `wc`. Per round: count adjacent symbol pairs weighted by `wc` and
-    * take the argmax (count desc, pair asc — deterministic) to the
-    * driver; the next round's dict applies that one merge as a literal
-    * `replace`. The dict is rebased once. The ranking is one RDD job
-    * (`reduceByKey` + `takeOrdered`): the same sum and order as the SQL
-    * ranking, without a second planning pass per round for the shuffle.
-    * Returns the merge table (round, pair, pair_count) and the dict after
-    * all merges, its other columns carried through unchanged. A round
-    * with no pair left (every word one symbol) ends the loop with an
-    * empty dict.
+    * `wc`. The dict is rebased once and read as (spaced, wc) pairs. A
+    * round counts the adjacent symbol pairs, weighted by `wc`, in one
+    * single-stage RDD aggregate whose per-partition maps hold at most the
+    * distinct pairs (RoundKernels.pairCounts), and takes the argmax
+    * (count desc, pair asc — deterministic) on the driver. The next round
+    * reads the pairs with that one merge applied (RoundKernels.merge, the
+    * same non-overlapping left-to-right replace as SQL `replace`). No
+    * round plans a DataFrame. Returns the merge table (round, pair,
+    * pair_count) and the dict after all merges: the rebased dict with one
+    * `replace` per merge on `spaced`, planned once, its other columns
+    * carried through unchanged. A round with no pair left (every word one
+    * symbol) ends the loop with an empty dict.
     */
   private[graft] def bpeMerges(words: DataFrame): (DataFrame, DataFrame) = {
-    var dict = rebase(words)
+    val base = rebase(words)
+    var pairs = RoundKernels.wordCounts(
+      base.select(col("spaced"), col("wc")).queryExecution.toRdd)
     val merges = (0 until BpeRounds).iterator.map { r =>
-      dict.select(col("spaced"), col("wc")).rdd.flatMap { w =>
-          val l = w.getString(0).trim.split(" ")
-          (1 until l.length).map(i => (l(i - 1) + " " + l(i), w.getLong(1)))
-        }.reduceByKey(_ + _)
-        .takeOrdered(1)(Ordering.by[(String, Long), (Long, String)](p => (-p._2, p._1)))
-        .headOption.map { case (pair, n) =>
-          dict = dict.withColumn("spaced", replace(col("spaced"),
-            lit(s" $pair "), lit(s" ${pair.replace(" ", "")} ")))
-          Row(r, pair, n)
-        }
+      RoundKernels.topPair(RoundKernels.pairCounts(pairs)).map { case (pair, n) =>
+        pairs = RoundKernels.merge(pairs, pair)
+        Row(r, pair, n)
+      }
     }.takeWhile(_.isDefined).flatten.toList
-    if (merges.size < BpeRounds) dict = dict.limit(0)
+    val dict = base.withColumn("spaced", merges.foldLeft(col("spaced")) { (c, m) =>
+      val (from, to) = RoundKernels.mergeOf(m.getString(1))
+      replace(c, lit(from), lit(to))
+    })
     (words.sparkSession.createDataFrame(merges.asJava,
       StructType(Seq(StructField("round", IntegerType, nullable = false),
         StructField("pair", StringType), StructField("pair_count", LongType)))),
-      dict)
+      if (merges.size < BpeRounds) dict.limit(0) else dict)
   }
 
   /** occurrences of substring w, exact integer arithmetic both engines */

@@ -37,8 +37,11 @@ object GraftInternal {
     * `broadcast()`. The rows stay InternalRows over the checkpointed RDD;
     * nothing is converted through `Row`.
     *
-    * Lazy, not eager: the caller's next action materializes the
-    * checkpoint in its own job instead of a separate job per round.
+    * Lazy, not eager: no job of its own computes the checkpointed rows;
+    * the first job that reads them does. But under AQE, planning the
+    * checkpoint runs every shuffle and broadcast stage beneath it at
+    * once, each as a job of its own, so a loop that rebases each round
+    * runs those stages in its builder, round by round.
     */
   def rebase(df: DataFrame): DataFrame = {
     val ck = df.localCheckpoint(false)

@@ -20,7 +20,7 @@ class BuilderJobsSpec extends SparkSpecBase {
   test("second builder call of each single-pass batch_mix query starts no job") {
     for (name <- singlePass) {
       run(name)
-      assert(JobCount.of(spark)(run(name)) == 0, name)
+      assert(JobCount.of(spark)(run(name)).jobs == 0, name)
     }
   }
 

@@ -16,7 +16,7 @@ import org.apache.spark.sql.internal.SQLConf
   * driver-state loops (emb_kmeans, BPE) and the loops that rebase their
   * state each round (PQ codebook, k-center, PCA power iteration, logistic
   * regression, streamline advection) are held to the same plan bound, and
-  * their builders to a fixed number of jobs a round.
+  * their builders to a fixed number of jobs and stages a round.
   */
 class PlanSizeSpec extends SparkSpecBase {
 
@@ -60,23 +60,27 @@ class PlanSizeSpec extends SparkSpecBase {
   }
 
   /** Every action plan of the iterative query `name` within the bound,
-    * and its builder, which runs the `rounds` rounds, within `maxJobs`.
+    * and its builder, which runs the `rounds` rounds, within `maxJobs`
+    * jobs and `maxStages` stages.
     */
-  private def assertLoopBounded(name: String, rounds: Int, maxJobs: Int): Unit = {
+  private def assertLoopBounded(name: String, rounds: Int, maxJobs: Int,
+      maxStages: Int): Unit = {
     // the builder runs the rounds, the collect the query's own plan
     assertBounded(PlanSizes.of(spark) { run(name).collect() }, name)
-    val jobs = JobCount.of(spark)(run(name))
-    info(s"$name: builder ran $jobs jobs over $rounds rounds")
-    assert(jobs <= maxJobs, s"$name: $jobs builder jobs, bound $maxJobs")
+    val n = JobCount.of(spark)(run(name))
+    info(s"$name: builder ran ${n.jobs} jobs and ${n.stages} stages over $rounds rounds")
+    assert(n.jobs <= maxJobs, s"$name: ${n.jobs} builder jobs, bound $maxJobs")
+    assert(n.stages <= maxStages, s"$name: ${n.stages} builder stages, bound $maxStages")
   }
 
-  test("emb_kmeans, doc_bpe_train, doc_bpe_apply: every action plan bounded, at most 2 jobs a round") {
-    // (query, rounds, jobs before the first round: k-means' seed collect,
-    // BPE's word-count shuffle)
+  test("emb_kmeans, doc_bpe_train, doc_bpe_apply: every action plan bounded, at most 1 job and 1 stage a round") {
+    // A round is one single-stage RDD aggregate. (query, rounds, jobs and
+    // stages before the first round: k-means' seed collect, BPE's
+    // word-count shuffle, run when its dict is rebased)
     for ((name, rounds, setup) <- Seq(("emb_kmeans", 3, 1),
         ("doc_bpe_train", TextOps.BpeRounds, 1),
         ("doc_bpe_apply", TextOps.BpeRounds, 1)))
-      assertLoopBounded(name, rounds, setup + 2 * rounds)
+      assertLoopBounded(name, rounds, setup + rounds, setup + rounds)
   }
 
   test("emb_pq_topk, emb_kcenter_sample, emb_pca_power, doc_quality_logreg, geo_wind_streamline: every action plan bounded, builder jobs bounded a round") {
@@ -84,12 +88,13 @@ class PlanSizeSpec extends SparkSpecBase {
     // lazy checkpoint runs the shuffle and broadcast stages beneath it, so
     // each round's stages run in the builder: a fixed number a round (the
     // counts measured on this code, rounded up; set-up jobs included),
-    // where a loop that re-ran earlier rounds would multiply them.
+    // where a loop that re-ran earlier rounds would multiply them. Each
+    // of those jobs runs one stage.
     // (query, rounds, builder jobs a round)
     for ((name, rounds, perRound) <- Seq(("emb_pq_topk", 2, 7),
         ("emb_kcenter_sample", 7, 6), ("emb_pca_power", 8, 5),
         ("doc_quality_logreg", 4, 9), ("geo_wind_streamline", 6, 3)))
-      assertLoopBounded(name, rounds, perRound * rounds)
+      assertLoopBounded(name, rounds, perRound * rounds, perRound * rounds)
   }
 
   test("rebase keeps output partitioning and drops origin statistics") {
