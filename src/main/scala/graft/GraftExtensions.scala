@@ -2,46 +2,20 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import graft.plans.AsOfJoinStrategy
-import graft.functions.HaversineKm
+import graft.functions.SqlFunctions
 
-/** Session-extension registration: enables graft's planner strategy and
-  * SQL functions on any session via
+/** Session-extension registration: enables graft's planner strategies,
+  * optimizer rule and SQL functions (`SqlFunctions.all`) on any session via
   *   spark.sql.extensions=graft.GraftExtensions
-  * (the per-call registration in AsOf.join / GeoFunctions.register remains
-  * for sessions created without the config).
+  * (the per-call registration in AsOf.join / GeoFunctions.register /
+  * TextFunctions.register remains for sessions created without the config).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  import org.apache.spark.sql.catalyst.FunctionIdentifier
-  import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectPlannerStrategy(_ => AsOfJoinStrategy)
     e.injectPlannerStrategy(_ => graft.plans.RangeJoinStrategy)
     // haversine-radius filters gain sargable bbox conjuncts (pushdown)
     e.injectOptimizerRule(_ => graft.plans.HaversineBBoxRule)
-    e.injectFunction((
-      new FunctionIdentifier("haversine_km"),
-      new ExpressionInfo(classOf[HaversineKm].getName, "haversine_km"),
-      (exprs: Seq[Expression]) => graft.functions.GeoFunctions.ofAny(exprs)))
-    e.injectFunction((
-      new FunctionIdentifier("geodesic_km"),
-      new ExpressionInfo(classOf[graft.functions.GeodesicKm].getName, "geodesic_km"),
-      (exprs: Seq[Expression]) => graft.functions.GeoFunctions.geodesicOfAny(exprs)))
-    e.injectFunction((
-      new FunctionIdentifier("minhash_signature"),
-      new ExpressionInfo(classOf[graft.functions.MinHashSignature].getName,
-        "minhash_signature"),
-      (exprs: Seq[Expression]) =>
-        graft.functions.MinHashSignature(exprs.head, 20, 4, 32)))
-    e.injectFunction((
-      new FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[graft.functions.SimHash64].getName, "simhash64"),
-      (exprs: Seq[Expression]) => graft.functions.SimHash64(exprs.head)))
-    e.injectFunction((
-      new FunctionIdentifier("winnow_fingerprints"),
-      new ExpressionInfo(classOf[graft.functions.WinnowFingerprints].getName,
-        "winnow_fingerprints"),
-      (exprs: Seq[Expression]) =>
-        graft.functions.WinnowFingerprints(exprs.head, 20, 5)))
+    SqlFunctions.all.foreach(e.injectFunction)
   }
 }

@@ -98,8 +98,7 @@ object StreamBench {
     // events cost ~50 MB of driver heap, not 10 M encodes
     lazy val pngLut: Array[Array[Byte]] = {
       import graft.functions.ImageCodec
-      (0 until 768).map(m => ImageCodec.toPng(
-        ImageCodec.syntheticImage(m.toLong, 32 + (m % 3) * 16, 32))).toArray
+      (0 until 768).map(m => ImageCodec.toPng(ImageCodec.docFrame(m))).toArray
     }
     def inferInOf(e: Streams.Ev): Streams.InferIn =
       Streams.InferIn(e.event_id, pngLut((e.event_id % 768L).toInt))

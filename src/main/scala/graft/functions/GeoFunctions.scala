@@ -140,10 +140,6 @@ object GeoFunctions {
     GraftInternal.column(geodesicOfAny(Seq(lat1, lon1, lat2, lon2).map(GraftInternal.expr)))
 
   /** SQL registration: SELECT haversine_km(...) / geodesic_km(...). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "haversine_km", ofAny, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "geodesic_km", geodesicOfAny, "scala_udf")
-  }
+  def register(spark: SparkSession): Unit =
+    SqlFunctions.register(spark, SqlFunctions.geo)
 }

@@ -72,6 +72,14 @@ object ImageCodec {
     img
   }
 
+  /** The frame of document (or shot) `key`: its synthetic image, 32, 48
+    * or 64 px wide by `key % 3`, 32 px high. Pixels depend on the key
+    * mod 256 and the width on the key mod 3, so frames repeat with
+    * period lcm(256, 3) = 768; the driver-side LUT oracles rely on it.
+    */
+  def docFrame(key: Long): BufferedImage =
+    syntheticImage(key, 32 + (key % 3).toInt * 16, 32)
+
   /** Bulk ARGB fetch — one pass instead of w·h getRGB(x, y) calls (each
     * of which re-dispatches through the ColorModel). Values are identical
     * to per-pixel getRGB: the two fast paths reproduce it bit-for-bit for

@@ -1,24 +1,28 @@
 package graft.functions
 
+import java.awt.image.BufferedImage
 import java.io.ByteArrayOutputStream
 import java.nio.{ByteBuffer, ByteOrder}
 
 /** Minimal ONNX model reader/writer + executor for the smoke-classifier
-  * inference stage (mm_batch_infer).
+  * inference operators (mm_batch_infer, mm_conv_infer, mm_cnn2_infer
+  * and their streaming twins, all through [[Onnx.Scorer]]).
   *
   * The reference runs a real ONNX image classifier through ONNX Runtime
   * (odin_onnx/src/lib.rs: `Session::builder()...commit_from_file`, run via
-  * `ort::inputs!`). This container has no ONNX Runtime JVM binding and no
-  * network egress to fetch one, so the *execution engine* here is a small
-  * pure-JVM interpreter — but the *model artifact* is a genuine ONNX file:
-  * `src/main/resources/graft/smoke_mlp.onnx` is standard protobuf encoded
-  * against the public `onnx/onnx.proto` schema (field numbers below are
-  * from that public definition) and loads in stock onnxruntime/netron
-  * unchanged. The parser reads the protobuf wire format directly; the
-  * executor supports the MLP subset (Gemm, Relu, MatMul, Add — Gemm:
-  * Y = alpha·A·B^T + beta·C under transB=1, unidirectional broadcast of
-  * C) plus the conv-net subset a small vision classifier needs (Conv,
-  * MaxPool, Flatten), all with ONNX-spec semantics.
+  * `ort::inputs!`). graft's dependencies include no ONNX Runtime JVM
+  * binding, so the *execution engine* here is a small pure-JVM
+  * interpreter — but the *model artifacts* are genuine ONNX files:
+  * `src/main/resources/graft/smoke_{mlp,cnn,cnn2}.onnx` are standard
+  * protobuf encoded against the public `onnx/onnx.proto` schema (field
+  * numbers below are from that public definition) and load in stock
+  * onnxruntime/netron unchanged. The parser reads the protobuf wire
+  * format directly; the executor supports the MLP subset (Gemm, Relu,
+  * MatMul, Add — Gemm: Y = alpha·A·B^T + beta·C under transB=1,
+  * unidirectional broadcast of C), the conv-net subset (Conv, MaxPool,
+  * AveragePool, GlobalAveragePool, Flatten) and the head/normalization
+  * ops an exported classifier carries (BatchNormalization, Sigmoid,
+  * Softmax, Concat), all with ONNX-spec semantics.
   *
   * All arithmetic is float32, as ONNX Runtime would compute for an f32
   * graph; executors and the driver-side oracle LUT run the identical JVM
@@ -1012,6 +1016,47 @@ object Onnx {
     * (BatchNorm/AveragePool/Sigmoid/GlobalAveragePool/Concat/Softmax).
     */
   lazy val cnn2Session: Session = resourceSession("/graft/smoke_cnn2.onnx")
+
+  /** One committed image classifier, as every image-inference operator
+    * scores with it: a decoded frame's model input (`inputOf`: the 8
+    * feature stats or the 8×8 block-mean tile), a zero input of that
+    * length for a frame that does not decode, and one batched session
+    * run (f32 in, exact f64 widening out). mm_batch_infer, mm_conv_infer,
+    * mm_cnn2_infer and their three streams score through it. Every op is
+    * row-independent, so a batched run equals the per-row runs of the
+    * driver-side oracle LUTs (`smokeLogits`, `smokeCnnLogits`,
+    * `smokeCnn2Scores`), which name their sessions themselves.
+    */
+  sealed abstract class Scorer(inputLen: Int) extends Serializable {
+    protected def inputOf(img: BufferedImage): Array[Double]
+    protected def session: Session
+
+    /** Encoded frames (PNG or JPEG) → one output row each, in one run. */
+    def score(frames: scala.collection.Seq[Array[Byte]]): Array[Array[Double]] =
+      session.run(frames.map { bytes =>
+        val img = ImageCodec.decode(bytes)
+        if (img == null) new Array[Float](inputLen)
+        else inputOf(img).map(_.toFloat)
+      }.toArray).map(_.map(_.toDouble))
+  }
+
+  object Scorer {
+    /** smoke_mlp.onnx over the 8 feature stats → 4 logits. */
+    case object Mlp extends Scorer(8) {
+      protected def inputOf(img: BufferedImage) = ImageCodec.features(img)
+      protected def session = smokeSession
+    }
+    /** smoke_cnn.onnx over the 8×8 tile → 4 logits. */
+    case object Cnn extends Scorer(64) {
+      protected def inputOf(img: BufferedImage) = ImageCodec.cnnTile8(img)
+      protected def session = cnnSession
+    }
+    /** smoke_cnn2.onnx over the 8×8 tile → 4 calibrated (softmax) scores. */
+    case object Cnn2 extends Scorer(64) {
+      protected def inputOf(img: BufferedImage) = ImageCodec.cnnTile8(img)
+      protected def session = cnn2Session
+    }
+  }
 
   /** The mm_cnn2_infer entry: 8×8 tile → calibrated class scores
     * (softmax output) as f64, identical on executors and in the

@@ -305,13 +305,6 @@ object TextFunctions {
     GraftInternal.column(GramHashes(GraftInternal.expr(c), k))
 
   /** SQL registration of the text kernels (default parameters). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("minhash_signature",
-      (es: Seq[Expression]) => MinHashSignature(es.head, 20, 4, 32), "scala_udf")
-    reg.createOrReplaceTempFunction("simhash64",
-      (es: Seq[Expression]) => SimHash64(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("winnow_fingerprints",
-      (es: Seq[Expression]) => WinnowFingerprints(es.head, 20, 5), "scala_udf")
-  }
+  def register(spark: org.apache.spark.sql.SparkSession): Unit =
+    SqlFunctions.register(spark, SqlFunctions.text)
 }

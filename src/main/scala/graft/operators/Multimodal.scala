@@ -1,18 +1,23 @@
 package graft.operators
 
 import graft.{Det, Q, Tables}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import graft.functions.{Compress, ImageCodec, Onnx}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.reflect.runtime.universe.TypeTag
 
 /** §2.F multimodal-column plumbing. Image/audio/video payloads are opaque
   * `binary` columns with typed metadata. The byte-level ops (meta, frame
   * sampling, tiling) treat document text bytes as the payload; the
-  * feature-extraction and inference ops decode REAL PNG images through
-  * the in-JDK javax.imageio codec (graft.functions.ImageCodec) — only
-  * the model weights remain stubbed (a fixed linear layer), since no
-  * model runtime ships in this container.
+  * image ops decode REAL PNG/JPEG frames through the in-JDK
+  * javax.imageio codec (graft.functions.ImageCodec), and the inference
+  * ops run the committed .onnx models (smoke_mlp, smoke_cnn, smoke_cnn2)
+  * in graft's ONNX executor (graft.functions.Onnx). Every per-frame
+  * builder reads a document's frame as `ImageCodec.docFrame(doc_id)`
+  * through one scan (`perDoc`), and the inference builders score
+  * through `Onnx.Scorer` (`batchScores`).
   *
   * Mirrors odin_image / the GOES-R NetCDF payload handling
   * (odin_goesr/src/lib.rs:526 read_goesr_data): opaque blob in, typed
@@ -36,6 +41,40 @@ object Multimodal {
   private def blobs(s: SparkSession, d: String): DataFrame =
     Tables.t(s, d, "documents")
       .select(col("doc_id"), col("source"), col("text").cast(BinaryType).as("payload"))
+
+  /** The per-frame builders' scan: `documents.doc_id`, each partition's
+    * ids mapped through `rows` (which reads each id's frame through
+    * `ImageCodec.docFrame`), batched per partition as a codec session
+    * needs.
+    */
+  private def perDoc[T <: Product : TypeTag](s: SparkSession, d: String)(
+      rows: Iterator[Long] => Iterator[T]): Dataset[T] = {
+    import s.implicits._
+    Tables.t(s, d, "documents").select(col("doc_id")).as[Long].mapPartitions(rows)
+  }
+
+  /** Fixed-batch inference over every document's PNG frame: batch key
+    * doc_id / 32 (one shuffle), one `scorer.score` per batch, columns
+    * doc_id, batch_n, batch_pos, `<prefix>0..3`, pred_class.
+    */
+  private def batchScores(s: SparkSession, d: String, scorer: Onnx.Scorer,
+      prefix: String): DataFrame = {
+    import s.implicits._
+    Tables.t(s, d, "documents").select(col("doc_id")).as[Long]
+      .groupByKey(id => id / 32L)
+      .flatMapGroups { (_, ids) =>
+        val batch = ids.toArray.sorted
+        val out = scorer.score(batch.map(id => ImageCodec.toPng(ImageCodec.docFrame(id))))
+        batch.zip(out).zipWithIndex.map { case ((id, v), i) =>
+          (id, batch.length, i, v, v.indexOf(v.max))
+        }.iterator
+      }
+      .toDF("doc_id", "batch_n", "batch_pos", s"${prefix}s", "pred_class")
+      .select(col("doc_id") +: col("batch_n") +: col("batch_pos") +:
+        (0 until 4).map(k => col(s"${prefix}s")(k).as(s"$prefix$k")) :+
+        col("pred_class"): _*)
+      .orderBy(col("doc_id"))
+  }
 
   /** Shot-boundary cut frame shared by mm_scene_segments / mm_keyframes:
     * one row per consecutive same-camera frame pair, carrying the total
@@ -98,7 +137,6 @@ object Multimodal {
     * (identical JVM ⇒ identical PNG bytes and feature doubles).
     */
   private lazy val featureLutLocal: IndexedSeq[(Int, Int, Array[Double])] = {
-    import graft.functions.ImageCodec
     (0 until 768).map { m =>
       val png = ImageCodec.toPng(
         ImageCodec.syntheticImage(m.toLong, 32 + (m % 3) * 16, 32))
@@ -124,7 +162,6 @@ object Multimodal {
     * zlib the executors call, so the VALUES are bit-identical.
     */
   private lazy val tileCompressOracle: String = {
-    import graft.functions.{Compress, ImageCodec}
     val rows = (0 until 768).flatMap { m =>
       val bytes = ImageCodec.lumBytes(
         ImageCodec.syntheticImage(m.toLong, 32 + (m % 3) * 16, 32))
@@ -148,7 +185,6 @@ object Multimodal {
     * computed by the same Compress/ImageCodec path the executors run.
     */
   private lazy val fractalDimOracle: String = {
-    import graft.functions.{Compress, ImageCodec}
     val rows = (0 until 768).map { m =>
       val bytes = ImageCodec.lumBytes(
         ImageCodec.syntheticImage(m.toLong, 32 + (m % 3) * 16, 32))
@@ -169,7 +205,6 @@ object Multimodal {
     * on the driver's identical codec path.
     */
   private lazy val pngMetaOracle: String = {
-    import graft.functions.ImageCodec
     val rows = (0 until 768).map { m =>
       val png = ImageCodec.toPng(
         ImageCodec.syntheticImage(m.toLong, 32 + (m % 3) * 16, 32))
@@ -196,7 +231,6 @@ object Multimodal {
     * bit-exactly).
     */
   private lazy val jpegMetaOracle: String = {
-    import graft.functions.ImageCodec
     val rows = (0 until 768).map { m =>
       val jpg = ImageCodec.toJpeg(
         ImageCodec.syntheticImage(m.toLong, 32 + (m % 3) * 16, 32))
@@ -224,7 +258,6 @@ object Multimodal {
     * 768 is even, so doc_id % 768 fixes the parity too).
     */
   private lazy val codecDispatchOracle: String = {
-    import graft.functions.ImageCodec
     val rows = (0 until 768).map { m =>
       val img = ImageCodec.syntheticImage(m.toLong, 32 + (m % 3) * 16, 32)
       val bytes = if (m % 2 == 0) ImageCodec.toPng(img)
@@ -247,7 +280,6 @@ object Multimodal {
     * hashes from the driver's identical codec path.
     */
   private lazy val jpegRobustnessOracle: String = {
-    import graft.functions.ImageCodec
     val rows = (0 until 768).map { m =>
       val img = ImageCodec.syntheticImage(m.toLong, 32 + (m % 3) * 16, 32)
       // PNG round trip is bit-lossless (spec'd), so hashing the source
@@ -271,7 +303,6 @@ object Multimodal {
     * Spark build runs.
     */
   private lazy val jpegScenesOracle: String = {
-    import graft.functions.ImageCodec
     val rows = (0 until 768).map { m =>
       val img = ImageCodec.syntheticImage(m.toLong, 32 + (m % 3) * 16, 32)
       val ph = ImageCodec.phash64(ImageCodec.decode(ImageCodec.toJpeg(img)))
@@ -307,18 +338,11 @@ object Multimodal {
   /** (doc_id, ph) for mm_phash_pairs and its _grouped twin: each doc's
     * synthetic image PNG-encoded, decoded (javax.imageio) and pHashed.
     */
-  private def phashSigs(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    import graft.functions.ImageCodec
-    Tables.t(s, d, "documents").select(col("doc_id")).as[Long]
-      .mapPartitions { it =>
-        it.map { id =>
-          val img = ImageCodec.decode(ImageCodec.toPng(
-            ImageCodec.syntheticImage(id, 32 + (id % 3).toInt * 16, 32)))
-          (id, if (img == null) 0L else ImageCodec.phash64(img))
-        }
-      }.toDF("doc_id", "ph")
-  }
+  private def phashSigs(s: SparkSession, d: String): DataFrame =
+    perDoc(s, d)(_.map { id =>
+      val img = ImageCodec.decode(ImageCodec.toPng(ImageCodec.docFrame(id)))
+      (id, if (img == null) 0L else ImageCodec.phash64(img))
+    }).toDF("doc_id", "ph")
 
   /** Hamming distance of a `TextOps.bandPairs` pair of pHashes. */
   private val phashHamming =
@@ -329,7 +353,6 @@ object Multimodal {
     * bit-identical to the distributed result.
     */
   private lazy val phashLutLocal: IndexedSeq[(Int, Long)] = {
-    import graft.functions.ImageCodec
     (0 until 768).map { m =>
       val img = ImageCodec.decode(ImageCodec.toPng(
         ImageCodec.syntheticImage(m.toLong, 32 + (m % 3) * 16, 32)))
@@ -361,7 +384,6 @@ object Multimodal {
     * the identical Session code path the executors run.
     */
   private lazy val convInferOracle: String = {
-    import graft.functions.{ImageCodec, Onnx}
     val rows = (0 until 768).map { m =>
       val img = ImageCodec.decode(ImageCodec.toPng(
         ImageCodec.syntheticImage(m.toLong, 32 + (m % 3) * 16, 32)))
@@ -387,7 +409,6 @@ object Multimodal {
     * tile — identical Session code path driver-side.
     */
   private lazy val cnn2InferOracle: String = {
-    import graft.functions.{ImageCodec, Onnx}
     val rows = (0 until 768).map { m =>
       val img = ImageCodec.decode(ImageCodec.toPng(
         ImageCodec.syntheticImage(m.toLong, 32 + (m % 3) * 16, 32)))
@@ -437,7 +458,7 @@ object Multimodal {
 
   private lazy val batchInferOracle: String = {
     val rows = featureLutLocal.map { case (m, _, f) =>
-      val lg = graft.functions.Onnx.smokeLogits(f)
+      val lg = Onnx.smokeLogits(f)
       s"($m,${lg.map(dlit).mkString(",")},${lg.indexOf(lg.max)})"
     }.mkString(",")
     s"""WITH lut(mod_id, logit0, logit1, logit2, logit3, pred_class)
@@ -483,25 +504,16 @@ object Multimodal {
     // java.util.zip.CRC32; pure function of doc_id % 768 so the
     // driver-LUT oracle hash-checks the whole walk.
     "mm_png_meta" -> Q(
-      build = (s, d) => {
-        val spark = s
-        import spark.implicits._
-        import graft.functions.ImageCodec
-        Tables.t(s, d, "documents").select(col("doc_id")).as[Long]
-          .mapPartitions { it =>
-            it.map { id =>
-              val png = ImageCodec.toPng(
-                ImageCodec.syntheticImage(id, 32 + (id % 3).toInt * 16, 32))
-              val i = ImageCodec.pngMeta(png)
-              (id, i.pngLen.toLong, i.width.toLong, i.height.toLong,
-                i.bitDepth.toLong, i.colorType.toLong, i.nChunks.toLong,
-                i.idatBytes, i.crcOk)
-            }
-          }
+      build = (s, d) =>
+        perDoc(s, d)(_.map { id =>
+          val i = ImageCodec.pngMeta(ImageCodec.toPng(ImageCodec.docFrame(id)))
+          (id, i.pngLen.toLong, i.width.toLong, i.height.toLong,
+            i.bitDepth.toLong, i.colorType.toLong, i.nChunks.toLong,
+            i.idatBytes, i.crcOk)
+        })
           .toDF("doc_id", "png_len", "width", "height", "bit_depth",
             "color_type", "n_chunks", "idat_bytes", "crc_ok")
-          .orderBy(col("doc_id"))
-      },
+          .orderBy(col("doc_id")),
       oracle = Some(pngMetaOracle)),
 
     // ----- mm_jpeg_meta: real JPEG marker walk (the camera format) -------
@@ -514,26 +526,17 @@ object Multimodal {
     // entropy-scan byte accounting (stuffed FF00 / RST stay in-scan),
     // exact-consumption audit. LUT oracle, period 768.
     "mm_jpeg_meta" -> Q(
-      build = (s, d) => {
-        val spark = s
-        import spark.implicits._
-        import graft.functions.ImageCodec
-        Tables.t(s, d, "documents").select(col("doc_id")).as[Long]
-          .mapPartitions { it =>
-            it.map { id =>
-              val jpg = ImageCodec.toJpeg(
-                ImageCodec.syntheticImage(id, 32 + (id % 3).toInt * 16, 32))
-              val i = ImageCodec.jpegMeta(jpg)
-              (id, i.jpegLen.toLong, i.width.toLong, i.height.toLong,
-                i.precision.toLong, i.nComponents.toLong, i.nSegments.toLong,
-                i.hasJfif, i.entropyBytes, i.markerOk)
-            }
-          }
+      build = (s, d) =>
+        perDoc(s, d)(_.map { id =>
+          val i = ImageCodec.jpegMeta(ImageCodec.toJpeg(ImageCodec.docFrame(id)))
+          (id, i.jpegLen.toLong, i.width.toLong, i.height.toLong,
+            i.precision.toLong, i.nComponents.toLong, i.nSegments.toLong,
+            i.hasJfif, i.entropyBytes, i.markerOk)
+        })
           .toDF("doc_id", "jpeg_len", "width", "height", "precision",
             "n_components", "n_segments", "has_jfif", "entropy_bytes",
             "marker_ok")
-          .orderBy(col("doc_id"))
-      },
+          .orderBy(col("doc_id")),
       oracle = Some(jpegMetaOracle)),
 
     // ----- mm_codec_dispatch: mixed-format binary column -----------------
@@ -545,29 +548,21 @@ object Multimodal {
     // pixels (lossy for the JPEG half — the LUT runs the identical
     // codec). This is mm_feature_extract's JPEG path.
     "mm_codec_dispatch" -> Q(
-      build = (s, d) => {
-        val spark = s
-        import spark.implicits._
-        import graft.functions.ImageCodec
-        Tables.t(s, d, "documents").select(col("doc_id")).as[Long]
-          .mapPartitions { it =>
-            it.map { id =>
-              val img = ImageCodec.syntheticImage(
-                id, 32 + (id % 3).toInt * 16, 32)
-              val bytes = if (id % 2 == 0) ImageCodec.toPng(img)
-                else ImageCodec.toJpeg(img)
-              val fmt = ImageCodec.sniffFormat(bytes)
-              val dec = ImageCodec.decode(bytes)
-              val ok = dec != null
-              val f = if (ok) ImageCodec.features(dec) else new Array[Double](8)
-              (id, fmt, bytes.length, ok, f)
-            }
-          }.toDF("doc_id", "format", "n_bytes", "decoded", "features")
+      build = (s, d) =>
+        perDoc(s, d)(_.map { id =>
+          val img = ImageCodec.docFrame(id)
+          val bytes = if (id % 2 == 0) ImageCodec.toPng(img)
+            else ImageCodec.toJpeg(img)
+          val fmt = ImageCodec.sniffFormat(bytes)
+          val dec = ImageCodec.decode(bytes)
+          val ok = dec != null
+          val f = if (ok) ImageCodec.features(dec) else new Array[Double](8)
+          (id, fmt, bytes.length, ok, f)
+        }).toDF("doc_id", "format", "n_bytes", "decoded", "features")
           .select(col("doc_id") +: col("format") +: col("n_bytes") +:
             col("decoded") +:
             (0 until 8).map(k => col("features")(k).as(s"f$k")): _*)
-          .orderBy(col("doc_id"))
-      },
+          .orderBy(col("doc_id")),
       oracle = Some(codecDispatchOracle)),
 
     // ----- mm_jpeg_robustness: pHash stability across lossy re-encode ----
@@ -579,27 +574,19 @@ object Multimodal {
     // the banded-hamming detector treats a JPEG re-encode as a near-dup
     // of its source (hamming ≤ 6), not a distinct image.
     "mm_jpeg_robustness" -> Q(
-      build = (s, d) => {
-        val spark = s
-        import spark.implicits._
-        import graft.functions.ImageCodec
-        Tables.t(s, d, "documents").select(col("doc_id")).as[Long]
-          .mapPartitions { it =>
-            it.map { id =>
-              val img = ImageCodec.syntheticImage(
-                id, 32 + (id % 3).toInt * 16, 32)
-              // PNG round trip is bit-lossless, so the source image's
-              // hash IS the stored-PNG hash (two codec passes saved)
-              val phPng = ImageCodec.phash64(img)
-              val phJpg = ImageCodec.phash64(
-                ImageCodec.decode(ImageCodec.toJpeg(img)))
-              val ham = java.lang.Long.bitCount(phPng ^ phJpg).toLong
-              (id, phPng, phJpg, ham, ham <= 6L)
-            }
-          }
+      build = (s, d) =>
+        perDoc(s, d)(_.map { id =>
+          val img = ImageCodec.docFrame(id)
+          // PNG round trip is bit-lossless, so the source image's
+          // hash IS the stored-PNG hash (two codec passes saved)
+          val phPng = ImageCodec.phash64(img)
+          val phJpg = ImageCodec.phash64(
+            ImageCodec.decode(ImageCodec.toJpeg(img)))
+          val ham = java.lang.Long.bitCount(phPng ^ phJpg).toLong
+          (id, phPng, phJpg, ham, ham <= 6L)
+        })
           .toDF("doc_id", "ph_png", "ph_jpeg", "hamming", "near_dup")
-          .orderBy(col("doc_id"))
-      },
+          .orderBy(col("doc_id")),
       oracle = Some(jpegRobustnessOracle)),
 
     // ----- mm_jpeg_scenes: shot segmentation over JPEG camera frames -----
@@ -617,18 +604,15 @@ object Multimodal {
       build = (s, d) => {
         val spark = s
         import spark.implicits._
-        import graft.functions.ImageCodec
         val w = Window.partitionBy(col("source")).orderBy(col("doc_id"))
         val ph = Tables.t(s, d, "documents").select(col("source"), col("doc_id"))
           .withColumn("rn", row_number().over(w))
           .as[(String, Long, Int)]
           .mapPartitions { it =>
             it.map { case (src, id, rn) =>
-              val shot = (rn - 1).toLong / 8
-              val img = ImageCodec.syntheticImage(
-                shot, 32 + (shot % 3).toInt * 16, 32)
+              val shotFrame = ImageCodec.docFrame((rn - 1).toLong / 8)
               (src, id, ImageCodec.phash64(
-                ImageCodec.decode(ImageCodec.toJpeg(img))))
+                ImageCodec.decode(ImageCodec.toJpeg(shotFrame))))
             }
           }.toDF("source", "doc_id", "ph")
         ph.withColumn("prev_ph", lag(col("ph"), 1).over(w))
@@ -737,25 +721,17 @@ object Multimodal {
     // literals (Double.toString round-trips), giving a bitwise
     // hash-checkable DuckDB oracle — the geo_overpass VALUES technique.
     "mm_feature_extract" -> Q(
-      build = (s, d) => {
-        val spark = s
-        import spark.implicits._
-        import graft.functions.ImageCodec
-        Tables.t(s, d, "documents").select(col("doc_id")).as[Long]
-          .mapPartitions { it =>
-            it.map { id =>
-              val png = ImageCodec.toPng(
-                ImageCodec.syntheticImage(id, 32 + (id % 3).toInt * 16, 32))
-              val img = ImageCodec.decode(png) // REAL ImageIO decode
-              val ok = img != null
-              val feat = if (ok) ImageCodec.features(img) else new Array[Double](8)
-              (id, png.length, ok, feat)
-            }
-          }.toDF("doc_id", "png_bytes", "decoded", "features")
+      build = (s, d) =>
+        perDoc(s, d)(_.map { id =>
+          val png = ImageCodec.toPng(ImageCodec.docFrame(id))
+          val img = ImageCodec.decode(png) // REAL ImageIO decode
+          val ok = img != null
+          val feat = if (ok) ImageCodec.features(img) else new Array[Double](8)
+          (id, png.length, ok, feat)
+        }).toDF("doc_id", "png_bytes", "decoded", "features")
           .select(col("doc_id") +: col("png_bytes") +: col("decoded") +:
             (0 until 8).map(k => col("features")(k).as(s"f$k")): _*)
-          .orderBy(col("doc_id"))
-      },
+          .orderBy(col("doc_id")),
       oracle = Some(featureExtractOracle)),
 
     // ----- mm_batch_infer: fixed-batch model-inference plumbing ----------
@@ -769,42 +745,15 @@ object Multimodal {
     // one Onnx.Session.run per batch against the committed
     // smoke_mlp.onnx model (a real ONNX protobuf artifact — 8→16→4
     // Gemm/Relu/Gemm MLP — parsed and executed in float32 by
-    // functions/Onnx.scala; ONNX Runtime itself isn't in this container,
-    // see the Onnx scaladoc). The session loads once per executor JVM
+    // functions/Onnx.scala). The session loads once per executor JVM
     // and is reused across batches, the lifecycle odin_onnx gives its
-    // ort::Session. Deterministic batches also make the op
+    // ort::Session. All three inference ops are `batchScores` with
+    // their own `Onnx.Scorer`. Deterministic batches also make the op
     // oracle-checkable: batch_n/batch_pos are window math over
     // doc_id / 32, logits come from the period-768 feature LUT running
     // the identical session driver-side.
     "mm_batch_infer" -> Q(
-      build = (s, d) => {
-        val spark = s
-        import spark.implicits._
-        import graft.functions.ImageCodec
-        val batchSize = 32L
-        Tables.t(s, d, "documents").select(col("doc_id")).as[Long]
-          .groupByKey(id => id / batchSize)
-          .flatMapGroups { (_, ids) =>
-            // one "session run" per batch of <= 32 decoded images
-            val batch = ids.toArray.sorted
-            val feats = batch.map { id =>
-              val img = ImageCodec.decode(ImageCodec.toPng(
-                ImageCodec.syntheticImage(id, 32 + (id % 3).toInt * 16, 32)))
-              // a null decode yields a zero feature vector instead of an
-              // NPE that would fail the whole partition (ADVICE r3)
-              if (img == null) new Array[Double](8) else ImageCodec.features(img)
-            }
-            val logits = feats.map(graft.functions.Onnx.smokeLogits)
-            batch.zip(logits).zipWithIndex.map { case ((id, lg), i) =>
-              (id, batch.length, i, lg, lg.indexOf(lg.max))
-            }.iterator
-          }
-          .toDF("doc_id", "batch_n", "batch_pos", "logits", "pred_class")
-          .select(col("doc_id") +: col("batch_n") +: col("batch_pos") +:
-            (0 until 4).map(k => col("logits")(k).as(s"logit$k")) :+
-            col("pred_class"): _*)
-          .orderBy(col("doc_id"))
-      },
+      build = (s, d) => batchScores(s, d, Onnx.Scorer.Mlp, "logit"),
       oracle = Some(batchInferOracle)),
 
     // ----- mm_conv_infer: conv-net batch inference (the vision path) -----
@@ -820,35 +769,7 @@ object Multimodal {
     // onnxruntime loads unchanged. LUT oracle: period-768 tiles through
     // the identical session driver-side — logits hash bit-exact.
     "mm_conv_infer" -> Q(
-      build = (s, d) => {
-        val spark = s
-        import spark.implicits._
-        import graft.functions.{ImageCodec, Onnx}
-        val batchSize = 32L
-        Tables.t(s, d, "documents").select(col("doc_id")).as[Long]
-          .groupByKey(id => id / batchSize)
-          .flatMapGroups { (_, ids) =>
-            val batch = ids.toArray.sorted
-            val tiles = batch.map { id =>
-              val img = ImageCodec.decode(ImageCodec.toPng(
-                ImageCodec.syntheticImage(id, 32 + (id % 3).toInt * 16, 32)))
-              if (img == null) new Array[Double](64)
-              else ImageCodec.cnnTile8(img)
-            }
-            // one batched NCHW run per group — the ort-session shape
-            val logits = Onnx.cnnSession
-              .run(tiles.map(_.map(_.toFloat)))
-              .map(_.map(_.toDouble))
-            batch.zip(logits).zipWithIndex.map { case ((id, lg), i) =>
-              (id, batch.length, i, lg, lg.indexOf(lg.max))
-            }.iterator
-          }
-          .toDF("doc_id", "batch_n", "batch_pos", "logits", "pred_class")
-          .select(col("doc_id") +: col("batch_n") +: col("batch_pos") +:
-            (0 until 4).map(k => col("logits")(k).as(s"logit$k")) :+
-            col("pred_class"): _*)
-          .orderBy(col("doc_id"))
-      },
+      build = (s, d) => batchScores(s, d, Onnx.Scorer.Cnn, "logit"),
       oracle = Some(convInferOracle)),
 
     // ----- mm_cnn2_infer: the full-op-coverage conv classifier -----------
@@ -861,34 +782,7 @@ object Multimodal {
     // 32-doc batch assembly and one batched NCHW Session.run per group;
     // output = calibrated class scores (softmax), not raw logits.
     "mm_cnn2_infer" -> Q(
-      build = (s, d) => {
-        val spark = s
-        import spark.implicits._
-        import graft.functions.{ImageCodec, Onnx}
-        val batchSize = 32L
-        Tables.t(s, d, "documents").select(col("doc_id")).as[Long]
-          .groupByKey(id => id / batchSize)
-          .flatMapGroups { (_, ids) =>
-            val batch = ids.toArray.sorted
-            val tiles = batch.map { id =>
-              val img = ImageCodec.decode(ImageCodec.toPng(
-                ImageCodec.syntheticImage(id, 32 + (id % 3).toInt * 16, 32)))
-              if (img == null) new Array[Double](64)
-              else ImageCodec.cnnTile8(img)
-            }
-            val scores = Onnx.cnn2Session
-              .run(tiles.map(_.map(_.toFloat)))
-              .map(_.map(_.toDouble))
-            batch.zip(scores).zipWithIndex.map { case ((id, sc), i) =>
-              (id, batch.length, i, sc, sc.indexOf(sc.max))
-            }.iterator
-          }
-          .toDF("doc_id", "batch_n", "batch_pos", "scores", "pred_class")
-          .select(col("doc_id") +: col("batch_n") +: col("batch_pos") +:
-            (0 until 4).map(k => col("scores")(k).as(s"score$k")) :+
-            col("pred_class"): _*)
-          .orderBy(col("doc_id"))
-      },
+      build = (s, d) => batchScores(s, d, Onnx.Scorer.Cnn2, "score"),
       oracle = Some(cnn2InferOracle)),
 
     // ----- mm_smoke_diff: consecutive-frame tiled smoke detection --------
@@ -1613,27 +1507,18 @@ object Multimodal {
     // whole decode→tile→deflate chain for the oracle — hash-checked, not
     // rows-only. ratio = comp/256 is exact (2^-8 scaling).
     "mm_tile_compress" -> Q(
-      build = (s, d) => {
-        val spark = s
-        import spark.implicits._
-        import graft.functions.{Compress, ImageCodec}
-        Tables.t(s, d, "documents")
-          .select(col("doc_id")).as[Long]
-          .mapPartitions { it =>
-            it.flatMap { id =>
-              val bytes = ImageCodec.lumBytes(
-                ImageCodec.syntheticImage(id, 32 + (id % 3).toInt * 16, 32))
-              val nt = bytes.length / 256
-              (0 until nt).iterator.map { t =>
-                val comp = Compress.deflateLen(
-                  java.util.Arrays.copyOfRange(bytes, t * 256, (t + 1) * 256))
-                (id, t.toLong, 256L, comp.toLong, comp / 256.0)
-              }
-            }
+      build = (s, d) =>
+        perDoc(s, d)(_.flatMap { id =>
+          val bytes = ImageCodec.lumBytes(ImageCodec.docFrame(id))
+          val nt = bytes.length / 256
+          (0 until nt).iterator.map { t =>
+            val comp = Compress.deflateLen(
+              java.util.Arrays.copyOfRange(bytes, t * 256, (t + 1) * 256))
+            (id, t.toLong, 256L, comp.toLong, comp / 256.0)
           }
+        })
           .toDF("doc_id", "tile_id", "n_bytes", "comp_bytes", "ratio")
-          .orderBy(col("doc_id"), col("tile_id"))
-      },
+          .orderBy(col("doc_id"), col("tile_id")),
       oracle = Some(tileCompressOracle)),
 
     // ----- mm_fractal_dim: compression-based fractal dimension -----------
@@ -1650,26 +1535,17 @@ object Multimodal {
     // decode→decimate→deflate→slope for the oracle — hash-checked.
     // Slope doubles round-trip through dlit literals bit-exactly.
     "mm_fractal_dim" -> Q(
-      build = (s, d) => {
-        val spark = s
-        import spark.implicits._
-        import graft.functions.{Compress, ImageCodec}
-        Tables.t(s, d, "documents")
-          .select(col("doc_id")).as[Long]
-          .mapPartitions { it =>
-            it.map { id =>
-              val bytes = ImageCodec.lumBytes(
-                ImageCodec.syntheticImage(id, 32 + (id % 3).toInt * 16, 32))
-              val ks = Array(5, 6, 7, 8, 9, 10)
-              val sizes = ks.map(k => Compress.deflateLen(Compress.decimate(bytes, k)))
-              val xs = ks.map(k => math.log(k.toDouble) / math.log(2.0))
-              val ys = sizes.map(sz => math.log(sz.toDouble) / math.log(2.0))
-              (id, bytes.length.toLong, sizes.last.toLong, Compress.slope(xs, ys))
-            }
-          }
+      build = (s, d) =>
+        perDoc(s, d)(_.map { id =>
+          val bytes = ImageCodec.lumBytes(ImageCodec.docFrame(id))
+          val ks = Array(5, 6, 7, 8, 9, 10)
+          val sizes = ks.map(k => Compress.deflateLen(Compress.decimate(bytes, k)))
+          val xs = ks.map(k => math.log(k.toDouble) / math.log(2.0))
+          val ys = sizes.map(sz => math.log(sz.toDouble) / math.log(2.0))
+          (id, bytes.length.toLong, sizes.last.toLong, Compress.slope(xs, ys))
+        })
           .toDF("doc_id", "n_bytes", "comp_full", "fractal_slope")
-          .orderBy(col("doc_id"))
-      },
+          .orderBy(col("doc_id")),
       oracle = Some(fractalDimOracle)),
 
     // ----- mm_phash_pairs: perceptual-hash image near-dup ----------------

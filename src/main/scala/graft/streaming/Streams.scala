@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.functions.Onnx
 
 /** §2.G — ODIN's live importers re-expressed as Structured Streaming.
   *
@@ -842,90 +843,43 @@ object Streams {
   case class InferOut(doc_id: Long, batch_len: Int, pred_class: Int,
       logit0: Double, logit1: Double, logit2: Double, logit3: Double)
 
-  /** stream_batch_infer: live micro-batch model scoring — the streaming
-    * twin of mm_batch_infer, and the shape the reference actually runs
+  /** Live micro-batch model scoring — the streaming twin of the batch
+    * inference operators, and the shape the reference actually runs
     * (odin_onnx's SmokeDetector scores a LIVE camera feed: each arriving
     * image batch goes through one ort::Session the actor holds open).
     * Stateless per-record transform, so it composes with any upstream
     * watermark/dedup stage: within each micro-batch partition, records
-    * buffer into fixed-size-32 batches (tail handled), decode via the
-    * real ImageIO path, and run through the committed smoke_mlp.onnx
-    * session — loaded once per executor JVM and shared with the batch
-    * operator, the ort lifecycle. Undecodable payloads score as zero
-    * features rather than failing the stream.
+    * buffer into fixed-size-32 batches (tail handled), and each batch is
+    * one `scorer.score` — real ImageIO decode, one run of the committed
+    * session, loaded once per executor JVM and shared with the batch
+    * operator (the ort lifecycle). Undecodable payloads score as a zero
+    * input rather than failing the stream. Outputs are bit-identical to
+    * the batch operator's.
     */
-  def batchInferStream(in: Dataset[InferIn]): Dataset[InferOut] = {
+  def inferStream(in: Dataset[InferIn], scorer: Onnx.Scorer)
+      : Dataset[InferOut] = {
     import in.sparkSession.implicits._
-    import graft.functions.{ImageCodec, Onnx}
     in.mapPartitions { it =>
       it.grouped(32).flatMap { batch =>
-        val feats = batch.map { r =>
-          val img = ImageCodec.decode(r.png)
-          if (img == null) new Array[Double](8) else ImageCodec.features(img)
-        }
-        val logits = feats.map(Onnx.smokeLogits)
-        batch.zip(logits).map { case (r, lg) =>
-          InferOut(r.doc_id, batch.length, lg.indexOf(lg.max),
-            lg(0), lg(1), lg(2), lg(3))
+        batch.zip(scorer.score(batch.map(_.png))).map { case (r, v) =>
+          InferOut(r.doc_id, batch.length, v.indexOf(v.max),
+            v(0), v(1), v(2), v(3))
         }
       }
     }
   }
 
-  /** stream_conv_infer: the conv-net twin of [[batchInferStream]] — the
-    * LIVE camera-feed scoring odin_onnx actually deploys is a vision
-    * (conv) classifier. Same stateless fixed-size-32 batching, but each
-    * decoded frame becomes an 8×8 block-mean tile and the whole batch
-    * runs as ONE [n,1,8,8] NCHW tensor through the committed
-    * smoke_cnn.onnx session (Conv/MaxPool/Flatten in the pure-JVM
-    * interpreter) — loaded once per executor JVM, shared with
-    * mm_conv_infer, bit-identical logits to the batch operator.
-    */
-  def convInferStream(in: Dataset[InferIn]): Dataset[InferOut] = {
-    import in.sparkSession.implicits._
-    import graft.functions.{ImageCodec, Onnx}
-    in.mapPartitions { it =>
-      it.grouped(32).flatMap { batch =>
-        val tiles = batch.map { r =>
-          val img = ImageCodec.decode(r.png)
-          if (img == null) new Array[Double](64) else ImageCodec.cnnTile8(img)
-        }
-        val logits = Onnx.cnnSession
-          .run(tiles.map(_.map(_.toFloat)).toArray)
-          .map(_.map(_.toDouble))
-        batch.zip(logits).map { case (r, lg) =>
-          InferOut(r.doc_id, batch.length, lg.indexOf(lg.max),
-            lg(0), lg(1), lg(2), lg(3))
-        }
-      }
-    }
-  }
+  /** stream_batch_infer: smoke_mlp.onnx, the twin of mm_batch_infer. */
+  def batchInferStream(in: Dataset[InferIn]): Dataset[InferOut] =
+    inferStream(in, Onnx.Scorer.Mlp)
 
-  /** stream_cnn2_infer: the extended-op conv twin (r12) — live scoring
-    * through the committed smoke_cnn2.onnx (BatchNorm/AveragePool/
-    * Sigmoid/GlobalAveragePool/Concat/Softmax), same stateless 32-frame
-    * batching and one NCHW Session.run per batch; emits CALIBRATED
-    * class scores (softmax), bit-identical to mm_cnn2_infer's.
-    */
-  def cnn2InferStream(in: Dataset[InferIn]): Dataset[InferOut] = {
-    import in.sparkSession.implicits._
-    import graft.functions.{ImageCodec, Onnx}
-    in.mapPartitions { it =>
-      it.grouped(32).flatMap { batch =>
-        val tiles = batch.map { r =>
-          val img = ImageCodec.decode(r.png)
-          if (img == null) new Array[Double](64) else ImageCodec.cnnTile8(img)
-        }
-        val scores = Onnx.cnn2Session
-          .run(tiles.map(_.map(_.toFloat)).toArray)
-          .map(_.map(_.toDouble))
-        batch.zip(scores).map { case (r, sc) =>
-          InferOut(r.doc_id, batch.length, sc.indexOf(sc.max),
-            sc(0), sc(1), sc(2), sc(3))
-        }
-      }
-    }
-  }
+  /** stream_conv_infer: smoke_cnn.onnx, the twin of mm_conv_infer. */
+  def convInferStream(in: Dataset[InferIn]): Dataset[InferOut] =
+    inferStream(in, Onnx.Scorer.Cnn)
+
+  /** stream_cnn2_infer: smoke_cnn2.onnx, the twin of mm_cnn2_infer. */
+  def cnn2InferStream(in: Dataset[InferIn]): Dataset[InferOut] =
+    inferStream(in, Onnx.Scorer.Cnn2)
 
   case class FenceSeg(fence: Int, ax: Long, ay: Long, bx: Long, by: Long)
   case class FixEv(user_id: Long, event_id: Long, ts_sec: Long,

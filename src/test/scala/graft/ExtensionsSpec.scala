@@ -1,18 +1,36 @@
 package graft
 
 import graft.functions.TopK
+import graft.plans.{AsOfJoinStrategy, HaversineBBoxRule, RangeJoinStrategy}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 class ExtensionsSpec extends SparkSpecBase {
 
   test("GraftExtensions injections apply cleanly; SQL function works") {
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions().apply(ext) // records strategy + function injection
-    val s2 = spark.newSession()
-    graft.functions.GeoFunctions.register(s2)
-    val d = s2.sql("SELECT round(haversine_km(37.77, -122.42, 34.05, -118.24), 1) AS km")
-      .head.getDouble(0)
-    assert(math.abs(d - 559.1) < 1.0, s"got $d") // SF -> LA great circle
+    // a session of its own, built with the extension; the shared session
+    // stays the active and default one for the other specs
+    val s2 = SparkSession.builder().withExtensions(new GraftExtensions).create()
+    SparkSession.setActiveSession(spark)
+    SparkSession.setDefaultSession(spark)
+    // injected strategies, not the per-call experimental registration
+    val planner = s2.sessionState.planner.extraPlanningStrategies
+    assert(planner.contains(AsOfJoinStrategy))
+    assert(planner.contains(RangeJoinStrategy))
+    assert(s2.sessionState.optimizer.batches.flatMap(_.rules)
+      .contains(HaversineBBoxRule))
+    val text = "'the quick brown fox jumps over the lazy dog again'"
+    val row = s2.sql(s"""
+      SELECT round(haversine_km(37.77, -122.42, 34.05, -118.24), 1) AS km,
+             round(geodesic_km(37.77, -122.42, 34.05, -118.24), 1) AS gkm,
+             size(minhash_signature($text)) AS nsig,
+             simhash64($text) AS sh,
+             size(winnow_fingerprints($text)) AS nfp""").head
+    assert(math.abs(row.getDouble(0) - 559.1) < 1.0, s"got $row") // SF -> LA
+    assert(math.abs(row.getDouble(1) - row.getDouble(0)) < 5.0, s"got $row")
+    assert(row.getInt(2) == 32)
+    assert(row.getLong(3) != 0L)
+    assert(row.getInt(4) >= 1)
   }
 
   test("text kernels are SQL-callable after registration") {

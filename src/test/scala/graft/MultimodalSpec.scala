@@ -1,5 +1,10 @@
 package graft
 
+import graft.functions.{ImageCodec, Onnx}
+import graft.streaming.Streams
+import java.awt.image.BufferedImage
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 class MultimodalSpec extends SparkSpecBase {
@@ -44,7 +49,6 @@ class MultimodalSpec extends SparkSpecBase {
     // executor logits ARE the committed-ONNX session outputs: recompute
     // through decode → features → Onnx.smokeLogits locally and compare
     // bit-exactly (doc residue class 768 = the feature period)
-    import graft.functions.{ImageCodec, Onnx}
     rows.take(50).foreach { r =>
       val id = r.getAs[Long]("doc_id")
       val m = id % 768
@@ -76,7 +80,6 @@ class MultimodalSpec extends SparkSpecBase {
   }
 
   test("ImageCodec: decode recovers known pixel statistics exactly") {
-    import graft.functions.ImageCodec
     import java.awt.image.BufferedImage
     // solid color: mean channels are exact
     val img = new BufferedImage(8, 8, BufferedImage.TYPE_INT_RGB)
@@ -138,117 +141,55 @@ class MultimodalSpec extends SparkSpecBase {
   }
 
   test("mm_feature_extract decode survives a corrupt payload (flagged, not thrown)") {
-    import graft.functions.ImageCodec
     assert(ImageCodec.decode(Array[Byte](1, 2, 3, 4)) == null)
   }
 
-  test("stream_batch_infer: live scoring matches the batch ONNX path bit-exactly") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.functions.{ImageCodec, Onnx}
-    import graft.streaming.Streams
-    val in = MemoryStream[Streams.InferIn]
-    val q = Streams.batchInferStream(in.toDS())
-      .writeStream.format("memory").queryName("infer_out")
-      .outputMode("append").start()
-    def png(id: Long): Array[Byte] = {
-      val m = id % 768
-      ImageCodec.toPng(ImageCodec.syntheticImage(m, 32 + (m % 3).toInt * 16, 32))
-    }
-    // 40 records: one full 32-batch plus a tail of 8, and one broken blob
-    in.addData((0L until 40L).map(i =>
-      Streams.InferIn(i, if (i == 7L) Array[Byte](1, 2, 3) else png(i))))
-    q.processAllAvailable()
-    val out = spark.table("infer_out").collect()
-    q.stop()
-    assert(out.length == 40)
-    out.foreach { r =>
-      val id = r.getAs[Long]("doc_id")
-      val feats =
-        if (id == 7L) new Array[Double](8)
-        else ImageCodec.features(ImageCodec.decode(png(id)))
-      val lg = Onnx.smokeLogits(feats)
-      (0 until 4).foreach { k =>
-        assert(java.lang.Double.doubleToRawLongBits(lg(k))
-          == java.lang.Double.doubleToRawLongBits(r.getAs[Double](s"logit$k")),
-          s"doc $id logit$k")
-      }
-      assert(r.getAs[Int]("pred_class") == lg.indexOf(lg.max))
-      assert(r.getAs[Int]("batch_len") <= 32)
-    }
-  }
+  // One case per model: 40 records (a full 32-batch plus a tail of 8)
+  // with one broken blob, scored by the model's stream and checked
+  // against its committed session run locally — bit-exact outputs and
+  // pred_class, the broken blob scored as a zero input, batches of at
+  // most 32, and smoke_cnn2's calibrated scores summing to ~1.
+  private case class StreamModel(name: String,
+      stream: Dataset[Streams.InferIn] => Dataset[Streams.InferOut],
+      model: Array[Double] => Array[Double],
+      input: BufferedImage => Array[Double], inputLen: Int, calibrated: Boolean)
 
-  test("stream_conv_infer: live conv scoring matches the batch CNN path bit-exactly") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.functions.{ImageCodec, Onnx}
-    import graft.streaming.Streams
-    val in = MemoryStream[Streams.InferIn]
-    val q = Streams.convInferStream(in.toDS())
-      .writeStream.format("memory").queryName("cinfer_out")
-      .outputMode("append").start()
-    def png(id: Long): Array[Byte] = {
-      val m = id % 768
-      ImageCodec.toPng(ImageCodec.syntheticImage(m, 32 + (m % 3).toInt * 16, 32))
-    }
-    in.addData((0L until 40L).map(i =>
-      Streams.InferIn(i, if (i == 7L) Array[Byte](1, 2, 3) else png(i))))
-    q.processAllAvailable()
-    val out = spark.table("cinfer_out").collect()
-    q.stop()
-    assert(out.length == 40)
-    out.foreach { r =>
-      val id = r.getAs[Long]("doc_id")
-      val tile =
-        if (id == 7L) new Array[Double](64)
-        else ImageCodec.cnnTile8(ImageCodec.decode(png(id)))
-      val lg = Onnx.smokeCnnLogits(tile)
-      (0 until 4).foreach { k =>
-        assert(java.lang.Double.doubleToRawLongBits(lg(k))
-          == java.lang.Double.doubleToRawLongBits(r.getAs[Double](s"logit$k")),
-          s"doc $id logit$k")
+  Seq(
+    StreamModel("stream_batch_infer: live scoring matches the batch ONNX path bit-exactly",
+      Streams.batchInferStream, Onnx.smokeLogits, ImageCodec.features, 8, false),
+    StreamModel("stream_conv_infer: live conv scoring matches the batch CNN path bit-exactly",
+      Streams.convInferStream, Onnx.smokeCnnLogits, ImageCodec.cnnTile8, 64, false),
+    StreamModel("stream_cnn2_infer: live extended-op scoring matches the batch path bit-exactly",
+      Streams.cnn2InferStream, Onnx.smokeCnn2Scores, ImageCodec.cnnTile8, 64, true)
+  ).zipWithIndex.foreach { case (m, n) =>
+    test(m.name) {
+      import spark.implicits._
+      implicit val sq = spark.sqlContext
+      val in = MemoryStream[Streams.InferIn]
+      val q = m.stream(in.toDS())
+        .writeStream.format("memory").queryName(s"infer_out_$n")
+        .outputMode("append").start()
+      def png(id: Long): Array[Byte] = ImageCodec.toPng(ImageCodec.docFrame(id))
+      in.addData((0L until 40L).map(i =>
+        Streams.InferIn(i, if (i == 7L) Array[Byte](1, 2, 3) else png(i))))
+      q.processAllAvailable()
+      val out = spark.table(s"infer_out_$n").collect()
+      q.stop()
+      assert(out.length == 40)
+      out.foreach { r =>
+        val id = r.getAs[Long]("doc_id")
+        val v = m.model(
+          if (id == 7L) new Array[Double](m.inputLen)
+          else m.input(ImageCodec.decode(png(id))))
+        val got = (0 until 4).map(k => r.getAs[Double](s"logit$k"))
+        (0 until 4).foreach { k =>
+          assert(java.lang.Double.doubleToRawLongBits(v(k))
+            == java.lang.Double.doubleToRawLongBits(got(k)), s"doc $id logit$k")
+        }
+        assert(r.getAs[Int]("pred_class") == v.indexOf(v.max))
+        assert(r.getAs[Int]("batch_len") <= 32)
+        if (m.calibrated) assert(math.abs(got.sum - 1.0) < 1e-5, s"doc $id")
       }
-      assert(r.getAs[Int]("pred_class") == lg.indexOf(lg.max))
-    }
-  }
-
-  test("stream_cnn2_infer: live extended-op scoring matches the batch path bit-exactly") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.functions.{ImageCodec, Onnx}
-    import graft.streaming.Streams
-    val in = MemoryStream[Streams.InferIn]
-    val q = Streams.cnn2InferStream(in.toDS())
-      .writeStream.format("memory").queryName("cnn2_out")
-      .outputMode("append").start()
-    def png(id: Long): Array[Byte] = {
-      val m = id % 768
-      ImageCodec.toPng(ImageCodec.syntheticImage(m, 32 + (m % 3).toInt * 16, 32))
-    }
-    in.addData((0L until 40L).map(i =>
-      Streams.InferIn(i, if (i == 5L) Array[Byte](9, 9) else png(i))))
-    q.processAllAvailable()
-    val out = spark.table("cnn2_out").collect()
-    q.stop()
-    assert(out.length == 40)
-    out.foreach { r =>
-      val id = r.getAs[Long]("doc_id")
-      val tile =
-        if (id == 5L) new Array[Double](64)
-        else ImageCodec.cnnTile8(ImageCodec.decode(png(id)))
-      val sc = Onnx.smokeCnn2Scores(tile)
-      (0 until 4).foreach { k =>
-        assert(java.lang.Double.doubleToRawLongBits(sc(k))
-          == java.lang.Double.doubleToRawLongBits(r.getAs[Double](s"logit$k")),
-          s"doc $id score$k")
-      }
-      assert(r.getAs[Int]("pred_class") == sc.indexOf(sc.max))
-      // calibrated head: the four scores sum to ~1
-      assert(math.abs((0 until 4).map(k => r.getAs[Double](s"logit$k")).sum
-        - 1.0) < 1e-5)
     }
   }
 
