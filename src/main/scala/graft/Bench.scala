@@ -1,49 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets
 
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val settings = Seq(
-      "spark.sql.shuffle.partitions" -> cpus,
-      // Size-based AQE coalescing instead of parallelism-first.
-      // parallelismFirst=true (the default) keeps up to `cpus` post-shuffle
-      // partitions however tiny the data, so every stage of a sub-second
-      // query schedules `cpus` tasks; size-based coalescing targets
-      // advisoryPartitionSizeInBytes at any scale. No before/after
-      // measurement of these two settings has been committed yet.
-      // Overridable via env for scale experiments.
-      "spark.sql.adaptive.coalescePartitions.parallelismFirst" ->
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "false"),
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" ->
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION", "64m"),
-      // The Janino class cache defaults to 100 entries; an iterative query
-      // (CC / BPE / Lloyd rounds x 3 timed runs) generates several hundred
-      // classes, so a small cache recompiles the same round plans. The
-      // cache is keyed on generated source and bounded (LRU). No
-      // before/after measurement of this setting has been committed yet.
-      "spark.sql.codegen.cache.maxEntries" ->
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "2000"),
-      "spark.sql.session.timeZone" -> "UTC",
-      "spark.ui.enabled" -> "false")
-    val builder = SparkSession.builder().master(s"local[$cpus]")
-    settings.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    // a static setting is silently ignored when getOrCreate returns an
-    // existing session: check that each one took effect
-    settings.foreach { case (k, v) =>
-      val got = spark.conf.get(k)
-      require(got == v, s"session setting $k is $got, expected $v")
-    }
-    // ERROR, not WARN: the partition-less Window ops over tiny aggregated
-    // frames (all 15 audited safe — see VERDICT r4) each emit a
-    // `WindowExec: No Partition Defined` WARN per run, ~2000 chars of
-    // which drowned the driver's ~2KB capture window in r4 and cost the
-    // round its parsed bench entry (BENCH_r04 parsed:null)
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     // warm-up, untimed: JIT, codegen, and the schema `Tables` resolves once
     // per file (Spark itself caches no inferred Parquet schema)
     try {

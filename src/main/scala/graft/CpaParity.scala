@@ -197,15 +197,8 @@ object CpaParity {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val batchRows = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCH", "20000").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     // SPARK_GRAFT_CPA_SLICES=N runs the tb-sliced form (see pairs());
     // count and the additive hash compose exactly across slices
     val slices = sys.env.getOrElse("SPARK_GRAFT_CPA_SLICES", "1").toInt

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps the physical plan of each (or one named) query for scale review:
   * shuffle count, broadcast usage, pushdown, codegen spans.
   * Usage: runMain graft.PlanAudit [queryName] [sfDir]
@@ -11,13 +9,9 @@ object PlanAudit {
     val names = if (args.nonEmpty && args(0) != "all") Seq(args(0))
       else SparkEntry.queries.keys.toSeq.sorted
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      // static plans: show the exchanges/codegen AQE would defer
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(cpus = 8)
+    // static plans: show the exchanges/codegen AQE would defer
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     names.foreach { n =>
       val df = SparkEntry.queries(n)(spark, sfDir)
       val plan = df.queryExecution.executedPlan

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev harness: clone an sf directory N× with key-shifted replicas so the
@@ -38,11 +38,7 @@ object ScaleUp {
       if (args.length > 3) Some(args(3).split(",").map(_.trim).toSet)
       else None
     def wanted(n: String): Boolean = tablesWanted.forall(_.contains(n))
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
 
     def rep(df: DataFrame, keys: String*): DataFrame = {
       val r = df.withColumn("rep_i", explode(expr(s"sequence(0, ${k - 1})")))

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
@@ -50,27 +50,21 @@ object StreamBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val batchRows = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCH", "20000").toInt
     val only = sys.env.get("SPARK_GRAFT_STREAM_MONITORS")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession(extra =
       // the replay feed is collected driver-side by design (a MemoryStream
       // needs the records in hand); the ×1000 tier's 100 M events exceed
       // the 1g default. Harness-only — no registered operator collects.
-      .config("spark.driver.maxResultSize", "32g")
-    // SPARK_GRAFT_STREAM_STATESTORE=rocksdb benches the provider a
-    // production cluster runs large keyed state on (bundled rocksdbjni);
-    // default is the in-memory HDFS-backed provider
-    if (sys.env.get("SPARK_GRAFT_STREAM_STATESTORE").contains("rocksdb"))
-      builder.config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+      Seq("spark.driver.maxResultSize" -> "32g") ++
+      // SPARK_GRAFT_STREAM_STATESTORE=rocksdb benches the provider a
+      // production cluster runs large keyed state on (bundled rocksdbjni);
+      // default is the in-memory HDFS-backed provider
+      (if (sys.env.get("SPARK_GRAFT_STREAM_STATESTORE").contains("rocksdb"))
+        Seq("spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      else Nil))
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 

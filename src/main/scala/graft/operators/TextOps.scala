@@ -304,7 +304,7 @@ object TextOps {
     * keys (the planner reuses the exchange) and a signature kernel under
     * `items` runs once; a broadcast join would compute `items` per side.
     */
-  private[graft] def bandPairs(items: DataFrame, id: String,
+  private[operators] def bandPairs(items: DataFrame, id: String,
       keys: Seq[Column], carry: Seq[String] = Nil): DataFrame = {
     val cs = id +: carry
     val banded = items.select(cs.map(col) :+

@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.TopK
-import graft.plans.{AsOfJoinStrategy, HaversineBBoxRule, RangeJoinStrategy}
+import graft.plans.{AsOfJoinStrategy, RangeJoinStrategy}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -17,8 +17,6 @@ class ExtensionsSpec extends SparkSpecBase {
     val planner = s2.sessionState.planner.extraPlanningStrategies
     assert(planner.contains(AsOfJoinStrategy))
     assert(planner.contains(RangeJoinStrategy))
-    assert(s2.sessionState.optimizer.batches.flatMap(_.rules)
-      .contains(HaversineBBoxRule))
     val text = "'the quick brown fox jumps over the lazy dog again'"
     val row = s2.sql(s"""
       SELECT round(haversine_km(37.77, -122.42, 34.05, -118.24), 1) AS km,

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
 
@@ -13,12 +12,8 @@ import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
   */
 object PlanDumpTool {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(cpus = 8)
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     val sf = "/root/testdata/sf0.001"
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {

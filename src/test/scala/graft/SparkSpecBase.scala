@@ -3,21 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs. One session per JVM (Test/fork := true
-  * gives the whole test run a single forked JVM; getOrCreate dedups).
+/** Shared local session for specs: `GraftSession` at 8 cores, the
+  * settings `Bench` times. One session per JVM (Test/fork := true gives
+  * the whole test run a single forked JVM; getOrCreate dedups).
   */
 trait SparkSpecBase extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-spec")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession(cpus = 8)
   val sf: String = "/root/testdata/sf0.001"
 
   def run(name: String) = SparkEntry.queries(name)(spark, sf)
