@@ -28,8 +28,10 @@ object Bench {
     val results = SparkEntry.queries.toSeq
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .sortBy(_._1).map { case (name, fn) =>
-      // iterative queries (CC, k-means, BPE, streamline) localCheckpoint
-      // per round and those blocks outlive the query; once a few such
+      // the iterative queries that rebase their state (CC, PageRank,
+      // logistic regression, track simplification, streamline, BPE's
+      // word dict) localCheckpoint it and those blocks outlive the
+      // query; once a few such
       // queries have run, the block manager carries GBs of dead blocks
       // and later queries pay eviction+GC for them (measured: 1.7 s
       // geo_wind_streamline → 20 s inside the full suite, 2.3 s again

@@ -127,8 +127,8 @@ case class NearestCentroid(child: Expression, cids: Seq[Int],
   def assign(v: ArrayData): InternalRow =
     if (v.numElements() != cents(0).length) null
     else {
-      val j = RoundKernels.nearest(v, isFloat, cents)
-      InternalRow(RoundKernels.distQ(v, isFloat, cents(j)), cids(j))
+      val j = RoundKernels.nearest(v, isFloat, 0, cents)
+      InternalRow(RoundKernels.distQ(v, isFloat, 0, cents(j)), cids(j))
     }
 
   override protected def nullSafeEval(v: Any): Any = assign(v.asInstanceOf[ArrayData])

@@ -3,11 +3,11 @@ package graft.operators
 import graft.{Det, Q, Tables}
 import graft.Det._
 import graft.functions.{RoundKernels, SimFunctions}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.graftops.GraftInternal.rebase
 import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** §2.E similarity search over the `embeddings` table (64-dim float).
   *
@@ -19,6 +19,12 @@ import org.apache.spark.sql.types._
 object Similarity {
 
   private def emb(s: SparkSession, d: String) = Tables.t(s, d, "embeddings")
+
+  /** Whether `embedding` holds floats rather than doubles: how the round
+    * kernels read it.
+    */
+  private def floatEmbedding(e: DataFrame): Boolean =
+    e.schema("embedding").dataType.asInstanceOf[ArrayType].elementType == FloatType
 
   /** Quantized dot product of two float arrays: BIGINT, exact.
     * Codegen-native (functions/SimFunctions.QDotLong) — same arithmetic
@@ -567,7 +573,7 @@ object Similarity {
     // quantized-cosine graph.
     "emb_semantic_dedup" -> Q(
       build = (s, d) => {
-        import org.apache.spark.sql.{Encoders, Row}
+        import org.apache.spark.sql.Encoders
         // Closure: pairs are intra-cell by construction (the join is
         // keyed on the refined cell), so components NEVER span a cell and
         // the global CC is exactly the per-cell CC. That turns the
@@ -797,46 +803,33 @@ object Similarity {
     // FARTHEST from everything already selected — the diversity sampler
     // a curation pipeline uses to build eval/probe subsets that span the
     // embedding space instead of oversampling its dense core. Distances
-    // are exact integers (d2 = nq_a + nq_b - 2*qdot), the argmax
-    // tie-breaks on min vec_id, and each round folds the ONE new
-    // vector's distances into the running min (never re-scoring the
-    // whole selected set) — O(k·n) total, one rebase per round
-    // bounding plan depth, no driver-side collect anywhere. The oracle
-    // unrolls the identical 7 rounds as CTE stages (the emb_kmeans /
-    // doc_quality_logreg discipline).
+    // are exact integers (d2 = nq_a + nq_b - 2*qdot) and the argmax
+    // tie-breaks on min vec_id. The ≤ 8 picks are the only state a round
+    // hands to the next, so they live on the driver: a round is one
+    // single-stage RDD aggregate over the vectors, planned once
+    // (RoundKernels.farthest), that takes each vector's least d2 over
+    // the picks and returns the winner's id, min d2 and vector. Re-scoring
+    // every pick equals folding the new one into a running minimum,
+    // because d2 is exact. The oracle unrolls the identical 7 rounds as
+    // CTE stages (the emb_kmeans / doc_quality_logreg discipline).
     "emb_kcenter_sample" -> Q(
       build = (s, d) => {
         val e = emb(s, d)
-          .withColumn("nq", qdot(col("embedding"), col("embedding")))
-        def d2To(sel: DataFrame): DataFrame =
-          e.crossJoin(broadcast(sel))
-            .withColumn("d2", col("nq") + col("sel_nq")
-              - lit(2L) * qdot(col("embedding"), col("sel_emb")))
-            .select(col("vec_id"), col("d2"))
-        val seed = e.filter(col("vec_id") === 0)
-          .select(col("vec_id").as("sel_id"),
-            col("embedding").as("sel_emb"), col("nq").as("sel_nq"))
-        var md = rebase(d2To(seed))
-        var picks = rebase(seed
-          .select(col("sel_id").as("vec_id"), lit(0).as("sel_round"),
-            lit(0L).as("min_d2")))
-        for (r <- 1 to 7) {
-          val pick = md
-            .agg(max(struct(col("d2").as("d2"), (-col("vec_id")).as("nv")))
-              .as("m"))
-            .select((-col("m.nv")).as("sel_id"), col("m.d2").as("min_d2"))
-          val newSel = rebase(pick.join(e, pick("sel_id") === e("vec_id"))
-            .select(col("sel_id"), col("embedding").as("sel_emb"),
-              col("nq").as("sel_nq"), col("min_d2")))
-          picks = rebase(picks.unionByName(
-            newSel.select(col("sel_id").as("vec_id"),
-              lit(r).as("sel_round"), col("min_d2"))))
-          md = rebase(md.as("m")
-            .join(d2To(newSel.drop("min_d2")).as("n"), "vec_id")
-            .select(col("vec_id"),
-              least(col("m.d2"), col("n.d2")).as("d2")))
+        val isFloat = floatEmbedding(e)
+        val seed = e.filter(col("vec_id") === 0).select(col("embedding")).collect()
+        require(seed.nonEmpty, "emb_kcenter_sample seeds from vec_id 0")
+        // (vec_id, min_d2, vector) of each pick, in the order picked
+        val first = (0L, 0L, seed(0).getSeq[Number](0).map(_.doubleValue).toArray)
+        // the vectors, planned once; each round re-reads them
+        val rows = e.select(col("vec_id"), col("embedding")).queryExecution.toRdd
+        val picks = (1 to 7).foldLeft(Vector(first)) { (ps, _) =>
+          ps :+ RoundKernels.farthest(rows, isFloat, ps.map(_._3).toArray)
         }
-        picks.orderBy(col("sel_round"))
+        s.createDataFrame(picks.zipWithIndex.map {
+            case ((id, d2, _), r) => Row(id, r, d2) }.asJava,
+          StructType(Seq(StructField("vec_id", LongType),
+            StructField("sel_round", IntegerType, nullable = false),
+            StructField("min_d2", LongType))))
       },
       oracle = Some {
         val nqCte = s"""nqx AS (
@@ -1106,16 +1099,17 @@ object Similarity {
     // ----- emb_pq_topk: product-quantization ANN (ADC search) ------------
     // The memory-compression leg of the ANN triad (LSH buckets, IVF cells,
     // PQ codes): split the 64-dim vector into 8 subspaces of 8 dims, build
-    // a per-subspace codebook (per-label sub-centroids — 10 codes/subspace,
-    // the k-means-lite quantizer), encode every vector as 8 small codes,
-    // then answer top-k by asymmetric distance (query subvector vs. code
-    // centroid, summed via a broadcast codebook join). At 100 TB the codes
-    // are 8 bytes/vector instead of 256 — the scan-side payload shrinks
-    // 32x while distances stay a narrow map over the code columns.
+    // a per-subspace codebook (10 codes/subspace, the k-means-lite
+    // quantizer), encode every vector as 8 small codes, then answer top-k
+    // by asymmetric distance (query subvector vs. code centroid, summed
+    // via a broadcast codebook join). At 100 TB the codes are 8
+    // bytes/vector instead of 256 — the scan-side payload shrinks 32x
+    // while distances stay a narrow map over the code columns.
     "emb_pq_topk" -> Q(
       build = (s, d) => {
         val nSub = 8 // subspaces of 8 dims each
         val e = emb(s, d)
+        val isFloat = floatEmbedding(e)
         val sub = e.select(col("vec_id"), col("label"),
             posexplode(expr("transform(sequence(0, 7), b -> slice(embedding, b*8 + 1, 8))")))
           .toDF("vec_id", "label", "sub_id", "sub_vec")
@@ -1128,43 +1122,34 @@ object Similarity {
             floor((x.cast(DoubleType) - c) * (x.cast(DoubleType) - c)
               * lit(1073741824.0)).cast(LongType)),
           lit(0L), (acc, x) => acc + x)
-        // codebook: per-label sub-centroids seed 10 codes/subspace, then 2
-        // Lloyd rounds train them properly (assign each subvector to its
-        // nearest code via the broadcast codebook — narrow, no vector
-        // shuffle — then recompute centroids with one keyed agg; empty
-        // codes keep their previous centroid; rounds rebase so
-        // plan depth stays O(1) — same shape emb_kmeans uses at full dim)
-        def qmean(v: Column): Column =
-          sum(floor(v.cast(DoubleType) * 16384.0).cast(LongType))
-            .cast(DoubleType) / (lit(16384.0) * count(lit(1)))
-        val cbInit = rebase(sub
-          .select(col("sub_id"), col("label").as("code"),
-            posexplode(col("sub_vec"))).toDF("sub_id", "code", "pos", "v")
-          .groupBy(col("sub_id"), col("code"), col("pos"))
-          .agg(qmean(col("v")).as("m"))
-          .groupBy(col("sub_id"), col("code"))
-          .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-            st => st.getField("m")).as("centroid")))
-        var codebook = cbInit
-        for (_ <- 1 to 2) {
-          val upd = sub.join(broadcast(codebook), Seq("sub_id"))
-            .withColumn("d2", dist2)
-            // (d2, code) is unique per (vec, sub): the carried sub_vec is
-            // never compared by the struct-min argmin
-            .groupBy(col("vec_id"), col("sub_id"))
-            .agg(min(struct(col("d2"), col("code"), col("sub_vec"))).as("m"))
-            .select(col("sub_id"), col("m.code").as("code"),
-              posexplode(col("m.sub_vec")))
-            .toDF("sub_id", "code", "pos", "v")
-            .groupBy(col("sub_id"), col("code"), col("pos"))
-            .agg(qmean(col("v")).as("m"))
-            .groupBy(col("sub_id"), col("code"))
-            .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-              st => st.getField("m")).as("c2"))
-          codebook = rebase(codebook.join(upd, Seq("sub_id", "code"), "left")
-            .select(col("sub_id"), col("code"),
-              coalesce(col("c2"), col("centroid")).as("centroid")))
+        // codebook: each label's quantized mean vector seeds one code
+        // (code = label), then 2 Lloyd rounds over the 8 subspaces train
+        // it (RoundKernels.lloydRound, the emb_kmeans round: each
+        // subvector goes to its nearest code, ties to the lowest code, and
+        // each code's subspace takes the quantized mean of the subvectors
+        // it won). A code that wins no subvector of a subspace keeps its
+        // previous centroid there. The 10×64 centroids are the only state
+        // a round hands to the next, so they live on the driver.
+        val seed = e.select(col("label"), posexplode(col("embedding")))
+          .groupBy(col("label"), col("pos"))
+          .agg((sum(floor(col("col").cast(DoubleType) * 16384.0).cast(LongType))
+            .cast(DoubleType) / (lit(16384.0) * count(lit(1)))).as("m"))
+          .collect().groupBy(_.getInt(0)).toSeq.sortBy(_._1)
+          .map { case (code, rs) => (code, rs.sortBy(_.getInt(1)).map(_.getDouble(2))) }
+        // the vectors, planned once; each round re-reads them
+        val vecs = e.select(col("embedding")).queryExecution.toRdd
+        val cents = (1 to 2).foldLeft(seed.map(_._2).toArray) { (cb, _) =>
+          val next = RoundKernels.lloydRound(vecs, isFloat, nSub, cb)
+          cb.indices.map(j => cb(j).grouped(cb(j).length / nSub).zip(next(j))
+            .flatMap { case (old, upd) => upd.getOrElse(old) }.toArray).toArray
         }
+        val codebook = s.createDataFrame((for {
+            sid <- 0 until nSub
+            ((code, _), m) <- seed.zip(cents)
+          } yield Row(sid, code, m.slice(sid * 8, sid * 8 + 8).toSeq)).asJava,
+          StructType(Seq(StructField("sub_id", IntegerType, nullable = false),
+            StructField("code", IntegerType),
+            StructField("centroid", ArrayType(DoubleType, containsNull = false)))))
         val codes = sub.join(broadcast(codebook), Seq("sub_id"))
           .withColumn("d2", dist2)
           .groupBy(col("vec_id"), col("sub_id"))
@@ -1173,16 +1158,10 @@ object Similarity {
             col("m.code").as("code"))
         // ADC: queries (vec_id < 10) score candidates by summed
         // query-subvector -> code-centroid distances
-        val q = sub.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("q_vec_id"), col("sub_id"),
-            col("sub_vec").as("q_sub"))
-        val lut = q.join(broadcast(codebook), Seq("sub_id"))
-          .withColumn("qd2", aggregate(
-            zip_with(col("q_sub"), col("centroid"), (x, c) =>
-              floor((x.cast(DoubleType) - c) * (x.cast(DoubleType) - c)
-                * lit(1073741824.0)).cast(LongType)),
-            lit(0L), (acc, x) => acc + x))
-          .select(col("q_vec_id"), col("sub_id"), col("code"), col("qd2"))
+        val lut = sub.filter(col("vec_id") < 10)
+          .join(broadcast(codebook), Seq("sub_id"))
+          .select(col("vec_id").as("q_vec_id"), col("sub_id"), col("code"),
+            dist2.as("qd2"))
         val wTop = Window.partitionBy(col("q_vec_id"))
           .orderBy(col("adc_d2"), col("vec_id"))
         codes.join(broadcast(lut), Seq("sub_id", "code"))
@@ -1282,16 +1261,17 @@ object Similarity {
       build = (s, d) => {
         val k = 8
         val e = emb(s, d)
-        val isFloat =
-          e.schema("embedding").dataType.asInstanceOf[ArrayType].elementType == FloatType
+        val isFloat = floatEmbedding(e)
         val seed = e.filter(col("vec_id") < k)
           .select(col("vec_id").cast(IntegerType), col("embedding")).collect()
           .sortBy(_.getInt(0))
         // the vectors, planned once; each round re-reads them
         val vecs = e.select(col("embedding")).queryExecution.toRdd
+        // a cluster that ends up empty is dropped
         val (cids, cents) = (1 to 3).foldLeft((seed.map(_.getInt(0)),
             seed.map(_.getSeq[Number](1).map(_.doubleValue).toArray))) {
-          case ((c, m), _) => RoundKernels.lloydRound(vecs, isFloat, c, m)
+          case ((c, m), _) => c.zip(RoundKernels.lloydRound(vecs, isFloat, 1, m))
+            .collect { case (cid, Array(Some(mean))) => (cid, mean) }.unzip
         }
         e.select(col("vec_id"), col("label"), SimFunctions.nearestCentroid(
             col("embedding"), cids.toSeq, cents.map(_.toSeq).toSeq).as("n"))
@@ -1430,57 +1410,27 @@ object Similarity {
     // The PCA pass index builders run before whitening/OPQ: dominant
     // eigenvector of the Gram matrix by 8 power iterations. Scale split:
     // the corpus-sized work is the Gram fold (GramMatrix aggregator —
-    // map-side d² buffers, shuffle O(partitions·d²)); the iteration then
-    // runs over a 64×64 matrix — broadcast joins over 64-row frames, no
-    // corpus access at all, fully declarative (no driver-side linear
-    // algebra). Determinism: every matvec/norm/dot sums in fixed-point
-    // BIGINT (order-free), iterates are quantized to 9 decimals, and the
-    // DuckDB oracle replays the identical 8 unrolled iterations.
+    // map-side d² buffers, shuffle O(partitions·d²)), collected as its
+    // 4,096 cells; the iteration then runs over the 64×64 matrix on the
+    // driver (RoundKernels.powerStep), with no corpus access and no job.
+    // Determinism: every matvec/norm/dot sums in fixed-point BIGINT
+    // (order-free), iterates are rounded to 9 decimals as Spark's `round`
+    // does, and the DuckDB oracle replays the identical 8 unrolled
+    // iterations.
     "emb_pca_power" -> Q(
       build = (s, d) => {
         val spark = s
         import spark.implicits._
-        val q30 = 1073741824.0 // 2^30
-        // materialize the corpus Gram fold ONCE (4096 rows): the 8
-        // iterations reference it 9 times, and without the checkpoint
-        // each reference re-runs the full corpus aggregation
-        val gram = rebase(
-          emb(s, d).select(col("embedding")).as[Seq[Float]]
-            .select(graft.functions.GramMatrix(64).toColumn.name("g"))
-            .select(posexplode(col("g")).as(Seq("k", "qsum")))
-            .select(expr("CAST(k DIV 64 + 1 AS BIGINT)").as("i"),
-              expr("CAST(k % 64 + 1 AS BIGINT)").as("j"),
-              round(col("qsum").cast(DoubleType) / 67108864.0, 6).as("gram")))
-        var v = gram.select(col("j")).distinct()
-          .select(col("j"), lit(0.125).as("vj"))
-        for (_ <- 1 to 8) {
-          val w = gram.join(broadcast(v), Seq("j"))
-            .groupBy(col("i"))
-            .agg(sum(floor(col("gram") * col("vj") * q30).cast(LongType))
-              .as("qw"))
-            .select(col("i"), (col("qw").cast(DoubleType) / q30).as("w"))
-          val n = w.agg(sum(floor(col("w") * col("w") * q30).cast(LongType))
-            .as("nq"))
-          // checkpoint each 64-row iterate: keeps the logical plan O(1)
-          // deep (8 nested join+agg rounds otherwise multiply planning
-          // and re-execution cost — measured 60 s at sf0.1 without this)
-          v = rebase(
-            w.crossJoin(broadcast(n))
-              .select(col("i").as("j"),
-                round(col("w") / sqrt(col("nq").cast(DoubleType) / q30), 9)
-                  .as("vj")))
-        }
-        val wFin = gram.join(broadcast(v), Seq("j"))
-          .groupBy(col("i"))
-          .agg(sum(floor(col("gram") * col("vj") * q30).cast(LongType)).as("qw"))
-          .select(col("i").as("j"), (col("qw").cast(DoubleType) / q30).as("w"))
-        val lam = v.join(broadcast(wFin), Seq("j"))
-          .agg(sum(floor(col("vj") * col("w") * q30).cast(LongType)).as("ql"))
-          .select(round(col("ql").cast(DoubleType) / q30, 6).as("eigenvalue"))
-        v.crossJoin(broadcast(lam))
-          .select(col("j").as("dim"), col("vj").as("loading"),
-            col("eigenvalue"))
-          .orderBy(col("dim"))
+        val qsum = emb(s, d).select(col("embedding")).as[Seq[Float]]
+          .select(graft.functions.GramMatrix(64).toColumn).head()
+        val gram = qsum.map(q => RoundKernels.roundHalfUp(q / 67108864.0, 6))
+          .grouped(64).map(_.toArray).toArray
+        val v = (1 to 8).foldLeft(Array.fill(64)(0.125))((v, _) =>
+          RoundKernels.powerStep(gram, v))
+        val lam = RoundKernels.eigenvalue(gram, v)
+        s.createDataFrame(v.indices.map(j => Row(j + 1L, v(j), lam)).asJava,
+          StructType(Seq(StructField("dim", LongType), StructField("loading", DoubleType),
+            StructField("eigenvalue", DoubleType))))
       },
       oracle = Some {
         val q30 = "1073741824.0"

@@ -892,7 +892,9 @@ object GeoTiff {
     } finally d.end()
   }
 
-  /** Inverse of [[zlibDeflate]]; `expected` is the known raw strip size. */
+  /** Inverse of [[zlibDeflate]] and of HDF5's deflate filter; `expected`
+    * is the known raw size of the strip, tile or chunk.
+    */
   def zlibInflate(comp: Array[Byte], expected: Int): Array[Byte] = {
     val inf = new java.util.zip.Inflater()
     try {

@@ -1036,7 +1036,7 @@ object Hdf5 {
           val rawChunk = c0 * c1 * v.elemSize
           v.chunks.foreach { ch =>
             var data = readRange(ch.addr, ch.size)
-            if (v.gzip) data = inflate(data, rawChunk)
+            if (v.gzip) data = GeoTiff.zlibInflate(data, rawChunk)
             if (v.shuffle) data = unshuffle(data, v.elemSize)
             require(data.length == rawChunk,
               s"${v.name}: chunk decodes to ${data.length}, want $rawChunk")
@@ -1058,18 +1058,6 @@ object Hdf5 {
       }
       out
     } finally raf.close()
-  }
-
-  private def inflate(comp: Array[Byte], expected: Int): Array[Byte] = {
-    val inf = new java.util.zip.Inflater()
-    try {
-      inf.setInput(comp)
-      val out = new Array[Byte](expected)
-      var n = 0
-      while (n < expected && !inf.finished()) n += inf.inflate(out, n, expected - n)
-      require(n == expected, s"short inflate: $n of $expected")
-      out
-    } finally inf.end()
   }
 
   private def deflate(raw: Array[Byte]): Array[Byte] = {
