@@ -237,17 +237,11 @@ object OrbitMath {
   }
 
   /** Earth-rotation rate, rad/min (IAU-82 GMST rate) — the single shared
-    * site for this constant; overpass geometry (Geo.sgp4Track) inlines
-    * `gmst0 + GmstRate * t` as column math against it.
+    * site for this constant: overpass geometry (Geo.sgp4Track, as column
+    * math) and its driver-side twin (Geo.sgp4TrackLocal) both rotate by
+    * `gmst0 + GmstRate * t`.
     */
   val GmstRate = 4.37526908801129966e-3
-
-  /** Greenwich mean sidereal time (radians) at `tsince` minutes past an
-    * epoch whose GMST is `gmst0` rad — linear earth rotation, the form
-    * overpass geometry needs (IAU-82 rate, rad/min).
-    */
-  def gmstAt(gmst0: Double, tsince: Double): Double =
-    fmod2p(gmst0 + GmstRate * tsince)
 }
 
 /** Codegen-native SGP4 propagation: the whole init+secular+Kepler+short-

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.{Det, Q, Tables}
 import graft.Det._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graftops.GraftInternal.rebase
@@ -951,6 +951,253 @@ object Geo {
                 * (CAST($c AS DOUBLE) - $t)) END) * 1.0e6 + 0.5e0)
         / 1.0e6)"""
 
+  /** Geo's raster layer, stated once for every grid query (the odin_dem,
+    * odin_hrrr and odin_gdal-warp shapes: grid binning, grid aggregation,
+    * tap lookup):
+    *  - the synthetic lattices: the 1° grid (gi, gj) with its DEM and u/v
+    *    wind formulas, the 200×300 source raster (si, sj) with its `% 97`
+    *    nodata holes and its ×4 decimation, and the 50×40 UTM target
+    *    lattice (ti, tj) with its source-cell position (fx, fy);
+    *  - the tap sampler: probe × taps ⋈ grid with one separable weight,
+    *    pivoted into a fixed tap order so every float sum adds in ONE
+    *    order on both engines;
+    *  - the 2° event-density cells (ci, cj, z) and their neighbour shift.
+    * The DuckDB fragments are written separately, not derived from the
+    * Column code; an oracle uses one only where its text is the same.
+    */
+  private[graft] object Raster {
+    /** Every (a, b) over two integer ranges: the cells a raster lies on. */
+    def lattice(s: SparkSession, a: String, as: Range, b: String, bs: Range): DataFrame =
+      s.range(as.head, as.last + 1).select(col("id").as(a))
+        .crossJoin(s.range(bs.head, bs.last + 1).select(col("id").as(b)))
+
+    /** The 1° grid, (gi, gj) over [−70, 70] × [−180, 180]. */
+    def grid(s: SparkSession): DataFrame = lattice(s, "gi", -70 to 70, "gj", -180 to 180)
+    /** Synthetic DEM over the 1° grid: an integer in [0, 500). */
+    val dem: Column = ((col("gi") * 31 + col("gj") * 17) % 500 + 500) % 500
+    /** Synthetic u/v wind over the 1° grid: exact quarter-integers. */
+    val windU: Column = (((col("gi") * 13 + col("gj") * 7) % 41 + 41) % 41 - 20) / 4.0
+    val windV: Column = (((col("gi") * 5 + col("gj") * 11) % 37 + 37) % 37 - 18) / 4.0
+    /** DuckDB 1° grid: a CTE body selecting gi, gj and `cols`. */
+    def gridSql(cols: String*): String = s"""
+          SELECT gi.i AS gi, gj.j AS gj,
+                 ${cols.mkString(",\n                 ")}
+          FROM generate_series(-70, 70) AS gi(i),
+               generate_series(-180, 180) AS gj(j)"""
+    val DemSql = "((gi.i*31 + gj.j*17) % 500 + 500) % 500"
+    val WindSql = Seq("(((gi.i*13 + gj.j*7) % 41 + 41) % 41 - 20) / 4.0 AS gu",
+      "(((gi.i*5 + gj.j*11) % 37 + 37) % 37 - 18) / 4.0 AS gv")
+
+    /** The 200×300 source raster (si, sj), 1 km UTM zone-10 cells: column
+      * `as` holds `value`, NULL in the ~1% `% 97` nodata holes.
+      */
+    def source(s: SparkSession, value: String = "CAST((si*31 + sj*17) % 500 AS DOUBLE) + 50.0",
+        as: String = "v"): DataFrame =
+      lattice(s, "si", 0 until 200, "sj", 0 until 300)
+        .withColumn(as, expr(s"CASE WHEN (si*7 + sj*11) % 97 = 0 THEN NULL ELSE $value END"))
+    /** DuckDB source raster: a CTE body. */
+    def sourceSql(value: String = "CAST((si.a*31 + sj.b*17) % 500 AS DOUBLE) + 50.0",
+        as: String = "v"): String = s"""
+          SELECT si.a AS si, sj.b AS sj,
+                 CASE WHEN (si.a*7 + sj.b*11) % 97 = 0 THEN NULL
+                      ELSE $value
+                 END AS $as
+          FROM generate_series(0, 199) AS si(a),
+               generate_series(0, 299) AS sj(b)"""
+    /** The ×4 decimation: source rows grouped by their target cell
+      * (ti, tj) = (si DIV 4, sj DIV 4), then by `more`.
+      */
+    def decimated(src: DataFrame, more: Column*): RelationalGroupedDataset =
+      src.groupBy(Seq(expr("si DIV 4").as("ti"), expr("sj DIV 4").as("tj")) ++ more: _*)
+    /** A ×4 downsample of the source raster: per target cell the count of
+      * non-null members, `valid` (any member) and `value`, an aggregate
+      * over `v`.
+      */
+    def decimate(s: SparkSession, value: Column): DataFrame =
+      decimated(source(s)).agg(count(col("v")).as("n_valid"), value.as("value"))
+        .select(col("ti"), col("tj"), col("n_valid"), (col("n_valid") > 0).as("valid"),
+          col("value"))
+        .orderBy(col("ti"), col("tj"))
+
+    /** The 50×40 UTM target lattice: (ti, tj) every 0.05° from (36.025°,
+      * −122.975°), Krüger-forward (the UtmK chain) to its fractional
+      * source cell (fx, fy); easting/northing are mm-rounded first so a
+      * last-ulp libm wiggle cannot move a cell.
+      */
+    def utmTarget(s: SparkSession): DataFrame =
+      withUtm(lattice(s, "ti", 0 until 50, "tj", 0 until 40)
+          .withColumn("lat", expr("36.025e0 + ti * 0.05e0"))
+          .withColumn("lon", expr("-122.975e0 + tj * 0.05e0")), col("lat"), col("lon"))
+        .withColumn("fx", expr("(round(utm_easting, 3) - 500000.0e0) / 1000.0e0"))
+        .withColumn("fy", expr("(round(utm_northing, 3) - 4000000.0e0) / 1000.0e0"))
+    private val utmFwd = UtmK.ctes("uz", UtmK.fwdSteps("lat", "lon"), "rf")
+    /** DuckDB UTM target: the CTEs tgt, uz and the forward chain. */
+    val UtmTargetSql: String = s"""tgt AS (
+          SELECT ti.a AS ti, tj.b AS tj,
+                 36.025e0 + ti.a * 0.05e0 AS lat,
+                 -122.975e0 + tj.b * 0.05e0 AS lon
+          FROM generate_series(0, 49) AS ti(a),
+               generate_series(0, 39) AS tj(b)),
+        uz AS (SELECT *, ${UtmK.zoneExpr("lat", "lon")} AS utm_zone
+               FROM tgt),
+        ${utmFwd._1}"""
+    /** The forward chain's last CTE. */
+    val UtmLast: String = utmFwd._2
+    /** DuckDB target cells: a CTE body with each target's source cell
+      * (i, j) and fractions (di, dj).
+      */
+    val UtmCellsSql: String = s"""
+          SELECT ti, tj, lat, lon,
+                 CAST(floor((round(utm_easting, 3) - 500000.0e0)
+                   / 1000.0e0) AS BIGINT) AS i,
+                 CAST(floor((round(utm_northing, 3) - 4000000.0e0)
+                   / 1000.0e0) AS BIGINT) AS j,
+                 (round(utm_easting, 3) - 500000.0e0) / 1000.0e0
+                   - floor((round(utm_easting, 3) - 500000.0e0)
+                     / 1000.0e0) AS di,
+                 (round(utm_northing, 3) - 4000000.0e0) / 1000.0e0
+                   - floor((round(utm_northing, 3) - 4000000.0e0)
+                     / 1000.0e0) AS dj
+          FROM $UtmLast"""
+
+    /** A separable tap kernel: the per-axis tap offsets, and the SQL
+      * weight of the tap at offset `o` for cell fraction `t`.
+      */
+    final case class Taps(offs: Seq[Long], weight: (String, String) => String) {
+      def n: Int = offs.size * offs.size
+    }
+    val Bilinear = Taps(Seq(0L, 1L), (o, t) => s"(CASE WHEN $o = 0 THEN 1.0e0 - $t ELSE $t END)")
+    val Cubic = Taps(-1L to 2L, CubicW)
+    val Lanczos = Taps(-2L to 3L, LanczosW)
+
+    /** The tap sampler: samples `grid` at each probe's position (x, y),
+      * in grid cells. A probe gets its cell (i, j) = floor(x, y) and
+      * fractions (di, dj), explodes to the kernel's taps (oi, oj) and
+      * joins (`how`) the grid row at (i + oi, j + oj); the grid's first
+      * two columns are its cell keys. Each row carries `ord`, the tap's
+      * row-major index from 0, and its weight `w` =
+      * weight(oi, di) · weight(oj, dj). An inner join drops taps off the
+      * grid, and a probe with none; a left join keeps them with NULL
+      * grid columns.
+      */
+    def sample(probes: DataFrame, x: Column, y: Column, taps: Taps, grid: DataFrame,
+        how: String = "inner"): DataFrame = {
+      val offs = array(taps.offs.map(lit): _*)
+      val t = probes
+        .withColumn("i", floor(x).cast(LongType))
+        .withColumn("j", floor(y).cast(LongType))
+        .withColumn("di", x - col("i"))
+        .withColumn("dj", y - col("j"))
+        .withColumn("oi", explode(offs))
+        .withColumn("oj", explode(offs))
+      val Array(gi, gj) = grid.columns.take(2)
+      val o0 = taps.offs.head
+      t.join(grid, t("i") + t("oi") === grid(gi) && t("j") + t("oj") === grid(gj), how)
+        .withColumn("ord", (col("oi") - o0) * taps.offs.size + (col("oj") - o0))
+        .withColumn("w", expr(s"${taps.weight("oi", "di")} * ${taps.weight("oj", "dj")}"))
+    }
+    /** Tap `k`'s rows. */
+    def tap(k: Int): Column = col("ord") === k
+    /** Zero-filled per-tap sum: a missing tap reads 0.0 (and 0.0 + x
+      * turns −0.0 into 0.0).
+      */
+    def tapSum(k: Int, x: Column): Column = sum(when(tap(k), x).otherwise(0.0))
+    /** Null-keeping per-tap max, an exact selection of the tap's one row:
+      * a missing tap reads NULL.
+      */
+    def tapMax(k: Int, x: Column): Column = max(when(tap(k), x))
+    /** One row per probe: sampled taps grouped by `keys`, the `lead`
+      * aggregates, then `perTap(k)` for each tap k in order. Each tap
+      * lands in its own column, so `chain` adds them in one fixed order
+      * (a float SUM's partial-aggregation order is engine-defined).
+      */
+    def pivot(tapped: DataFrame, keys: Seq[Column], n: Int, lead: Column*)(
+        perTap: Int => Seq[Column]): DataFrame = {
+      val aggs = lead ++ (0 until n).flatMap(perTap)
+      tapped.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
+    }
+    /** ((p0 + p1) + …) + p(n−1): the fixed summand order. */
+    def chain(p: String, n: Int): Column = expr((1 until n).foldLeft(s"${p}0")((a, k) => s"($a + $p$k)"))
+    /** The nodata-renormalised bilinear reduction: taps off the grid or on
+      * a NULL `v` drop out and the other weights renormalise; a probe
+      * with no valid tap is NULL with valid = false.
+      */
+    def renormalised(tapped: DataFrame, keys: String*): DataFrame = {
+      def live(k: Int) = tap(k) && col("v").isNotNull
+      pivot(tapped, keys.map(col), Bilinear.n)(k => Seq(
+          sum(when(live(k), col("w")).otherwise(0.0)).as(s"w$k"),
+          sum(when(live(k), col("w") * col("v")).otherwise(0.0)).as(s"v$k")))
+        .withColumn("wsum", chain("w", Bilinear.n))
+        .select(keys.map(col) :+ (col("wsum") > 0.0).as("valid")
+          :+ when(col("wsum") > 0.0, chain("v", Bilinear.n) / col("wsum")).as("value"): _*)
+    }
+
+    /** The 2° event-density cells: each occupied cell (ci, cj) and its
+      * event count `z`.
+      */
+    def density(s: SparkSession, d: String, z: String = "z"): DataFrame =
+      evPts(s, d)
+        .groupBy(floor(col("lat") / 2.0).cast(LongType).as("ci"),
+          floor(col("lon") / 2.0).cast(LongType).as("cj"))
+        .agg(count(lit(1)).as(z))
+    /** DuckDB density cells: a CTE body. */
+    val DensitySql = s"""
+          SELECT CAST(FLOOR($LAT/2.0) AS BIGINT) AS ci,
+                 CAST(FLOOR($LON/2.0) AS BIGINT) AS cj, COUNT(*) AS z
+          FROM events GROUP BY 1, 2"""
+    /** The neighbour shift: joined on (ci, cj), cell (ci, cj) reads the
+      * `z` of cell (ci + di, cj + dj) as `as` — an equi-join on the cell
+      * key, never a windowed scan of the raster.
+      */
+    private def shifted(cells: DataFrame, di: Int, dj: Int, as: String): DataFrame =
+      cells.select((col("ci") - di).as("ci"), (col("cj") - dj).as("cj"), col("z").as(as))
+    /** The central-difference gradient (dzdx, dzdy) of every cell with
+      * all 4 neighbours.
+      */
+    def gradient(cells: DataFrame): DataFrame =
+      cells
+        .join(shifted(cells, 0, 1, "z_e"), Seq("ci", "cj"))
+        .join(shifted(cells, 0, -1, "z_w"), Seq("ci", "cj"))
+        .join(shifted(cells, 1, 0, "z_n"), Seq("ci", "cj"))
+        .join(shifted(cells, -1, 0, "z_s"), Seq("ci", "cj"))
+        .withColumn("dzdx", (col("z_e") - col("z_w")).cast(DoubleType) / 2.0)
+        .withColumn("dzdy", (col("z_n") - col("z_s")).cast(DoubleType) / 2.0)
+    /** The marching-squares block frame: per 2×2 block (corners bl, br,
+      * tr, tl from cell (ci, cj) up) and iso level, the case index `midx`
+      * of the blocks the isoline crosses.
+      */
+    def blocks(cells: DataFrame): DataFrame =
+      cells.withColumnRenamed("z", "bl")
+        .join(shifted(cells, 0, 1, "br"), Seq("ci", "cj"))
+        .join(shifted(cells, 1, 1, "tr"), Seq("ci", "cj"))
+        .join(shifted(cells, 1, 0, "tl"), Seq("ci", "cj"))
+        .withColumn("iso", explode(array(lit(1.5), lit(3.5), lit(7.5))))
+        .withColumn("midx", expr(
+          """CAST(CASE WHEN bl >= iso THEN 8 ELSE 0 END
+             + CASE WHEN br >= iso THEN 4 ELSE 0 END
+             + CASE WHEN tr >= iso THEN 2 ELSE 0 END
+             + CASE WHEN tl >= iso THEN 1 ELSE 0 END AS INT)"""))
+        .filter(col("midx") > 0 && col("midx") < 15)
+    /** DuckDB block frame over the `cells` CTE: a CTE body. */
+    val BlocksSql = """
+          SELECT c.ci, c.cj, c.z AS bl, e.z AS br, ne.z AS tr, n_.z AS tl,
+                 t.iso,
+                 CAST(CASE WHEN c.z >= t.iso THEN 8 ELSE 0 END
+                    + CASE WHEN e.z >= t.iso THEN 4 ELSE 0 END
+                    + CASE WHEN ne.z >= t.iso THEN 2 ELSE 0 END
+                    + CASE WHEN n_.z >= t.iso THEN 1 ELSE 0 END AS INT) AS midx
+          FROM cells c
+          JOIN cells e  ON e.ci = c.ci     AND e.cj = c.cj + 1
+          JOIN cells ne ON ne.ci = c.ci + 1 AND ne.cj = c.cj + 1
+          JOIN cells n_ ON n_.ci = c.ci + 1 AND n_.cj = c.cj
+          CROSS JOIN (VALUES (1.5e0), (3.5e0), (7.5e0)) t(iso)
+          WHERE CAST(CASE WHEN c.z >= t.iso THEN 8 ELSE 0 END
+                   + CASE WHEN e.z >= t.iso THEN 4 ELSE 0 END
+                   + CASE WHEN ne.z >= t.iso THEN 2 ELSE 0 END
+                   + CASE WHEN n_.z >= t.iso THEN 1 ELSE 0 END AS INT)
+                BETWEEN 1 AND 14"""
+  }
+
   val defs: Seq[(String, Q)] = Seq(
 
     // ----- geo_contour: marching-squares isoline extraction --------------
@@ -967,23 +1214,7 @@ object Geo {
     // hash-matches without rounding.
     "geo_contour" -> Q(
       build = (s, d) => {
-        val cells = evPts(s, d)
-          .groupBy(floor(col("lat") / 2.0).cast(LongType).as("ci"),
-            floor(col("lon") / 2.0).cast(LongType).as("cj"))
-          .agg(count(lit(1)).as("z"))
-        def shifted(di: Int, dj: Int, as: String) = cells.select(
-          (col("ci") - di).as("ci"), (col("cj") - dj).as("cj"), col("z").as(as))
-        val blocks = cells.withColumnRenamed("z", "bl")
-          .join(shifted(0, 1, "br"), Seq("ci", "cj"))
-          .join(shifted(1, 1, "tr"), Seq("ci", "cj"))
-          .join(shifted(1, 0, "tl"), Seq("ci", "cj"))
-          .withColumn("iso", explode(array(lit(1.5), lit(3.5), lit(7.5))))
-          .withColumn("midx", expr(
-            """CAST(CASE WHEN bl >= iso THEN 8 ELSE 0 END
-               + CASE WHEN br >= iso THEN 4 ELSE 0 END
-               + CASE WHEN tr >= iso THEN 2 ELSE 0 END
-               + CASE WHEN tl >= iso THEN 1 ELSE 0 END AS INT)"""))
-          .filter(col("midx") > 0 && col("midx") < 15)
+        val blocks = Raster.blocks(Raster.density(s, d))
         // build both segments' coordinates from the shared case table
         val withCoords = blocks
           .withColumn("seg", explode(expr("sequence(0, 1)")))
@@ -1009,27 +1240,8 @@ object Geo {
                 ${marchingCase(seg, 2)} AS x2, ${marchingCase(seg, 3)} AS y2
               FROM blocks"""
         s"""
-        WITH cells AS (
-          SELECT CAST(FLOOR($LAT/2.0) AS BIGINT) AS ci,
-                 CAST(FLOOR($LON/2.0) AS BIGINT) AS cj, COUNT(*) AS z
-          FROM events GROUP BY 1, 2),
-        blocks AS (
-          SELECT c.ci, c.cj, c.z AS bl, e.z AS br, ne.z AS tr, n_.z AS tl,
-                 t.iso,
-                 CAST(CASE WHEN c.z >= t.iso THEN 8 ELSE 0 END
-                    + CASE WHEN e.z >= t.iso THEN 4 ELSE 0 END
-                    + CASE WHEN ne.z >= t.iso THEN 2 ELSE 0 END
-                    + CASE WHEN n_.z >= t.iso THEN 1 ELSE 0 END AS INT) AS midx
-          FROM cells c
-          JOIN cells e  ON e.ci = c.ci     AND e.cj = c.cj + 1
-          JOIN cells ne ON ne.ci = c.ci + 1 AND ne.cj = c.cj + 1
-          JOIN cells n_ ON n_.ci = c.ci + 1 AND n_.cj = c.cj
-          CROSS JOIN (VALUES (1.5e0), (3.5e0), (7.5e0)) t(iso)
-          WHERE CAST(CASE WHEN c.z >= t.iso THEN 8 ELSE 0 END
-                   + CASE WHEN e.z >= t.iso THEN 4 ELSE 0 END
-                   + CASE WHEN ne.z >= t.iso THEN 2 ELSE 0 END
-                   + CASE WHEN n_.z >= t.iso THEN 1 ELSE 0 END AS INT)
-                BETWEEN 1 AND 14),
+        WITH cells AS (${Raster.DensitySql}),
+        blocks AS (${Raster.BlocksSql}),
         segs AS (${segSql(0)} UNION ALL ${segSql(1)})
         SELECT iso, ci, cj, seg, x1*2.0 AS lon1, y1*2.0 AS lat1,
                x2*2.0 AS lon2, y2*2.0 AS lat2
@@ -1050,23 +1262,7 @@ object Geo {
     // and closedness — closed iff every node has degree 2.
     "geo_contour_rings" -> Q(
       build = (s, d) => {
-        val cells = evPts(s, d)
-          .groupBy(floor(col("lat") / 2.0).cast(LongType).as("ci"),
-            floor(col("lon") / 2.0).cast(LongType).as("cj"))
-          .agg(count(lit(1)).as("z"))
-        def shifted(di: Int, dj: Int, as: String) = cells.select(
-          (col("ci") - di).as("ci"), (col("cj") - dj).as("cj"), col("z").as(as))
-        val blocks = cells.withColumnRenamed("z", "bl")
-          .join(shifted(0, 1, "br"), Seq("ci", "cj"))
-          .join(shifted(1, 1, "tr"), Seq("ci", "cj"))
-          .join(shifted(1, 0, "tl"), Seq("ci", "cj"))
-          .withColumn("iso", explode(array(lit(1.5), lit(3.5), lit(7.5))))
-          .withColumn("midx", expr(
-            """CAST(CASE WHEN bl >= iso THEN 8 ELSE 0 END
-               + CASE WHEN br >= iso THEN 4 ELSE 0 END
-               + CASE WHEN tr >= iso THEN 2 ELSE 0 END
-               + CASE WHEN tl >= iso THEN 1 ELSE 0 END AS INT)"""))
-          .filter(col("midx") > 0 && col("midx") < 15)
+        val blocks = Raster.blocks(Raster.density(s, d))
         val segEdges = blocks
           .withColumn("seg", explode(expr("sequence(0, 1)")))
           .withColumn("n1", when(col("seg") === 0, expr(marchingEdgeKey(0, 0)))
@@ -1101,27 +1297,8 @@ object Geo {
                 ${marchingEdgeKey(seg, 1)} AS n2
               FROM blocks"""
         s"""
-        WITH RECURSIVE cells AS (
-          SELECT CAST(FLOOR($LAT/2.0) AS BIGINT) AS ci,
-                 CAST(FLOOR($LON/2.0) AS BIGINT) AS cj, COUNT(*) AS z
-          FROM events GROUP BY 1, 2),
-        blocks AS (
-          SELECT c.ci, c.cj, c.z AS bl, e.z AS br, ne.z AS tr, n_.z AS tl,
-                 t.iso,
-                 CAST(CASE WHEN c.z >= t.iso THEN 8 ELSE 0 END
-                    + CASE WHEN e.z >= t.iso THEN 4 ELSE 0 END
-                    + CASE WHEN ne.z >= t.iso THEN 2 ELSE 0 END
-                    + CASE WHEN n_.z >= t.iso THEN 1 ELSE 0 END AS INT) AS midx
-          FROM cells c
-          JOIN cells e  ON e.ci = c.ci     AND e.cj = c.cj + 1
-          JOIN cells ne ON ne.ci = c.ci + 1 AND ne.cj = c.cj + 1
-          JOIN cells n_ ON n_.ci = c.ci + 1 AND n_.cj = c.cj
-          CROSS JOIN (VALUES (1.5e0), (3.5e0), (7.5e0)) t(iso)
-          WHERE CAST(CASE WHEN c.z >= t.iso THEN 8 ELSE 0 END
-                   + CASE WHEN e.z >= t.iso THEN 4 ELSE 0 END
-                   + CASE WHEN ne.z >= t.iso THEN 2 ELSE 0 END
-                   + CASE WHEN n_.z >= t.iso THEN 1 ELSE 0 END AS INT)
-                BETWEEN 1 AND 14),
+        WITH RECURSIVE cells AS (${Raster.DensitySql}),
+        blocks AS (${Raster.BlocksSql}),
         se AS (${segSql(0)} UNION ALL ${segSql(1)}),
         segedges AS (
           SELECT iso, n1*3 + ii AS src, n2*3 + ii AS dst
@@ -1352,11 +1529,7 @@ object Geo {
     // key — O(pairs·9), no grid scan per pair.
     "geo_line_of_sight" -> Q(
       build = (s, d) => {
-        val grid = s.range(-70, 71).select(col("id").as("gi"))
-          .crossJoin(s.range(-180, 181).select(col("id").as("gj")))
-          .select(col("gi"), col("gj"),
-            (((col("gi") * 31 + col("gj") * 17) % 500 + 500) % 500 + lit(100.0))
-              .as("elev"))
+        val grid = Raster.grid(s).select(col("gi"), col("gj"), (Raster.dem + 100.0).as("elev"))
         val targets = evPts(s, d)
           .filter(col("event_id") % 37 === 0)
           .select(col("event_id"), col("lat").as("tlat"), col("lon").as("tlon"))
@@ -1368,28 +1541,11 @@ object Geo {
           .withColumn("f", expr("CAST(k AS DOUBLE)/8.0"))
           .withColumn("plat", expr("s_lat + (tlat - s_lat)*f"))
           .withColumn("plon", expr("s_lon + (tlon - s_lon)*f"))
-          .withColumn("i", floor(col("plat")).cast(LongType))
-          .withColumn("j", floor(col("plon")).cast(LongType))
-          .withColumn("di", col("plat") - col("i"))
-          .withColumn("dj", col("plon") - col("j"))
-        val corners = samples
-          .withColumn("ci", explode(array(lit(0L), lit(1L))))
-          .withColumn("cj", explode(array(lit(0L), lit(1L))))
-        val probed = corners
-          .join(grid, corners("i") + corners("ci") === grid("gi")
-            && corners("j") + corners("cj") === grid("gj"))
-          .withColumn("w",
-            (when(col("ci") === 0L, lit(1.0) - col("di")).otherwise(col("di")))
-              * (when(col("cj") === 0L, lit(1.0) - col("dj")).otherwise(col("dj"))))
-          .withColumn("ord", col("ci") * 2 + col("cj"))
-          .groupBy(col("s_suppkey"), col("event_id"), col("k"))
-          .agg(
-            sum(when(col("ord") === 0, col("w") * col("elev")).otherwise(0.0)).as("t00"),
-            sum(when(col("ord") === 1, col("w") * col("elev")).otherwise(0.0)).as("t01"),
-            sum(when(col("ord") === 2, col("w") * col("elev")).otherwise(0.0)).as("t10"),
-            sum(when(col("ord") === 3, col("w") * col("elev")).otherwise(0.0)).as("t11"))
-          .select(col("s_suppkey"), col("event_id"), col("k"),
-            (col("t00") + col("t01") + col("t10") + col("t11")).as("terr"))
+        val keys = Seq(col("s_suppkey"), col("event_id"), col("k"))
+        val probed = Raster.pivot(Raster.sample(samples, col("plat"), col("plon"),
+            Raster.Bilinear, grid), keys, 4)(t =>
+            Seq(Raster.tapSum(t, col("w") * col("elev")).as(s"e$t")))
+          .select(keys :+ Raster.chain("e", 4).as("terr"): _*)
         val wide = probed.groupBy(col("s_suppkey"), col("event_id"))
           .agg(sum(when(col("k") === 0, col("terr")).otherwise(0.0)).as("t0"),
             (1 to 8).map(k =>
@@ -1409,11 +1565,7 @@ object Geo {
         val tK = (0 to 8).map(k =>
           s"SUM(CASE WHEN k = $k THEN terr ELSE 0.0 END) AS t$k").mkString(", ")
         s"""
-        WITH grid AS (
-          SELECT gi.i AS gi, gj.j AS gj,
-                 CAST(((gi.i*31 + gj.j*17) % 500 + 500) % 500 AS DOUBLE) + 100.0 AS elev
-          FROM generate_series(-70, 70) AS gi(i),
-               generate_series(-180, 180) AS gj(j)),
+        WITH grid AS (${Raster.gridSql(s"CAST(${Raster.DemSql} AS DOUBLE) + 100.0 AS elev")}),
         targets AS (
           SELECT event_id, $LAT AS tlat, $LON AS tlon FROM events
           WHERE event_id % 37 = 0),
@@ -2549,32 +2701,16 @@ object Geo {
     // shuffles on the grid key, never a windowed scan over the whole
     // raster; this is how a 100 TB HRRR/DEM sweep parallelizes.
     "geo_grid_stencil" -> Q(
-      build = (s, d) => {
-        val cells = evPts(s, d)
-          .groupBy(floor(col("lat") / 2.0).cast(LongType).as("ci"),
-            floor(col("lon") / 2.0).cast(LongType).as("cj"))
-          .agg(count(lit(1)).as("z"))
-        def shifted(di: Int, dj: Int, as: String) = cells.select(
-          (col("ci") - di).as("ci"), (col("cj") - dj).as("cj"), col("z").as(as))
-        cells
-          .join(shifted(0, 1, "z_e"), Seq("ci", "cj"))
-          .join(shifted(0, -1, "z_w"), Seq("ci", "cj"))
-          .join(shifted(1, 0, "z_n"), Seq("ci", "cj"))
-          .join(shifted(-1, 0, "z_s"), Seq("ci", "cj"))
-          .withColumn("dzdx", (col("z_e") - col("z_w")).cast(DoubleType) / 2.0)
-          .withColumn("dzdy", (col("z_n") - col("z_s")).cast(DoubleType) / 2.0)
+      build = (s, d) =>
+        Raster.gradient(Raster.density(s, d))
           .select(col("ci"), col("cj"), col("z"), col("dzdx"), col("dzdy"),
             round(degrees(atan(sqrt(col("dzdx") * col("dzdx")
               + col("dzdy") * col("dzdy")))), 3).as("slope_deg"),
             round((degrees(atan2(col("dzdy"), col("dzdx"))) + 360.0) % 360.0, 3)
               .as("aspect_deg"))
-          .orderBy(col("ci"), col("cj"))
-      },
+          .orderBy(col("ci"), col("cj")),
       oracle = Some(s"""
-        WITH cells AS (
-          SELECT CAST(FLOOR($LAT/2.0) AS BIGINT) AS ci,
-                 CAST(FLOOR($LON/2.0) AS BIGINT) AS cj, COUNT(*) AS z
-          FROM events GROUP BY 1, 2),
+        WITH cells AS (${Raster.DensitySql}),
         g AS (
           SELECT c.ci, c.cj, c.z,
                  (e.z - w.z)/2.0 AS dzdx, (n_.z - s_.z)/2.0 AS dzdy
@@ -2695,13 +2831,8 @@ object Geo {
     // stay unfilled (dropped), as GDAL does beyond max_dist.
     "geo_fill_nodata" -> Q(
       build = (s, d) => {
-        val base = s.range(-70, 71).select(col("id").as("gi"))
-          .crossJoin(s.range(-180, 181).select(col("id").as("gj")))
-          .select(col("gi"), col("gj"),
-            (((col("gi") * 31 + col("gj") * 17) % 500 + 500) % 500 + lit(100.0))
-              .as("elev"),
-            ((((col("gi") * 7 + col("gj") * 13) % 23) + 23) % 23 === 0)
-              .as("missing"))
+        val base = Raster.grid(s).select(col("gi"), col("gj"), (Raster.dem + 100.0).as("elev"),
+          ((((col("gi") * 7 + col("gj") * 13) % 23) + 23) % 23 === 0).as("missing"))
         val present = base.filter(!col("missing"))
           .select(col("gi").as("pi"), col("gj").as("pj"), col("elev"))
         val missing = base.filter(col("missing")).select(col("gi"), col("gj"))
@@ -2722,13 +2853,9 @@ object Geo {
               .as("filled"))
           .orderBy(col("gi"), col("gj"))
       },
-      oracle = Some("""
-        WITH base AS (
-          SELECT gi.i AS gi, gj.j AS gj,
-                 CAST(((gi.i*31 + gj.j*17) % 500 + 500) % 500 AS DOUBLE) + 100.0 AS elev,
-                 (((gi.i*7 + gj.j*13) % 23) + 23) % 23 = 0 AS missing
-          FROM generate_series(-70, 70) AS gi(i),
-               generate_series(-180, 180) AS gj(j)),
+      oracle = Some(s"""
+        WITH base AS (${Raster.gridSql(s"CAST(${Raster.DemSql} AS DOUBLE) + 100.0 AS elev",
+          "(((gi.i*7 + gj.j*13) % 23) + 23) % 23 = 0 AS missing")}),
         nbrs AS (
           SELECT m.gi, m.gj,
                  di.d*di.d + dj.d*dj.d AS d2, p.elev
@@ -2826,46 +2953,16 @@ object Geo {
     // rounding.
     "geo_dem_bilinear" -> Q(
       build = (s, d) => {
-        // synthetic DEM: elev(i,j) deterministic from the cell indices
-        val grid = s.range(-70, 71).select(col("id").as("gi"))
-          .crossJoin(s.range(-180, 181).select(col("id").as("gj")))
-          .select(col("gi"), col("gj"),
-            (((col("gi") * 31 + col("gj") * 17) % 500 + 500) % 500 + lit(100.0))
-              .as("elev"))
-        val probes = evPts(s, d)
-          .select(col("event_id"), col("lat"), col("lon"),
-            floor(col("lat")).cast(LongType).as("i"),
-            floor(col("lon")).cast(LongType).as("j"))
-          .withColumn("di", col("lat") - col("i"))
-          .withColumn("dj", col("lon") - col("j"))
-        val corners = probes
-          .withColumn("ci", explode(array(lit(0L), lit(1L))))
-          .withColumn("cj", explode(array(lit(0L), lit(1L))))
-        val weighted = corners
-          .join(grid, corners("i") + corners("ci") === grid("gi")
-            && corners("j") + corners("cj") === grid("gj"))
-          .withColumn("w",
-            (when(col("ci") === 0L, lit(1.0) - col("di")).otherwise(col("di")))
-              * (when(col("cj") === 0L, lit(1.0) - col("dj")).otherwise(col("dj"))))
-          // fixed summand order (ci,cj): (0,0),(0,1),(1,0),(1,1) via 2*ci+cj
-          .withColumn("ord", col("ci") * 2 + col("cj"))
-        weighted
-          .groupBy(col("event_id"), col("lat"), col("lon"))
-          .agg(sum(when(col("ord") === 0, col("w") * col("elev")).otherwise(0.0))
-            .as("t00"),
-            sum(when(col("ord") === 1, col("w") * col("elev")).otherwise(0.0)).as("t01"),
-            sum(when(col("ord") === 2, col("w") * col("elev")).otherwise(0.0)).as("t10"),
-            sum(when(col("ord") === 3, col("w") * col("elev")).otherwise(0.0)).as("t11"))
-          .select(col("event_id"), col("lat"), col("lon"),
-            (col("t00") + col("t01") + col("t10") + col("t11")).as("elev_m"))
+        val grid = Raster.grid(s).select(col("gi"), col("gj"), (Raster.dem + 100.0).as("elev"))
+        val probes = evPts(s, d).select(col("event_id"), col("lat"), col("lon"))
+        val keys = Seq(col("event_id"), col("lat"), col("lon"))
+        Raster.pivot(Raster.sample(probes, col("lat"), col("lon"), Raster.Bilinear, grid),
+            keys, 4)(t => Seq(Raster.tapSum(t, col("w") * col("elev")).as(s"e$t")))
+          .select(keys :+ Raster.chain("e", 4).as("elev_m"): _*)
           .orderBy(col("event_id"))
       },
       oracle = Some(s"""
-        WITH grid AS (
-          SELECT gi.i AS gi, gj.j AS gj,
-                 CAST(((gi.i*31 + gj.j*17) % 500 + 500) % 500 AS DOUBLE) + 100.0 AS elev
-          FROM generate_series(-70, 70) AS gi(i),
-               generate_series(-180, 180) AS gj(j)),
+        WITH grid AS (${Raster.gridSql(s"CAST(${Raster.DemSql} AS DOUBLE) + 100.0 AS elev")}),
         probes AS (
           SELECT event_id, lat, lon,
                  CAST(floor(lat) AS BIGINT) AS i, CAST(floor(lon) AS BIGINT) AS j,
@@ -2909,79 +3006,15 @@ object Geo {
     // 4-row-per-cell corner agg.
     "geo_grid_resample" -> Q(
       build = (s, d) => {
-        val tgt = s.range(0, 50).select(col("id").as("ti"))
-          .crossJoin(s.range(0, 40).select(col("id").as("tj")))
-          .withColumn("lat", expr("36.025e0 + ti * 0.05e0"))
-          .withColumn("lon", expr("-122.975e0 + tj * 0.05e0"))
-        val proj = Geo.withUtm(tgt, col("lat"), col("lon"))
-          .withColumn("fx",
-            expr("(round(utm_easting, 3) - 500000.0e0) / 1000.0e0"))
-          .withColumn("fy",
-            expr("(round(utm_northing, 3) - 4000000.0e0) / 1000.0e0"))
-          .withColumn("i", expr("CAST(floor(fx) AS BIGINT)"))
-          .withColumn("j", expr("CAST(floor(fy) AS BIGINT)"))
-          .withColumn("di", expr("fx - floor(fx)"))
-          .withColumn("dj", expr("fy - floor(fy)"))
-        val src = s.range(0, 200).select(col("id").as("si"))
-          .crossJoin(s.range(0, 300).select(col("id").as("sj")))
-          .withColumn("v", expr(
-            """CASE WHEN (si*7 + sj*11) % 97 = 0 THEN NULL
-               ELSE CAST((si*31 + sj*17) % 500 AS DOUBLE) + 50.0 END"""))
-        val corners = proj
-          .withColumn("ci", explode(array(lit(0L), lit(1L))))
-          .withColumn("cj", explode(array(lit(0L), lit(1L))))
-        val wt = corners.join(broadcast(src),
-            corners("i") + corners("ci") === src("si")
-              && corners("j") + corners("cj") === src("sj"), "left")
-          .withColumn("ord", col("ci") * 2 + col("cj"))
-          .withColumn("w", expr(
-            """(CASE WHEN ci = 0 THEN 1.0e0 - di ELSE di END)
-               * (CASE WHEN cj = 0 THEN 1.0e0 - dj ELSE dj END)"""))
-        def cw(k: Int) = sum(when(col("ord") === k && col("v").isNotNull,
-          col("w")).otherwise(0.0)).as(s"w$k")
-        def cv(k: Int) = sum(when(col("ord") === k && col("v").isNotNull,
-          col("w") * col("v")).otherwise(0.0)).as(s"v$k")
-        wt.groupBy(col("ti"), col("tj"), col("lat"), col("lon"))
-          .agg(cw(0), cv(0), cw(1), cv(1), cw(2), cv(2), cw(3), cv(3))
-          .withColumn("wsum", expr("((w0 + w1) + w2) + w3"))
-          .select(col("ti"), col("tj"), col("lat"), col("lon"),
-            expr("wsum > 0.0e0").as("valid"),
-            expr("""CASE WHEN wsum > 0.0e0
-                    THEN (((v0 + v1) + v2) + v3) / wsum END""").as("value"))
-          .orderBy(col("ti"), col("tj"))
+        val wt = Raster.sample(Raster.utmTarget(s), col("fx"), col("fy"), Raster.Bilinear,
+          broadcast(Raster.source(s)), "left")
+        Raster.renormalised(wt, "ti", "tj", "lat", "lon").orderBy(col("ti"), col("tj"))
       },
       oracle = Some({
-        val (fw, last) = UtmK.ctes("uz", UtmK.fwdSteps("lat", "lon"), "rf")
         s"""
-        WITH tgt AS (
-          SELECT ti.a AS ti, tj.b AS tj,
-                 36.025e0 + ti.a * 0.05e0 AS lat,
-                 -122.975e0 + tj.b * 0.05e0 AS lon
-          FROM generate_series(0, 49) AS ti(a),
-               generate_series(0, 39) AS tj(b)),
-        uz AS (SELECT *, ${UtmK.zoneExpr("lat", "lon")} AS utm_zone
-               FROM tgt),
-        $fw,
-        src AS (
-          SELECT si.a AS si, sj.b AS sj,
-                 CASE WHEN (si.a*7 + sj.b*11) % 97 = 0 THEN NULL
-                      ELSE CAST((si.a*31 + sj.b*17) % 500 AS DOUBLE) + 50.0
-                 END AS v
-          FROM generate_series(0, 199) AS si(a),
-               generate_series(0, 299) AS sj(b)),
-        cells AS (
-          SELECT ti, tj, lat, lon,
-                 CAST(floor((round(utm_easting, 3) - 500000.0e0)
-                   / 1000.0e0) AS BIGINT) AS i,
-                 CAST(floor((round(utm_northing, 3) - 4000000.0e0)
-                   / 1000.0e0) AS BIGINT) AS j,
-                 (round(utm_easting, 3) - 500000.0e0) / 1000.0e0
-                   - floor((round(utm_easting, 3) - 500000.0e0)
-                     / 1000.0e0) AS di,
-                 (round(utm_northing, 3) - 4000000.0e0) / 1000.0e0
-                   - floor((round(utm_northing, 3) - 4000000.0e0)
-                     / 1000.0e0) AS dj
-          FROM $last),
+        WITH ${Raster.UtmTargetSql},
+        src AS (${Raster.sourceSql()}),
+        cells AS (${Raster.UtmCellsSql}),
         corners AS (
           SELECT c.*, ci.c AS ci, cj.c AS cj
           FROM cells c, generate_series(0, 1) AS ci(c),
@@ -3024,22 +3057,10 @@ object Geo {
     // shape: one broadcast hash join target×1 source cell, no explode.
     "geo_resample_nearest" -> Q(
       build = (s, d) => {
-        val tgt = s.range(0, 50).select(col("id").as("ti"))
-          .crossJoin(s.range(0, 40).select(col("id").as("tj")))
-          .withColumn("lat", expr("36.025e0 + ti * 0.05e0"))
-          .withColumn("lon", expr("-122.975e0 + tj * 0.05e0"))
-        val proj = Geo.withUtm(tgt, col("lat"), col("lon"))
-          .withColumn("fx",
-            expr("(round(utm_easting, 3) - 500000.0e0) / 1000.0e0"))
-          .withColumn("fy",
-            expr("(round(utm_northing, 3) - 4000000.0e0) / 1000.0e0"))
+        val proj = Raster.utmTarget(s)
           .withColumn("ni", expr("CAST(floor(fx + 0.5e0) AS BIGINT)"))
           .withColumn("nj", expr("CAST(floor(fy + 0.5e0) AS BIGINT)"))
-        val src = s.range(0, 200).select(col("id").as("si"))
-          .crossJoin(s.range(0, 300).select(col("id").as("sj")))
-          .withColumn("v", expr(
-            """CASE WHEN (si*7 + sj*11) % 97 = 0 THEN NULL
-               ELSE CAST((si*31 + sj*17) % 500 AS DOUBLE) + 50.0 END"""))
+        val src = Raster.source(s)
         proj.join(broadcast(src),
             proj("ni") === src("si") && proj("nj") === src("sj"), "left")
           .select(col("ti"), col("tj"), col("lat"), col("lon"),
@@ -3047,31 +3068,16 @@ object Geo {
           .orderBy(col("ti"), col("tj"))
       },
       oracle = Some({
-        val (fw, last) = UtmK.ctes("uz", UtmK.fwdSteps("lat", "lon"), "rf")
         s"""
-        WITH tgt AS (
-          SELECT ti.a AS ti, tj.b AS tj,
-                 36.025e0 + ti.a * 0.05e0 AS lat,
-                 -122.975e0 + tj.b * 0.05e0 AS lon
-          FROM generate_series(0, 49) AS ti(a),
-               generate_series(0, 39) AS tj(b)),
-        uz AS (SELECT *, ${UtmK.zoneExpr("lat", "lon")} AS utm_zone
-               FROM tgt),
-        $fw,
-        src AS (
-          SELECT si.a AS si, sj.b AS sj,
-                 CASE WHEN (si.a*7 + sj.b*11) % 97 = 0 THEN NULL
-                      ELSE CAST((si.a*31 + sj.b*17) % 500 AS DOUBLE) + 50.0
-                 END AS v
-          FROM generate_series(0, 199) AS si(a),
-               generate_series(0, 299) AS sj(b)),
+        WITH ${Raster.UtmTargetSql},
+        src AS (${Raster.sourceSql()}),
         cells AS (
           SELECT ti, tj, lat, lon,
                  CAST(floor((round(utm_easting, 3) - 500000.0e0)
                    / 1000.0e0 + 0.5e0) AS BIGINT) AS ni,
                  CAST(floor((round(utm_northing, 3) - 4000000.0e0)
                    / 1000.0e0 + 0.5e0) AS BIGINT) AS nj
-          FROM $last)
+          FROM ${Raster.UtmLast})
         SELECT c.ti, c.tj, c.lat, c.lon,
                s.v IS NOT NULL AS valid, s.v AS value
         FROM cells c LEFT JOIN src s ON c.ni = s.si AND c.nj = s.sj
@@ -3093,79 +3099,22 @@ object Geo {
     // beyond the fixed 16.
     "geo_resample_cubic" -> Q(
       build = (s, d) => {
-        val tgt = s.range(0, 50).select(col("id").as("ti"))
-          .crossJoin(s.range(0, 40).select(col("id").as("tj")))
-          .withColumn("lat", expr("36.025e0 + ti * 0.05e0"))
-          .withColumn("lon", expr("-122.975e0 + tj * 0.05e0"))
-        val proj = Geo.withUtm(tgt, col("lat"), col("lon"))
-          .withColumn("fx",
-            expr("(round(utm_easting, 3) - 500000.0e0) / 1000.0e0"))
-          .withColumn("fy",
-            expr("(round(utm_northing, 3) - 4000000.0e0) / 1000.0e0"))
-          .withColumn("i", expr("CAST(floor(fx) AS BIGINT)"))
-          .withColumn("j", expr("CAST(floor(fy) AS BIGINT)"))
-          .withColumn("di", expr("fx - floor(fx)"))
-          .withColumn("dj", expr("fy - floor(fy)"))
-        val src = s.range(0, 200).select(col("id").as("si"))
-          .crossJoin(s.range(0, 300).select(col("id").as("sj")))
-          .withColumn("v", expr(
-            """CASE WHEN (si*7 + sj*11) % 97 = 0 THEN NULL
-               ELSE CAST((si*31 + sj*17) % 500 AS DOUBLE) + 50.0 END"""))
-        val taps = proj
-          .withColumn("ci", explode(array((-1L to 2L).map(lit): _*)))
-          .withColumn("cj", explode(array((-1L to 2L).map(lit): _*)))
-          .withColumn("wx", expr(CubicW("ci", "di")))
-          .withColumn("wy", expr(CubicW("cj", "dj")))
-          .withColumn("ord", (col("ci") + 1) * 4 + col("cj") + 1)
         // one row per (target, ord): max() is exact selection, and the
-        // 16-term add below runs in ONE fixed order on both engines
-        // (a float SUM's partial-aggregation order is engine-defined)
-        val piv = taps.join(broadcast(src),
-            taps("i") + taps("ci") === src("si")
-              && taps("j") + taps("cj") === src("sj"), "left")
-          .groupBy(col("ti"), col("tj"), col("lat"), col("lon"))
-          .agg(count(col("v")).as("n_valid"),
-            (0 until 16).map(k => max(when(col("ord") === k,
-              expr("wx * wy * v"))).as(s"p$k")): _*)
-        val chain = (1 until 16)
-          .foldLeft("p0")((acc, k) => s"($acc + p$k)")
-        piv.select(col("ti"), col("tj"), col("lat"), col("lon"),
+        // 16-term chain adds in ONE fixed order on both engines
+        Raster.pivot(Raster.sample(Raster.utmTarget(s), col("fx"), col("fy"), Raster.Cubic,
+            broadcast(Raster.source(s)), "left"), Seq(col("ti"), col("tj"), col("lat"), col("lon")),
+            16, count(col("v")).as("n_valid"))(k =>
+            Seq(Raster.tapMax(k, col("w") * col("v")).as(s"p$k")))
+          .select(col("ti"), col("tj"), col("lat"), col("lon"),
             (col("n_valid") === 16).as("valid"),
-            expr(s"CASE WHEN n_valid = 16 THEN $chain END").as("value"))
+            when(col("n_valid") === 16, Raster.chain("p", 16)).as("value"))
           .orderBy(col("ti"), col("tj"))
       },
       oracle = Some({
-        val (fw, last) = UtmK.ctes("uz", UtmK.fwdSteps("lat", "lon"), "rf")
         s"""
-        WITH tgt AS (
-          SELECT ti.a AS ti, tj.b AS tj,
-                 36.025e0 + ti.a * 0.05e0 AS lat,
-                 -122.975e0 + tj.b * 0.05e0 AS lon
-          FROM generate_series(0, 49) AS ti(a),
-               generate_series(0, 39) AS tj(b)),
-        uz AS (SELECT *, ${UtmK.zoneExpr("lat", "lon")} AS utm_zone
-               FROM tgt),
-        $fw,
-        src AS (
-          SELECT si.a AS si, sj.b AS sj,
-                 CASE WHEN (si.a*7 + sj.b*11) % 97 = 0 THEN NULL
-                      ELSE CAST((si.a*31 + sj.b*17) % 500 AS DOUBLE) + 50.0
-                 END AS v
-          FROM generate_series(0, 199) AS si(a),
-               generate_series(0, 299) AS sj(b)),
-        cells AS (
-          SELECT ti, tj, lat, lon,
-                 CAST(floor((round(utm_easting, 3) - 500000.0e0)
-                   / 1000.0e0) AS BIGINT) AS i,
-                 CAST(floor((round(utm_northing, 3) - 4000000.0e0)
-                   / 1000.0e0) AS BIGINT) AS j,
-                 (round(utm_easting, 3) - 500000.0e0) / 1000.0e0
-                   - floor((round(utm_easting, 3) - 500000.0e0)
-                     / 1000.0e0) AS di,
-                 (round(utm_northing, 3) - 4000000.0e0) / 1000.0e0
-                   - floor((round(utm_northing, 3) - 4000000.0e0)
-                     / 1000.0e0) AS dj
-          FROM $last),
+        WITH ${Raster.UtmTargetSql},
+        src AS (${Raster.sourceSql()}),
+        cells AS (${Raster.UtmCellsSql}),
         taps AS (
           SELECT c.*, ci.c AS ci, cj.c AS cj,
                  (ci.c + 1) * 4 + cj.c + 1 AS ord,
@@ -3201,26 +3150,9 @@ object Geo {
     // target cell — linear, no join at all.
     "geo_resample_average" -> Q(
       build = (s, d) =>
-        s.range(0, 200).select(col("id").as("si"))
-          .crossJoin(s.range(0, 300).select(col("id").as("sj")))
-          .withColumn("v", expr(
-            """CASE WHEN (si*7 + sj*11) % 97 = 0 THEN NULL
-               ELSE CAST((si*31 + sj*17) % 500 AS DOUBLE) + 50.0 END"""))
-          .groupBy(expr("si DIV 4").as("ti"), expr("sj DIV 4").as("tj"))
-          .agg(count(col("v")).as("n_valid"),
-            sum(col("v")).as("vsum"))
-          .select(col("ti"), col("tj"), col("n_valid"),
-            (col("n_valid") > 0).as("valid"),
-            expr("CASE WHEN n_valid > 0 THEN vsum / n_valid END").as("value"))
-          .orderBy(col("ti"), col("tj")),
-      oracle = Some("""
-        WITH src AS (
-          SELECT si.a AS si, sj.b AS sj,
-                 CASE WHEN (si.a*7 + sj.b*11) % 97 = 0 THEN NULL
-                      ELSE CAST((si.a*31 + sj.b*17) % 500 AS DOUBLE) + 50.0
-                 END AS v
-          FROM generate_series(0, 199) AS si(a),
-               generate_series(0, 299) AS sj(b))
+        Raster.decimate(s, expr("CASE WHEN count(v) > 0 THEN sum(v) / count(v) END")),
+      oracle = Some(s"""
+        WITH src AS (${Raster.sourceSql()})
         SELECT si // 4 AS ti, sj // 4 AS tj,
                COUNT(v) AS n_valid, COUNT(v) > 0 AS valid,
                CASE WHEN COUNT(v) > 0 THEN SUM(v) / COUNT(v) END AS value
@@ -3238,17 +3170,9 @@ object Geo {
     // min-struct argmax) — linear, no join against the raster.
     "geo_resample_mode" -> Q(
       build = (s, d) => {
-        val src = s.range(0, 200).select(col("id").as("si"))
-          .crossJoin(s.range(0, 300).select(col("id").as("sj")))
-          .withColumn("vi", expr(
-            """CASE WHEN (si*7 + sj*11) % 97 = 0 THEN NULL
-               ELSE CAST((si*31 + sj*17) % 25 AS BIGINT) END"""))
-        val tot = src
-          .groupBy(expr("si DIV 4").as("ti"), expr("sj DIV 4").as("tj"))
-          .agg(count(col("vi")).as("n_valid"))
-        val mode = src.filter(col("vi").isNotNull)
-          .groupBy(expr("si DIV 4").as("ti"), expr("sj DIV 4").as("tj"),
-            col("vi"))
+        val src = Raster.source(s, "CAST((si*31 + sj*17) % 25 AS BIGINT)", "vi")
+        val tot = Raster.decimated(src).agg(count(col("vi")).as("n_valid"))
+        val mode = Raster.decimated(src.filter(col("vi").isNotNull), col("vi"))
           .agg(count(lit(1)).as("cnt"))
           .withColumn("m", struct((-col("cnt")).as("nc"), col("vi").as("mv")))
           .groupBy(col("ti"), col("tj"))
@@ -3261,14 +3185,8 @@ object Geo {
             col("mode_count"))
           .orderBy(col("ti"), col("tj"))
       },
-      oracle = Some("""
-        WITH src AS (
-          SELECT si.a AS si, sj.b AS sj,
-                 CASE WHEN (si.a*7 + sj.b*11) % 97 = 0 THEN NULL
-                      ELSE CAST((si.a*31 + sj.b*17) % 25 AS BIGINT)
-                 END AS vi
-          FROM generate_series(0, 199) AS si(a),
-               generate_series(0, 299) AS sj(b)),
+      oracle = Some(s"""
+        WITH src AS (${Raster.sourceSql("CAST((si.a*31 + sj.b*17) % 25 AS BIGINT)", "vi")}),
         tot AS (
           SELECT si // 4 AS ti, sj // 4 AS tj, COUNT(vi) AS n_valid
           FROM src GROUP BY 1, 2),
@@ -3304,74 +3222,25 @@ object Geo {
     // the 4×4 footprint = 16 values, so the sort-based aggregate is
     // constant work per cell — linear, no join.
     "geo_resample_min" -> Q(
-      build = (s, d) =>
-        s.range(0, 200).select(col("id").as("si"))
-          .crossJoin(s.range(0, 300).select(col("id").as("sj")))
-          .withColumn("v", expr(
-            """CASE WHEN (si*7 + sj*11) % 97 = 0 THEN NULL
-               ELSE CAST((si*31 + sj*17) % 500 AS DOUBLE) + 50.0 END"""))
-          .groupBy(expr("si DIV 4").as("ti"), expr("sj DIV 4").as("tj"))
-          .agg(count(col("v")).as("n_valid"), min(col("v")).as("value"))
-          .select(col("ti"), col("tj"), col("n_valid"),
-            (col("n_valid") > 0).as("valid"), col("value"))
-          .orderBy(col("ti"), col("tj")),
-      oracle = Some("""
-        WITH src AS (
-          SELECT si.a AS si, sj.b AS sj,
-                 CASE WHEN (si.a*7 + sj.b*11) % 97 = 0 THEN NULL
-                      ELSE CAST((si.a*31 + sj.b*17) % 500 AS DOUBLE) + 50.0
-                 END AS v
-          FROM generate_series(0, 199) AS si(a),
-               generate_series(0, 299) AS sj(b))
+      build = (s, d) => Raster.decimate(s, min(col("v"))),
+      oracle = Some(s"""
+        WITH src AS (${Raster.sourceSql()})
         SELECT si // 4 AS ti, sj // 4 AS tj,
                COUNT(v) AS n_valid, COUNT(v) > 0 AS valid, MIN(v) AS value
         FROM src GROUP BY 1, 2 ORDER BY ti, tj""")),
 
     "geo_resample_max" -> Q(
-      build = (s, d) =>
-        s.range(0, 200).select(col("id").as("si"))
-          .crossJoin(s.range(0, 300).select(col("id").as("sj")))
-          .withColumn("v", expr(
-            """CASE WHEN (si*7 + sj*11) % 97 = 0 THEN NULL
-               ELSE CAST((si*31 + sj*17) % 500 AS DOUBLE) + 50.0 END"""))
-          .groupBy(expr("si DIV 4").as("ti"), expr("sj DIV 4").as("tj"))
-          .agg(count(col("v")).as("n_valid"), max(col("v")).as("value"))
-          .select(col("ti"), col("tj"), col("n_valid"),
-            (col("n_valid") > 0).as("valid"), col("value"))
-          .orderBy(col("ti"), col("tj")),
-      oracle = Some("""
-        WITH src AS (
-          SELECT si.a AS si, sj.b AS sj,
-                 CASE WHEN (si.a*7 + sj.b*11) % 97 = 0 THEN NULL
-                      ELSE CAST((si.a*31 + sj.b*17) % 500 AS DOUBLE) + 50.0
-                 END AS v
-          FROM generate_series(0, 199) AS si(a),
-               generate_series(0, 299) AS sj(b))
+      build = (s, d) => Raster.decimate(s, max(col("v"))),
+      oracle = Some(s"""
+        WITH src AS (${Raster.sourceSql()})
         SELECT si // 4 AS ti, sj // 4 AS tj,
                COUNT(v) AS n_valid, COUNT(v) > 0 AS valid, MAX(v) AS value
         FROM src GROUP BY 1, 2 ORDER BY ti, tj""")),
 
     "geo_resample_med" -> Q(
-      build = (s, d) =>
-        s.range(0, 200).select(col("id").as("si"))
-          .crossJoin(s.range(0, 300).select(col("id").as("sj")))
-          .withColumn("v", expr(
-            """CASE WHEN (si*7 + sj*11) % 97 = 0 THEN NULL
-               ELSE CAST((si*31 + sj*17) % 500 AS DOUBLE) + 50.0 END"""))
-          .groupBy(expr("si DIV 4").as("ti"), expr("sj DIV 4").as("tj"))
-          .agg(count(col("v")).as("n_valid"),
-            expr("percentile(v, 0.5e0)").as("value"))
-          .select(col("ti"), col("tj"), col("n_valid"),
-            (col("n_valid") > 0).as("valid"), col("value"))
-          .orderBy(col("ti"), col("tj")),
-      oracle = Some("""
-        WITH src AS (
-          SELECT si.a AS si, sj.b AS sj,
-                 CASE WHEN (si.a*7 + sj.b*11) % 97 = 0 THEN NULL
-                      ELSE CAST((si.a*31 + sj.b*17) % 500 AS DOUBLE) + 50.0
-                 END AS v
-          FROM generate_series(0, 199) AS si(a),
-               generate_series(0, 299) AS sj(b))
+      build = (s, d) => Raster.decimate(s, expr("percentile(v, 0.5e0)")),
+      oracle = Some(s"""
+        WITH src AS (${Raster.sourceSql()})
         SELECT si // 4 AS ti, sj // 4 AS tj,
                COUNT(v) AS n_valid, COUNT(v) > 0 AS valid,
                quantile_cont(v, 0.5e0) AS value
@@ -3391,79 +3260,22 @@ object Geo {
     // groupBy — fixed fan-out, no data-sized explode.
     "geo_resample_lanczos" -> Q(
       build = (s, d) => {
-        val tgt = s.range(0, 50).select(col("id").as("ti"))
-          .crossJoin(s.range(0, 40).select(col("id").as("tj")))
-          .withColumn("lat", expr("36.025e0 + ti * 0.05e0"))
-          .withColumn("lon", expr("-122.975e0 + tj * 0.05e0"))
-        val proj = Geo.withUtm(tgt, col("lat"), col("lon"))
-          .withColumn("fx",
-            expr("(round(utm_easting, 3) - 500000.0e0) / 1000.0e0"))
-          .withColumn("fy",
-            expr("(round(utm_northing, 3) - 4000000.0e0) / 1000.0e0"))
-          .withColumn("i", expr("CAST(floor(fx) AS BIGINT)"))
-          .withColumn("j", expr("CAST(floor(fy) AS BIGINT)"))
-          .withColumn("di", expr("fx - floor(fx)"))
-          .withColumn("dj", expr("fy - floor(fy)"))
-        val src = s.range(0, 200).select(col("id").as("si"))
-          .crossJoin(s.range(0, 300).select(col("id").as("sj")))
-          .withColumn("v", expr(
-            """CASE WHEN (si*7 + sj*11) % 97 = 0 THEN NULL
-               ELSE CAST((si*31 + sj*17) % 500 AS DOUBLE) + 50.0 END"""))
-        val taps = proj
-          .withColumn("ci", explode(array((-2L to 3L).map(lit): _*)))
-          .withColumn("cj", explode(array((-2L to 3L).map(lit): _*)))
-          .withColumn("wx", expr(LanczosW("ci", "di")))
-          .withColumn("wy", expr(LanczosW("cj", "dj")))
-          .withColumn("ord", (col("ci") + 2) * 6 + col("cj") + 2)
-        val piv = taps.join(broadcast(src),
-            taps("i") + taps("ci") === src("si")
-              && taps("j") + taps("cj") === src("sj"), "left")
-          .groupBy(col("ti"), col("tj"), col("lat"), col("lon"))
-          .agg(count(col("v")).as("n_valid"),
-            (0 until 36).map(k => max(when(col("ord") === k,
-              expr("wx * wy * v"))).as(s"p$k")) ++
-            (0 until 36).map(k => max(when(col("ord") === k,
-              expr("wx * wy"))).as(s"q$k")): _*)
-        val pChain = (1 until 36).foldLeft("p0")((a, k) => s"($a + p$k)")
-        val qChain = (1 until 36).foldLeft("q0")((a, k) => s"($a + q$k)")
-        piv.select(col("ti"), col("tj"), col("lat"), col("lon"),
+        Raster.pivot(Raster.sample(Raster.utmTarget(s), col("fx"), col("fy"), Raster.Lanczos,
+            broadcast(Raster.source(s)), "left"), Seq(col("ti"), col("tj"), col("lat"), col("lon")),
+            36, count(col("v")).as("n_valid"))(k => Seq(
+            Raster.tapMax(k, col("w") * col("v")).as(s"p$k"),
+            Raster.tapMax(k, col("w")).as(s"q$k")))
+          .select(col("ti"), col("tj"), col("lat"), col("lon"),
             (col("n_valid") === 36).as("valid"),
-            expr(s"CASE WHEN n_valid = 36 THEN ($pChain) / ($qChain) END")
+            when(col("n_valid") === 36, Raster.chain("p", 36) / Raster.chain("q", 36))
               .as("value"))
           .orderBy(col("ti"), col("tj"))
       },
       oracle = Some({
-        val (fw, last) = UtmK.ctes("uz", UtmK.fwdSteps("lat", "lon"), "rf")
         s"""
-        WITH tgt AS (
-          SELECT ti.a AS ti, tj.b AS tj,
-                 36.025e0 + ti.a * 0.05e0 AS lat,
-                 -122.975e0 + tj.b * 0.05e0 AS lon
-          FROM generate_series(0, 49) AS ti(a),
-               generate_series(0, 39) AS tj(b)),
-        uz AS (SELECT *, ${UtmK.zoneExpr("lat", "lon")} AS utm_zone
-               FROM tgt),
-        $fw,
-        src AS (
-          SELECT si.a AS si, sj.b AS sj,
-                 CASE WHEN (si.a*7 + sj.b*11) % 97 = 0 THEN NULL
-                      ELSE CAST((si.a*31 + sj.b*17) % 500 AS DOUBLE) + 50.0
-                 END AS v
-          FROM generate_series(0, 199) AS si(a),
-               generate_series(0, 299) AS sj(b)),
-        cells AS (
-          SELECT ti, tj, lat, lon,
-                 CAST(floor((round(utm_easting, 3) - 500000.0e0)
-                   / 1000.0e0) AS BIGINT) AS i,
-                 CAST(floor((round(utm_northing, 3) - 4000000.0e0)
-                   / 1000.0e0) AS BIGINT) AS j,
-                 (round(utm_easting, 3) - 500000.0e0) / 1000.0e0
-                   - floor((round(utm_easting, 3) - 500000.0e0)
-                     / 1000.0e0) AS di,
-                 (round(utm_northing, 3) - 4000000.0e0) / 1000.0e0
-                   - floor((round(utm_northing, 3) - 4000000.0e0)
-                     / 1000.0e0) AS dj
-          FROM $last),
+        WITH ${Raster.UtmTargetSql},
+        src AS (${Raster.sourceSql()}),
+        cells AS (${Raster.UtmCellsSql}),
         taps AS (
           SELECT c.*, ci.c AS ci, cj.c AS cj,
                  (ci.c + 2) * 6 + cj.c + 2 AS ord,
@@ -3502,11 +3314,7 @@ object Geo {
     // count-ratio threshold share, one final division.
     "geo_zonal_stats" -> Q(
       build = (s, d) => {
-        val grid = s.range(-70, 71).select(col("id").as("gi"))
-          .crossJoin(s.range(-180, 181).select(col("id").as("gj")))
-          .select(col("gi"), col("gj"),
-            (((col("gi") * 31 + col("gj") * 17) % 500 + 500) % 500)
-              .as("elev_i"))
+        val grid = Raster.grid(s).select(col("gi"), col("gj"), Raster.dem.as("elev_i"))
         val zoneCells = Tables.t(s, d, "nation")
           .select(col("n_nationkey"),
             expr("CAST(n_nationkey*23 % 100 - 50 AS BIGINT)").as("lat0"),
@@ -3528,12 +3336,8 @@ object Geo {
             col("n_high"))
           .orderBy(col("n_nationkey"))
       },
-      oracle = Some("""
-        WITH grid AS (
-          SELECT gi.i AS gi, gj.j AS gj,
-                 ((gi.i*31 + gj.j*17) % 500 + 500) % 500 AS elev_i
-          FROM generate_series(-70, 70) AS gi(i),
-               generate_series(-180, 180) AS gj(j)),
+      oracle = Some(s"""
+        WITH grid AS (${Raster.gridSql(s"${Raster.DemSql} AS elev_i")}),
         zones AS (
           SELECT n_nationkey,
                  CAST(n_nationkey*23 % 100 - 50 AS BIGINT) AS lat0,
@@ -3640,11 +3444,7 @@ object Geo {
     // the same border discipline as the stencil ops.
     "geo_terrain_indices" -> Q(
       build = (s, d) => {
-        val grid = s.range(-70, 71).select(col("id").as("gi"))
-          .crossJoin(s.range(-180, 181).select(col("id").as("gj")))
-          .select(col("gi"), col("gj"),
-            (((col("gi") * 31 + col("gj") * 17) % 500 + 500) % 500)
-              .as("elev"))
+        val grid = Raster.grid(s).select(col("gi"), col("gj"), Raster.dem.as("elev"))
         val offs = Seq((-1, -1), (-1, 0), (-1, 1), (0, -1), (0, 1),
           (1, -1), (1, 0), (1, 1))
         val probes = grid
@@ -3671,12 +3471,8 @@ object Geo {
             col("tri"), col("tpi8"), col("landform"))
           .orderBy(col("gi"), col("gj"))
       },
-      oracle = Some("""
-        WITH grid AS (
-          SELECT gi.i AS gi, gj.j AS gj,
-                 ((gi.i*31 + gj.j*17) % 500 + 500) % 500 AS elev
-          FROM generate_series(-70, 70) AS gi(i),
-               generate_series(-180, 180) AS gj(j)),
+      oracle = Some(s"""
+        WITH grid AS (${Raster.gridSql(s"${Raster.DemSql} AS elev")}),
         offs(da, db) AS (VALUES (-1,-1), (-1,0), (-1,1), (0,-1), (0,1),
                                 (1,-1), (1,0), (1,1)),
         probes AS (
@@ -3710,43 +3506,14 @@ object Geo {
     // broadcastable grid, no shuffle beyond the probe aggregation.
     "geo_wind_vector" -> Q(
       build = (s, d) => {
-        val grid = s.range(-70, 71).select(col("id").as("gi"))
-          .crossJoin(s.range(-180, 181).select(col("id").as("gj")))
-          .select(col("gi"), col("gj"),
-            ((((col("gi") * 13 + col("gj") * 7) % 41 + 41) % 41 - 20) / 4.0)
-              .as("gu"),
-            ((((col("gi") * 5 + col("gj") * 11) % 37 + 37) % 37 - 18) / 4.0)
-              .as("gv"))
-        val probes = evPts(s, d)
-          .select(col("event_id"), col("lat"), col("lon"),
-            floor(col("lat")).cast(LongType).as("i"),
-            floor(col("lon")).cast(LongType).as("j"))
-          .withColumn("di", col("lat") - col("i"))
-          .withColumn("dj", col("lon") - col("j"))
-        val corners = probes
-          .withColumn("ci", explode(array(lit(0L), lit(1L))))
-          .withColumn("cj", explode(array(lit(0L), lit(1L))))
-        val weighted = corners
-          .join(grid, corners("i") + corners("ci") === grid("gi")
-            && corners("j") + corners("cj") === grid("gj"))
-          .withColumn("w",
-            (when(col("ci") === 0L, lit(1.0) - col("di")).otherwise(col("di")))
-              * (when(col("cj") === 0L, lit(1.0) - col("dj")).otherwise(col("dj"))))
-          .withColumn("ord", col("ci") * 2 + col("cj"))
-        val interp = weighted
-          .groupBy(col("event_id"), col("lat"), col("lon"))
-          .agg(
-            sum(when(col("ord") === 0, col("w") * col("gu")).otherwise(0.0)).as("u00"),
-            sum(when(col("ord") === 1, col("w") * col("gu")).otherwise(0.0)).as("u01"),
-            sum(when(col("ord") === 2, col("w") * col("gu")).otherwise(0.0)).as("u10"),
-            sum(when(col("ord") === 3, col("w") * col("gu")).otherwise(0.0)).as("u11"),
-            sum(when(col("ord") === 0, col("w") * col("gv")).otherwise(0.0)).as("v00"),
-            sum(when(col("ord") === 1, col("w") * col("gv")).otherwise(0.0)).as("v01"),
-            sum(when(col("ord") === 2, col("w") * col("gv")).otherwise(0.0)).as("v10"),
-            sum(when(col("ord") === 3, col("w") * col("gv")).otherwise(0.0)).as("v11"))
-          .select(col("event_id"),
-            (col("u00") + col("u01") + col("u10") + col("u11")).as("ui"),
-            (col("v00") + col("v01") + col("v10") + col("v11")).as("vi"))
+        val grid = Raster.grid(s).select(col("gi"), col("gj"), Raster.windU.as("gu"),
+          Raster.windV.as("gv"))
+        val probes = evPts(s, d).select(col("event_id"), col("lat"), col("lon"))
+        val interp = Raster.pivot(Raster.sample(probes, col("lat"), col("lon"),
+            Raster.Bilinear, grid), Seq(col("event_id"), col("lat"), col("lon")), 4)(t => Seq(
+            Raster.tapSum(t, col("w") * col("gu")).as(s"u$t"),
+            Raster.tapSum(t, col("w") * col("gv")).as(s"v$t")))
+          .select(col("event_id"), Raster.chain("u", 4).as("ui"), Raster.chain("v", 4).as("vi"))
         interp.select(col("event_id"),
             round(sqrt(col("ui") * col("ui") + col("vi") * col("vi")), 3)
               .as("speed_ms"),
@@ -3755,12 +3522,7 @@ object Geo {
           .orderBy(col("event_id"))
       },
       oracle = Some(s"""
-        WITH grid AS (
-          SELECT gi.i AS gi, gj.j AS gj,
-                 (((gi.i*13 + gj.j*7) % 41 + 41) % 41 - 20) / 4.0 AS gu,
-                 (((gi.i*5 + gj.j*11) % 37 + 37) % 37 - 18) / 4.0 AS gv
-          FROM generate_series(-70, 70) AS gi(i),
-               generate_series(-180, 180) AS gj(j)),
+        WITH grid AS (${Raster.gridSql(Raster.WindSql: _*)}),
         probes AS (
           SELECT event_id, lat, lon,
                  CAST(floor(lat) AS BIGINT) AS i, CAST(floor(lon) AS BIGINT) AS j,
@@ -3807,45 +3569,15 @@ object Geo {
     "geo_wind_streamline" -> Q(
       build = (s, d) => {
         val K = 6
-        val grid = s.range(-70, 71).select(col("id").as("gi"))
-          .crossJoin(s.range(-180, 181).select(col("id").as("gj")))
-          .select(col("gi"), col("gj"),
-            ((((col("gi") * 13 + col("gj") * 7) % 41 + 41) % 41 - 20) / 4.0)
-              .as("gu"),
-            ((((col("gi") * 5 + col("gj") * 11) % 37 + 37) % 37 - 18) / 4.0)
-              .as("gv"))
-        def advect(pos: DataFrame): DataFrame = {
-          val probes = pos
-            .withColumn("i", floor(col("lat")).cast(LongType))
-            .withColumn("j", floor(col("lon")).cast(LongType))
-            .withColumn("di", col("lat") - col("i"))
-            .withColumn("dj", col("lon") - col("j"))
-            .withColumn("ci", explode(array(lit(0L), lit(1L))))
-            .withColumn("cj", explode(array(lit(0L), lit(1L))))
-          val weighted = probes
-            .join(grid, probes("i") + probes("ci") === grid("gi")
-              && probes("j") + probes("cj") === grid("gj"))
-            .withColumn("w",
-              (when(col("ci") === 0L, lit(1.0) - col("di")).otherwise(col("di")))
-                * (when(col("cj") === 0L, lit(1.0) - col("dj")).otherwise(col("dj"))))
-            .withColumn("ord", col("ci") * 2 + col("cj"))
-          weighted
-            .groupBy(col("event_id"), col("lat"), col("lon"))
-            .agg(
-              sum(when(col("ord") === 0, col("w") * col("gu")).otherwise(0.0)).as("u00"),
-              sum(when(col("ord") === 1, col("w") * col("gu")).otherwise(0.0)).as("u01"),
-              sum(when(col("ord") === 2, col("w") * col("gu")).otherwise(0.0)).as("u10"),
-              sum(when(col("ord") === 3, col("w") * col("gu")).otherwise(0.0)).as("u11"),
-              sum(when(col("ord") === 0, col("w") * col("gv")).otherwise(0.0)).as("v00"),
-              sum(when(col("ord") === 1, col("w") * col("gv")).otherwise(0.0)).as("v01"),
-              sum(when(col("ord") === 2, col("w") * col("gv")).otherwise(0.0)).as("v10"),
-              sum(when(col("ord") === 3, col("w") * col("gv")).otherwise(0.0)).as("v11"))
-            .select(col("event_id"),
-              (col("lat") + (col("v00") + col("v01") + col("v10") + col("v11")) * 0.05)
-                .as("lat"),
-              (col("lon") + (col("u00") + col("u01") + col("u10") + col("u11")) * 0.05)
-                .as("lon"))
-        }
+        val grid = Raster.grid(s).select(col("gi"), col("gj"), Raster.windU.as("gu"),
+          Raster.windV.as("gv"))
+        def advect(pos: DataFrame): DataFrame =
+          Raster.pivot(Raster.sample(pos, col("lat"), col("lon"), Raster.Bilinear, grid),
+              Seq(col("event_id"), col("lat"), col("lon")), 4)(t => Seq(
+              Raster.tapSum(t, col("w") * col("gu")).as(s"u$t"),
+              Raster.tapSum(t, col("w") * col("gv")).as(s"v$t")))
+            .select(col("event_id"), (col("lat") + Raster.chain("v", 4) * 0.05).as("lat"),
+              (col("lon") + Raster.chain("u", 4) * 0.05).as("lon"))
         var pos = rebase(evPts(s, d)
           .filter(col("event_id") % 37 === 0)
           .select(col("event_id"), col("lat"), col("lon")))
@@ -3892,12 +3624,7 @@ object Geo {
           .map(k => s"SELECT event_id, $k AS step, lat, lon FROM pos$k")
           .mkString(" UNION ALL ")
         s"""
-        WITH grid AS MATERIALIZED (
-          SELECT gi.i AS gi, gj.j AS gj,
-                 (((gi.i*13 + gj.j*7) % 41 + 41) % 41 - 20) / 4.0 AS gu,
-                 (((gi.i*5 + gj.j*11) % 37 + 37) % 37 - 18) / 4.0 AS gv
-          FROM generate_series(-70, 70) AS gi(i),
-               generate_series(-180, 180) AS gj(j)),
+        WITH grid AS MATERIALIZED (${Raster.gridSql(Raster.WindSql: _*)}),
         pos0 AS MATERIALIZED (
           SELECT event_id, $LAT AS lat, $LON AS lon
           FROM events WHERE event_id % 37 = 0),$steps
@@ -5285,25 +5012,13 @@ object Geo {
     // clamp compares the ROUNDED value so both engines clip identically.
     "geo_hillshade" -> Q(
       build = (s, d) => {
-        val cells = evPts(s, d)
-          .groupBy(floor(col("lat") / 2.0).cast(LongType).as("ci"),
-            floor(col("lon") / 2.0).cast(LongType).as("cj"))
-          .agg(count(lit(1)).as("z"))
-        def shifted(di: Int, dj: Int, as: String) = cells.select(
-          (col("ci") - di).as("ci"), (col("cj") - dj).as("cj"), col("z").as(as))
         val slope = "atan(sqrt(dzdx*dzdx + dzdy*dzdy))"
         val aspect = "atan2(dzdy, -dzdx)"
         val shade =
           s"""255.0e0 * (cos(radians(45.0e0))*cos($slope)
               + sin(radians(45.0e0))*sin($slope)
                 *cos(radians(315.0e0) - $aspect))"""
-        cells
-          .join(shifted(0, 1, "z_e"), Seq("ci", "cj"))
-          .join(shifted(0, -1, "z_w"), Seq("ci", "cj"))
-          .join(shifted(1, 0, "z_n"), Seq("ci", "cj"))
-          .join(shifted(-1, 0, "z_s"), Seq("ci", "cj"))
-          .withColumn("dzdx", (col("z_e") - col("z_w")).cast(DoubleType) / 2.0)
-          .withColumn("dzdy", (col("z_n") - col("z_s")).cast(DoubleType) / 2.0)
+        Raster.gradient(Raster.density(s, d))
           .withColumn("shade", expr(s"greatest(0.0e0, round($shade, 2))"))
           .select(col("ci"), col("cj"), col("dzdx"), col("dzdy"), col("shade"))
           .orderBy(col("ci"), col("cj"))
@@ -5316,10 +5031,7 @@ object Geo {
               + sin(radians(45.0e0))*sin($slope)
                 *cos(radians(315.0e0) - $aspect))"""
         s"""
-        WITH cells AS (
-          SELECT CAST(FLOOR($LAT/2.0) AS BIGINT) AS ci,
-                 CAST(FLOOR($LON/2.0) AS BIGINT) AS cj, COUNT(*) AS z
-          FROM events GROUP BY 1, 2),
+        WITH cells AS (${Raster.DensitySql}),
         g AS (
           SELECT c.ci, c.cj,
                  (e.z - w.z)/2.0 AS dzdx, (n_.z - s_.z)/2.0 AS dzdy
@@ -5345,10 +5057,7 @@ object Geo {
     // grid, no pair blowup, no global sort.
     "geo_coverage_gap" -> Q(
       build = (s, d) => {
-        val cells = evPts(s, d)
-          .groupBy(floor(col("lat") / 2.0).cast(LongType).as("ci"),
-            floor(col("lon") / 2.0).cast(LongType).as("cj"))
-          .agg(count(lit(1)).as("n_events"))
+        val cells = Raster.density(s, d, "n_events")
           .withColumn("clat", col("ci").cast(DoubleType) * 2.0 + 1.0)
           .withColumn("clon", col("cj").cast(DoubleType) * 2.0 + 1.0)
         // planning tier: the first 100 station keys — the dimension stays
@@ -5546,23 +5255,11 @@ object Geo {
         val gu = "CAST(((ci*13 + cj*7) % 41 + 41) % 41 - 20 AS DOUBLE) / 4.0e0"
         val gv = "CAST(((ci*5 + cj*11) % 37 + 37) % 37 - 18 AS DOUBLE) / 4.0e0"
         val dep = cells
-          .withColumn("di", expr(s"CAST(ci AS DOUBLE) - ($gv) * 0.5e0"))
-          .withColumn("dj", expr(s"CAST(cj AS DOUBLE) - ($gu) * 0.5e0"))
-          .withColumn("fi", expr("CAST(FLOOR(di) AS BIGINT)"))
-          .withColumn("fj", expr("CAST(FLOOR(dj) AS BIGINT)"))
-          .withColumn("ri", expr("di - fi"))
-          .withColumn("rj", expr("dj - fj"))
-        val corners = dep
-          .withColumn("oi", explode(array(lit(0L), lit(1L))))
-          .withColumn("oj", explode(array(lit(0L), lit(1L))))
-          .withColumn("w", expr(
-            """(CASE WHEN oi = 0 THEN 1.0e0 - ri ELSE ri END)
-               * (CASE WHEN oj = 0 THEN 1.0e0 - rj ELSE rj END)"""))
+          .withColumn("dep_i", expr(s"CAST(ci AS DOUBLE) - ($gv) * 0.5e0"))
+          .withColumn("dep_j", expr(s"CAST(cj AS DOUBLE) - ($gu) * 0.5e0"))
         val src = cells.select(col("ci").as("si"), col("cj").as("sj"),
           col("z").as("sz"))
-        corners
-          .join(src, corners("fi") + corners("oi") === src("si")
-            && corners("fj") + corners("oj") === src("sj"), "left")
+        Raster.sample(dep, col("dep_i"), col("dep_j"), Raster.Bilinear, src, "left")
           .groupBy(col("ci"), col("cj"))
           .agg(max(col("z")).as("z_old"),
             sum(col("w") * coalesce(col("sz"), lit(0L))).as("z_new"))
@@ -5801,47 +5498,15 @@ object Geo {
     // 100× bucket-co-locate both sides on (i, j)).
     "geo_warp_lcc" -> Q(
       build = (s, d) => {
-        val tgt = s.range(0, 50).select(col("id").as("ti"))
-          .crossJoin(s.range(0, 60).select(col("id").as("tj")))
+        val tgt = Raster.lattice(s, "ti", 0 until 50, "tj", 0 until 60)
           .withColumn("lat", expr("36.0e0 + ti * 0.05e0"))
           .withColumn("lon", expr("-111.0e0 + tj * 0.05e0"))
-        val cells = tgt
-          .withColumn("fx",
-            expr(s"(${LccK.x("lat", "lon")} - ${LccK.x0}) / 3000.0e0"))
-          .withColumn("fy",
-            expr(s"(${LccK.y("lat", "lon")} - ${LccK.y0}) / 3000.0e0"))
-          .withColumn("i", expr("CAST(floor(fx) AS BIGINT)"))
-          .withColumn("j", expr("CAST(floor(fy) AS BIGINT)"))
-          .withColumn("di", expr("fx - floor(fx)"))
-          .withColumn("dj", expr("fy - floor(fy)"))
-        val src = s.range(0, 160).select(col("id").as("si"))
-          .crossJoin(s.range(0, 120).select(col("id").as("sj")))
-          .withColumn("v", expr(
-            """CASE WHEN (si*13 + sj*7) % 89 = 0 THEN NULL
-               ELSE CAST((si*23 + sj*41) % 400 AS DOUBLE) / 4.0e0 + 200.0e0
-               END"""))
-        val corners = cells
-          .withColumn("ci", explode(array(lit(0L), lit(1L))))
-          .withColumn("cj", explode(array(lit(0L), lit(1L))))
-        val wt = corners.join(broadcast(src),
-            corners("i") + corners("ci") === src("si")
-              && corners("j") + corners("cj") === src("sj"), "left")
-          .withColumn("ord", col("ci") * 2 + col("cj"))
-          .withColumn("w", expr(
-            """(CASE WHEN ci = 0 THEN 1.0e0 - di ELSE di END)
-               * (CASE WHEN cj = 0 THEN 1.0e0 - dj ELSE dj END)"""))
-        def cw(k: Int) = sum(when(col("ord") === k && col("v").isNotNull,
-          col("w")).otherwise(0.0)).as(s"w$k")
-        def cv(k: Int) = sum(when(col("ord") === k && col("v").isNotNull,
-          col("w") * col("v")).otherwise(0.0)).as(s"v$k")
-        wt.groupBy(col("ti"), col("tj"), col("lat"), col("lon"))
-          .agg(cw(0), cv(0), cw(1), cv(1), cw(2), cv(2), cw(3), cv(3))
-          .withColumn("wsum", expr("((w0 + w1) + w2) + w3"))
-          .select(col("ti"), col("tj"), col("lat"), col("lon"),
-            expr("wsum > 0.0e0").as("valid"),
-            expr("""CASE WHEN wsum > 0.0e0
-                    THEN (((v0 + v1) + v2) + v3) / wsum END""").as("value"))
-          .orderBy(col("ti"), col("tj"))
+          .withColumn("fx", expr(s"(${LccK.x("lat", "lon")} - ${LccK.x0}) / 3000.0e0"))
+          .withColumn("fy", expr(s"(${LccK.y("lat", "lon")} - ${LccK.y0}) / 3000.0e0"))
+        val src = Raster.lattice(s, "si", 0 until 160, "sj", 0 until 120)
+          .withColumn("v", expr("CASE WHEN (si*13 + sj*7) % 89 = 0 THEN NULL ELSE CAST((si*23 + sj*41) % 400 AS DOUBLE) / 4.0e0 + 200.0e0 END"))
+        val wt = Raster.sample(tgt, col("fx"), col("fy"), Raster.Bilinear, broadcast(src), "left")
+        Raster.renormalised(wt, "ti", "tj", "lat", "lon").orderBy(col("ti"), col("tj"))
       },
       oracle = Some(s"""
         WITH tgt AS (
@@ -5910,47 +5575,15 @@ object Geo {
     // broadcast-source / free-partitioning scale shape.
     "geo_warp_ps" -> Q(
       build = (s, d) => {
-        val tgt = s.range(0, 80).select(col("id").as("ti"))
-          .crossJoin(s.range(0, 60).select(col("id").as("tj")))
+        val tgt = Raster.lattice(s, "ti", 0 until 80, "tj", 0 until 60)
           .withColumn("lat", expr("58.0e0 + ti * 0.05e0"))
           .withColumn("lon", expr("-160.0e0 + tj * 0.25e0"))
-        val cells = tgt
-          .withColumn("fx",
-            expr(s"(${PsK.x("lat", "lon")} - ${PsK.x0}) / 5000.0e0"))
-          .withColumn("fy",
-            expr(s"(${PsK.y("lat", "lon")} - ${PsK.y0}) / 5000.0e0"))
-          .withColumn("i", expr("CAST(floor(fx) AS BIGINT)"))
-          .withColumn("j", expr("CAST(floor(fy) AS BIGINT)"))
-          .withColumn("di", expr("fx - floor(fx)"))
-          .withColumn("dj", expr("fy - floor(fy)"))
-        val src = s.range(0, 230).select(col("id").as("si"))
-          .crossJoin(s.range(0, 110).select(col("id").as("sj")))
-          .withColumn("v", expr(
-            """CASE WHEN (si*17 + sj*29) % 83 = 0 THEN NULL
-               ELSE CAST((si*19 + sj*47) % 600 AS DOUBLE) / 8.0e0 - 30.0e0
-               END"""))
-        val corners = cells
-          .withColumn("ci", explode(array(lit(0L), lit(1L))))
-          .withColumn("cj", explode(array(lit(0L), lit(1L))))
-        val wt = corners.join(broadcast(src),
-            corners("i") + corners("ci") === src("si")
-              && corners("j") + corners("cj") === src("sj"), "left")
-          .withColumn("ord", col("ci") * 2 + col("cj"))
-          .withColumn("w", expr(
-            """(CASE WHEN ci = 0 THEN 1.0e0 - di ELSE di END)
-               * (CASE WHEN cj = 0 THEN 1.0e0 - dj ELSE dj END)"""))
-        def cw(k: Int) = sum(when(col("ord") === k && col("v").isNotNull,
-          col("w")).otherwise(0.0)).as(s"w$k")
-        def cv(k: Int) = sum(when(col("ord") === k && col("v").isNotNull,
-          col("w") * col("v")).otherwise(0.0)).as(s"v$k")
-        wt.groupBy(col("ti"), col("tj"), col("lat"), col("lon"))
-          .agg(cw(0), cv(0), cw(1), cv(1), cw(2), cv(2), cw(3), cv(3))
-          .withColumn("wsum", expr("((w0 + w1) + w2) + w3"))
-          .select(col("ti"), col("tj"), col("lat"), col("lon"),
-            expr("wsum > 0.0e0").as("valid"),
-            expr("""CASE WHEN wsum > 0.0e0
-                    THEN (((v0 + v1) + v2) + v3) / wsum END""").as("value"))
-          .orderBy(col("ti"), col("tj"))
+          .withColumn("fx", expr(s"(${PsK.x("lat", "lon")} - ${PsK.x0}) / 5000.0e0"))
+          .withColumn("fy", expr(s"(${PsK.y("lat", "lon")} - ${PsK.y0}) / 5000.0e0"))
+        val src = Raster.lattice(s, "si", 0 until 230, "sj", 0 until 110)
+          .withColumn("v", expr("CASE WHEN (si*17 + sj*29) % 83 = 0 THEN NULL ELSE CAST((si*19 + sj*47) % 600 AS DOUBLE) / 8.0e0 - 30.0e0 END"))
+        val wt = Raster.sample(tgt, col("fx"), col("fy"), Raster.Bilinear, broadcast(src), "left")
+        Raster.renormalised(wt, "ti", "tj", "lat", "lon").orderBy(col("ti"), col("tj"))
       },
       oracle = Some(s"""
         WITH tgt AS (

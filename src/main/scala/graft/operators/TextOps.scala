@@ -93,14 +93,6 @@ object TextOps {
       .map(j => s"CAST(ascii(substr(text, CAST(i AS INT) + $j, 1)) AS BIGINT) * ${powMod(base, 19 - j)}")
       .mkString(" + ")
 
-  /** Spark-side twin of gramSum (same 20-term polynomial, Spark SQL
-    * substring syntax) for ops that need the per-position window hash as
-    * plain column math rather than through a kernel expression.
-    */
-  private def sharedGramSpark: String =
-    (0 until 20)
-      .map(j => s"CAST(ascii(substring(text, i + $j, 1)) AS BIGINT) * ${powMod(graft.functions.TextHashKernels.B1, 19 - j)}")
-      .mkString(" + ")
   /** Rolling token hash (list_reduce) — same recurrence as the kernel. */
   private def tokSum(base: Long): String =
     s"""list_reduce(list_prepend(CAST(0 AS BIGINT),

@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Geo.Raster
 import graft.sources.GeoTiff
 import org.apache.spark.sql.functions._
 
@@ -78,32 +79,18 @@ class GeoTiffSpec extends SparkSpecBase {
   }
 
   test("raster feeds the DEM bilinear probe (geo_dem_bilinear pattern)") {
-    // probe points at cell-fraction positions; 4-corner equi-join then
-    // bilinear weights — the geo_dem_bilinear plan shape over a REAL
-    // decoded raster instead of the synthetic grid
+    // probe points at cell-fraction positions through geo_dem_bilinear's
+    // tap sampler (Geo.Raster), over a REAL decoded raster instead of the
+    // synthetic grid
     val probes = spark.range(50).select(
       col("id"),
       (col("id") * 7 % 80 + 0.25).as("pr"), // fractional row
       (col("id") * 13 % 110 + 0.5).as("pc"))
     val cells = raster.select(col("row"), col("col"), col("value"))
-    val base = probes
-      .withColumn("r0", floor(col("pr")).cast("int"))
-      .withColumn("c0", floor(col("pc")).cast("int"))
-      .withColumn("fr", col("pr") - col("r0"))
-      .withColumn("fc", col("pc") - col("c0"))
-    def corner(dr: Int, dc: Int, as: String) = cells.select(
-      (col("row") - dr).as("r0"), (col("col") - dc).as("c0"), col("value").as(as))
-    val out = base
-      .join(corner(0, 0, "z00"), Seq("r0", "c0"))
-      .join(corner(0, 1, "z01"), Seq("r0", "c0"))
-      .join(corner(1, 0, "z10"), Seq("r0", "c0"))
-      .join(corner(1, 1, "z11"), Seq("r0", "c0"))
-      .withColumn("interp",
-        col("z00") * (lit(1.0) - col("fr")) * (lit(1.0) - col("fc"))
-          + col("z01") * (lit(1.0) - col("fr")) * col("fc")
-          + col("z10") * col("fr") * (lit(1.0) - col("fc"))
-          + col("z11") * col("fr") * col("fc"))
-      .select(col("id"), col("pr"), col("pc"), col("interp"))
+    val keys = Seq(col("id"), col("pr"), col("pc"))
+    val out = Raster.pivot(Raster.sample(probes, col("pr"), col("pc"), Raster.Bilinear, cells),
+        keys, 4)(k => Seq(Raster.tapSum(k, col("w") * col("value")).as(s"t$k")))
+      .select(keys :+ Raster.chain("t", 4).as("interp"): _*)
       .collect()
     assert(out.length == 50)
     out.foreach { r =>
