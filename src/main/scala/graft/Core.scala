@@ -2,7 +2,11 @@ package graft
 
 import java.util.concurrent.ConcurrentHashMap
 import org.apache.hadoop.fs.Path
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.graftops.GraftInternal
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -177,7 +181,7 @@ object Det {
   * whichever type the file actually carries.
   */
 object Tables {
-  /** The SQL settings Parquet schema conversion reads; a schema resolved
+  /** The SQL settings Parquet schema conversion reads; a relation resolved
     * under one combination of them must not serve another. */
   private val schemaConfs = Seq(
     "spark.sql.legacy.parquet.nanosAsLong",
@@ -185,25 +189,36 @@ object Tables {
     "spark.sql.parquet.int96AsTimestamp",
     "spark.sql.parquet.inferTimestampNTZ.enabled",
     "spark.sql.parquet.mergeSchema")
-  private val schemas = new ConcurrentHashMap[
-    (String, Long, Long, Seq[Option[String]]), StructType]()
+  private[graft] val relations = new ConcurrentHashMap[
+    (SparkSession, String, Long, Long, Seq[Option[String]]), LogicalRelation]()
+  /** The contexts whose stop drops their sessions' relations. */
+  private val watched = ConcurrentHashMap.newKeySet[SparkContext]()
 
-  /** Reads `dir/name.parquet` with a schema resolved once per file version
-    * (path, modification time, length) and read settings. A read without
-    * a schema makes Spark infer it, which is a job over the file footers
-    * inside every builder call. Only the schema is kept: each call still
-    * lists the files and gets its own relation with fresh attribute ids.
+  /** Reads `dir/name.parquet` through a relation resolved once per
+    * session, file version (path, modification time, length) and read
+    * settings, as Spark's session catalog keeps its tables' relations.
+    * Resolving lists the file and, without a schema, runs a job over its
+    * footers: every builder call would pay both. Each call gets a
+    * `newInstance()` copy of the relation, with fresh attribute ids, so
+    * two reads of one file self-join. A file rewritten in place gets a
+    * relation of its own; a context's stop drops its sessions' entries.
     */
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
     val p = new Path(path)
-    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .getFileStatus(p)
-    val key = (st.getPath.toString, st.getModificationTime, st.getLen,
+    val sc = spark.sparkContext
+    val st = p.getFileSystem(sc.hadoopConfiguration).getFileStatus(p)
+    if (watched.add(sc)) sc.addSparkListener(new SparkListener {
+      override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit = {
+        relations.keySet.removeIf(_._1.sparkContext eq sc)
+        watched.remove(sc)
+      }
+    })
+    val key = (spark, st.getPath.toString, st.getModificationTime, st.getLen,
       schemaConfs.map(spark.conf.getOption))
-    val schema = schemas.computeIfAbsent(key,
-      _ => spark.read.parquet(path).schema)
-    spark.read.schema(schema).parquet(path)
+    val rel = relations.computeIfAbsent(key,
+      _ => spark.read.parquet(path).queryExecution.analyzed.asInstanceOf[LogicalRelation])
+    GraftInternal.ofRows(spark, rel.newInstance())
   }
 
   /** events with `ts_sec` (epoch seconds, BIGINT) derived from `ts`. */

@@ -413,6 +413,44 @@ object ImageCodec {
       edge.toDouble / math.max(1, n - h)) // h rows × (w-1) diffs; max guards w<=1 (ADVICE r3)
   }
 
+  /** The DCT-II basis of `lowDct` over 32 samples:
+    * cos(π/32 · (x + 0.5) · k) for k < 8, x < 32. */
+  private val DctCos = Array.tabulate(8, 32)((k, x) =>
+    math.cos(math.Pi / 32 * (x + 0.5) * k))
+
+  /** The 8×8 low-frequency block of the 2-D DCT-II of a 32×32 grid
+    * `lum`: coefficient (u, v) at u·8 + v is Σ_ii Σ_jj lum·cos_u·cos_v,
+    * summed in (ii, jj) order. The 8 coefficients of one u sum in 8
+    * independent accumulators, each in the order it would sum alone.
+    */
+  private[graft] def lowDct(lum: Array[Array[Double]]): Array[Double] = {
+    val Array(c0, c1, c2, c3, c4, c5, c6, c7) = DctCos
+    val coef = new Array[Double](64)
+    var u = 0
+    while (u < 8) {
+      val cu = DctCos(u)
+      var a0, a1, a2, a3, a4, a5, a6, a7 = 0.0
+      var ii = 0
+      while (ii < 32) {
+        val row = lum(ii)
+        val cui = cu(ii)
+        var jj = 0
+        while (jj < 32) {
+          val l = row(jj) * cui
+          a0 += l * c0(jj); a1 += l * c1(jj); a2 += l * c2(jj); a3 += l * c3(jj)
+          a4 += l * c4(jj); a5 += l * c5(jj); a6 += l * c6(jj); a7 += l * c7(jj)
+          jj += 1
+        }
+        ii += 1
+      }
+      val o = u * 8
+      coef(o) = a0; coef(o + 1) = a1; coef(o + 2) = a2; coef(o + 3) = a3
+      coef(o + 4) = a4; coef(o + 5) = a5; coef(o + 6) = a6; coef(o + 7) = a7
+      u += 1
+    }
+    coef
+  }
+
   /** 64-bit perceptual hash (classic pHash): integer luminance →
     * 32×32 box-resample → 2-D DCT-II → low-frequency 8×8 block →
     * median threshold. Near-identical images land within a few bits of
@@ -450,29 +488,7 @@ object ImageCodec {
       }
       i += 1
     }
-    // 8×8 low-frequency DCT-II block (only 64 coefficients needed)
-    val cos = Array.tabulate(8, N)((k, x) =>
-      math.cos(math.Pi / N * (x + 0.5) * k))
-    val coef = new Array[Double](64)
-    var u = 0
-    while (u < 8) {
-      var v = 0
-      while (v < 8) {
-        var acc = 0.0
-        var ii = 0
-        while (ii < N) {
-          var jj = 0
-          while (jj < N) {
-            acc += lum(ii)(jj) * cos(u)(ii) * cos(v)(jj)
-            jj += 1
-          }
-          ii += 1
-        }
-        coef(u * 8 + v) = acc
-        v += 1
-      }
-      u += 1
-    }
+    val coef = lowDct(lum)
     val sorted = coef.clone(); java.util.Arrays.sort(sorted)
     val med = (sorted(31) + sorted(32)) / 2.0
     var bits = 0L

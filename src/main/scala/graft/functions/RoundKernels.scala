@@ -53,6 +53,23 @@ object RoundKernels {
     best
   }
 
+  /** A copy of each row of `rows`, persisted for a loop that reads them
+    * every round; the loop unpersists them when it is done.
+    */
+  def persisted(rows: RDD[InternalRow]): RDD[InternalRow] =
+    rows.map(_.copy()).persist()
+
+  /** The rows of `rows` whose BIGINT id in column 1 is below `k`, in id
+    * order: each id as an INT and the vector of column 0 as doubles. One
+    * job.
+    */
+  def below(rows: RDD[InternalRow], isFloat: Boolean, k: Long): Array[(Int, Array[Double])] =
+    rows.filter(_.getLong(1) < k).map { r =>
+      val v = r.getArray(0)
+      (r.getLong(1).toInt, Array.tabulate(v.numElements())(i =>
+        if (isFloat) v.getFloat(i).toDouble else v.getDouble(i)))
+    }.collect().sortBy(_._1)
+
   /** One Lloyd round over `nSub` subspaces. Each row of `vecs` holds a
     * vector in column 0; the round splits it into `nSub` contiguous
     * subvectors, assigns each to its `nearest` centroid in that subspace
@@ -174,31 +191,14 @@ object RoundKernels {
     a
   }
 
-  /** (spaced, wc) pairs of a word dict: rows whose column 0 is the
-    * sentinel-padded symbol string and column 1 the word's count.
+  /** One BPE round's pair counts over a collected word dict: the
+    * adjacent symbol pairs of every sentinel-padded word, each weighted
+    * by the word's count.
     */
-  def wordCounts(rows: RDD[InternalRow]): RDD[(String, Long)] =
-    rows.map(r => (r.getUTF8String(0).toString, r.getLong(1)))
-
-  /** One BPE round's pair counts: the adjacent symbol pairs of every
-    * word, each weighted by the word's count, summed in per-partition maps
-    * that merge in one stage. A map is bounded by the distinct pairs, not
-    * by the corpus.
-    */
-  def pairCounts(words: RDD[(String, Long)]): collection.Map[String, Long] =
-    words.treeAggregate(mutable.HashMap.empty[String, Long])((m, w) => {
-      val l = w._1.trim.split(" ")
-      var i = 1
-      while (i < l.length) {
-        val p = l(i - 1) + " " + l(i)
-        m.update(p, m.getOrElse(p, 0L) + w._2)
-        i += 1
-      }
-      m
-    }, (a, b) => {
-      b.foreach { case (p, n) => a.update(p, a.getOrElse(p, 0L) + n) }
-      a
-    }, depth = 1)
+  def pairCounts(words: Seq[(String, Long)]): Map[String, Long] =
+    words.flatMap { case (w, n) =>
+      w.trim.split(" ").sliding(2).collect { case Array(a, b) => (s"$a $b", n) }
+    }.groupMapReduce(_._1)(_._2)(_ + _)
 
   /** The round's merge: the pair with the highest count, the smallest
     * pair among equal counts; None when no word has two symbols left.
@@ -211,12 +211,4 @@ object RoundKernels {
     */
   def mergeOf(pair: String): (String, String) =
     (s" $pair ", s" ${pair.replace(" ", "")} ")
-
-  /** Applies the merge of `pair` to every word: a non-overlapping,
-    * left-to-right replace, as SQL `replace` does.
-    */
-  def merge(words: RDD[(String, Long)], pair: String): RDD[(String, Long)] = {
-    val (from, to) = mergeOf(pair)
-    words.map(w => (w._1.replace(from, to), w._2))
-  }
 }

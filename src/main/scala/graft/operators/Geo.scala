@@ -23,11 +23,11 @@ object Geo {
 
   // -- position derivation (Spark side) --
   private def evPts(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d)
-      .withColumn("lat", (col("user_id") * 37 % 140 - 70).cast(DoubleType)
-        + col("value") / lit(1000.0))
-      .withColumn("lon", (col("event_id") * 73 % 360 - 180).cast(DoubleType)
-        + col("value") / lit(2000.0))
+    Tables.events(s, d).select(col("*"),
+      ((col("user_id") * 37 % 140 - 70).cast(DoubleType) + col("value") / lit(1000.0))
+        .as("lat"),
+      ((col("event_id") * 73 % 360 - 180).cast(DoubleType) + col("value") / lit(2000.0))
+        .as("lon"))
 
   // -- position derivation (DuckDB side; identical op order) --
   private val LAT = "(CAST(user_id*37 % 140 - 70 AS DOUBLE) + value/1000.0)"
@@ -1923,23 +1923,23 @@ object Geo {
         // with the 2-D bucketing; the oracle's unpruned cross join proves
         // the prune loses nothing.
         val cell = 4.0
-        val tiles = Tables.t(s, d, "part").select(col("p_partkey"))
-          .withColumn("tile_id", expr(TileK.tileId))
-          .withColumn("enc", expr(TileK.enc))
-          .withColumn("t_lat", expr(TileK.tlat))
-          .withColumn("t_lon", expr(TileK.tlon))
-          .withColumn("dn", ceil(lit(320.0)
-            / (lit(110.0) * cos(radians(least(abs(col("t_lat")) + 4.1, lit(74.0)))))
-            / cell).cast(LongType))
-          .withColumn("di", explode(expr("sequence(-1, 1)")))
-          .withColumn("dj", explode(expr("sequence(-dn, dn)")))
-          .withColumn("ci", floor(col("t_lat") / cell).cast(LongType) + col("di"))
+        // one projection a dependency level (each explode needs its own)
+        val tiles = Tables.t(s, d, "part")
+          .select(col("p_partkey"), expr(TileK.tileId).as("tile_id"),
+            expr(TileK.tlat).as("t_lat"), expr(TileK.tlon).as("t_lon"))
+          .select(col("*"), expr(TileK.enc).as("enc"),
+            ceil(lit(320.0)
+              / (lit(110.0) * cos(radians(least(abs(col("t_lat")) + 4.1, lit(74.0)))))
+              / cell).cast(LongType).as("dn"),
+            explode(expr("sequence(-1, 1)")).as("di"))
+          .select(col("*"), explode(expr("sequence(-dn, dn)")).as("dj"),
+            (floor(col("t_lat") / cell).cast(LongType) + col("di")).as("ci"))
           .withColumn("cj",
             (((floor(col("t_lon") / cell).cast(LongType) + col("dj") + 45) % 90 + 90) % 90) - 45)
         val track = evPts(s, d)
-          .select(col("user_id"), col("lat"), col("lon"))
-          .withColumn("ci", floor(col("lat") / cell).cast(LongType))
-          .withColumn("cj", floor(col("lon") / cell).cast(LongType))
+          .select(col("user_id"), col("lat"), col("lon"),
+            floor(col("lat") / cell).cast(LongType).as("ci"),
+            floor(col("lon") / cell).cast(LongType).as("cj"))
         track.join(broadcast(tiles), Seq("ci", "cj"))
           .withColumn("dist_q",
             floor(havC(col("lat"), col("lon"), col("t_lat"), col("t_lon")) * 1024.0)
@@ -5011,25 +5011,12 @@ object Geo {
     // shared-formula trig layer; the emitted shade rounds to 2, and the
     // clamp compares the ROUNDED value so both engines clip identically.
     "geo_hillshade" -> Q(
-      build = (s, d) => {
-        val slope = "atan(sqrt(dzdx*dzdx + dzdy*dzdy))"
-        val aspect = "atan2(dzdy, -dzdx)"
-        val shade =
-          s"""255.0e0 * (cos(radians(45.0e0))*cos($slope)
-              + sin(radians(45.0e0))*sin($slope)
-                *cos(radians(315.0e0) - $aspect))"""
+      build = (s, d) =>
         Raster.gradient(Raster.density(s, d))
-          .withColumn("shade", expr(s"greatest(0.0e0, round($shade, 2))"))
-          .select(col("ci"), col("cj"), col("dzdx"), col("dzdy"), col("shade"))
-          .orderBy(col("ci"), col("cj"))
-      },
+          .select(col("ci"), col("cj"), col("dzdx"), col("dzdy"),
+            expr(HillshadeK.shade).as("shade"))
+          .orderBy(col("ci"), col("cj")),
       oracle = Some {
-        val slope = "atan(sqrt(dzdx*dzdx + dzdy*dzdy))"
-        val aspect = "atan2(dzdy, -dzdx)"
-        val shade =
-          s"""255.0e0 * (cos(radians(45.0e0))*cos($slope)
-              + sin(radians(45.0e0))*sin($slope)
-                *cos(radians(315.0e0) - $aspect))"""
         s"""
         WITH cells AS (${Raster.DensitySql}),
         g AS (
@@ -5041,7 +5028,7 @@ object Geo {
           JOIN cells n_ ON n_.ci = c.ci + 1 AND n_.cj = c.cj
           JOIN cells s_ ON s_.ci = c.ci - 1 AND s_.cj = c.cj)
         SELECT ci, cj, dzdx, dzdy,
-               greatest(0.0e0, round($shade, 2)) AS shade
+               ${HillshadeK.shade} AS shade
         FROM g ORDER BY ci, cj"""
       }),
 
@@ -5252,11 +5239,9 @@ object Geo {
           .groupBy(floor(col("lat")).cast(LongType).as("ci"),
             floor(col("lon")).cast(LongType).as("cj"))
           .agg(count(lit(1)).as("z"))
-        val gu = "CAST(((ci*13 + cj*7) % 41 + 41) % 41 - 20 AS DOUBLE) / 4.0e0"
-        val gv = "CAST(((ci*5 + cj*11) % 37 + 37) % 37 - 18 AS DOUBLE) / 4.0e0"
         val dep = cells
-          .withColumn("dep_i", expr(s"CAST(ci AS DOUBLE) - ($gv) * 0.5e0"))
-          .withColumn("dep_j", expr(s"CAST(cj AS DOUBLE) - ($gu) * 0.5e0"))
+          .withColumn("dep_i", expr(AdvectK.depI))
+          .withColumn("dep_j", expr(AdvectK.depJ))
         val src = cells.select(col("ci").as("si"), col("cj").as("sj"),
           col("z").as("sz"))
         Raster.sample(dep, col("dep_i"), col("dep_j"), Raster.Bilinear, src, "left")
@@ -5267,8 +5252,6 @@ object Geo {
           .orderBy(col("ci"), col("cj"))
       },
       oracle = Some {
-        val gu = "CAST(((ci*13 + cj*7) % 41 + 41) % 41 - 20 AS DOUBLE) / 4.0e0"
-        val gv = "CAST(((ci*5 + cj*11) % 37 + 37) % 37 - 18 AS DOUBLE) / 4.0e0"
         s"""
         WITH cells AS (
           SELECT CAST(FLOOR($LAT) AS BIGINT) AS ci,
@@ -5276,8 +5259,8 @@ object Geo {
           FROM events GROUP BY 1, 2),
         dep AS (
           SELECT ci, cj, z,
-                 CAST(ci AS DOUBLE) - ($gv) * 0.5e0 AS di,
-                 CAST(cj AS DOUBLE) - ($gu) * 0.5e0 AS dj
+                 ${AdvectK.depI} AS di,
+                 ${AdvectK.depJ} AS dj
           FROM cells),
         frac AS (
           SELECT ci, cj, z, di, dj,
@@ -6226,6 +6209,30 @@ object Geo {
     * bearings t13/t12 (deg) — identical text both engines; the acos
     * argument is clamped against last-ulp overshoot.
     */
+  /** geo_hillshade's shade text, read by its builder and its oracle:
+    * GDAL's default sun (azimuth 315°, altitude 45°) over the gradient
+    * (dzdx, dzdy), scaled to 0-255, rounded to 2 and clamped at 0.
+    */
+  private object HillshadeK {
+    private val slope = "atan(sqrt(dzdx*dzdx + dzdy*dzdy))"
+    private val aspect = "atan2(dzdy, -dzdx)"
+    val shade: String =
+      s"""greatest(0.0e0, round(255.0e0 * (cos(radians(45.0e0))*cos($slope)
+              + sin(radians(45.0e0))*sin($slope)
+                *cos(radians(315.0e0) - $aspect)), 2))"""
+  }
+
+  /** geo_advect_step's departure point, read by its builder and its
+    * oracle: cell (ci, cj) backtracked half a step along the analytic
+    * quarter-integer wind (gu, gv).
+    */
+  private object AdvectK {
+    private val gu = "CAST(((ci*13 + cj*7) % 41 + 41) % 41 - 20 AS DOUBLE) / 4.0e0"
+    private val gv = "CAST(((ci*5 + cj*11) % 37 + 37) % 37 - 18 AS DOUBLE) / 4.0e0"
+    val depI: String = s"CAST(ci AS DOUBLE) - ($gv) * 0.5e0"
+    val depJ: String = s"CAST(cj AS DOUBLE) - ($gu) * 0.5e0"
+  }
+
   private object XtdK {
     private val xa = "asin(sin(d13/6371.0e0) * sin(radians(t13 - t12)))"
     // + 0.0e0 folds IEEE -0.0 (DuckDB's round of a tiny negative) onto

@@ -1245,8 +1245,10 @@ object Similarity {
     // The training step the IVF index (emb_ivf_topk) assumes: k=8 centroids
     // refined by 3 Lloyd rounds from a deterministic seed (the 8 lowest
     // vec_ids). The k×64 centroids are the only state a round hands to the
-    // next, so they live on the driver. A round is one single-stage RDD
-    // aggregate over the vectors (RoundKernels.lloydRound): each task
+    // next, so they live on the driver. The vectors are read once into a
+    // persisted RDD, which the seed job fills and the builder unpersists
+    // before it returns. A round is one single-stage RDD aggregate over
+    // them (RoundKernels.lloydRound): each task
     // assigns its vectors to their nearest centroid and sums floor(x·16384)
     // per cluster and dimension, and the driver divides the k·64 sums by
     // the counts, the same order-free quantized mean as emb_centroids. No
@@ -1262,17 +1264,16 @@ object Similarity {
         val k = 8
         val e = emb(s, d)
         val isFloat = floatEmbedding(e)
-        val seed = e.filter(col("vec_id") < k)
-          .select(col("vec_id").cast(IntegerType), col("embedding")).collect()
-          .sortBy(_.getInt(0))
-        // the vectors, planned once; each round re-reads them
-        val vecs = e.select(col("embedding")).queryExecution.toRdd
+        // the vectors, read once: the seed job caches them for the rounds
+        val vecs = RoundKernels.persisted(
+          e.select(col("embedding"), col("vec_id").cast(LongType)).queryExecution.toRdd)
         // a cluster that ends up empty is dropped
-        val (cids, cents) = (1 to 3).foldLeft((seed.map(_.getInt(0)),
-            seed.map(_.getSeq[Number](1).map(_.doubleValue).toArray))) {
-          case ((c, m), _) => c.zip(RoundKernels.lloydRound(vecs, isFloat, 1, m))
-            .collect { case (cid, Array(Some(mean))) => (cid, mean) }.unzip
-        }
+        val (cids, cents) = try {
+          (1 to 3).foldLeft(RoundKernels.below(vecs, isFloat, k).unzip) {
+            case ((c, m), _) => c.zip(RoundKernels.lloydRound(vecs, isFloat, 1, m))
+              .collect { case (cid, Array(Some(mean))) => (cid, mean) }.unzip
+          }
+        } finally vecs.unpersist(blocking = false)
         e.select(col("vec_id"), col("label"), SimFunctions.nearestCentroid(
             col("embedding"), cids.toSeq, cents.map(_.toSeq).toSeq).as("n"))
           .select(col("vec_id"), col("label"), col("n.cid").as("cid"),

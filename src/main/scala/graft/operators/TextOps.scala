@@ -34,39 +34,50 @@ object TextOps {
   /** BPE merge rounds for doc_bpe_train/apply (vocab-sized work per round). */
   private[graft] val BpeRounds = 8
 
+  /** The word dict of doc_bpe_train and doc_bpe_apply: each word of the
+    * corpus, `spaced` as its symbols padded with sentinel spaces, and its
+    * count `wc`.
+    */
+  private def bpeWords(s: SparkSession, d: String): DataFrame =
+    docs(s, d)
+      .select(explode(expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).as("word"))
+      .groupBy(col("word")).agg(count(lit(1)).as("wc"))
+      .select(col("word"), concat(lit(" "), regexp_replace(col("word"), "(.)", "$1 "))
+        .as("spaced"), col("wc"))
+
   /** The BPE merge loop of doc_bpe_train and doc_bpe_apply over a word
     * dict with a sentinel-padded symbol string `spaced` and a frequency
-    * `wc`. The dict is rebased once and read as (spaced, wc) pairs. A
-    * round counts the adjacent symbol pairs, weighted by `wc`, in one
-    * single-stage RDD aggregate whose per-partition maps hold at most the
-    * distinct pairs (RoundKernels.pairCounts), and takes the argmax
-    * (count desc, pair asc — deterministic) on the driver. The next round
-    * reads the pairs with that one merge applied (RoundKernels.merge, the
-    * same non-overlapping left-to-right replace as SQL `replace`). No
-    * round plans a DataFrame. Returns the merge table (round, pair,
-    * pair_count) and the dict after all merges: the rebased dict with one
-    * `replace` per merge on `spaced`, planned once, its other columns
-    * carried through unchanged. A round with no pair left (every word one
-    * symbol) ends the loop with an empty dict.
+    * `wc`. The dict is the vocabulary, so it is collected once (the word
+    * count before it stays distributed) and the rounds are driver
+    * arithmetic, as BPE trainers train on an in-memory word-count dict: a
+    * round counts the adjacent symbol pairs weighted by `wc`
+    * (RoundKernels.pairCounts), takes the argmax (count desc, pair asc —
+    * deterministic) and applies that one merge to every word (the same
+    * non-overlapping left-to-right replace as SQL `replace`). Returns the
+    * merge table (round, pair, pair_count) and the merged dict, both local:
+    * the collected rows with `spaced` merged and their other columns
+    * unchanged. A round with no pair left (every word one symbol) ends the
+    * loop with an empty dict.
     */
   private[graft] def bpeMerges(words: DataFrame): (DataFrame, DataFrame) = {
-    val base = rebase(words)
-    var pairs = RoundKernels.wordCounts(
-      base.select(col("spaced"), col("wc")).queryExecution.toRdd)
+    val rows = words.collect()
+    val si = words.schema.fieldIndex("spaced")
+    val wc = rows.map(_.getLong(words.schema.fieldIndex("wc")))
+    var spaced = rows.map(_.getString(si))
     val merges = (0 until BpeRounds).iterator.map { r =>
-      RoundKernels.topPair(RoundKernels.pairCounts(pairs)).map { case (pair, n) =>
-        pairs = RoundKernels.merge(pairs, pair)
+      RoundKernels.topPair(RoundKernels.pairCounts(spaced.toSeq.zip(wc))).map { case (pair, n) =>
+        val (from, to) = RoundKernels.mergeOf(pair)
+        spaced = spaced.map(_.replace(from, to))
         Row(r, pair, n)
       }
     }.takeWhile(_.isDefined).flatten.toList
-    val dict = base.withColumn("spaced", merges.foldLeft(col("spaced")) { (c, m) =>
-      val (from, to) = RoundKernels.mergeOf(m.getString(1))
-      replace(c, lit(from), lit(to))
-    })
-    (words.sparkSession.createDataFrame(merges.asJava,
+    val dict = if (merges.size < BpeRounds) Nil
+      else rows.indices.map(i => Row.fromSeq(rows(i).toSeq.updated(si, spaced(i))))
+    val s = words.sparkSession
+    (s.createDataFrame(merges.asJava,
       StructType(Seq(StructField("round", IntegerType, nullable = false),
         StructField("pair", StringType), StructField("pair_count", LongType)))),
-      if (merges.size < BpeRounds) dict.limit(0) else dict)
+      s.createDataFrame(dict.asJava, words.schema))
   }
 
   /** occurrences of substring w, exact integer arithmetic both engines */
@@ -845,18 +856,11 @@ object TextOps {
     // bpeMerges, shared with doc_bpe_apply. Output: the learned merge
     // table.
     "doc_bpe_train" -> Q(
-      build = (s, d) => {
-        val (merges, _) = bpeMerges(docs(s, d)
-          .select(explode(expr(
-            "regexp_extract_all(lower(text), '[a-z]+', 0)")).as("word"))
-          .groupBy(col("word")).agg(count(lit(1)).as("wc"))
-          .select(concat(lit(" "), regexp_replace(col("word"), "(.)", "$1 "))
-            .as("spaced"), col("wc")))
-        merges
+      build = (s, d) =>
+        bpeMerges(bpeWords(s, d))._1
           .select(col("round"), col("pair"),
             regexp_replace(col("pair"), " ", "").as("merged"), col("pair_count"))
-          .orderBy(col("round"))
-      },
+          .orderBy(col("round")),
       oracle = Some {
         // every CTE is MATERIALIZED: the round chain references spaced$r
         // and best$r multiple times, and DuckDB's default CTE inlining
@@ -911,14 +915,7 @@ object TextOps {
     // semantics as training, both engines).
     "doc_bpe_apply" -> Q(
       build = (s, d) => {
-        val (_, dict) = bpeMerges(docs(s, d)
-          .select(explode(expr(
-            "regexp_extract_all(lower(text), '[a-z]+', 0)")).as("word"))
-          .groupBy(col("word")).agg(count(lit(1)).as("wc"))
-          .select(col("word"),
-            concat(lit(" "), regexp_replace(col("word"), "(.)", "$1 "))
-              .as("spaced"), col("wc")))
-        val enc = dict.select(col("word"),
+        val enc = bpeMerges(bpeWords(s, d))._2.select(col("word"),
           size(split(trim(col("spaced")), " ")).cast(LongType).as("n_sym"))
         docs(s, d)
           .select(col("doc_id"), explode(expr(

