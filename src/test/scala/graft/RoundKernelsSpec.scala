@@ -347,6 +347,54 @@ class RoundKernelsSpec extends SparkSpecBase {
     assert(RoundKernels.roundHalfUp(-5e-10, 9) == -1e-9)
   }
 
+  /** Random words over a three-letter alphabet, spaced as BPE spells
+    * them, with random counts, each beside its mirror with a and b
+    * swapped: the first round's top count is tied.
+    */
+  private def words(parts: Int) = {
+    val rng = new scala.util.Random(5)
+    val ws = Seq.fill(40) {
+      val w = Seq.fill(1 + rng.nextInt(6))("abc"(rng.nextInt(3))).mkString
+      (" " + w.mkString(" ") + " ", 1L + rng.nextInt(4))
+    }
+    val mirror = ws.map { case (w, n) =>
+      (w.map { case 'a' => 'b'; case 'b' => 'a'; case c => c }, n) }
+    spark.sparkContext.parallelize(ws ++ mirror, parts)
+  }
+
+  private val ranking = Ordering.by[(String, Long), (Long, String)](p => (-p._2, p._1))
+
+  for (parts <- Seq(1, 5)) {
+    test(s"BPE pair counts equal reduceByKey and the argmax is the ranking's first pair, through 8 merges (${onParts(parts)})") {
+      // the kernels read the dict as the driver collects it; the oracle
+      // counts and merges it where it lies, in `parts` partitions
+      var ws = words(parts)
+      var tiedRounds = 0
+      for (r <- 0 until 8) {
+        val counts = RoundKernels.pairCounts(ws.collect().toSeq)
+        val expected = ws.flatMap { case (s, wc) =>
+          val l = s.trim.split(" ")
+          (1 until l.length).map(i => (l(i - 1) + " " + l(i), wc))
+        }.reduceByKey(_ + _)
+        assert(counts == expected.collect().toMap, s"round $r")
+        val top = expected.takeOrdered(1)(ranking).headOption
+        assert(RoundKernels.topPair(counts) == top, s"round $r")
+        top.foreach { case (pair, n) =>
+          if (counts.values.count(_ == n) > 1) tiedRounds += 1
+          val (from, to) = RoundKernels.mergeOf(pair)
+          val merged = ws.collect().toSeq.map { case (s, wc) => (s.replace(from, to), wc) }
+          // the merge is SQL `replace`: non-overlapping, left to right
+          val sql = ws.toDF("spaced", "wc").select(replace(col("spaced"),
+              lit(s" $pair "), lit(s" ${pair.replace(" ", "")} ")), col("wc"))
+            .as[(String, Long)].collect().toSeq
+          assert(merged == sql, s"round $r")
+          ws = spark.sparkContext.parallelize(merged, parts)
+        }
+      }
+      assert(tiedRounds > 0, "no round's top count was tied")
+    }
+  }
+
   test("BPE argmax on count ties takes the smallest pair") {
     assert(RoundKernels.topPair(Map("b c" -> 4L, "a c" -> 4L, "c a" -> 4L, "a b" -> 3L))
       == Some("a c" -> 4L))
