@@ -1113,10 +1113,10 @@ object Similarity {
         val sub = e.select(col("vec_id"), col("label"),
             posexplode(expr("transform(sequence(0, 7), b -> slice(embedding, b*8 + 1, 8))")))
           .toDF("vec_id", "label", "sub_id", "sub_vec")
-        // encode distance: query/vector subspace vs. code centroid —
-        // per-dim residual quantized to BIGINT (order-free exact sums,
-        // same fixed-point discipline as emb_kmeans) so encoding, ADC
-        // ranking, and the reported distance all carry a DuckDB oracle
+        // ADC distance: query subvector vs. code centroid — per-dim
+        // residual quantized to BIGINT (RoundKernels.distQ's rule: order-
+        // free exact sums, the fixed-point discipline of emb_kmeans) so
+        // ADC ranking and the reported distance carry a DuckDB oracle
         val dist2 = aggregate(
           zip_with(col("sub_vec"), col("centroid"), (x, c) =>
             floor((x.cast(DoubleType) - c) * (x.cast(DoubleType) - c)
@@ -1150,12 +1150,15 @@ object Similarity {
           StructType(Seq(StructField("sub_id", IntegerType, nullable = false),
             StructField("code", IntegerType),
             StructField("centroid", ArrayType(DoubleType, containsNull = false)))))
-        val codes = sub.join(broadcast(codebook), Seq("sub_id"))
-          .withColumn("d2", dist2)
-          .groupBy(col("vec_id"), col("sub_id"))
-          .agg(min(struct(col("d2"), col("code"), col("label"))).as("m"))
-          .select(col("vec_id"), col("m.label").as("label"), col("sub_id"),
-            col("m.code").as("code"))
+        // encode: each subvector takes the nearest code of its subspace
+        // by the rule the rounds train with (RoundKernels.nearest over
+        // distQ; codes ascend, so a tie goes to the lowest code)
+        val codes = e.select(col("vec_id"), col("label"),
+            posexplode(array((0 until nSub).map { b =>
+              SimFunctions.nearestCentroid(slice(col("embedding"), b * 8 + 1, 8),
+                seed.map(_._1), cents.map(_.slice(b * 8, b * 8 + 8).toSeq).toSeq)("cid")
+            }: _*)))
+          .toDF("vec_id", "label", "sub_id", "code")
         // ADC: queries (vec_id < 10) score candidates by summed
         // query-subvector -> code-centroid distances
         val lut = sub.filter(col("vec_id") < 10)

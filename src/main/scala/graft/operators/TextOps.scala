@@ -3222,11 +3222,16 @@ object TextOps {
       build = (s, d) => {
         // r14: in-row bigrams (bigramsOf) replace the lead() window — no
         // token-stream Exchange+Sort (guide §2.4); same pair multiset
+        // docBg feeds the scoring join and, through c12, the three model
+        // frames. Its filter states what bigramsOf guarantees (no null
+        // word), so Catalyst infers no branch-specific isnotnull filter:
+        // all four uses plan the same subtree and share one exchange
+        // (ReusedExchange) over one corpus tokenize pass.
         val docBg = bigramsOf(docs(s, d), Seq("doc_id"))
+          .filter(col("w1").isNotNull && col("w2").isNotNull)
           .groupBy(col("doc_id"), col("w1"), col("w2"))
           .agg(count(lit(1)).as("cnt"))
-        val docBgCk = rebase(docBg)
-        val c12 = docBgCk.groupBy(col("w1"), col("w2"))
+        val c12 = docBg.groupBy(col("w1"), col("w2"))
           .agg(sum(col("cnt")).as("c12"))
         val c1 = c12.groupBy(col("w1")).agg(sum(col("c12")).as("c1"))
         val c2 = c12.groupBy(col("w2")).agg(sum(col("c12")).as("c2"))
@@ -3234,7 +3239,7 @@ object TextOps {
         val model = c12.join(c1, Seq("w1")).join(c2, Seq("w2"))
           .crossJoin(broadcast(nTot))
           .selectExpr("w1", "w2", LmK.nll)
-        docBgCk.join(model, Seq("w1", "w2"))
+        docBg.join(model, Seq("w1", "w2"))
           .groupBy(col("doc_id"))
           .agg(sum(col("cnt")).as("n_bigrams"),
             (sum((col("cnt").cast(DecimalType(18, 0)) * col("nll"))

@@ -1,18 +1,13 @@
 package graft.sources
 
-import java.io.RandomAccessFile
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Paths}
-import java.util.{Map => JMap}
-import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.read.InputPartition
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Minimal pure-JVM GeoTIFF (classic TIFF or BigTIFF, either byte
   * order, strip- OR tile-organized, float32 / signed-int16 / uint8
@@ -41,7 +36,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * - georeferencing from ModelTiepoint + ModelPixelScale evaluated
   *   per-cell as pure arithmetic (no trig, no CRS library).
   */
-object GeoTiff {
+object GeoTiff extends GridFormat {
   val SCHEMA: StructType = StructType(Seq(
     StructField("row", IntegerType, nullable = false),
     StructField("col", IntegerType, nullable = false),
@@ -933,20 +928,11 @@ object GeoTiff {
     * stores internal overviews).
     */
   def readMeta(path: String, overview: Int): Meta = {
-    val raf = new RandomAccessFile(path, "r")
+    val file = new RangeFile(path)
     try {
-      val ordBytes = new Array[Byte](2)
-      raf.seek(0); raf.readFully(ordBytes)
-      val order = (ordBytes(0).toChar, ordBytes(1).toChar) match {
-        case ('I', 'I') => ByteOrder.LITTLE_ENDIAN
-        case ('M', 'M') => ByteOrder.BIG_ENDIAN
-        case _ => throw new IllegalArgumentException("not a TIFF byte-order mark")
-      }
-      def readBytes(off: Long, n: Int): ByteBuffer = {
-        val a = new Array[Byte](n)
-        raf.seek(off); raf.readFully(a)
-        ByteBuffer.wrap(a).order(order)
-      }
+      val order = byteOrder(file)
+      def readBytes(off: Long, n: Int): ByteBuffer =
+        ByteBuffer.wrap(file.read(off, n)).order(order)
       val head = readBytes(2, 14)
       val magic = head.getShort() & 0xFFFF
       val big = magic match {
@@ -1093,21 +1079,25 @@ object GeoTiff {
       Meta(width, height, rps, tw, th, comp, pred,
         order == ByteOrder.BIG_ENDIAN, offs, cnts,
         originLon, originLat, sx, sy, bits, spp, planar)
-    } finally raf.close()
+    } finally file.close()
+  }
+
+  private def byteOrder(file: RangeFile): ByteOrder = {
+    val mark = file.read(0, 2)
+    (mark(0).toChar, mark(1).toChar) match {
+      case ('I', 'I') => ByteOrder.LITTLE_ENDIAN
+      case ('M', 'M') => ByteOrder.BIG_ENDIAN
+      case _ => throw new IllegalArgumentException("not a TIFF byte-order mark")
+    }
   }
 
   /** Number of IFD pages (1 + internal overviews). */
   def pageCount(path: String): Int = {
-    val raf = new RandomAccessFile(path, "r")
+    val file = new RangeFile(path)
     try {
-      def readBytes(off: Long, n: Int): ByteBuffer = {
-        val a = new Array[Byte](n)
-        raf.seek(off); raf.readFully(a)
-        val ord = new Array[Byte](2)
-        raf.seek(0); raf.readFully(ord)
-        ByteBuffer.wrap(a).order(
-          if (ord(0) == 'M') ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN)
-      }
+      val order = byteOrder(file)
+      def readBytes(off: Long, n: Int): ByteBuffer =
+        ByteBuffer.wrap(file.read(off, n)).order(order)
       val head = readBytes(2, 14)
       val big = (head.getShort() & 0xFFFF) == 43
       if (big) { head.getShort(); head.getShort() }
@@ -1123,42 +1113,91 @@ object GeoTiff {
         n += 1
       }
       n
-    } finally raf.close()
+    } finally file.close()
+  }
+
+  // ---- the grid format: one partition per strip or tile ------------
+
+  val name = "geotiff"
+  def schema: StructType = SCHEMA
+
+  /** File x chunk: a directory of rasters (DEM tiles, forecast grids)
+    * fans out to nFiles x nChunks partitions. Option `overview` = k
+    * reads the k-th overview page (default 0, full resolution).
+    */
+  def partitions(f: String, options: CaseInsensitiveStringMap): Seq[InputPartition] = {
+    val m = readMeta(f, options.getInt("overview", 0))
+    // planar files list each band's chunks consecutively (band 0's
+    // strips/tiles, then band 1's, ...); chunky files interleave all
+    // bands inside every chunk (bandIdx -1)
+    val planes = if (m.planar == 2) m.spp else 1
+    val perBand = m.chunkOffsets.length / planes
+    val tilesAcross = if (m.tiled) (m.width + m.tileW - 1) / m.tileW else 1
+    m.chunkOffsets.indices.map { i =>
+      val ib = i % perBand
+      val (startRow, startCol, rows, cols) =
+        if (m.tiled) ((ib / tilesAcross) * m.tileH, (ib % tilesAcross) * m.tileW,
+          m.tileH, m.tileW)
+        else (ib * m.rowsPerStrip, 0,
+          math.min(m.rowsPerStrip, m.height - ib * m.rowsPerStrip), m.width)
+      GeoTiffChunkPartition(f, m.chunkOffsets(i), m.chunkByteCounts(i),
+        startRow, startCol, rows, cols, m.width, m.height, m.compression,
+        m.predictor, m.bigEndian, m.originLon, m.originLat, m.sx, m.sy,
+        m.bits, m.spp, if (m.planar == 2) i / perBand else -1)
+    }
+  }
+
+  /** Decodes exactly one chunk's byte range (never the whole file),
+    * inflating LZW/DEFLATE chunks in-JDK; its cells are the in-image
+    * samples (tile padding beyond the image edge is skipped).
+    */
+  def cells(partition: InputPartition): Cells = {
+    val p = partition.asInstanceOf[GeoTiffChunkPartition]
+    // samples interleaved per pixel (chunky) or one band per chunk (planar)
+    val sampPerCell = if (p.bandIdx >= 0) 1 else p.spp
+    val rowSamples = p.chunkCols * sampPerCell
+    val nSamples = p.chunkRows * rowSamples
+    val undiff = decompress(p.compression,
+      SourcePaths.readRange(p.path, p.offset, p.byteCount),
+      nSamples * (p.bits / 8))
+    val raw =
+      if (p.predictor == 3) fpPredictDecode(undiff, rowSamples * 4, !p.bigEndian)
+      else if (p.predictor == 2 && p.bits == 16)
+        h16PredictDecode(undiff, rowSamples * 2, !p.bigEndian, sampPerCell)
+      else if (p.predictor == 2) h8PredictDecode(undiff, rowSamples, sampPerCell)
+      else undiff
+    val samples = ByteBuffer.wrap(raw).order(
+      if (p.bigEndian) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN)
+    val file = UTF8String.fromString(SourcePaths.baseName(p.path))
+    new Cells {
+      private var i = -1
+      private def row = p.startRow + i / sampPerCell / p.chunkCols
+      private def col = p.startCol + i / sampPerCell % p.chunkCols
+      override def next(): Boolean = {
+        i += 1
+        while (i < nSamples && (row >= p.imgHeight || col >= p.imgWidth)) i += 1
+        i < nSamples
+      }
+      override def column(name: String, at: Int): GenericInternalRow => Unit =
+        name match {
+          case "row" => _.setInt(at, row)
+          case "col" => _.setInt(at, col)
+          case "band" =>
+            _.setInt(at, if (p.bandIdx >= 0) p.bandIdx else i % sampPerCell)
+          case "lon" => _.setDouble(at, p.originLon + col * p.sx)
+          case "lat" => _.setDouble(at, p.originLat - row * p.sy)
+          case "value" =>
+            if (p.bits == 8) _.setDouble(at, (samples.get(i) & 0xFF).toDouble)
+            else if (p.bits == 16) _.setDouble(at, samples.getShort(i * 2).toDouble)
+            else _.setDouble(at, samples.getFloat(i * 4).toDouble)
+          case "file" => _.update(at, file)
+        }
+    }
   }
 }
 
 /** `spark.read.format("graft.sources.GeoTiffProvider").option("path", f)` */
-class GeoTiffProvider extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    GeoTiff.SCHEMA
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: JMap[String, String]): Table =
-    new GeoTiffTable(properties.asScala.toMap)
-}
-
-class GeoTiffTable(props: Map[String, String]) extends Table with SupportsRead {
-  private val path = props.getOrElse("path",
-    throw new IllegalArgumentException("geotiff source requires option 'path'"))
-  override def name(): String = s"geotiff($path)"
-  override def schema(): StructType = GeoTiff.SCHEMA
-  override def capabilities(): java.util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GeoTiffScanBuilder(path,
-      props.get("overview").map(_.toInt).getOrElse(0))
-}
-
-class GeoTiffScanBuilder(path: String, overview: Int) extends ScanBuilder
-    with SupportsPushDownRequiredColumns {
-  private var required: StructType = GeoTiff.SCHEMA
-  override def pruneColumns(requiredSchema: StructType): Unit = {
-    // keep declaration order; empty projection (count(*)) keeps `row`
-    val keep = requiredSchema.fieldNames.toSet
-    val pruned = StructType(GeoTiff.SCHEMA.fields.filter(f => keep(f.name)))
-    required = if (pruned.isEmpty) StructType(GeoTiff.SCHEMA.fields.take(1)) else pruned
-  }
-  override def build(): Scan = new GeoTiffScan(path, overview, required)
-}
+class GeoTiffProvider extends GridSource(GeoTiff)
 
 /** One strip or one tile: a contiguous byte range decoding to
   * chunkRows×chunkCols cells anchored at (startRow, startCol). Tile
@@ -1172,122 +1211,3 @@ final case class GeoTiffChunkPartition(path: String, offset: Long,
     originLat: Double, sx: Double, sy: Double, bits: Int = 32,
     spp: Int = 1, bandIdx: Int = -1) // bandIdx >= 0: planar chunk of ONE band
   extends InputPartition
-
-class GeoTiffScan(path: String, overview: Int, required: StructType)
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def planInputPartitions(): Array[InputPartition] =
-    // file x chunk: a directory of rasters (DEM tiles, forecast grids)
-    // fans out to nFiles x nChunks partitions
-    SourcePaths.resolve(path).flatMap { f =>
-      val m = GeoTiff.readMeta(f, overview)
-      val bigEndian = m.bigEndian
-      // planar files list each band's chunks consecutively (band 0's
-      // strips/tiles, then band 1's, ...); chunky files interleave all
-      // bands inside every chunk (bandIdx -1)
-      val planes = if (m.planar == 2) m.spp else 1
-      val perBand = m.chunkOffsets.length / planes
-      if (m.tiled) {
-        val tilesAcross = (m.width + m.tileW - 1) / m.tileW
-        m.chunkOffsets.indices.map { i =>
-          val ib = i % perBand
-          GeoTiffChunkPartition(f, m.chunkOffsets(i), m.chunkByteCounts(i),
-            (ib / tilesAcross) * m.tileH, (ib % tilesAcross) * m.tileW,
-            m.tileH, m.tileW, m.width, m.height, m.compression, m.predictor,
-            bigEndian, m.originLon, m.originLat, m.sx, m.sy, m.bits,
-            m.spp, if (m.planar == 2) i / perBand else -1)
-        }
-      } else {
-        m.chunkOffsets.indices.map { i =>
-          val ib = i % perBand
-          val startRow = ib * m.rowsPerStrip
-          GeoTiffChunkPartition(f, m.chunkOffsets(i), m.chunkByteCounts(i),
-            startRow, 0, math.min(m.rowsPerStrip, m.height - startRow),
-            m.width, m.width, m.height, m.compression, m.predictor,
-            bigEndian, m.originLon, m.originLat, m.sx, m.sy, m.bits,
-            m.spp, if (m.planar == 2) i / perBand else -1)
-        }
-      }
-    }.toArray
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GeoTiffReaderFactory(required)
-}
-
-class GeoTiffReaderFactory(required: StructType) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new GeoTiffChunkReader(partition.asInstanceOf[GeoTiffChunkPartition], required)
-}
-
-/** Reads exactly one chunk's byte range (seek + readFully — never the
-  * whole file), inflating LZW/DEFLATE chunks in-JDK, and emits its
-  * in-image cells (tile padding beyond the image edge is skipped).
-  */
-class GeoTiffChunkReader(p: GeoTiffChunkPartition, required: StructType)
-    extends PartitionReader[InternalRow] {
-  private val sampleBytes = p.bits / 8
-  // samples interleaved per pixel (chunky) or one band per chunk (planar)
-  private val sampPerCell = if (p.bandIdx >= 0) 1 else p.spp
-  private val cells: ByteBuffer = {
-    val raf = new RandomAccessFile(p.path, "r")
-    try {
-      val a = new Array[Byte](p.byteCount.toInt)
-      raf.seek(p.offset); raf.readFully(a)
-      val expected = p.chunkRows * p.chunkCols * sampPerCell * sampleBytes
-      val undiff = GeoTiff.decompress(p.compression, a, expected)
-      val rowSamples = p.chunkCols * sampPerCell
-      val raw =
-        if (p.predictor == 3)
-          GeoTiff.fpPredictDecode(undiff, rowSamples * 4, !p.bigEndian)
-        else if (p.predictor == 2 && p.bits == 16)
-          GeoTiff.h16PredictDecode(undiff, rowSamples * 2, !p.bigEndian,
-            sampPerCell)
-        else if (p.predictor == 2)
-          GeoTiff.h8PredictDecode(undiff, rowSamples, sampPerCell)
-        else undiff
-      ByteBuffer.wrap(raw).order(
-        if (p.bigEndian) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN)
-    } finally raf.close()
-  }
-  private val nSamples = p.chunkRows * p.chunkCols * sampPerCell
-  private var i = -1
-  private def inImage(j: Int): Boolean = {
-    val cell = j / sampPerCell
-    p.startRow + cell / p.chunkCols < p.imgHeight &&
-      p.startCol + cell % p.chunkCols < p.imgWidth
-  }
-  override def next(): Boolean = {
-    i += 1
-    while (i < nSamples && !inImage(i)) i += 1
-    i < nSamples
-  }
-  override def get(): InternalRow = {
-    val cell = i / sampPerCell
-    val band = if (p.bandIdx >= 0) p.bandIdx else i % sampPerCell
-    val row = p.startRow + cell / p.chunkCols
-    val colI = p.startCol + cell % p.chunkCols
-    val v =
-      if (p.bits == 8) (cells.get(i) & 0xFF).toDouble
-      else if (p.bits == 16) cells.getShort(i * 2).toDouble
-      else cells.getFloat(i * 4).toDouble
-    val out = new GenericInternalRow(required.size)
-    var f = 0
-    while (f < required.size) {
-      required.fields(f).name match {
-        case "row" => out.setInt(f, row)
-        case "col" => out.setInt(f, colI)
-        case "band" => out.setInt(f, band)
-        case "lon" => out.setDouble(f, p.originLon + colI * p.sx)
-        case "lat" => out.setDouble(f, p.originLat - row * p.sy)
-        case "value" => out.setDouble(f, v)
-        case "file" => out.update(f, fileName)
-      }
-      f += 1
-    }
-    out
-  }
-  private val fileName =
-    org.apache.spark.unsafe.types.UTF8String.fromString(
-      SourcePaths.baseName(p.path))
-  override def close(): Unit = ()
-}

@@ -1,19 +1,14 @@
 package graft.sources
 
-import java.io.RandomAccessFile
 import java.nio.ByteBuffer
 import java.nio.file.{Files, Paths}
-import java.util.{Map => JMap}
 import scala.collection.mutable.ArrayBuffer
-import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.read.InputPartition
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Minimal pure-JVM GRIB2 (WMO FM 92 edition 2) reader/writer — the
   * forecast-grid format the reference pulls from NOMADS and decodes
@@ -44,7 +39,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *   every emitted coordinate is pure arithmetic on the template's
   *   microdegree integers (no trig, no CRS library).
   */
-object Grib2 {
+object Grib2 extends GridFormat {
   val SCHEMA: StructType = StructType(Seq(
     StructField("msg", IntegerType, nullable = false),
     StructField("discipline", IntegerType, nullable = false),
@@ -530,26 +525,28 @@ object Grib2 {
   final case class MsgRange(index: Int, offset: Long, length: Long)
 
   /** Scan the file's section-0 headers for message byte ranges — metadata
-    * only, never the payloads.
+    * only, never the payloads. A message's total length must cover at
+    * least its 16-byte indicator and end inside the file: a corrupt one
+    * would otherwise stall the scan (0), walk it backwards (negative) or
+    * size a decode buffer past the end of the file.
     */
-  def scanMessages(path: String): Seq[MsgRange] = {
-    val raf = new RandomAccessFile(path, "r")
-    try {
-      val out = ArrayBuffer.empty[MsgRange]
-      var off = 0L
-      val head = new Array[Byte](16)
-      while (off + 16 <= raf.length()) {
-        raf.seek(off); raf.readFully(head)
-        val bb = ByteBuffer.wrap(head)
-        require(bb.getInt() == 0x47524942, s"not GRIB at offset $off") // "GRIB"
-        bb.getShort(); bb.get()
-        require(bb.get() == 2, "not GRIB edition 2")
-        val len = bb.getLong()
-        out += MsgRange(out.size, off, len)
-        off += len
-      }
-      out.toSeq
-    } finally raf.close()
+  def scanMessages(path: String): Seq[MsgRange] = RangeFile(path) { file =>
+    val out = ArrayBuffer.empty[MsgRange]
+    var off = 0L
+    while (off + 16 <= file.size) {
+      val bb = ByteBuffer.wrap(file.read(off, 16))
+      require(bb.getInt() == 0x47524942, s"not GRIB at offset $off") // "GRIB"
+      bb.getShort(); bb.get()
+      require(bb.get() == 2, "not GRIB edition 2")
+      val len = bb.getLong()
+      require(len >= 16 && len <= file.size - off,
+        s"GRIB2 message at offset $off of $path: total length $len is " +
+          "below the 16-byte indicator or past the end of the file " +
+          s"(size ${file.size})")
+      out += MsgRange(out.size, off, len)
+      off += len
+    }
+    out.toSeq
   }
 
   final case class Decoded(
@@ -580,11 +577,7 @@ object Grib2 {
 
   /** Decode one message given its byte range (sections 1..7). */
   def decodeMessage(path: String, offset: Long, length: Long): Decoded = {
-    val raf = new RandomAccessFile(path, "r")
-    val buf = try {
-      val a = new Array[Byte](length.toInt)
-      raf.seek(offset); raf.readFully(a); a
-    } finally raf.close()
+    val buf = SourcePaths.readRange(path, offset, length)
     val bb = ByteBuffer.wrap(buf)
     bb.position(6)
     val discipline = bb.get() & 0xFF
@@ -908,111 +901,63 @@ object Grib2 {
       ni, nj, la1, lo1, di, dj, present, vals, lccOpt, psOpt,
       statType, intervalEnd)
   }
+
+  // ---- the grid format: one partition per message --------------------
+
+  val name = "grib2"
+  def schema: StructType = SCHEMA
+
+  /** File x message: a directory of GRIB files (one per forecast run)
+    * fans out to nFiles x nMessages partitions.
+    */
+  def partitions(f: String, options: CaseInsensitiveStringMap): Seq[InputPartition] =
+    scanMessages(f).map(m => Grib2MsgPartition(f, m.index, m.offset, m.length))
+
+  /** Decodes exactly one message's byte range; its cells are the grid
+    * cells, row-major, and bitmap-missing cells carry a null `value`.
+    */
+  def cells(partition: InputPartition): Cells = {
+    val p = partition.asInstanceOf[Grib2MsgPartition]
+    val d = decodeMessage(p.path, p.offset, p.length)
+    val n = d.ni * d.nj
+    val file = UTF8String.fromString(SourcePaths.baseName(p.path))
+    new Cells {
+      private var i = -1
+      private var presentRank = 0 // index into packed values for present cells
+      private def row = i / d.ni
+      private def col = i % d.ni
+      override def next(): Boolean = {
+        if (i >= 0 && i < n && d.present(i)) presentRank += 1
+        i += 1
+        i < n
+      }
+      override def column(name: String, at: Int): GenericInternalRow => Unit =
+        name match {
+          case "msg" => _.setInt(at, p.msgIdx)
+          case "discipline" => _.setInt(at, d.discipline)
+          case "category" => _.setInt(at, d.category)
+          case "parameter" => _.setInt(at, d.parameter)
+          case "level_type" => _.setInt(at, d.levelType)
+          case "level" => _.setDouble(at, d.level)
+          case "ref_time" => _.setLong(at, d.refEpochSec)
+          case "forecast_hour" => _.setInt(at, d.forecastHour)
+          case "row" => _.setInt(at, row)
+          case "col" => _.setInt(at, col)
+          case "lat" => _.setDouble(at, d.latLonAt(row, col)._1)
+          case "lon" => _.setDouble(at, d.latLonAt(row, col)._2)
+          case "value" => r =>
+            if (d.present(i)) r.setDouble(at, d.values(presentRank)) else r.setNullAt(at)
+          case "file" => _.update(at, file)
+          case "stat_type" => r => d.statType.fold(r.setNullAt(at))(r.setInt(at, _))
+          case "interval_end" => r =>
+            d.intervalEnd.fold(r.setNullAt(at))(r.setLong(at, _))
+        }
+    }
+  }
 }
 
 /** `spark.read.format("graft.sources.Grib2Provider").option("path", f)` */
-class Grib2Provider extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    Grib2.SCHEMA
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: JMap[String, String]): Table =
-    new Grib2Table(properties.asScala.toMap)
-}
-
-class Grib2Table(props: Map[String, String]) extends Table with SupportsRead {
-  private val path = props.getOrElse("path",
-    throw new IllegalArgumentException("grib2 source requires option 'path'"))
-  override def name(): String = s"grib2($path)"
-  override def schema(): StructType = Grib2.SCHEMA
-  override def capabilities(): java.util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new Grib2ScanBuilder(path)
-}
-
-class Grib2ScanBuilder(path: String) extends ScanBuilder
-    with SupportsPushDownRequiredColumns {
-  private var required: StructType = Grib2.SCHEMA
-  override def pruneColumns(requiredSchema: StructType): Unit = {
-    val keep = requiredSchema.fieldNames.toSet
-    val pruned = StructType(Grib2.SCHEMA.fields.filter(f => keep(f.name)))
-    required = if (pruned.isEmpty) StructType(Grib2.SCHEMA.fields.take(1)) else pruned
-  }
-  override def build(): Scan = new Grib2Scan(path, required)
-}
+class Grib2Provider extends GridSource(Grib2)
 
 final case class Grib2MsgPartition(path: String, msgIdx: Int,
     offset: Long, length: Long) extends InputPartition
-
-class Grib2Scan(path: String, required: StructType) extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def planInputPartitions(): Array[InputPartition] =
-    // file x message: a directory of GRIB files (one per forecast run)
-    // fans out to nFiles x nMessages partitions
-    SourcePaths.resolve(path).flatMap { f =>
-      Grib2.scanMessages(f).map { m =>
-        Grib2MsgPartition(f, m.index, m.offset, m.length)
-      }
-    }.toArray
-  override def createReaderFactory(): PartitionReaderFactory =
-    new Grib2ReaderFactory(required)
-}
-
-class Grib2ReaderFactory(required: StructType) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new Grib2MsgReader(partition.asInstanceOf[Grib2MsgPartition], required)
-}
-
-/** Decodes exactly one message's byte range and emits its grid cells;
-  * bitmap-missing cells carry a null `value`.
-  */
-class Grib2MsgReader(p: Grib2MsgPartition, required: StructType)
-    extends PartitionReader[InternalRow] {
-  private val d = Grib2.decodeMessage(p.path, p.offset, p.length)
-  private val n = d.ni * d.nj
-  private var i = -1
-  private var presentRank = 0 // index into packed values for present cells
-
-  override def next(): Boolean = {
-    if (i >= 0 && i < n && d.present(i)) presentRank += 1
-    i += 1
-    i < n
-  }
-  override def get(): InternalRow = {
-    val row = i / d.ni
-    val colI = i % d.ni
-    val out = new GenericInternalRow(required.size)
-    var f = 0
-    while (f < required.size) {
-      required.fields(f).name match {
-        case "msg" => out.setInt(f, p.msgIdx)
-        case "discipline" => out.setInt(f, d.discipline)
-        case "category" => out.setInt(f, d.category)
-        case "parameter" => out.setInt(f, d.parameter)
-        case "level_type" => out.setInt(f, d.levelType)
-        case "level" => out.setDouble(f, d.level)
-        case "ref_time" => out.setLong(f, d.refEpochSec)
-        case "forecast_hour" => out.setInt(f, d.forecastHour)
-        case "row" => out.setInt(f, row)
-        case "col" => out.setInt(f, colI)
-        case "lat" => out.setDouble(f, d.latLonAt(row, colI)._1)
-        case "lon" => out.setDouble(f, d.latLonAt(row, colI)._2)
-        case "value" =>
-          if (d.present(i)) out.setDouble(f, d.values(presentRank))
-          else out.setNullAt(f)
-        case "file" => out.update(f, fileName)
-        case "stat_type" =>
-          d.statType.fold(out.setNullAt(f))(out.setInt(f, _))
-        case "interval_end" =>
-          d.intervalEnd.fold(out.setNullAt(f))(out.setLong(f, _))
-      }
-      f += 1
-    }
-    out
-  }
-  private val fileName =
-    org.apache.spark.unsafe.types.UTF8String.fromString(
-      SourcePaths.baseName(p.path))
-  override def close(): Unit = ()
-}

@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.io.RandomAccessFile
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
@@ -44,15 +43,8 @@ object Hdf5 {
     Array(0x89.toByte, 'H'.toByte, 'D'.toByte, 'F'.toByte,
       '\r'.toByte, '\n'.toByte, 0x1A.toByte, '\n'.toByte)
 
-  def isHdf5(path: String): Boolean = {
-    val raf = new RandomAccessFile(path, "r")
-    try {
-      if (raf.length() < 8) false
-      else {
-        val a = new Array[Byte](8); raf.readFully(a)
-        java.util.Arrays.equals(a, Signature)
-      }
-    } finally raf.close()
+  def isHdf5(path: String): Boolean = RangeFile(path) { file =>
+    file.size >= 8 && java.util.Arrays.equals(file.read(0, 8), Signature)
   }
 
   /** One chunk of a chunked dataset: logical start cell per dim + raw
@@ -68,8 +60,8 @@ object Hdf5 {
       contiguous: Option[(Long, Long)], compact: Option[Array[Byte]],
       chunkDims: Array[Int], chunks: Seq[ChunkRef],
       gzip: Boolean, shuffle: Boolean,
-      scale: Double, offset: Double, fill: Option[Double]) {
-    def nCells: Int = if (dims.isEmpty) 1 else dims.product
+      scale: Double, offset: Double, fill: Option[Double])
+    extends Netcdf.Variable {
     def elemSize: Int = Netcdf.typeSize(ncType)
   }
 
@@ -84,16 +76,9 @@ object Hdf5 {
     * touches data, and it always seeked.
     */
   private final class Reader(path: String) {
-    private val raf = new RandomAccessFile(path, "r")
-    val size: Long = raf.length()
-    def readRange(off: Long, n: Int): Array[Byte] = {
-      require(off >= 0 && n >= 0 && off + n.toLong <= size,
-        s"HDF5 read of $n bytes at offset $off outside file (size $size) " +
-          "— corrupt or truncated metadata pointer/length")
-      val a = new Array[Byte](n)
-      raf.seek(off); raf.readFully(a)
-      a
-    }
+    private val file = new RangeFile(path)
+    val size: Long = file.size
+    def readRange(off: Long, n: Int): Array[Byte] = file.read(off, n)
     /** A little-endian window at `off`; default 64 KiB (clamped to EOF)
       * covers every metadata record this subset walks. A record that
       * overruns its window surfaces as BufferUnderflow INSIDE the
@@ -105,7 +90,7 @@ object Hdf5 {
     def bb(off: Long, len: Long = 65536L): ByteBuffer =
       ByteBuffer.wrap(readRange(off, math.min(len, size - off).toInt))
         .order(ByteOrder.LITTLE_ENDIAN)
-    def close(): Unit = raf.close()
+    def close(): Unit = file.close()
   }
 
   /** Jenkins lookup3 `hashlittle` — the checksum every version-2+ HDF5
@@ -1001,11 +986,8 @@ object Hdf5 {
     * edge-clip into a row-major cell array of raw (packed) values.
     */
   def readVarData(path: String, v: H5Var): Array[Double] = {
-    val raf = new RandomAccessFile(path, "r")
+    val file = new RangeFile(path)
     try {
-      def readRange(addr: Long, n: Int): Array[Byte] = {
-        val a = new Array[Byte](n); raf.seek(addr); raf.readFully(a); a
-      }
       val order = if (v.littleEndian) ByteOrder.LITTLE_ENDIAN else ByteOrder.BIG_ENDIAN
       def cellAt(b: ByteBuffer, idx: Int): Double = v.ncType match {
         case Netcdf.NcByte =>
@@ -1024,7 +1006,7 @@ object Hdf5 {
           val b = ByteBuffer.wrap(data).order(order)
           (0 until v.nCells).foreach(i => out(i) = cellAt(b, i))
         case (_, Some((addr, size))) =>
-          val b = ByteBuffer.wrap(readRange(addr, size.toInt)).order(order)
+          val b = ByteBuffer.wrap(file.read(addr, size)).order(order)
           (0 until v.nCells).foreach(i => out(i) = cellAt(b, i))
         case _ =>
           val (d0, d1) =
@@ -1035,7 +1017,7 @@ object Hdf5 {
               if (v.chunkDims.length >= 2) v.chunkDims(1) else 1)
           val rawChunk = c0 * c1 * v.elemSize
           v.chunks.foreach { ch =>
-            var data = readRange(ch.addr, ch.size)
+            var data = file.read(ch.addr, ch.size)
             if (v.gzip) data = GeoTiff.zlibInflate(data, rawChunk)
             if (v.shuffle) data = unshuffle(data, v.elemSize)
             require(data.length == rawChunk,
@@ -1057,7 +1039,7 @@ object Hdf5 {
           }
       }
       out
-    } finally raf.close()
+    } finally file.close()
   }
 
   private def deflate(raw: Array[Byte]): Array[Byte] = {

@@ -1,20 +1,14 @@
 package graft.sources
 
-import java.io.RandomAccessFile
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
-import java.util.{Map => JMap}
-import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.read.InputPartition
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Minimal pure-JVM NetCDF reader for BOTH container formats the
   * reference's feeds use: classic (CDF-1 `CDF\x01` / CDF-2 `CDF\x02`,
@@ -43,7 +37,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *   task launches (the shard-prune analog of ReplayFeedProvider);
   * - column pruning via SupportsPushDownRequiredColumns.
   */
-object Netcdf {
+object Netcdf extends GridFormat {
   val SCHEMA: StructType = StructType(Seq(
     StructField("var", StringType, nullable = false),
     StructField("i", IntegerType, nullable = false),   // first-dim index
@@ -68,11 +62,23 @@ object Netcdf {
 
   private def pad4(n: Int): Int = (n + 3) & ~3
 
-  final case class VarMeta(name: String, dimSizes: Array[Int], ncType: Int,
-      begin: Long, scale: Double, offset: Double, fill: Option[Double]) {
-    def nCells: Int = if (dimSizes.isEmpty) 1 else dimSizes.product
-    def d1: Int = if (dimSizes.length >= 2) dimSizes(1) else 1
+  /** A variable as the cell reader sees it, in either container: name,
+    * shape (≤ 2 dims), NetCDF type id and packing attributes.
+    */
+  trait Variable {
+    def name: String
+    def dims: Array[Int]
+    def ncType: Int
+    def scale: Double
+    def offset: Double
+    def fill: Option[Double]
+    def nCells: Int = if (dims.isEmpty) 1 else dims.product
   }
+
+  /** A classic-file variable; its cells start at byte `begin`. */
+  final case class VarMeta(name: String, dims: Array[Int], ncType: Int,
+      begin: Long, scale: Double, offset: Double, fill: Option[Double])
+    extends Variable
 
   /** Parse the classic header: dimension list, (skipped) global
     * attributes, and the variable list with each variable's
@@ -235,168 +241,90 @@ object Netcdf {
     }
     Files.write(Paths.get(path), java.util.Arrays.copyOf(bb.array(), bb.position()))
   }
-}
 
-/** `spark.read.format("graft.sources.NetcdfProvider").option("path", f)` */
-class NetcdfProvider extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    Netcdf.SCHEMA
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: JMap[String, String]): Table =
-    new NetcdfTable(properties.asScala.toMap)
-}
+  // ---- the grid format: one partition per variable --------------------
 
-class NetcdfTable(props: Map[String, String]) extends Table with SupportsRead {
-  private val path = props.getOrElse("path",
-    throw new IllegalArgumentException("netcdf source requires option 'path'"))
-  override def name(): String = s"netcdf($path)"
-  override def schema(): StructType = Netcdf.SCHEMA
-  override def capabilities(): java.util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new NetcdfScanBuilder(path, Option(options.get("vars")))
-}
+  val name = "netcdf"
+  def schema: StructType = SCHEMA
 
-class NetcdfScanBuilder(path: String, vars: Option[String]) extends ScanBuilder
-    with SupportsPushDownRequiredColumns {
-  private var required: StructType = Netcdf.SCHEMA
-  override def pruneColumns(requiredSchema: StructType): Unit = {
-    val keep = requiredSchema.fieldNames.toSet
-    val pruned = StructType(Netcdf.SCHEMA.fields.filter(f => keep(f.name)))
-    required = if (pruned.isEmpty) StructType(Netcdf.SCHEMA.fields.take(1)) else pruned
+  /** File x variable: a directory of product files (one per observation
+    * slot) fans out to nFiles x nVars partitions, dispatched by magic to
+    * the classic header walk or to [[Hdf5]]. Option `vars` (a comma list)
+    * keeps only the named variables.
+    */
+  def partitions(f: String, options: CaseInsensitiveStringMap): Seq[InputPartition] = {
+    val want = Option(options.get("vars")).map(_.split(",").map(_.trim).toSet)
+    val vars: Seq[Variable] =
+      if (Hdf5.isHdf5(f)) Hdf5.readVars(f)
+      else readMeta(f).filter(_.ncType != NcChar) // char vars are metadata text
+    vars.filter(v => want.forall(_.contains(v.name))).map(NetcdfVarPartition(f, _))
   }
-  override def build(): Scan = new NetcdfScan(path, vars, required)
+
+  /** One variable's cells, row-major, from either container: the packed
+    * integer `raw` plus the scale/offset-unpacked physical `value`, with
+    * `_FillValue` cells nulled (the get_grid_point_values semantics at
+    * odin_goesr/src/lib.rs:532-538) — a GOES-R L2 query is identical
+    * against a classic or an HDF5 file.
+    */
+  def cells(partition: InputPartition): Cells = {
+    val p = partition.asInstanceOf[NetcdfVarPartition]
+    val v = p.v
+    val raw: Int => Double = v match {
+      case c: VarMeta => classicRaw(p.path, c)
+      case h: Hdf5.H5Var =>
+        val decoded = Hdf5.readVarData(p.path, h)
+        decoded(_)
+    }
+    val nCells = v.nCells
+    val d1 = if (v.dims.length >= 2) v.dims(1) else 1
+    val isInt = v.ncType == NcByte || v.ncType == NcShort || v.ncType == NcInt
+    val fill = v.fill.getOrElse(Double.NaN) // NaN equals no raw value
+    val varName = UTF8String.fromString(v.name)
+    val file = UTF8String.fromString(SourcePaths.baseName(p.path))
+    new Cells {
+      private var idx = -1
+      override def next(): Boolean = { idx += 1; idx < nCells }
+      override def column(name: String, at: Int): GenericInternalRow => Unit =
+        name match {
+          case "var" => _.update(at, varName)
+          case "i" => _.setInt(at, idx / d1)
+          case "j" => _.setInt(at, idx % d1)
+          case "raw" =>
+            if (isInt) _.setLong(at, raw(idx).toLong) else _.setNullAt(at)
+          case "value" => r =>
+            val x = raw(idx)
+            if (x == fill) r.setNullAt(at) else r.setDouble(at, x * v.scale + v.offset)
+          case "file" => _.update(at, file)
+        }
+    }
+  }
+
+  /** A classic variable's raw values, read from its byte range only
+    * (`begin`, nCells × type size) and kept as stored: big-endian bytes
+    * that each cell reads as it goes.
+    */
+  private def classicRaw(path: String, v: VarMeta): Int => Double = {
+    val b = ByteBuffer.wrap(
+      SourcePaths.readRange(path, v.begin, v.nCells.toLong * typeSize(v.ncType)))
+    v.ncType match {
+      case NcByte => i => b.get(i).toDouble
+      case NcShort => i => b.getShort(i * 2).toDouble
+      case NcInt => i => b.getInt(i * 4).toDouble
+      case NcFloat => i => b.getFloat(i * 4).toDouble
+      case NcDouble => i => b.getDouble(i * 8)
+    }
+  }
 }
 
-final case class NetcdfVarPartition(path: String, name: String,
-    dimSizes: Array[Int], ncType: Int, begin: Long,
-    scale: Double, offset: Double, fill: Option[Double]) extends InputPartition
-
-/** HDF5-backed variable (netCDF-4): carries the full chunk map so the
-  * reader seeks straight to its variable's chunks.
+/** `spark.read.format("graft.sources.NetcdfProvider").option("path", f)`,
+  * optionally `.option("vars", "Mask,Power")` to read only those
+  * variables.
   */
-final case class NetcdfH5Partition(path: String, v: Hdf5.H5Var)
+class NetcdfProvider extends GridSource(Netcdf)
+
+/** One variable of a product file: a classic [[Netcdf.VarMeta]] or a
+  * netCDF-4 [[Hdf5.H5Var]], which carries its chunk map so the reader
+  * seeks straight to its variable's chunks.
+  */
+final case class NetcdfVarPartition(path: String, v: Netcdf.Variable)
   extends InputPartition
-
-class NetcdfScan(path: String, vars: Option[String], required: StructType)
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def planInputPartitions(): Array[InputPartition] = {
-    val want = vars.map(_.split(",").map(_.trim).toSet)
-    // file x variable is the parallel unit: a directory of product files
-    // (one per observation slot) fans out to nFiles x nVars partitions
-    SourcePaths.resolve(path).flatMap { f =>
-      if (Hdf5.isHdf5(f))
-        Hdf5.readVars(f)
-          .filter(v => want.forall(_.contains(v.name)))
-          .map(v => NetcdfH5Partition(f, v): InputPartition)
-      else
-        Netcdf.readMeta(f)
-          .filter(v => v.ncType != Netcdf.NcChar) // char vars are metadata text
-          .filter(v => want.forall(_.contains(v.name)))
-          .map(v => NetcdfVarPartition(f, v.name, v.dimSizes, v.ncType,
-            v.begin, v.scale, v.offset, v.fill): InputPartition)
-    }.toArray
-  }
-  override def createReaderFactory(): PartitionReaderFactory =
-    new NetcdfReaderFactory(required)
-}
-
-class NetcdfReaderFactory(required: StructType) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    partition match {
-      case p: NetcdfVarPartition => new NetcdfVarReader(p, required)
-      case p: NetcdfH5Partition => new NetcdfH5VarReader(p, required)
-    }
-}
-
-/** Emits one HDF5 variable's cells with the same (var, i, j, raw,
-  * value) surface and scale/offset/_FillValue semantics as the classic
-  * reader — a GOES-R L2 query is identical against either container.
-  */
-class NetcdfH5VarReader(p: NetcdfH5Partition, required: StructType)
-    extends PartitionReader[InternalRow] {
-  private val v = p.v
-  private val raw: Array[Double] = Hdf5.readVarData(p.path, v)
-  private val d1 = if (v.dims.length >= 2) v.dims(1) else 1
-  private val isInt = v.ncType == Netcdf.NcByte ||
-    v.ncType == Netcdf.NcShort || v.ncType == Netcdf.NcInt
-  private var idx = -1
-  override def next(): Boolean = { idx += 1; idx < raw.length }
-  override def get(): InternalRow = {
-    val rawD = raw(idx)
-    val isFill = v.fill.exists(_ == rawD)
-    val out = new GenericInternalRow(required.size)
-    var f = 0
-    while (f < required.size) {
-      required.fields(f).name match {
-        case "var" => out.update(f, UTF8String.fromString(v.name))
-        case "i" => out.setInt(f, idx / d1)
-        case "j" => out.setInt(f, idx % d1)
-        case "raw" =>
-          if (isInt) out.setLong(f, rawD.toLong) else out.setNullAt(f)
-        case "value" =>
-          if (isFill) out.setNullAt(f)
-          else out.setDouble(f, rawD * v.scale + v.offset)
-        case "file" => out.update(f, fileName)
-      }
-      f += 1
-    }
-    out
-  }
-  private val fileName = UTF8String.fromString(SourcePaths.baseName(p.path))
-  override def close(): Unit = ()
-}
-
-/** Reads exactly one variable's byte range (seek + readFully) and emits
-  * its cells — packed integer plus the scale/offset-unpacked physical
-  * value, with `_FillValue` cells nulled (the get_grid_point_values
-  * semantics at odin_goesr/src/lib.rs:532-538).
-  */
-class NetcdfVarReader(p: NetcdfVarPartition, required: StructType)
-    extends PartitionReader[InternalRow] {
-  private val nCells = if (p.dimSizes.isEmpty) 1 else p.dimSizes.product
-  private val d1 = if (p.dimSizes.length >= 2) p.dimSizes(1) else 1
-  private val buf: ByteBuffer = {
-    val raf = new RandomAccessFile(p.path, "r")
-    try {
-      val a = new Array[Byte](nCells * Netcdf.typeSize(p.ncType))
-      raf.seek(p.begin); raf.readFully(a)
-      ByteBuffer.wrap(a).order(ByteOrder.BIG_ENDIAN)
-    } finally raf.close()
-  }
-  private var idx = -1
-  override def next(): Boolean = { idx += 1; idx < nCells }
-  override def get(): InternalRow = {
-    val rawD: Double = p.ncType match {
-      case Netcdf.NcByte => buf.get(idx).toDouble
-      case Netcdf.NcShort => buf.getShort(idx * 2).toDouble
-      case Netcdf.NcInt => buf.getInt(idx * 4).toDouble
-      case Netcdf.NcFloat => buf.getFloat(idx * 4).toDouble
-      case Netcdf.NcDouble => buf.getDouble(idx * 8)
-    }
-    val isFill = p.fill.exists(_ == rawD)
-    val isInt = p.ncType == Netcdf.NcByte || p.ncType == Netcdf.NcShort ||
-      p.ncType == Netcdf.NcInt
-    val out = new GenericInternalRow(required.size)
-    var f = 0
-    while (f < required.size) {
-      required.fields(f).name match {
-        case "var" => out.update(f, UTF8String.fromString(p.name))
-        case "i" => out.setInt(f, idx / d1)
-        case "j" => out.setInt(f, idx % d1)
-        case "raw" =>
-          if (isInt) out.setLong(f, rawD.toLong) else out.setNullAt(f)
-        case "value" =>
-          if (isFill) out.setNullAt(f)
-          else out.setDouble(f, rawD * p.scale + p.offset)
-        case "file" => out.update(f, fileName)
-      }
-      f += 1
-    }
-    out
-  }
-  private val fileName = UTF8String.fromString(SourcePaths.baseName(p.path))
-  override def close(): Unit = ()
-}

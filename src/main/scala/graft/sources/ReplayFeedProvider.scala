@@ -3,11 +3,10 @@ package graft.sources
 import java.util.{Map => JMap}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types._
@@ -54,8 +53,28 @@ object ReplayFeed {
   }
 }
 
+/** The feed's shape; its cells are one (day, station) shard's events. */
 final case class ReplayFeedConf(start: Long, days: Int, stations: Int,
-    eventsPerDay: Int)
+    eventsPerDay: Int) extends CellSource {
+  override def cells(partition: InputPartition): Cells = {
+    val p = partition.asInstanceOf[ReplayFeedPartition]
+    val shard = p.day.toLong * stations + p.station
+    new Cells {
+      private var i = -1
+      private def eventId = shard * eventsPerDay + i
+      override def next(): Boolean = { i += 1; i < eventsPerDay }
+      override def column(name: String, at: Int): GenericInternalRow => Unit =
+        name match {
+          case "event_id" => _.setLong(at, eventId)
+          case "ts_sec" =>
+            _.setLong(at, start + p.day.toLong * 86400 + (i.toLong * 86400) / eventsPerDay)
+          case "station" => _.setInt(at, p.station)
+          case "value" => _.setDouble(at,
+            (ReplayFeed.splitmix64(eventId) >>> 11).toDouble / (1L << 53).toDouble * 200.0)
+        }
+    }
+  }
+}
 
 class ReplayFeedTable(props: Map[String, String]) extends Table with SupportsRead {
   private val conf = ReplayFeedConf(
@@ -133,7 +152,7 @@ class ReplayFeedScan(conf: ReplayFeedConf, pushed: Array[Filter],
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new ReplayFeedReaderFactory(conf, required.fieldNames)
+    new CellReaderFactory(conf, required.fieldNames)
 
   /** Streaming surface: the same archive replayed through Structured
     * Streaming — ODIN's live_importer shape (archived feed re-delivered in
@@ -165,39 +184,7 @@ class ReplayFeedMicroBatchStream(conf: ReplayFeedConf, cols: Array[String])
       yield ReplayFeedPartition(day, st): InputPartition).toArray
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    new ReplayFeedReaderFactory(conf, cols)
+    new CellReaderFactory(conf, cols)
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
-}
-
-class ReplayFeedReaderFactory(conf: ReplayFeedConf, cols: Array[String])
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[ReplayFeedPartition]
-    new PartitionReader[InternalRow] {
-      private var i = -1
-      private val row = new GenericInternalRow(cols.length)
-      override def next(): Boolean = { i += 1; i < conf.eventsPerDay }
-      override def get(): InternalRow = {
-        val shard = (p.day.toLong * conf.stations + p.station)
-        val eventId = shard * conf.eventsPerDay + i
-        val tsSec = conf.start + p.day.toLong * 86400 +
-          (i.toLong * 86400) / conf.eventsPerDay
-        val value = (ReplayFeed.splitmix64(eventId) >>> 11).toDouble /
-          (1L << 53).toDouble * 200.0
-        var c = 0
-        while (c < cols.length) {
-          cols(c) match {
-            case "event_id" => row.update(c, eventId)
-            case "ts_sec" => row.update(c, tsSec)
-            case "station" => row.update(c, p.station)
-            case "value" => row.update(c, value)
-          }
-          c += 1
-        }
-        row
-      }
-      override def close(): Unit = ()
-    }
-  }
 }

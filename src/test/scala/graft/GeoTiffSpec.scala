@@ -424,4 +424,31 @@ class GeoTiffSpec extends SparkSpecBase {
     assert(raster.select("band").distinct().collect().map(_.getInt(0)).toSeq
       == Seq(0))
   }
+
+  test("a strip byte count past the end of the file fails by file and range") {
+    // a corrupt header: the last StripByteCounts entry (tag 279) claims
+    // far more bytes than the file holds; the read must refuse before it
+    // allocates or seeks
+    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
+    val bb = java.nio.ByteBuffer.wrap(bytes)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    val ifd = bb.getInt(4)
+    val n = bb.getShort(ifd) & 0xFFFF
+    val e = ifd + 2 + (0 until n).find { k =>
+      (bb.getShort(ifd + 2 + k * 12) & 0xFFFF) == 279
+    }.get * 12
+    val (typ, count, arr) =
+      (bb.getShort(e + 2) & 0xFFFF, bb.getInt(e + 4), bb.getInt(e + 8))
+    assert(count == (h + 15) / 16 && (typ == 3 || typ == 4))
+    if (typ == 3) bb.putShort(arr + (count - 1) * 2, 0xFFFF.toShort)
+    else bb.putInt(arr + (count - 1) * 4, 1 << 30)
+    val f = java.nio.file.Files.createTempDirectory("gtiffbad").resolve("bad.tif")
+    java.nio.file.Files.write(f, bytes)
+    val ex = intercept[Exception] {
+      spark.read.format("graft.sources.GeoTiffProvider")
+        .option("path", f.toString).load().collect()
+    }
+    assert(ex.getMessage.contains("outside file") &&
+      ex.getMessage.contains("bad.tif"), ex.getMessage)
+  }
 }

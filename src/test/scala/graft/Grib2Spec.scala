@@ -1,7 +1,12 @@
 package graft
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+
 import graft.sources.Grib2
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+import org.scalatest.time.SpanSugar._
 
 /** GRIB2 source spec — the odin_hrrr/odin_wind ingest path: HRRR surface
   * fields (u10/v10 wind components) arrive as GRIB2 messages
@@ -10,7 +15,7 @@ import org.apache.spark.sql.functions._
   * contour products. Here the decode is the pure-JVM Grib2Provider and
   * the products are declarative Spark plans over its output.
   */
-class Grib2Spec extends SparkSpecBase {
+class Grib2Spec extends SparkSpecBase with TimeLimits {
 
   private val ni = 40 // lon points
   private val nj = 25 // lat points
@@ -510,5 +515,35 @@ class Grib2Spec extends SparkSpecBase {
       .resolve("bm.grib2")
     java.nio.file.Files.write(bmOut, spliced)
     assert(readErr(bmOut.toString).contains("section-6 bitmap unsupported"))
+  }
+
+  test("a corrupt section-0 length fails planning by file and offset") {
+    // octets 9-16 of a message carry its total length; 0 would stall the
+    // scan, a negative one walk it backwards, one past the end of the
+    // file size a decode buffer beyond the data. The second message's
+    // length is the one corrupted.
+    val orig = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
+    val second = Grib2.scanMessages(path)(1).offset.toInt
+    implicit val signaler: Signaler = ThreadSignaler
+    Seq(0L, -16L, 15L, orig.length.toLong).foreach { len =>
+      val b = orig.clone()
+      java.nio.ByteBuffer.wrap(b).putLong(second + 8, len)
+      val f = java.nio.file.Files.createTempDirectory("gribhdr").resolve("hdr.grib2")
+      java.nio.file.Files.write(f, b)
+      // the scan runs on its own thread, so a scan that never ends fails
+      // this test at the time limit instead of hanging the suite
+      val scan = Future(Grib2.scanMessages(f.toString))(ExecutionContext.global)
+      val e = intercept[IllegalArgumentException] {
+        failAfter(30.seconds)(Await.result(scan, Duration.Inf))
+      }
+      assert(e.getMessage.contains(s"offset $second of $f") &&
+        e.getMessage.contains(s"total length $len"), e.getMessage)
+      // planning a read of the file surfaces the same error
+      val plan = intercept[IllegalArgumentException] {
+        spark.read.format("graft.sources.Grib2Provider")
+          .option("path", f.toString).load().rdd.getNumPartitions
+      }
+      assert(plan.getMessage == e.getMessage)
+    }
   }
 }

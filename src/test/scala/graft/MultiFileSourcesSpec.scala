@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import graft.sources.{GeoTiff, Grib2, Hdf5, Netcdf, SourcePaths}
 
@@ -8,7 +9,9 @@ import graft.sources.{GeoTiff, Grib2, Hdf5, Netcdf, SourcePaths}
   * sweep reads a DIRECTORY of product files — the file is the top-level
   * parallel unit, multiplied by each source's per-file partitioning.
   * `path` accepts files, directories, globs, and comma lists; every row
-  * carries its product-file basename in the `file` column.
+  * carries its product-file basename in the `file` column. The last
+  * tests hold every format to the contract of the shared `GridSource`
+  * frame: pruning, the required `path` and the reused reader row.
   */
 class MultiFileSourcesSpec extends SparkSpecBase {
 
@@ -86,5 +89,69 @@ class MultiFileSourcesSpec extends SparkSpecBase {
       .collect().map(r => (r.getString(0), r.getInt(1), r.getInt(2))).toSet
     assert(byFile == Set(("run06.grib2", 0, 1), ("run06.grib2", 1, 2),
       ("run12.grib2", 0, 3)))
+  }
+
+  // ---- the GridSource frame, over all three file formats ----
+
+  /** One small file per format, by provider class name. */
+  private lazy val fixtures: Seq[(String, String)] = {
+    val dir = Files.createTempDirectory("gridframe").toFile.getAbsolutePath
+    GeoTiff.write(s"$dir/dem.tif", 9, 7, Array.tabulate(63)(i => (i % 13).toFloat),
+      originLon = -120.0, originLat = 45.0, sx = 0.01, sy = 0.01,
+      rowsPerStrip = 3)
+    def field(fh: Int) = Grib2.Field(
+      discipline = 0, category = 2, parameter = 2, levelType = 103, level = 10,
+      year = 2026, month = 8, day = 12, hour = 6, forecastHour = fh,
+      ni = 6, nj = 4, la1Deg = 44.0, lo1Deg = -124.0, diDeg = 0.1,
+      djDeg = 0.1, values = Array.tabulate(24)(i => (i % 5).toDouble))
+    Grib2.write(s"$dir/run.grib2", Seq(field(1), field(2)))
+    Netcdf.write(s"$dir/slot.nc", Seq("y" -> 2, "x" -> 3), Seq(
+      Netcdf.NcVar("Power", Netcdf.NcShort, Seq(0, 1),
+        Array[Double](1, 2, 3, 4, 5, 6), scale = Some(0.5)),
+      Netcdf.NcVar("Temp", Netcdf.NcFloat, Seq(0, 1),
+        Array[Double](7, 8, 9, 10, 11, 12))))
+    Seq("graft.sources.GeoTiffProvider" -> s"$dir/dem.tif",
+      "graft.sources.Grib2Provider" -> s"$dir/run.grib2",
+      "graft.sources.NetcdfProvider" -> s"$dir/slot.nc")
+  }
+  private val rowCounts = Map("graft.sources.GeoTiffProvider" -> 63L,
+    "graft.sources.Grib2Provider" -> 48L, "graft.sources.NetcdfProvider" -> 12L)
+
+  private def load(provider: String, path: String) =
+    spark.read.format(provider).option("path", path).load()
+
+  test("frame: count() over an empty projection equals the row count") {
+    fixtures.foreach { case (provider, path) =>
+      assert(load(provider, path).count() == rowCounts(provider), provider)
+    }
+  }
+
+  test("frame: a select(last, first) projection equals the full read's columns") {
+    fixtures.foreach { case (provider, path) =>
+      val df = load(provider, path)
+      val names = df.columns
+      val full = df.collect().map(r => Row(r.get(names.length - 1), r.get(0))).toSeq
+      val pruned = df.select(names.last, names.head)
+      assert(pruned.queryExecution.optimizedPlan.output.map(_.name)
+        == Seq(names.last, names.head), provider)
+      assert(pruned.collect().toSeq == full, provider)
+    }
+  }
+
+  test("frame: a missing path fails with an error that names the format") {
+    Seq("graft.sources.GeoTiffProvider" -> "geotiff",
+      "graft.sources.Grib2Provider" -> "grib2",
+      "graft.sources.NetcdfProvider" -> "netcdf").foreach { case (provider, name) =>
+      val e = intercept[IllegalArgumentException](spark.read.format(provider).load())
+      assert(e.getMessage == s"$name source requires option 'path'", e.getMessage)
+    }
+  }
+
+  test("frame: a collected raw scan holds distinct rows (the reused row is copied)") {
+    fixtures.foreach { case (provider, path) =>
+      val rows = load(provider, path).collect()
+      assert(rows.length == rowCounts(provider), provider)
+      assert(rows.distinct.length == rows.length, provider)
+    }
   }
 }

@@ -87,4 +87,16 @@ class NetcdfSpec extends SparkSpecBase {
       Seq((0, 0), (0, 2), (1, 1), (1, 3), (2, 2)))
     assert(hot.head.getAs[Double]("frp") == 102.0)
   }
+
+  test("a file truncated inside a variable fails by file and range") {
+    // the header still places the last variable's cells past the new end
+    // of the file; the read must refuse with a named error, not an EOF
+    val path = fixture()
+    val bytes = Files.readAllBytes(java.nio.file.Paths.get(path))
+    val cut = java.nio.file.Paths.get(path).resolveSibling("cut.nc")
+    Files.write(cut, java.util.Arrays.copyOf(bytes, bytes.length - 4))
+    val ex = intercept[Exception](read(cut.toString).collect())
+    assert(ex.getMessage.contains("outside file") &&
+      ex.getMessage.contains("cut.nc"), ex.getMessage)
+  }
 }

@@ -1,7 +1,8 @@
 package graft
 
 import graft.operators.TextOps
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftops.GraftInternal
 import org.apache.spark.sql.internal.SQLConf
@@ -17,7 +18,8 @@ import org.apache.spark.sql.internal.SQLConf
   * emb_kcenter_sample, emb_pca_power, BPE) and the loops that rebase
   * their state each round (logistic regression, streamline advection)
   * are held to the same plan bound, and their builders to a fixed number
-  * of jobs and stages a round.
+  * of jobs and stages a round. doc_ngram_lm_interp, which is not a loop,
+  * runs no builder job at all.
   */
 class PlanSizeSpec extends SparkSpecBase {
 
@@ -108,6 +110,25 @@ class PlanSizeSpec extends SparkSpecBase {
         ("geo_wind_streamline", 6, 3)))
       assertLoopBounded(name, rounds, perRound * rounds, perRound * rounds,
         unpersisted = false)
+  }
+
+  test("doc_ngram_lm_interp: no builder job, no persisted RDD, one tokenize pass") {
+    // not a loop, so nothing to rebase: its per-doc bigram counts feed the
+    // scoring join and the three model frames through reused exchanges
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val n = JobCount.of(spark)(run("doc_ngram_lm_interp"))
+    assert(n.jobs == 0, s"${n.jobs} builder jobs")
+    run("doc_ngram_lm_interp").collect()
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+    withAqeOff {
+      val plan = run("doc_ngram_lm_interp").queryExecution.executedPlan
+      val scans = plan.collect { case s: FileSourceScanExec => s }
+      val reused = plan.collect { case r: ReusedExchangeExec => r }
+      assert(scans.size == 1, s"${scans.size} documents scans:\n$plan")
+      // docBg's exchange under the model, c12's under c1, c2 and the total
+      assert(reused.size == 4, s"${reused.size} reused exchanges:\n$plan")
+    }
   }
 
   test("rebase keeps output partitioning and drops origin statistics") {
